@@ -1,20 +1,17 @@
 """Seeded input generator for the benchmark.
 
-Writes the driver star schema (FIXTURES.md section A: region, nation,
-customer, supplier, part, orders, lineitem, events, documents,
-embeddings) as one single-row-group parquet file per table, with the
-same column names, types and value domains as the fixture tables the
-registry queries and their DuckDB twins are written against.
+Writes the CRM extract: the tables of the driver star schema
+(FIXTURES.md section A) that the export pipelines read -- region,
+nation, customer, supplier, part, orders and lineitem -- as one
+single-row-group parquet file per table, with the same column names,
+types and value domains as the fixture tables the registry queries and
+their DuckDB twins are written against.  The schema's other tables
+(events, documents, embeddings) are written empty.
 
 ``scale`` counts units of the smallest fixture (sf0.001): one unit is
-150 customers, 10 suppliers, 200 parts, 1,500 orders, 6,000 lineitems,
-1,000 events and 50 documents/embeddings.  The same ``(seed, tag)``
-always gives the same bytes; keys are unique within each table.
-
-Near-duplicates: a ``dup_share`` fraction of documents are word-level
-edits (one substituted word, one ``dup`` token appended) of an earlier
-document, which is what the dedup, clustering and curation operators
-are built to find.
+150 customers, 10 suppliers, 200 parts, 1,500 orders and 6,000
+lineitems.  The same ``(seed, tag)`` always gives the same bytes; keys
+are unique within each table.
 """
 
 from __future__ import annotations
@@ -31,15 +28,20 @@ _COLORS = ["red", "blue", "green", "black", "white", "small", "large", "steel"]
 _NOUNS = ["widget", "bolt", "ring", "plate", "gear", "valve", "pipe", "screw"]
 _PTYPES = ["ECONOMY", "STANDARD", "SMALL", "MEDIUM", "LARGE", "PROMO"]
 _PRIORITIES = ["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"]
-_EVENT_TYPES = ["click", "view", "purchase", "signup", "error"]
-_LANGS = ["en", "en", "en", "de", "es", "fr", "zh"]
-_WORDS = ("a the row key agg scan slow fast table value part hash merge batch "
-          "spark line sort window group data big small stream join column "
-          "customer filter order vector query").split()
-_EMBED_DIM = 64
+_UNREAD = {
+    "events": pa.schema([
+        ("event_id", pa.int64()), ("ts", pa.timestamp("us")),
+        ("user_id", pa.int64()), ("event_type", pa.string()),
+        ("value", pa.float64()), ("props", pa.string())]),
+    "documents": pa.schema([
+        ("doc_id", pa.int64()), ("text", pa.string()), ("lang", pa.string()),
+        ("source", pa.string()), ("n_chars", pa.int64())]),
+    "embeddings": pa.schema([
+        ("vec_id", pa.int64()), ("embedding", pa.list_(pa.float32())),
+        ("label", pa.int32())]),
+}
 _DAY_US = 86_400 * 1_000_000
 _EPOCH_1995_US = 788_918_400 * 1_000_000   # 1995-01-01
-_EPOCH_2024_US = 1_704_067_200 * 1_000_000  # 2024-01-01
 
 
 def _money(rng, lo, hi, n):
@@ -56,31 +58,9 @@ def _write(out_dir, name, cols):
                    compression="snappy")
 
 
-def _documents(rng, n, dup_share):
-    n_dup = int(round(n * dup_share))
-    lengths = rng.integers(10, 100, n)
-    texts = [" ".join(rng.choice(_WORDS, k).tolist()) for k in lengths]
-    # each near-duplicate edits an earlier, original document
-    dup_ids = np.sort(rng.choice(np.arange(n // 4, n), n_dup, replace=False))
-    for i in dup_ids.tolist():
-        words = texts[int(rng.integers(0, n // 4))].split()
-        words[int(rng.integers(0, len(words)))] = str(rng.choice(_WORDS))
-        texts[i] = " ".join(words + ["dup"])
-    langs = rng.choice(_LANGS, n)
-    sources = [f"src{s}" for s in rng.integers(0, 20, n).tolist()]
-    return {
-        "doc_id": pa.array(np.arange(n, dtype=np.int64)),
-        "text": pa.array(texts),
-        "lang": pa.array(langs),
-        "source": pa.array(sources),
-        "n_chars": pa.array(np.array([len(t) for t in texts], dtype=np.int64)),
-    }
-
-
-def write_star(out_dir: str, seed: int, tag: int, scale: float,
-               dup_share: float = 0.05) -> int:
-    """Write every table of the star schema under *out_dir* and return
-    the total row count written.  *tag* separates inputs of one seed
+def write_extract(out_dir: str, seed: int, tag: int, scale: float) -> int:
+    """Write the CRM extract's tables under *out_dir* and return the
+    total row count written.  *tag* separates inputs of one seed
     (for example one per pass) so each directory holds its own data."""
     rng = np.random.default_rng([seed, tag])
     os.makedirs(out_dir, exist_ok=True)
@@ -89,8 +69,6 @@ def write_star(out_dir: str, seed: int, tag: int, scale: float,
     n_part = max(10, int(200 * scale))
     n_ord = max(10, int(1500 * scale))
     n_line = max(40, int(6000 * scale))
-    n_ev = max(20, int(1000 * scale))
-    n_doc = max(20, int(50 * scale))
 
     _write(out_dir, "region", {
         "r_regionkey": pa.array(np.arange(5, dtype=np.int32)),
@@ -158,27 +136,9 @@ def write_star(out_dir: str, seed: int, tag: int, scale: float,
             _EPOCH_1995_US + (odays[lok] + rng.integers(1, 122, n_line))
             * _DAY_US, pa.timestamp("us")),
     })
-    gaps = rng.exponential(259.0, n_ev) * 1_000_000
-    _write(out_dir, "events", {
-        "event_id": pa.array(np.arange(n_ev, dtype=np.int64)),
-        "ts": pa.array(_EPOCH_2024_US + np.cumsum(gaps).astype(np.int64),
-                       pa.timestamp("us")),
-        "user_id": pa.array(rng.integers(0, max(15, n_ev // 67), n_ev)),
-        "event_type": pa.array(rng.choice(_EVENT_TYPES, n_ev)),
-        "value": pa.array(
-            (rng.exponential(4960.0, n_ev).astype(np.int64) + 1) / 100.0),
-        "props": pa.array([f'{{"k": {k}}}' for k in
-                           rng.integers(0, 100, n_ev).tolist()]),
-    })
-    _write(out_dir, "documents", _documents(rng, n_doc, dup_share))
-    vecs = rng.standard_normal((n_doc, _EMBED_DIM)).astype(np.float32)
-    vecs /= np.linalg.norm(vecs, axis=1, keepdims=True)
-    offsets = pa.array(np.arange(n_doc + 1, dtype=np.int32) * _EMBED_DIM)
-    _write(out_dir, "embeddings", {
-        "vec_id": pa.array(np.arange(n_doc, dtype=np.int64)),
-        "embedding": pa.ListArray.from_arrays(offsets,
-                                              pa.array(vecs.ravel())),
-        "label": pa.array(rng.integers(0, 10, n_doc).astype(np.int32)),
-    })
-    return (5 + 25 + n_cust + n_supp + n_part + n_ord + n_line + n_ev
-            + 2 * n_doc)
+    # the other fixture tables, empty: the DuckDB twins register every
+    # table of the schema as a view
+    for name, schema in _UNREAD.items():
+        pq.write_table(schema.empty_table(),
+                       os.path.join(out_dir, f"{name}.parquet"))
+    return 5 + 25 + n_cust + n_supp + n_part + n_ord + n_line

@@ -28,7 +28,7 @@ def _median(xs) -> float:
 
 
 def per_layer(wl, tracer, passes: list[dict], session_s: float,
-              cpus: int) -> dict:
+              cpus: int, peak_rss: dict[str, float]) -> dict:
     declared = spec()["per_layer"]
     ids = [p["pass"] for p in passes]
     timed = [s for s in tracer.spans
@@ -53,6 +53,7 @@ def per_layer(wl, tracer, passes: list[dict], session_s: float,
 
     v: dict[str, float] = {
         "session.start_s": session_s,
+        "spark_exec.jvm_peak_rss_mb": peak_rss["jvm"],
         "plans.build_s": per_pass_sum("plans.build"),
         "sinks.write_s": per_pass_sum("sinks.write"),
         "spark_exec.busy_share": _median(
@@ -67,8 +68,6 @@ def per_layer(wl, tracer, passes: list[dict], session_s: float,
         + per_pass_sum("snapshots.read_row_changes"),
         "scd.jobs_per_fold": per_pass_sum("scd.fold", "jobs")
         + per_pass_sum("snapshots.read_row_changes", "jobs"),
-        "dedup.cc_jobs": per_pass_sum("curation.near_dup_clusters_star",
-                                      "jobs"),
     }
     for key in ("jobs", "stages", "tasks", "executor_run_s",
                 "executor_cpu_s", "gc_s", "shuffle_read_bytes",
@@ -78,7 +77,7 @@ def per_layer(wl, tracer, passes: list[dict], session_s: float,
         v[f"snapshots.{op}_s"] = per_call(f"snapshots.{op}")
     for name in declared:
         layer, _, rest = name.partition(".")
-        if layer in ("exports", "curation") and rest.endswith("_s"):
+        if layer == "exports" and rest.endswith("_s"):
             v[name] = per_pass_sum(f"{layer}.{rest[:-2]}")
     v.update(wl.layer_metrics(ids))
     missing = set(declared) - set(v)

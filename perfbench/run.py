@@ -5,8 +5,11 @@
 Run from the root of a checkout.  A single client drives the workload
 in a closed loop on ``local[<cpus>]``: set-up (session start, initial
 state, one untimed warm-up pass), then timed passes until ``--seconds``
-of pass time have been measured and at least the workload's
-``min_passes`` have run, then the output checks of every timed pass.  Inputs come from ``--seed`` alone.
+of pass time have been measured and at least ``MIN_PASSES`` have run,
+then the output checks of every timed pass.  Inputs come from
+``--seed`` alone.  The session is the package's own ``get_spark``, with
+the console progress bar off and the warehouse inside the run's work
+directory.
 
 With ``--trace 0`` the last stdout line carries the end-to-end metrics;
 with ``--trace 1`` spans and Spark status-store counters are recorded
@@ -33,6 +36,9 @@ import sys  # noqa: E402
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.getcwd()
+# timed passes a run makes at least, whatever --seconds says: the
+# median of three drops one slow pass
+MIN_PASSES = 3
 
 
 def _percentile_info(samples: list[float]) -> dict:
@@ -152,17 +158,6 @@ def _run(args, workloads, work, cpus, load_start) -> int:
             extra_conf={
                 "spark.ui.showConsoleProgress": "false",
                 "spark.sql.warehouse.dir": os.path.join(work, "warehouse"),
-                # A one-minute process is measured in its steady state
-                # only if the JIT gets there within the warm-up: C1 alone
-                # does, C2 keeps recompiling (and competing for cores)
-                # for several passes.  The heap is a fixed 2 GB, so peak
-                # RSS does not follow G1's timing-dependent resizing.
-                "spark.driver.memory": "2g",
-                "spark.driver.extraJavaOptions":
-                    "-XX:TieredStopAtLevel=1 -Xms2g",
-                # keep every stage of a run in the status store
-                "spark.ui.retainedStages": "100000",
-                "spark.ui.retainedJobs": "100000",
             })
     session_s = time.perf_counter() - t0
     try:
@@ -190,7 +185,7 @@ def _run(args, workloads, work, cpus, load_start) -> int:
         passes: list[dict] = []
         measured = 0.0
         pass_id = 0
-        while measured < args.seconds or len(passes) < wl.min_passes:
+        while measured < args.seconds or len(passes) < MIN_PASSES:
             pass_id += 1
             t = time.perf_counter()
             wl.prepare(pass_id)
@@ -206,13 +201,9 @@ def _run(args, workloads, work, cpus, load_start) -> int:
                 rec["engine"] = counters.since(mark)
             passes.append(rec)
             measured += wall
-            if wl.check_inline:
-                wl.check(pass_id)
         peak_rss = tr.peak_rss_mb(spark)
         load_end = os.getloadavg()
-        if not wl.check_inline:
-            for p in passes:
-                wl.check(p["pass"])
+        wl.check([p["pass"] for p in passes])
         # warm-up operations count too: a failure anywhere fails the run
         attempted = max(1, wl.attempted)
         failed = len(wl.failures)
@@ -226,7 +217,6 @@ def _run(args, workloads, work, cpus, load_start) -> int:
             if wl.commit_s else (None, "s"),
             "freshness_p50_s": (statistics.median(wl.freshness_s), "s")
             if wl.freshness_s else (None, "s"),
-            "peak_rss_mb": (sum(peak_rss.values()), "MB"),
         }
         spec = layers.spec()
         record = {
@@ -262,7 +252,7 @@ def _run(args, workloads, work, cpus, load_start) -> int:
                 for sp in tracer.spans if sp["end"] is not None]
             record["spans"] = tracer.self_times()
             record["per_layer"] = layers.per_layer(wl, tracer, passes,
-                                                   session_s, cpus)
+                                                   session_s, cpus, peak_rss)
             metrics = record["per_layer"]
         else:
             metrics = record["end_to_end"]

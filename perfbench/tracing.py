@@ -53,7 +53,7 @@ class Tracer:
         self._lock = threading.Lock()
 
     @contextmanager
-    def span(self, name: str, **attrs):
+    def span(self, name: str):
         if not self.enabled:
             yield None
             return
@@ -61,7 +61,7 @@ class Tracer:
             idx = len(self.spans)
             rec = {"name": name, "start": time.perf_counter(), "end": None,
                    "parent": self._stack[-1] if self._stack else None,
-                   "pass": self.pass_id, **attrs}
+                   "pass": self.pass_id}
             if self.job_id is not None:
                 rec["jobs"] = -self.job_id()
             self.spans.append(rec)

@@ -6,16 +6,14 @@ closed loop with one client: the next pass starts only after the
 previous one returned.
 
 - ``crm_refresh``: the reference's own job.  Each pass re-extracts (a
-  freshly generated star schema under a new directory, so no session
+  freshly generated CRM extract under a new directory, so no session
   plan memo can serve it) and rebuilds the quote and opportunity
   exports, each written through ``sinks.overwrite_by_name``.
-- ``curation_batch``: the curation, dedup and retrieval operators over
-  one freshly generated documents + embeddings shard per pass.
 - ``ledger_cdc``: writes beside reads on a snapshot ledger table.  Each
   cycle commits an append, a merge and a delete, folds the change feed
   into an IVM view (``ledger_cdc`` stream, ``foreachBatch``) and an
-  SCD2 mirror (``read_row_changes``), runs one aggregate read and then
-  table maintenance.
+  SCD2 mirror (``read_row_changes``) and runs one aggregate read; every
+  ``maintain_every`` cycles it also runs table maintenance.
 """
 
 from __future__ import annotations
@@ -34,12 +32,6 @@ class Workload:
     """Base: subclasses set ``name`` and implement the hooks below."""
 
     name = ""
-    # check each pass right after it ran (state moves on), instead of
-    # after the timed phase
-    check_inline = False
-    # timed passes a run makes at least, whatever --seconds says (the
-    # median of three drops one slow pass)
-    min_passes = 1
 
     def __init__(self, spark, tracer, work_dir: str, seed: int):
         self.spark = spark
@@ -66,8 +58,8 @@ class Workload:
         """One timed pass."""
         raise NotImplementedError
 
-    def check(self, pass_id: int) -> None:
-        """Check the written output of *pass_id*; record failures."""
+    def check(self, pass_ids: list[int]) -> None:
+        """Check the written output of the timed passes; record failures."""
 
     def fail(self, what: str) -> None:
         self.failures.append(what)
@@ -100,13 +92,16 @@ def _tree_bytes(path: str, skip: str | None = None) -> int:
     return total
 
 
-class _RegistryBatch(Workload):
-    """A pass runs a fixed list of registry queries over one fresh input
-    directory and writes each result through the sink."""
+class CrmRefresh(Workload):
+    """A pass rebuilds the exports from one fresh extract and writes
+    each through the sink."""
 
-    queries: tuple[str, ...] = ()
+    name = "crm_refresh"
+    queries = (
+        "quote_export_pipeline",
+        "opportunity_export_pipeline",
+    )
     scale = 1.0
-    layer = ""
 
     def __init__(self, spark, tracer, work_dir, seed):
         super().__init__(spark, tracer, work_dir, seed)
@@ -116,17 +111,13 @@ class _RegistryBatch(Workload):
         self.inputs: dict[int, str] = {}
         self.outputs: dict[int, dict[str, str]] = {}
 
-    def dup_share(self) -> float:
-        return 0.05
-
     def prepare(self, pass_id):
         # the basename is unique per (seed, pass): package scratch trees
         # and plan memos are keyed on it
         d = os.path.join(self.work_dir, "in",
                          f"{self.name}_s{self.seed}_p{pass_id}")
-        n = gen.write_star(d, self.seed, pass_id, self.scale,
-                           dup_share=self.dup_share())
-        self.rows_per_pass = n
+        self.rows_per_pass = gen.write_extract(d, self.seed, pass_id,
+                                               self.scale)
         self.inputs[pass_id] = d
 
     def run_pass(self, pass_id):
@@ -139,7 +130,7 @@ class _RegistryBatch(Workload):
         for q, spec in self.specs.items():
             self.attempted += 1
             try:
-                with self.tracer.span(f"{self.layer}.{q}"):
+                with self.tracer.span(f"exports.{q}"):
                     with self.tracer.span("plans.build"):
                         df = spec.fn(self.spark, src)
                     t_w = time.perf_counter()
@@ -153,24 +144,26 @@ class _RegistryBatch(Workload):
             self.freshness_s.append(t_done - t0)
             self.outputs[pass_id][q] = path
 
-    def check(self, pass_id):
+    def check(self, pass_ids):
+        """Each written export against its DuckDB twin over the same
+        extract."""
         from magshield_data_pipeline_spark.plans.oracle_harness import (
             compare_query,
         )
 
-        src = self.inputs[pass_id]
-        for q, path in self.outputs[pass_id].items():
-            try:
-                res = compare_query(
-                    self.spark, q,
-                    lambda s, _d, p=path: s.read.parquet(p),
-                    self.specs[q].sql, src)
-            except Exception as e:  # noqa: BLE001 - a failed check is counted
-                self.fail(f"pass {pass_id} {q} check: "
-                          f"{type(e).__name__}: {e}")
-                continue
-            if not res["ok"]:
-                self.fail(f"pass {pass_id} {q} check: {res}")
+        for i in pass_ids:
+            for q, path in self.outputs[i].items():
+                try:
+                    res = compare_query(
+                        self.spark, q,
+                        lambda s, _d, p=path: s.read.parquet(p),
+                        self.specs[q].sql, self.inputs[i])
+                except Exception as e:  # noqa: BLE001 - a failed check is counted
+                    self.fail(f"pass {i} {q} check: "
+                              f"{type(e).__name__}: {e}")
+                    continue
+                if not res["ok"]:
+                    self.fail(f"pass {i} {q} check: {res}")
 
     def layer_metrics(self, pass_ids):
         out = super().layer_metrics(pass_ids)
@@ -180,41 +173,11 @@ class _RegistryBatch(Workload):
         return out
 
 
-class CrmRefresh(_RegistryBatch):
-    name = "crm_refresh"
-    layer = "exports"
-    min_passes = 3
-    queries = (
-        "quote_export_pipeline",
-        "opportunity_export_pipeline",
-    )
-    scale = 1.0
-
-
-class CurationBatch(_RegistryBatch):
-    name = "curation_batch"
-    layer = "curation"
-    queries = (
-        "curation_pipeline_v2",
-        "near_dup_clusters_star",
-        "minhash_near_dup_pairs",
-        "training_data_pipeline",
-        "semantic_dedup_survivors",
-        "embedding_topk_q20_blas",
-    )
-    scale = 4.0
-
-    def dup_share(self):
-        # the seed sets the shard's near-duplicate share, in a band
-        # narrow enough that seeds compare
-        return 0.08 + 0.04 * np.random.default_rng(self.seed).random()
-
-
 class LedgerCdc(Workload):
     """Commit-and-fold cycles on one ledger table (see module doc)."""
 
     name = "ledger_cdc"
-    check_inline = True
+    maintain_every = 3
     base_rows = 5_000
     append_rows = 100
     merge_share = 0.01
@@ -231,56 +194,76 @@ class LedgerCdc(Workload):
         self.ckpt = os.path.join(root, "ckpt")
         self.rng = np.random.default_rng([seed, 99])
         self.next_key = 0
-        self.live: set[int] = set()
+        # what the table should hold: key -> (amount, status)
+        self.model: dict[int, tuple[int, str]] = {}
         self.scd_from = 1
-        self.rows_per_pass = 0
+        # per cycle: the aggregate read and what it should say
+        self.reads: dict[int, tuple[int, int]] = {}
+        self.expected: dict[int, tuple[int, int]] = {}
         # one entry per commit: op, version, latency, when it returned,
         # plus (traced runs) what it did to the table
         self.commits: list[dict] = []
         self.stream_progress: dict[int, list[dict]] = {}
 
     # -- inputs -----------------------------------------------------------
-    def _rows(self, keys):
+    def _frame(self, rows: dict[int, tuple[int, str]]):
         import pandas as pd
 
-        keys = np.asarray(keys, dtype=np.int64)
-        n = len(keys)
+        keys = np.array(sorted(rows), dtype=np.int64)
         return self.spark.createDataFrame(pd.DataFrame({
             "k": keys,
             "grp": keys % self.n_groups,
-            "amount": self.rng.integers(100, 1_000_000, n),
-            "status": self.rng.choice(["open", "won", "lost", "hold"], n),
+            "amount": np.array([rows[k][0] for k in keys.tolist()],
+                               dtype=np.int64),
+            "status": [rows[k][1] for k in keys.tolist()],
         }), "k long, grp long, amount long, status string")
+
+    def _statuses(self, n):
+        return self.rng.choice(["open", "won", "lost", "hold"], n).tolist()
+
+    def _new_rows(self, keys):
+        amounts = self.rng.integers(100, 1_000_000, len(keys)).tolist()
+        return dict(zip(keys, zip(amounts, self._statuses(len(keys)))))
 
     def _recent_keys(self, n):
         """*n* distinct live keys from the newest fifth.  Maintenance
         clusters the table into four key-range files, so these keys sit
-        in the newest file and the appended one: stats pruning carries
-        the rest, and every seed rewrites the same number of files."""
-        live = np.array(sorted(self.live))
+        in the newest file and the ones appended since: stats pruning
+        carries the rest, and every seed rewrites the same files."""
+        live = np.array(sorted(self.model))
         recent = live[len(live) - len(live) // 5:]
         return sorted(int(k) for k in
                       self.rng.choice(recent, min(n, len(recent)),
                                       replace=False))
 
     def prepare_state(self):
-        keys = list(range(self.base_rows))
         self.next_key = self.base_rows
-        self._base = self._rows(keys)
-        self.live.update(keys)
+        rows = self._new_rows(list(range(self.base_rows)))
+        self._base = self._frame(rows)
+        self.model.update(rows)
 
     def prepare(self, pass_id):
-        new = list(range(self.next_key, self.next_key + self.append_rows))
+        new = self._new_rows(list(range(self.next_key,
+                                        self.next_key + self.append_rows)))
         self.next_key += self.append_rows
-        upd = self._recent_keys(int(len(self.live) * self.merge_share))
+        upd_keys = self._recent_keys(int(len(self.model) * self.merge_share))
+        # every merged row changes its amount, so each one is a real
+        # update for the view and the mirror
+        bumps = self.rng.integers(1, 1_000, len(upd_keys)).tolist()
+        upd = {k: (self.model[k][0] + b, s) for k, b, s in
+               zip(upd_keys, bumps, self._statuses(len(upd_keys)))}
         dele = self._recent_keys(self.delete_rows)
-        self._cycle = {"append": self._rows(new), "merge": self._rows(upd),
+        self._cycle = {"append": self._frame(new), "merge": self._frame(upd),
                        "delete": self.spark.createDataFrame(
-                           [(int(k),) for k in dele], "k long"),
+                           [(k,) for k in dele], "k long"),
                        "n_append": len(new), "n_merge": len(upd),
                        "n_delete": len(dele)}
-        self.live.update(new)
-        self.live.difference_update(dele)
+        self.model.update(new)
+        self.model.update(upd)
+        for k in dele:
+            del self.model[k]
+        self.expected[pass_id] = (len(self.model),
+                                  sum(a for a, _ in self.model.values()))
         self.rows_per_pass = len(new) + len(upd) + len(dele)
 
     # -- state ------------------------------------------------------------
@@ -306,6 +289,13 @@ class LedgerCdc(Workload):
             scd.init_scd2(self.spark, self.src, self.mirror, "k", self.attrs,
                           version=1)
         cdc_stream.register(self.spark)
+        # the change feed is defined once, as a long-running consumer
+        # would; each cycle starts one AvailableNow drain of it
+        self._feed = (self.spark.readStream.format("ledger_cdc")
+                      .option("path", self.src)
+                      .option("startversion", 1)
+                      .option("maxversionsperbatch", 1000)
+                      .load())
 
     # -- one cycle --------------------------------------------------------
     def _commit(self, op, fn, user_rows):
@@ -352,12 +342,7 @@ class LedgerCdc(Workload):
                                   txn_version=int(batch_id), app="bench-ivm")
 
         with self.tracer.span("streaming.drain"):
-            q = (self.spark.readStream.format("ledger_cdc")
-                 .option("path", self.src)
-                 .option("startversion", 1)
-                 .option("maxversionsperbatch", 1000)
-                 .load()
-                 .writeStream.foreachBatch(fold)
+            q = (self._feed.writeStream.foreachBatch(fold)
                  .option("checkpointLocation", self.ckpt)
                  .trigger(availableNow=True)
                  .start())
@@ -385,7 +370,7 @@ class LedgerCdc(Workload):
         from magshield_data_pipeline_spark.sources import snapshots as SN
 
         c = self._cycle
-        ops = (
+        ops = [
             ("append", lambda: self._commit(
                 "append", lambda: SN.append(c["append"], self.src,
                                             n_files=1), c["n_append"])),
@@ -397,9 +382,10 @@ class LedgerCdc(Workload):
                 c["n_delete"])),
             ("stream_fold", lambda: self._fold_stream(pass_id)),
             ("scd_fold", self._fold_scd),
-            ("read", self._read),
-            ("maintain", self._maintain),
-        )
+            ("read", lambda: self._read(pass_id)),
+        ]
+        if pass_id % self.maintain_every == self.maintain_every - 1:
+            ops.append(("maintain", self._maintain))
         n_commits = len(self.commits)
         for op, fn in ops:
             self.attempted += 1
@@ -413,15 +399,16 @@ class LedgerCdc(Workload):
                 self.freshness_s.extend(
                     done - cm["returned"] for cm in self.commits[n_commits:])
 
-    def _read(self):
+    def _read(self, pass_id):
         from pyspark.sql import functions as F
 
         from magshield_data_pipeline_spark.sources import snapshots as SN
 
         with self.tracer.span("snapshots.read"):
-            self.last_read = SN.read(self.spark, self.src).agg(
+            row = SN.read(self.spark, self.src).agg(
                 F.count(F.lit(1)).alias("n"),
                 F.sum("amount").alias("amount")).collect()[0]
+        self.reads[pass_id] = (row["n"], row["amount"])
 
     def _maintain(self):
         """Re-cluster the table into key-range files (what keeps merge
@@ -473,15 +460,27 @@ class LedgerCdc(Workload):
                 "stream_progress": self.stream_progress}
 
     # -- checks -----------------------------------------------------------
-    def check(self, pass_id):
-        """View and mirror against a recompute from the latest snapshot;
-        the aggregate read against the generator's own key set."""
+    def check(self, pass_ids):
+        """Each timed aggregate read against the generator's model; then
+        the final table against the model, and the IVM view and the
+        SCD2 mirror against a recompute from the latest snapshot.  The
+        view and the mirror accumulate every fold, so a wrong fold in
+        any cycle shows in their final state."""
         from pyspark.sql import functions as F
 
         from magshield_data_pipeline_spark.sources import snapshots as SN
 
+        for i in pass_ids:
+            if self.reads.get(i) != self.expected[i]:
+                self.fail(f"cycle {i} aggregate read {self.reads.get(i)} "
+                          f"!= {self.expected[i]}")
         try:
             table = SN.read(self.spark, self.src)
+            base = (table.select("k", *self.attrs).toPandas()
+                    .sort_values("k").reset_index(drop=True))
+            if {int(r.k): (int(r.amount), r.status)
+                    for r in base.itertuples()} != self.model:
+                self.fail("table differs from the committed inputs")
             want = (table.groupBy("grp")
                     .agg(F.count(F.lit(1)).alias("n_rows"),
                          F.sum("amount").alias("amount_sum"))
@@ -491,22 +490,15 @@ class LedgerCdc(Workload):
                    .select("grp", "n_rows", "amount_sum")
                    .toPandas().sort_values("grp").reset_index(drop=True))
             if not want.astype("int64").equals(got.astype("int64")):
-                self.fail(f"cycle {pass_id} ivm view differs from recompute")
+                self.fail("ivm view differs from recompute")
             cur = (SN.read(self.spark, self.mirror)
                    .filter(F.col("valid_to").isNull())
                    .select("k", *self.attrs).toPandas()
                    .sort_values("k").reset_index(drop=True))
-            base = (table.select("k", *self.attrs).toPandas()
-                    .sort_values("k").reset_index(drop=True))
             if not cur.equals(base):
-                self.fail(f"cycle {pass_id} scd2 mirror differs from table")
-            if set(base["k"]) != self.live:
-                self.fail(f"cycle {pass_id} table keys differ from inputs")
-            if (self.last_read["n"] != len(base)
-                    or self.last_read["amount"] != base["amount"].sum()):
-                self.fail(f"cycle {pass_id} aggregate read differs")
+                self.fail("scd2 mirror differs from table")
         except Exception as e:  # noqa: BLE001 - a failed check is counted
-            self.fail(f"cycle {pass_id} check: {type(e).__name__}: {e}")
+            self.fail(f"check: {type(e).__name__}: {e}")
 
 
-WORKLOADS = {w.name: w for w in (CrmRefresh, CurationBatch, LedgerCdc)}
+WORKLOADS = {w.name: w for w in (CrmRefresh, LedgerCdc)}
