@@ -169,7 +169,15 @@ def apply_changes(
        none (no-op), after a crash between the commits the leftover
        zeros are completed.  A view scan between the two commits may
        observe count-zero rows (filter ``n_rows > 0`` for a
-       mid-refresh read); every completed refresh leaves none."""
+       mid-refresh read); every completed refresh leaves none.
+
+    The replay fast path (a replayed *txn_version* whose MERGE already
+    landed) completes the retract differently: it scans the WHOLE view
+    for count-zero rows, O(view) rather than O(batch), and assumes one
+    app maintains the view.  With two apps on one view it would delete
+    the other app's in-flight zeros under this app's ``:d`` txn; the
+    final view is still right, but ``groups_deleted`` is attributed to
+    the wrong batch."""
     _measure_cols(measures)
     ch = changes
     to_version = txn_version
@@ -186,7 +194,8 @@ def apply_changes(
         # the marker, committed count-zero view rows are exactly the
         # leftover retract set — "every completed refresh leaves none"
         # (invariant above) — so the view itself, not the re-fold,
-        # identifies them: one bounded scan of the (per-group) view.
+        # identifies them: one scan of the whole (per-group) view —
+        # O(view), single app per view (see the docstring).
         if SN._txn_committed(view_path, f"{app}:d", to_version):
             return {"applied": False, "groups_upserted": 0,
                     "groups_deleted": 0}
@@ -772,30 +781,6 @@ def minmax_view_equals_recompute(
             F.count(F.lit(1)).alias("n_vals"),
             F.min(value_name).alias(f"min_{value_name}"),
             F.max(value_name).alias(f"max_{value_name}"),
-        )
-    )
-    view = SN.read(spark, view_path).select(*fresh.columns)
-    return view.exceptAll(fresh).unionByName(fresh.exceptAll(view))
-
-
-def view_equals_recompute(
-    spark: SparkSession,
-    source_path: str,
-    view_path: str,
-    group: Column,
-    group_name: str,
-    measures: dict,
-) -> DataFrame:
-    """Audit frame: the maintained view ``exceptAll`` a from-scratch
-    group-by of the source's latest snapshot, unioned with the reverse
-    — empty iff incremental maintenance converged to the batch answer.
-    (Diagnostic; tests assert ``.head(1) == []``.)"""
-    fresh = (
-        SN.read(spark, source_path)
-        .groupBy(group.alias(group_name))
-        .agg(
-            F.count(F.lit(1)).alias(COUNT_COL),
-            *[F.sum(expr).alias(n) for n, expr in measures.items()],
         )
     )
     view = SN.read(spark, view_path).select(*fresh.columns)

@@ -63,12 +63,6 @@ def subtoken_count(text: Column | str) -> Column:
     return F.regexp_count(_col(text), F.lit(BPE_ISH_PATTERN))
 
 
-def word_match_count(text: Column | str, word: str) -> Column:
-    """Occurrences of *word* as a whole word (case-insensitive). The word
-    is matched literally (regex-escaped)."""
-    return F.regexp_count(F.lower(_col(text)), F.lit(rf"\b{re.escape(word)}\b"))
-
-
 def stopword_count(text: Column | str, stopwords: tuple[str, ...] = STOPWORDS_EN) -> Column:
     pattern = r"\b(" + "|".join(re.escape(w) for w in stopwords) + r")\b"
     return F.regexp_count(F.lower(_col(text)), F.lit(pattern))
@@ -112,11 +106,6 @@ def lang_scores_from_matches(matches: Column) -> dict[str, Column]:
     for lang, words in LANG_MARKERS.items():
         out[lang] = F.size(F.filter(matches, lambda x: x.isin(*words)))
     return out
-
-
-def lang_scores(text: Column | str) -> dict[str, Column]:
-    """Marker-word hit count per language."""
-    return lang_scores_from_matches(lang_matches(text))
 
 
 def lang_id_from_matches(matches: Column, default: str = "und") -> Column:

@@ -23,71 +23,13 @@ from pyspark.sql import functions as F
 from magshield_data_pipeline_spark import exports as X
 from magshield_data_pipeline_spark.plans.registry import register
 from magshield_data_pipeline_spark.sources.parquet import (
-    _session_plan_cache,
     read_table,
-    scan_partitions,
+    read_table_spread,
 )
-
-
-def _plan_memo(fn):
-    """Session-scoped memo of an export query's LAZY PLAN (r12,
-    guide §1.2 — the query-level form of the base-table read-plan
-    memo, same discipline: plans only, never rows or results).
-
-    Building one export DataFrame costs ~5,000 py4j round trips
-    (~1.1-1.3 s of driver wall for task/opportunity, measured with
-    cProfile: Column construction is one JVM RPC per expression node),
-    and the plan is a pure function of (session, sf_dir) — the reads
-    resolve through the session read-plan memo over immutable fixture
-    dirs, and ``_fact``'s parallelism guard is a session constant.
-    Re-invoking the same export in one session (the bench's 3 timed
-    runs; a resident service re-running an export per trigger, the
-    reference's refresh model) rebuilds an identical plan, so memoize
-    it per (query, sf_dir) on the session object.  Every ACTION still
-    executes the full scan→join→format pipeline from parquet; a fresh
-    session (each bench chunk, the driver's correctness runs) builds
-    cold and pays the true first-build cost.
-    """
-    import functools
-
-    @functools.wraps(fn)
-    def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-        cache = _session_plan_cache(spark)
-        key = ("query_plan", fn.__name__, sf_dir)
-        df = cache.get(key)
-        if df is None:
-            df = fn(spark, sf_dir)
-            cache[key] = df
-        return df
-
-    return wrapped
 
 # ---------------------------------------------------------------------------
 # organisation export (P1 map build, P5 truthiness, F1 clean_text,
 # F3 date-or-passthrough, F9 conditional link count, A4 formatted dedup)
-
-
-def _fact(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Fact-side read with a minimum-parallelism guard.
-
-    The driver's single-file, single-row-group parquet fixtures give the
-    scan exactly ONE split, so the export pipelines' expression-heavy
-    projection (CUSTOMFIELDS build + per-column clean_text) would run
-    single-threaded until the first exchange. When the scan provides
-    fewer partitions than the session's default parallelism, one cheap
-    round-robin repartition of the narrow source rows parallelizes the
-    downstream CPU work; on a real cluster (many files / row groups)
-    the condition is false and this is a NO-OP — no extra exchange at
-    scale.
-    """
-    df = read_table(spark, sf_dir, name)
-    # full session parallelism (r12): the old min(target, 16) cap idled
-    # half of local[32] through the expression-heavy projection — same
-    # scale-adaptive rule as sources/parquet.py::read_table_spread
-    target = spark.sparkContext.defaultParallelism
-    if scan_partitions(spark, sf_dir, name, df) < target:
-        return df.repartition(target)
-    return df
 
 
 def _entry(name, value) -> F.Column:
@@ -136,7 +78,6 @@ LEFT JOIN lk ON c_custkey = lk.o_custkey
     "exports.organisation_export — oracle states the expected pipeline "
     "output relationally (P1, P5, F1, F3, F9, A4)",
 )
-@_plan_memo
 def organisation_export_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # CRM-shaped input: the CUSTOMFIELDS array carries a DUPLICATE
     # Call_Frequency__c key ('weekly' then the real segment) so the
@@ -274,7 +215,6 @@ LEFT JOIN customer c2
     "value-empty fallback, P4 inline-name-else-dim coalesce, F2 date "
     "reformat — running the real exports.quote_export",
 )
-@_plan_memo
 def quote_export_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Input construction drives every quirk branch: Sales_Person__c is a
     # null-VALUED entry for orderkey%5==0 (Python str(None) → 'None'),
@@ -282,7 +222,7 @@ def quote_export_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # join); Grand_Total__c is absent for %3==0 (fallback to the raw
     # GRAND_TOTAL — key-missing), EMPTY for %3==1 (no fallback —
     # value-empty), an override otherwise.
-    orders = _fact(spark, sf_dir, "orders")
+    orders = read_table_spread(spark, sf_dir, "orders")
     customer = read_table(spark, sf_dir, "customer")
     supplier = read_table(spark, sf_dir, "supplier")
 
@@ -480,12 +420,11 @@ LEFT JOIN usr ON (o.o_custkey % 100) + 1 = usr.id
     "F3 date-or-passthrough formatting — the reference's hardest pipeline "
     "(task.py:121-275) under the oracle",
 )
-@_plan_memo
 def task_export_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Scale posture matches exports.task_export: dims broadcast, the
     # LINKS build is one groupBy on the fact key, the Q5 fold is a
     # single partial-agg max_by — no ranking windows, no cartesians.
-    orders = _fact(spark, sf_dir, "orders")
+    orders = read_table_spread(spark, sf_dir, "orders")
     lineitem = read_table(spark, sf_dir, "lineitem")
     customer = read_table(spark, sf_dir, "customer")
     supplier = read_table(spark, sf_dir, "supplier")
@@ -713,12 +652,11 @@ LEFT JOIN site ON o.opp_id = site.opp
     "array join excluding the main org, Q2 duplicate revenue column — "
     "all under the oracle",
 )
-@_plan_memo
 def opportunity_export_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Scale posture matches exports.opportunity_export: every dim
     # broadcast, J7 is one groupBy on the fact key, the fan-out is
     # explode_outer (no join multiplication beyond real products).
-    orders = _fact(spark, sf_dir, "orders")
+    orders = read_table_spread(spark, sf_dir, "orders")
     lineitem = read_table(spark, sf_dir, "lineitem")
     customer = read_table(spark, sf_dir, "customer")
     supplier = read_table(spark, sf_dir, "supplier")
@@ -909,12 +847,11 @@ LEFT JOIN org chan
     "unused), Q4 owner composite passthrough, F4 date-or-passthrough — "
     "under the oracle (invoice.py:162-206)",
 )
-@_plan_memo
 def invoice_export_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Scale posture matches exports.invoice_export: one fact scan,
     # three aliased broadcast probes of the same struct dim, no
     # exchange beyond the output dedup.
-    orders = _fact(spark, sf_dir, "orders")
+    orders = read_table_spread(spark, sf_dir, "orders")
     customer = read_table(spark, sf_dir, "customer")
     supplier = read_table(spark, sf_dir, "supplier")
 
@@ -1043,11 +980,10 @@ LEFT JOIN org site
     "(missing key → '', present-null → literal 'None') — under the "
     "oracle (equiment.py:136-168)",
 )
-@_plan_memo
 def equipment_export_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Scale posture matches exports.equipment_export: one fact scan +
     # three broadcast probes; no exchange beyond the output dedup.
-    orders = _fact(spark, sf_dir, "orders")
+    orders = read_table_spread(spark, sf_dir, "orders")
     customer = read_table(spark, sf_dir, "customer")
     supplier = read_table(spark, sf_dir, "supplier")
 

@@ -87,6 +87,35 @@ def get_spark(
     return builder.getOrCreate()
 
 
+def path_stamp(path: str) -> tuple[int, int]:
+    """``(inode, mtime_ns)`` of *path* — the stamp each session-memo
+    key carries for the files its plan lists.  A table directory
+    rewritten in place, or a manifest deleted and re-minted at the same
+    path, gets a new stamp, so the memo can never serve a plan over
+    files that are gone.  Raises ``FileNotFoundError`` on a missing
+    path."""
+    st = os.stat(path)
+    return st.st_ino, st.st_mtime_ns
+
+
+def session_memo(spark: SparkSession, key: tuple, build):
+    """The session's one memo of LAZY plans: ``build()`` once per *key*,
+    then the same object back.
+
+    It stores plans (DataFrames, split counts) only — never rows, so
+    every action still computes from the files.  The dict lives on the
+    session object and dies with it.  Callers put a :func:`path_stamp`
+    of the files their plan lists in *key*; that is the only
+    invalidation, and it is structural.
+    """
+    memo = getattr(spark, "_magshield_session_memo", None)
+    if memo is None:
+        memo = spark._magshield_session_memo = {}
+    if key not in memo:
+        memo[key] = build()
+    return memo[key]
+
+
 def release_caches(spark: SparkSession) -> None:
     """Drop every cached DataFrame in the session.
 

@@ -15,6 +15,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from magshield_data_pipeline_spark.session import path_stamp, session_memo
+
 STAR_TABLES = (
     "region",
     "nation",
@@ -85,45 +87,22 @@ def normalize_event_ts(df: DataFrame) -> DataFrame:
     return df
 
 
-def _session_plan_cache(spark: SparkSession) -> dict:
-    """Session-scoped memo of base-table READ PLANS (r12, guide §6).
-
-    ``spark.read.parquet`` pays a py4j round trip plus JVM file
-    listing + footer schema inference on EVERY call (~0.1 s per
-    table); a query touching 7 tables spent ~0.9 s of its build in
-    re-inferring schemas that cannot change (the fixture dirs are
-    immutable for a session's lifetime). This memo plays the role a
-    table catalog's metadata cache plays in production (Iceberg/Hive
-    avoid per-query listing the same way — the strongest practical
-    argument for manifest-backed formats at scale, guide §6.3).
-
-    It stores LAZY DataFrames (logical scan plans) only — never rows,
-    never materialized results: every action still computes from the
-    parquet inputs, and `release_caches` / data-cache hygiene is
-    unaffected. Keyed on the session object itself so the memo dies
-    with the session (the bench's chunked fresh sessions each start
-    cold). DataFrames are immutable, so sharing one plan object
-    across queries is safe.
-    """
-    cache = getattr(spark, "_magshield_plan_cache", None)
-    if cache is None:
-        cache = {}
-        spark._magshield_plan_cache = cache
-    return cache
-
-
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one star-schema table from ``{sf_dir}/{name}.parquet``."""
+    """Read one star-schema table from ``{sf_dir}/{name}.parquet``.
+
+    The read plan is memoized per session: ``spark.read.parquet``
+    pays a py4j round trip plus file listing and footer schema
+    inference on every call (~0.1 s per table), the work a table
+    catalog's metadata cache saves in production.  The key carries the
+    table path's stamp, so a table rewritten in place is read afresh."""
     ensure_runtime_confs(spark)
-    cache = _session_plan_cache(spark)
-    key = (sf_dir, name)
-    df = cache.get(key)
-    if df is None:
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        if name == "events":
-            df = normalize_event_ts(df)
-        cache[key] = df
-    return df
+    path = f"{sf_dir}/{name}.parquet"
+
+    def build() -> DataFrame:
+        df = spark.read.parquet(path)
+        return normalize_event_ts(df) if name == "events" else df
+
+    return session_memo(spark, ("parquet", path, path_stamp(path)), build)
 
 
 def read_table_spread(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -135,9 +114,8 @@ def read_table_spread(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     partitions than the session's parallelism, one cheap repartition of
     the narrow source rows parallelizes the downstream CPU work; on a
     real multi-file corpus the condition is false and this is a NO-OP —
-    no extra exchange at scale. (Same rule as export_queries'
-    ``_read_spread``; results are partitioning-invariant for every
-    consumer, which each query's oracle hash re-proves.)
+    no extra exchange at scale. (Results are partitioning-invariant for
+    every consumer, which each query's oracle hash re-proves.)
 
     The target is the session's FULL parallelism (r12: the old
     ``min(cores, 16)`` cap idled half of local[32] through every
@@ -154,20 +132,16 @@ def read_table_spread(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def scan_partitions(
     spark: SparkSession, sf_dir: str, name: str, df: DataFrame
 ) -> int:
-    """Split count of a base-table scan, memoized per session (r12).
+    """Split count of a base-table scan, memoized per session.
 
     ``df.rdd.getNumPartitions()`` converts the plan to an RDD on the
     JVM (analysis + physical planning, ~0.1-0.3 s) on every call; the
-    split count of an immutable fixture file under fixed reader confs
-    is a constant per session, so probe it once.
+    split count of unchanged table files under fixed reader confs is a
+    constant, so probe it once per table stamp.
     """
-    cache = _session_plan_cache(spark)
-    key = (sf_dir, name, "nsplits")
-    n = cache.get(key)
-    if n is None:
-        n = df.rdd.getNumPartitions()
-        cache[key] = n
-    return n
+    path = f"{sf_dir}/{name}.parquet"
+    return session_memo(spark, ("nsplits", path, path_stamp(path)),
+                        df.rdd.getNumPartitions)
 
 
 def load_star_schema(

@@ -59,6 +59,8 @@ import struct
 import time
 import uuid
 
+from magshield_data_pipeline_spark.session import path_stamp, session_memo
+
 _MANIFEST_RE = re.compile(r"^v(\d+)\.json$")
 
 
@@ -87,21 +89,6 @@ def versions(table_path: str) -> list[int]:
 SEG_INLINE_MAX = 64
 #: entries per sealed segment file — the reuse granularity
 SEG_TARGET = 64
-
-
-def _manifest_stamp(table_path: str, version: int) -> int:
-    """The manifest file's mtime_ns — a creation stamp for plan-memo
-    keys (VERDICT r12 item 4): a table directory deleted and recreated
-    in-session at the same path re-mints version numbers; keying memos
-    on the stamp as well makes stale-plan reuse structurally
-    impossible.  -1 when the manifest is missing (the caller's version
-    check fails loudly first)."""
-    try:
-        return os.stat(
-            os.path.join(_manifest_dir(table_path), f"v{version}.json")
-        ).st_mtime_ns
-    except OSError:
-        return -1
 
 
 def _raw_manifest(table_path: str, version: int) -> dict:
@@ -1807,31 +1794,22 @@ def read(spark, table_path: str, version: int | None = None, *,
     v = vs[-1] if version is None else version
     if v not in vs:
         raise ValueError(f"version {v} not in {vs} at {table_path}")
-    # Session-scoped memo of PLAIN pinned-scan plans (r12, guide §6.3 —
-    # the ledger twin of parquet._session_plan_cache): a published
-    # (table, version) manifest and its file set are IMMUTABLE (commits
-    # only append versions; vacuum invalidates the version itself,
-    # which the `v in vs` check above still catches fresh each call),
-    # so the ~50 ms of manifest JSON + py4j scan construction per
-    # re-read of a pinned snapshot is a session constant.  Plans only —
-    # never rows; pruned/projected/coordinate reads (prune, partitions,
-    # key_in, report, with_coords) bypass the memo, as does anything
-    # whose plan could differ per call.
-    plain = (prune is None and partitions is None and key_in is None
-             and report is None and not with_coords)
-    memo = None
-    if plain:
-        memo = getattr(spark, "_magshield_ledger_plan_cache", None)
-        if memo is None:
-            memo = {}
-            spark._magshield_ledger_plan_cache = memo
-        # the manifest mtime stamp guards the delete-and-recreate-at-
-        # the-same-path edge (VERDICT r12 item 4): a re-minted version
-        # number gets a fresh stamp, so it can never serve the old plan
-        ck = (os.path.abspath(table_path), v, _manifest_stamp(table_path, v))
-        got = memo.get(ck)
-        if got is not None:
-            return got
+    # Plain pinned-scan plans go through the session memo: a
+    # published manifest and its file set are immutable, so the ~50 ms
+    # of manifest JSON + py4j scan construction per re-read is a
+    # session constant.  The key carries the manifest's path stamp, so
+    # a table deleted and recreated at the same path (re-minted version
+    # numbers) never serves the old plan.  Pruned, projected and
+    # coordinate reads bypass it.
+    if (prune is None and partitions is None and key_in is None
+            and report is None and not with_coords):
+        mpath = os.path.join(_manifest_dir(table_path), f"v{v}.json")
+        return session_memo(
+            spark, ("ledger", os.path.abspath(table_path), v,
+                    path_stamp(mpath)),
+            lambda: _scan_manifest(spark, table_path, v,
+                                   read_manifest(table_path, v)),
+        )
     manifest = read_manifest(table_path, v)
     entries = manifest["files"]
     if report is not None:
@@ -1935,27 +1913,34 @@ def read(spark, table_path: str, version: int | None = None, *,
             )
     if report is not None:
         report["files_scanned"] = len(entries)
+    return _scan_manifest(spark, table_path, v, manifest, entries,
+                          with_coords)
+
+
+def _scan_manifest(spark, table_path: str, v: int, manifest: dict,
+                   entries: list[dict] | None = None,
+                   with_coords: bool = False):
+    """The scan plan of *entries* (default: all of version *v*'s files)
+    under *manifest*'s schema, renames, defaults and delete files."""
+    if entries is None:
+        entries = manifest["files"]
     if not entries:
         raise ValueError(
             f"snapshot v{v} at {table_path} has no files after pruning"
         )
     deletes = manifest.get("delete_files")
     if deletes:
-        out = _scan_with_deletes(spark, table_path, entries, deletes,
-                                 manifest.get("schema"),
-                                 renames=manifest.get("renames"),
-                                 defaults=manifest.get("defaults"),
-                                 widens=manifest.get("widens"),
-                                 with_pos=with_coords)
-    else:
-        out = _scan(spark, table_path, entries, manifest.get("schema"),
-                    renames=manifest.get("renames"),
-                    defaults=manifest.get("defaults"),
-                    widens=manifest.get("widens"),
-                    with_pos=with_coords)
-    if memo is not None:
-        memo[ck] = out
-    return out
+        return _scan_with_deletes(spark, table_path, entries, deletes,
+                                  manifest.get("schema"),
+                                  renames=manifest.get("renames"),
+                                  defaults=manifest.get("defaults"),
+                                  widens=manifest.get("widens"),
+                                  with_pos=with_coords)
+    return _scan(spark, table_path, entries, manifest.get("schema"),
+                 renames=manifest.get("renames"),
+                 defaults=manifest.get("defaults"),
+                 widens=manifest.get("widens"),
+                 with_pos=with_coords)
 
 
 def read_join_pruned(spark, table_path: str, dim_df, key: str, *,
@@ -2390,27 +2375,6 @@ def read_row_changes(spark, table_path: str, from_version: int,
             "carry different column names; split the window at the "
             "rename commit"
         )
-    # Session-scoped memo of CDC-feed PLANS keyed on the pinned
-    # (table, from, to) window (r13, guide §1.2 — the feed twin of the
-    # pinned-scan memo above): both endpoints are explicit versions
-    # over immutable manifests, so the plan is a session constant —
-    # and rebuilding it is the EXPENSIVE kind of plan build: besides
-    # the per-commit _scan/exceptAll py4j tree, every merge-on-read
-    # commit in the window runs a single-row key-bounds .collect()
-    # probe per delete file (measured: snapshot_composite_key re-paid
-    # ~1.5 s of fn() build + probe jobs per invocation).  Plans only —
-    # never rows; the version check above re-validates fresh each call
-    # (vacuum invalidates), and the manifest mtime stamp guards the
-    # recreate-at-same-path edge (VERDICT r12 item 4).
-    memo = getattr(spark, "_magshield_cdc_plan_cache", None)
-    if memo is None:
-        memo = {}
-        spark._magshield_cdc_plan_cache = memo
-    ck = (os.path.abspath(table_path), from_version, to_version,
-          _manifest_stamp(table_path, to_version))
-    got = memo.get(ck)
-    if got is not None:
-        return got
     pieces = []
     for v in range(from_version + 1, to_version + 1):
         if v not in vs:
@@ -2754,13 +2718,10 @@ def read_row_changes(spark, table_path: str, from_version: int,
         # frame under the to_version schema, so downstream epochs can
         # consume unconditionally
         base = read(spark, table_path, to_version).limit(0)
-        out = tagged(base, "insert", to_version).limit(0)
-        memo[ck] = out
-        return out
+        return tagged(base, "insert", to_version).limit(0)
     out = pieces[0]
     for p in pieces[1:]:
         out = out.unionByName(p, allowMissingColumns=True)
-    memo[ck] = out
     return out
 
 

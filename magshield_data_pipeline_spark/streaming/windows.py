@@ -134,7 +134,13 @@ def run_available_now(
     emission is identical with no new data. Queries whose EMISSION
     depends on the watermark advancing past event time — outer-join
     null rows, append-mode window finalization, EventTimeTimeout
-    flushes (sessionizer, funnel) — MUST keep the default.
+    flushes — keep the default. An EventTimeTimeout query may opt
+    out only on one of two narrow grounds: its timeout cannot fire
+    within the drain (the sessionizer query's 3650-day watermark
+    delay keeps the post-drain watermark years before every open
+    session), or its timeout evicts state without emitting a row (the
+    funnel's buffer-only users). The same operator under a normal
+    watermark delay keeps the default.
 
     NOTE the memory sink does NOT support checkpoint recovery (Spark
     refuses at start) — this runner is for parity checks and

@@ -73,32 +73,31 @@ def main() -> int:
             df = spec.fn(spark, sf_dir)
             consume(df)
             walls.append(time.perf_counter() - t0)
-            if True:
-                for qi, q in enumerate(_CAPTURED):
-                    progs = [p for p in q.recentProgress]
-                    tot: dict[str, int] = {}
-                    state_rows = 0
-                    state_commit = 0
-                    n_shuffle_parts = None
-                    for p in progs:
-                        for ph in _PHASES:
-                            tot[ph] = tot.get(ph, 0) + int(
-                                p.get("durationMs", {}).get(ph, 0)
+            for qi, q in enumerate(_CAPTURED):
+                progs = [p for p in q.recentProgress]
+                tot: dict[str, int] = {}
+                state_rows = 0
+                state_commit = 0
+                n_shuffle_parts = None
+                for p in progs:
+                    for ph in _PHASES:
+                        tot[ph] = tot.get(ph, 0) + int(
+                            p.get("durationMs", {}).get(ph, 0)
+                        )
+                    for so in p.get("stateOperators", []):
+                        state_rows += int(so.get("numRowsTotal", 0))
+                        state_commit += int(
+                            so.get("customMetrics", {}).get(
+                                "stateOnCurrentVersionSizeBytes", 0
                             )
-                        for so in p.get("stateOperators", []):
-                            state_rows += int(so.get("numRowsTotal", 0))
-                            state_commit += int(
-                                so.get("customMetrics", {}).get(
-                                    "stateOnCurrentVersionSizeBytes", 0
-                                )
-                            )
-                    phases = " ".join(
-                        f"{ph}={tot.get(ph, 0)}" for ph in _PHASES
-                    )
-                    print(
-                        f"  [{name} q{qi}] batches={len(progs)} {phases} "
-                        f"stateRows={state_rows}"
-                    )
+                        )
+                phases = " ".join(
+                    f"{ph}={tot.get(ph, 0)}" for ph in _PHASES
+                )
+                print(
+                    f"  [{name} q{qi}] batches={len(progs)} {phases} "
+                    f"stateRows={state_rows}"
+                )
             release_caches(spark)
         print(f"{name}: wall = {' / '.join(f'{w:.2f}' for w in walls)} s")
     return 0

@@ -1,16 +1,20 @@
-"""Session plan-memo contracts (r12 optimization round).
+"""Session plan-memo contracts.
 
-Two memo layers store LAZY plans only — never rows — keyed on the
-session object:
+One session memo (``session.session_memo``) stores LAZY plans only —
+never rows — keyed on the session object:
 
-- ``snapshots.read``: plain pinned-scan plans per (table, version);
-- ``plans.export_queries._plan_memo``: the six export queries' full
-  lazy plans per (query, sf_dir).
+- ``parquet.read_table`` / ``scan_partitions``: base-table read plans
+  and split counts per table path;
+- ``snapshots.read``: plain pinned-scan plans per (table, version).
 
-These tests pin the invariants that make the memos safe: a pinned
-version's plan is reusable, the LATEST read follows new commits
-(never served stale), option-carrying reads bypass the memo, and the
-memoized plan still computes fresh rows from parquet every action.
+Every key carries a ``path_stamp`` of the files its plan lists (the
+table path, or the version's manifest). These tests pin the invariants
+that make the memo safe: a pinned version's plan is reusable, the
+LATEST read follows new commits, option-carrying reads bypass the memo,
+the memoized plan still computes fresh rows every action, and no plan
+is served after the files it lists were rewritten, recreated or
+vacuumed. Export-query plans and CDC-feed plans are not memoized;
+their tests check rows only.
 """
 
 from __future__ import annotations
@@ -72,19 +76,15 @@ def test_export_query_plan_memo_per_sf(spark):
     fn = QUERY_REGISTRY["organisation_export_pipeline"].fn
     a = fn(spark, SF_SMALL)
     b = fn(spark, SF_SMALL)
-    assert a is b, "same session + sf must reuse the export plan"
     assert a.count() == b.count() > 0
 
 
 def test_cdc_feed_plan_is_memoized_and_recomputes(spark, ledger):
-    # r13: read_row_changes plans are session constants per pinned
-    # (table, from, to) window — identical calls share one plan object,
-    # and the memoized plan still computes fresh rows from parquet
+    # identical CDC windows recompute the same rows from parquet
     SN.append(spark.range(10, 15).select(F.col("id").alias("k")), ledger)
     a = SN.read_row_changes(spark, ledger, 1, 2)
     b = SN.read_row_changes(spark, ledger, 1, 2)
-    assert a is b, "identical CDC windows should share one plan object"
-    assert a.count() == 5
+    assert a.count() == b.count() == 5
     spark.catalog.clearCache()
     assert SN.read_row_changes(spark, ledger, 1, 2).count() == 5
 
@@ -107,3 +107,38 @@ def test_memo_stamp_guards_recreated_table(spark, tmp_path):
     fresh = SN.read(spark, t, 1)
     assert fresh is not first, "recreated table served a stale plan"
     assert fresh.count() == 7
+
+
+def test_read_table_follows_in_place_rewrite(spark, tmp_path):
+    # a table rewritten in place gets a new path stamp, so neither the
+    # read plan nor the split count of the old files is served again
+    from magshield_data_pipeline_spark.sources.parquet import (
+        read_table,
+        read_table_spread,
+    )
+
+    sf = str(tmp_path / "extract")
+    path = f"{sf}/orders.parquet"
+    spark.range(20).withColumnRenamed("id", "o_orderkey").write.parquet(path)
+    assert read_table(spark, sf, "orders").count() == 20
+    assert read_table_spread(spark, sf, "orders").count() == 20
+    spark.range(25).withColumnRenamed("id", "o_orderkey") \
+        .repartition(3).write.mode("overwrite").parquet(path)
+    assert read_table(spark, sf, "orders").count() == 25
+    assert read_table_spread(spark, sf, "orders").count() == 25
+
+
+def test_cdc_feed_after_vacuum_fails_loudly(spark, tmp_path):
+    # a vacuum of the window's intermediate manifests must not leave a
+    # plan over deleted files behind: the same call raises, naming the
+    # version whose before-image is gone
+    t = str(tmp_path / "vac_tbl")
+    SN.overwrite(spark.range(10).select(F.col("id").alias("k")), t, n_files=1)
+    for lo in (10, 20, 30):
+        SN.append(spark.range(lo, lo + 5).select(F.col("id").alias("k")), t)
+    SN.tag(t, "base", 1)
+    assert SN.read_row_changes(spark, t, 1, 4).count() == 15
+    SN.vacuum(t, keep_versions=1)
+    assert SN.versions(t) == [1, 4]
+    with pytest.raises(ValueError, match="v3 vacuumed"):
+        SN.read_row_changes(spark, t, 1, 4)
