@@ -3910,7 +3910,7 @@ SELECT CAST(-1 AS BIGINT), CAST(1 AS BIGINT), CAST(NULL AS DOUBLE)
 )
 def snapshot_mor_purge(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Scale: the affected set comes from manifest min/max vs the
-    # delete files' key envelopes (the _delete_may_hit pruning shared
+    # delete files' key envelopes (ledger_meta.delete_applies, shared
     # with CDC); only those files are scanned+rewritten, the rest of
     # the table is carried by reference in the manifest.
     from magshield_data_pipeline_spark.sources import snapshots as SN

@@ -8,32 +8,31 @@ with the LEDGER VERSION as the checkpointed stream offset.
 This upgrades the batch feed (``snapshots.read_row_changes``) to a
 subscription: a consumer checkpoints its position in the table's
 commit history and each trigger delivers only the commits it hasn't
-seen — appends as inserts, copy-on-write merges as pre/post image
-pairs diffed on the recorded merge key (carried-identical rows
-excluded), copy-on-write deletes as pre-images, compacts as ZERO rows
-(maintenance commits never wake a subscriber), overwrites as a full
-multiset diff.  ``readBetweenOffsets`` replays a version range
-exactly — deterministic recovery, the contract checkpointing needs.
+seen.  ``readBetweenOffsets`` replays a version range exactly —
+deterministic recovery, the contract checkpointing needs.
 
-Scale shape: per-trigger cost is each new commit's TOUCHED FILES only
-(the copy-on-write design keeps before/after images proportional to
-the change, never the table).  The simple-reader protocol materializes
-each batch's rows on the driver (same constraint as every Python
-streaming source, documented at sources/paged.py:239) — bounded by the
-commit's change size, which is the quantity a CDC subscriber is sized
-for anyway.
+One change-feed algorithm serves the batch feed and both readers
+here: ``ledger_meta.commit_plan`` decides from the two manifests alone
+whether a commit is skipped (compacts and metadata-only commits emit
+ZERO rows, so maintenance never wakes a subscriber), is an append's
+pure inserts, or is a diff of the VISIBLE rows of its affected files —
+the files it added or removed, plus carried files whose applicable
+delete set changed (``ledger_meta.delete_applies``: positional
+``targets``, or the Iceberg v2 sequence-number rule with key-range
+stats, so a key re-inserted after a delete survives and IS
+delivered).  This module is the pure-Python edition of that diff
+(:func:`_commit_changes`); ``read_row_changes`` is the Spark edition.
+Both classify a commit that records a merge key by key (update
+pre/post pairs, carried-identical rows excluded) and any other commit
+as a multiset diff — merge-on-read merges/deletes, positional
+deletes/updates, overwrites and rollbacks (undeletes included) alike.
 
-Every commit type is covered (VERDICT r11 item 1 + ADVICE r11): the
-reader diffs the VISIBLE row state of each commit's AFFECTED files —
-files added or removed by the commit, plus files whose applicable
-equality-delete set changed (the Iceberg v2 sequence-number contract:
-a delete file applies only to data files with a LOWER sequence
-number, so a key re-inserted after the delete survives and IS
-delivered).  Merge-on-read merges/deletes, rollbacks that remove
-delete files (undeletes), metadata-only commits (set-constraint:
-zero rows, stream advances), and unknown key-less ops all fall out
-of the same diff; ops that record a merge key classify the diff into
-update pre/post pairs exactly as the batch feed does.
+Scale shape: per-trigger cost is each new commit's AFFECTED FILES
+only, never the table.  The simple reader materializes each batch's
+rows on the driver (the simple-reader protocol pickles them from
+there, as in ``sources/paged.py``) — bounded by the commit's change
+size; the ``ledger_cdc_dist`` reader plans partitions from the same
+commit plan and materializes rows on executors.
 
 Schema-evolution HISTORY is covered too (r12 session 5): each file is
 read under its ERA's stored column names — renames undone per file
@@ -54,10 +53,9 @@ subscription that replaces it once the corpus is a ledger table.
 from __future__ import annotations
 
 import datetime
-import json
 import os
 from collections import Counter
-from typing import Iterator, List
+from typing import Iterator
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -67,53 +65,16 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from magshield_data_pipeline_spark.sources.ledger_meta import (
+    _key_cols,
+    commit_plan,
+    delete_applies,
+    feed_manifest,
+    read_manifest,
+    versions,
+)
+
 META_COLS = ("_change_type", "_commit_version")
-
-
-def _manifest(table_path: str, v: int) -> dict:
-    p = os.path.join(table_path, "_manifests", f"v{v}.json")
-    if not os.path.exists(p):
-        raise ValueError(
-            f"ledger_cdc: manifest v{v} missing at {table_path} — "
-            "vacuumed past the stream's offset; restart from a "
-            "retained version"
-        )
-    with open(p) as f:
-        m = json.load(f)
-    segs = m.pop("segments", None)
-    if segs:
-        # segmented manifest (snapshots._dump_manifest): the file list
-        # is segment references in order, then the inline tail —
-        # resolve exactly as snapshots.read_manifest does (this module
-        # stays import-free of snapshots: it ships by value to
-        # executors)
-        files: list = []
-        for s in segs:
-            sp = os.path.join(table_path, "_manifests", s)
-            if not os.path.exists(sp):
-                raise ValueError(
-                    f"ledger_cdc: manifest segment {s} missing at "
-                    f"{table_path} — reclaimed past the stream's "
-                    "offset; restart from a retained version"
-                )
-            with open(sp) as f:
-                files.extend(json.load(f)["entries"])
-        m["files"] = files + (m.get("files") or [])
-    return m
-
-
-def _versions(table_path: str) -> List[int]:
-    d = os.path.join(table_path, "_manifests")
-    if not os.path.isdir(d):
-        return []
-    out = []
-    for name in os.listdir(d):
-        if name.startswith("v") and name.endswith(".json"):
-            try:
-                out.append(int(name[1:-5]))
-            except ValueError:
-                continue
-    return sorted(out)
 
 
 def _cast_part(raw, dtype) -> object:
@@ -253,9 +214,9 @@ def _table_types(table_path: str, fallback_schema) -> dict:
     """Column -> DataType from the table's LATEST manifest schema
     (every column, not just the projected stream fields); falls back
     to the stream schema for pre-schema chains."""
-    vs = _versions(table_path)
+    vs = versions(table_path)
     if vs:
-        man = _manifest(table_path, vs[-1])
+        man = read_manifest(table_path, vs[-1])
         if man.get("schema"):
             full = StructType.fromJson(man["schema"])
             return {f.name: f.dataType for f in full.fields}
@@ -330,58 +291,24 @@ def _row_pred(filters: list[tuple]):
     return pred
 
 
-def _key_cols(key) -> list:
-    """A manifest key record — bare string (single) or list
-    (composite, r12) — as a column list (snapshots._key_cols twin;
-    this module stays import-free of snapshots)."""
-    return [key] if isinstance(key, str) else list(key)
-
-
-def _applicable(delete_files: list[dict], e: dict) -> list[dict]:
-    """The delete files that apply to data entry *e*: strictly NEWER
-    sequence numbers only (Iceberg v2 — re-inserts survive)."""
-    return [d for d in delete_files
-            if d.get("seq", 0) > e.get("seq", 0)]
-
-
-def _may_hit(e: dict, d: dict) -> bool:
-    """Can delete file *d* affect data entry *e*?  Positional deletes
-    (``kind: "positional"``) address exact files — their ``targets``
-    list IS the affected set; equality deletes intersect by key range,
-    conservative (True) when either side lacks stats — pruning only
-    shrinks the affected-file set, never the answer."""
-    if d.get("kind") == "positional":
-        return e["path"] in (d.get("targets") or ())
-    for k in _key_cols(d["key"]):
-        mn = e.get("stats", {}).get(f"min_{k}")
-        mx = e.get("stats", {}).get(f"max_{k}")
-        dlo = d.get("stats", {}).get(f"min_{k}")
-        dhi = d.get("stats", {}).get(f"max_{k}")
-        if mn is None or mx is None or dlo is None or dhi is None:
-            continue
-        if mn > dhi or mx < dlo:
-            return False  # disjoint on ANY key column: no hit
-    return True
-
-
 def _visible_rows(table_path: str, entries: list[dict],
                   delete_files: list[dict], fields: list[str],
                   types: dict | None, keysets: dict,
                   renames: list[dict] | None = None,
                   defaults: list[dict] | None = None) -> list[dict]:
     """The VISIBLE rows of *entries* under *delete_files*: each
-    entry's rows minus the keys of every delete file with a newer
-    sequence number — the driver-side twin of ``_scan_with_deletes``
-    (snapshots.py:972).  *keysets* caches delete-file key sets across
-    calls within one commit diff.  An equality delete's recorded key
-    is era-mapped to its CURRENT name for the row lookup (the delete
-    FILE itself is read under the name it was written with)."""
+    entry's rows minus those of every delete file that applies to it
+    (``ledger_meta.delete_applies``) — the driver-side twin of
+    ``snapshots._scan_with_deletes``.  *keysets* caches delete-file
+    key sets across calls within one commit diff.  An equality
+    delete's recorded key is era-mapped to its CURRENT name for the
+    row lookup (the delete FILE itself is read under the name it was
+    written with)."""
     import pyarrow.parquet as pq
 
     out: list[dict] = []
     for e in sorted(entries, key=lambda x: x["path"]):
-        dels = [d for d in _applicable(delete_files, e)
-                if _may_hit(e, d)]
+        dels = [d for d in delete_files if delete_applies(e, d)]
         eq = [d for d in dels if d.get("kind") != "positional"]
         pos = [d for d in dels if d.get("kind") == "positional"]
         # a projected field set may exclude a delete key: read it as a
@@ -466,48 +393,29 @@ def _commit_changes(table_path: str, v: int, fields: list[str],
                     renames: list[dict] | None = None,
                     defaults: list[dict] | None = None,
                     schema_v: int | None = None) -> list[tuple]:
-    """Classify commit *v*'s net row changes — the pure-Python,
-    driver-side twin of snapshots.read_row_changes, covering EVERY
-    commit type (pinned against the batch feed in tests).  The
-    algorithm is a single visible-state diff:
+    """Classify commit *v*'s net row changes — the pure-Python edition
+    of ``snapshots.read_row_changes`` over the same
+    ``ledger_meta.commit_plan`` (pinned against the batch feed in
+    tests):
 
-    1. affected files = data files added or removed by the commit,
-       plus carried files whose APPLICABLE equality-delete set changed
-       (new or dropped delete files with intersecting key range —
-       sequence-number reconciliation, stats-pruned);
-    2. before = visible rows of affected prev-side files under the
-       prev delete set; after = visible rows of affected cur-side
-       files under the cur delete set;
-    3. multiset diff (identical restatements cancel — carried and
-       compacted rows emit nothing); when the commit records a merge
-       key, matching delete+insert pairs on one key classify as
+    1. the plan skips compacts and metadata-only commits (set-
+       constraint, no-op rollback: the stream advances past them
+       instead of wedging), lists an append's added files as pure
+       inserts, and otherwise names the affected files on each side;
+    2. before = visible rows of the prev-side files under the prev
+       delete set; after = visible rows of the cur-side files under
+       the cur delete set;
+    3. multiset diff (identical restatements cancel — carried rows
+       emit nothing); when the commit records a merge key, matching
+       delete+insert pairs on one key classify as
        update_preimage/update_postimage, exactly the batch contract.
 
-    Cost: the commit's affected files only, never the table.
-    Metadata-only commits (set-constraint, no-op rollback) diff to
-    zero affected files and return [] — the stream advances past them
-    instead of wedging (ADVICE r11 high)."""
-    cur = _manifest(table_path, v)
-    prev = _manifest(table_path, v - 1)
+    Cost: the commit's affected files only, never the table."""
+    plan = commit_plan(table_path, v, "ledger_cdc")
     if schema_v is not None:
-        _schema_boundary(cur, schema_v, "ledger_cdc")
-    op = cur.get("operation")
-    if op == "compact":
-        return []  # same rows, new layout: zero changes by contract
-
-    prev_by = {e["path"]: e for e in prev["files"]}
-    cur_by = {e["path"]: e for e in cur["files"]}
-    prev_dels = prev.get("delete_files") or []
-    cur_dels = cur.get("delete_files") or []
-    added = [e for p, e in cur_by.items() if p not in prev_by]
-    removed = [e for p, e in prev_by.items() if p not in cur_by]
-    prev_del_paths = {d["path"] for d in prev_dels}
-    cur_del_paths = {d["path"] for d in cur_dels}
-    new_dels = [d for d in cur_dels if d["path"] not in prev_del_paths]
-    gone_dels = [d for d in prev_dels if d["path"] not in cur_del_paths]
-
-    if not added and not removed and not new_dels and not gone_dels:
-        return []  # metadata-only commit: stream advances, zero rows
+        _schema_boundary(plan["cur"], schema_v, "ledger_cdc")
+    if plan["kind"] == "skip":
+        return []
 
     def tup(d: dict, change: str) -> tuple:
         return tuple(d[f] for f in fields) + (change, v)
@@ -516,28 +424,14 @@ def _commit_changes(table_path: str, v: int, fields: list[str],
     f_extras = sorted({c for c, _op, _v in filters} - set(fields))
     pred = _row_pred(filters) if filters else None
 
-    if op in ("append", "stream-append") and not new_dels and not gone_dels:
-        # fast path: new files carry THIS commit's sequence number, so
-        # no pending delete (all older) can apply — pure inserts;
+    if plan["kind"] == "inserts":
         # filter pushdown prunes whole files by manifest stats first
-        kept = [e for e in added if _file_may_match(e, filters)]
+        kept = [e for e in plan["after"] if _file_may_match(e, filters)]
         rows = _rows_of(table_path, kept, list(fields) + f_extras, types,
                         renames, defaults)
         if pred is not None:
             rows = [r for r in rows if pred(r)]
         return [tup(d, "insert") for d in rows]
-
-    affected_prev = list(removed)
-    affected_cur = list(added)
-    for p in prev_by.keys() & cur_by.keys():
-        e_prev, e_cur = prev_by[p], cur_by[p]
-        changed = [d for d in new_dels
-                   if d.get("seq", 0) > e_cur.get("seq", 0)]
-        changed += [d for d in gone_dels
-                    if d.get("seq", 0) > e_prev.get("seq", 0)]
-        if any(_may_hit(e_cur, d) for d in changed):
-            affected_prev.append(e_prev)
-            affected_cur.append(e_cur)
 
     # under a column PROJECTION the merge key may be excluded from the
     # output — materialize it as a working column anyway so update
@@ -545,7 +439,7 @@ def _commit_changes(table_path: str, v: int, fields: list[str],
     # diff itself runs on key + projected columns, so a change in an
     # UNSELECTED column cancels — projection-CDC semantics: the feed
     # of the projected view.)
-    key = cur.get("key")
+    key = plan["key"]
     kcols = None
     if key is not None:
         # keys were recorded under the names current AT commit v; a
@@ -567,15 +461,16 @@ def _commit_changes(table_path: str, v: int, fields: list[str],
     # a file whose stats range misses the filter contributes no rows
     # after the row filter; the bag diff of filtered rows == the
     # filter of the bag diff)
-    if filters:
-        affected_prev = [e for e in affected_prev
-                         if _file_may_match(e, filters)]
-        affected_cur = [e for e in affected_cur
-                        if _file_may_match(e, filters)]
+    affected_prev = [e for e in plan["before"]
+                     if _file_may_match(e, filters)]
+    affected_cur = [e for e in plan["after"]
+                    if _file_may_match(e, filters)]
     keysets: dict = {}
-    before = _visible_rows(table_path, affected_prev, prev_dels,
+    before = _visible_rows(table_path, affected_prev,
+                           plan["prev"].get("delete_files") or [],
                            int_fields, types, keysets, renames, defaults)
-    after = _visible_rows(table_path, affected_cur, cur_dels,
+    after = _visible_rows(table_path, affected_cur,
+                          plan["cur"].get("delete_files") or [],
                           int_fields, types, keysets, renames, defaults)
     if pred is not None:
         before = [r for r in before if pred(r)]
@@ -591,8 +486,7 @@ def _commit_changes(table_path: str, v: int, fields: list[str],
         # tags, bit-equal parity
         t_del, t_ins = (
             ("update_preimage", "update_postimage")
-            if op == "update" and cur.get("mode") == "positional"
-            else ("delete", "insert")
+            if plan["op"] == "update" else ("delete", "insert")
         )
         out = [proj(t) + (t_del, v) for t in sorted(dels, key=repr)
                for _ in range(dels[t])]
@@ -658,9 +552,9 @@ class LedgerCdcStreamReader(SimpleDataSourceStreamReader):
         # the schema-inference point: per-file era mapping serves all
         # rename/default/widen history AT OR BEFORE this version;
         # events beyond it fail the stream for a restart (_schema_boundary)
-        vs = _versions(self.path)
+        vs = versions(self.path)
         self.schema_v = vs[-1] if vs else 0
-        man = _manifest(self.path, self.schema_v) if vs else {}
+        man = read_manifest(self.path, self.schema_v) if vs else {}
         self.renames = man.get("renames") or []
         self.defaults = man.get("defaults") or []
 
@@ -673,7 +567,7 @@ class LedgerCdcStreamReader(SimpleDataSourceStreamReader):
         # pending merge-on-read deletes are reconciled exactly as a
         # read() of that version would (sequence-number contract);
         # filters prune files by manifest stats before any read
-        man = _manifest(self.path, self.start)
+        man = feed_manifest(self.path, self.start, "ledger_cdc")
         files = [e for e in man["files"]
                  if _file_may_match(e, self.filters)]
         extras = sorted({c for c, _o, _v in self.filters}
@@ -707,7 +601,7 @@ class LedgerCdcStreamReader(SimpleDataSourceStreamReader):
         if not start.get("snap", 1):
             # bootstrap batch: the full snapshot at startVersion
             return iter(self._snapshot_rows()), {"version": v0, "snap": 1}
-        vs = _versions(self.path)
+        vs = versions(self.path)
         latest = vs[-1] if vs else v0
         target = min(latest, v0 + self.max_per_batch)
         if target <= v0:
@@ -727,10 +621,10 @@ class LedgerCdcStreamReader(SimpleDataSourceStreamReader):
 class LedgerCdcPartition(InputPartition):
     """One unit of executor-side CDC materialization: ``kind`` is
     ``snapshot_file`` (bootstrap: one base file + its applicable
-    delete files), ``insert_file`` (append fast path: one added
-    file), or ``commit_diff`` (one whole non-append commit — the
-    multiset diff needs the commit's affected files together, so it
-    stays a single unit, but on an EXECUTOR, not the driver)."""
+    delete files), ``insert_file`` (one added file of an ``inserts``
+    plan), or ``commit_diff`` (one whole ``diff`` plan — the diff
+    needs the commit's affected files together, so it stays a single
+    unit, but on an EXECUTOR, not the driver)."""
 
     def __init__(self, kind: str, payload: dict) -> None:
         self.kind = kind
@@ -742,17 +636,17 @@ class LedgerCdcDistStreamReader(DataSourceStreamReader):
     the simple-reader protocol materializes every batch's rows on the
     driver — bounded by commit size, but still the one non-scalable
     seam the r11 notes documented.  This reader plans partitions from
-    MANIFEST METADATA ONLY on the driver and materializes rows on
-    executors:
+    MANIFEST METADATA ONLY on the driver — each commit's
+    ``ledger_meta.commit_plan`` — and materializes rows on executors:
 
     - a snapshot bootstrap fans out one partition PER BASE FILE (its
-      applicable equality-deletes shipped in the partition spec);
-    - an append/stream-append commit fans out one partition PER ADDED
+      applicable delete files shipped in the partition spec);
+    - an ``inserts`` plan (an append) fans out one partition PER ADDED
       FILE (pure inserts, embarrassingly parallel);
-    - any other commit becomes ONE ``commit_diff`` partition running
+    - a ``diff`` plan becomes ONE ``commit_diff`` partition running
       the same visible-state diff as the simple reader — per-commit
       memory moves off the driver, and distinct commits in a batch
-      diff in parallel.
+      diff in parallel; a ``skip`` plan gets no partition.
 
     No ``maxVersionsPerBatch``: each trigger drains to the table's
     latest version (the partition plan, not the batch count, bounds
@@ -772,9 +666,9 @@ class LedgerCdcDistStreamReader(DataSourceStreamReader):
         self.types = _table_types(self.path, schema)
         self.filters = _parse_filters(options.get("filters", ""),
                                       self.types)
-        vs = _versions(self.path)
+        vs = versions(self.path)
         self.schema_v = vs[-1] if vs else 0
-        man = _manifest(self.path, self.schema_v) if vs else {}
+        man = read_manifest(self.path, self.schema_v) if vs else {}
         self.renames = man.get("renames") or []
         self.defaults = man.get("defaults") or []
 
@@ -783,50 +677,34 @@ class LedgerCdcDistStreamReader(DataSourceStreamReader):
                 "snap": 0 if self.initial_snapshot else 1}
 
     def latestOffset(self) -> dict:
-        vs = _versions(self.path)
+        vs = versions(self.path)
         return {"version": vs[-1] if vs else self.start, "snap": 1}
 
     def partitions(self, start: dict, end: dict):
         parts: list[LedgerCdcPartition] = []
         v0 = int(start["version"])
         if not start.get("snap", 1):
-            man = _manifest(self.path, v0)
+            man = feed_manifest(self.path, v0, "ledger_cdc_dist")
             dels = man.get("delete_files") or []
             for e in man["files"]:
                 if not _file_may_match(e, self.filters):
                     continue  # filter pushdown: metadata-pruned
                 parts.append(LedgerCdcPartition("snapshot_file", {
                     "entry": e,
-                    "deletes": [d for d in _applicable(dels, e)
-                                if _may_hit(e, d)],
+                    "deletes": [d for d in dels if delete_applies(e, d)],
                     "version": v0,
                 }))
         for v in range(v0 + 1, int(end["version"]) + 1):
-            cur = _manifest(self.path, v)
-            prev = _manifest(self.path, v - 1)
-            _schema_boundary(cur, self.schema_v, "ledger_cdc_dist")
-            if cur.get("operation") == "compact":
-                continue
-            prev_paths = {e["path"] for e in prev["files"]}
-            added = [e for e in cur["files"]
-                     if e["path"] not in prev_paths]
-            removed = any(e["path"] not in {x["path"] for x in cur["files"]}
-                          for e in prev["files"])
-            same_dels = (
-                {d["path"] for d in prev.get("delete_files") or []}
-                == {d["path"] for d in cur.get("delete_files") or []}
-            )
-            if not added and not removed and same_dels:
-                continue  # metadata-only commit: zero partitions
-            if (cur.get("operation") in ("append", "stream-append")
-                    and same_dels and not removed):
-                for e in added:
+            plan = commit_plan(self.path, v, "ledger_cdc_dist")
+            _schema_boundary(plan["cur"], self.schema_v, "ledger_cdc_dist")
+            if plan["kind"] == "inserts":
+                for e in plan["after"]:
                     if not _file_may_match(e, self.filters):
                         continue  # filter pushdown: metadata-pruned
                     parts.append(LedgerCdcPartition("insert_file", {
                         "entry": e, "version": v,
                     }))
-            else:
+            elif plan["kind"] == "diff":
                 parts.append(LedgerCdcPartition("commit_diff",
                                                 {"version": v}))
         return parts or [LedgerCdcPartition("noop", {})]
@@ -900,10 +778,10 @@ class LedgerCdcDataSource(DataSource):
         path = self.options.get("path")
         if not path:
             raise ValueError("ledger_cdc requires option('path', ...)")
-        vs = _versions(path)
+        vs = versions(path)
         if not vs:
             raise ValueError(f"ledger_cdc: no versions at {path}")
-        man = _manifest(path, vs[-1])
+        man = read_manifest(path, vs[-1])
         if not man.get("schema"):
             raise ValueError(
                 f"ledger_cdc: {path} predates recorded schemas — "
@@ -944,13 +822,17 @@ class LedgerCdcDataSource(DataSource):
 
 
 def register(spark) -> None:
-    """Ship this module BY VALUE (the caller session's workers don't
-    have the package on sys.path — same rule as sources/paged.py) and
-    register the source."""
+    """Ship this module and the ``ledger_meta`` helpers it calls BY
+    VALUE (the caller session's workers don't have the package on
+    sys.path — same rule as sources/paged.py) and register the
+    sources."""
     import sys
 
     from pyspark import cloudpickle
 
+    from magshield_data_pipeline_spark.sources import ledger_meta
+
+    cloudpickle.register_pickle_by_value(ledger_meta)
     cloudpickle.register_pickle_by_value(sys.modules[__name__])
     spark.dataSource.register(LedgerCdcDataSource)
     spark.dataSource.register(LedgerCdcDistDataSource)

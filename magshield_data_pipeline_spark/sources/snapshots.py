@@ -60,28 +60,15 @@ import time
 import uuid
 
 from magshield_data_pipeline_spark.session import path_stamp, session_memo
-
-_MANIFEST_RE = re.compile(r"^v(\d+)\.json$")
-
-
-def _manifest_dir(table_path: str) -> str:
-    return os.path.join(table_path, "_manifests")
-
-
-def versions(table_path: str) -> list[int]:
-    """All committed versions, ascending. A manifest file EXISTS iff
-    its commit completed (exclusive-create publish), so this listing
-    never sees a partial commit."""
-    d = _manifest_dir(table_path)
-    if not os.path.isdir(d):
-        return []
-    out = []
-    for name in os.listdir(d):
-        m = _MANIFEST_RE.match(name)
-        if m:
-            out.append(int(m.group(1)))
-    return sorted(out)
-
+from magshield_data_pipeline_spark.sources.ledger_meta import (
+    _key_cols,
+    _manifest_dir,
+    _raw_manifest,
+    commit_plan,
+    delete_applies,
+    read_manifest,
+    versions,
+)
 
 #: manifests with at most this many file entries inline their whole
 #: list in ``vN.json`` (the pre-r12 shape, byte-compatible); above it
@@ -89,42 +76,6 @@ def versions(table_path: str) -> list[int]:
 SEG_INLINE_MAX = 64
 #: entries per sealed segment file — the reuse granularity
 SEG_TARGET = 64
-
-
-def _raw_manifest(table_path: str, version: int) -> dict:
-    """The manifest EXACTLY as stored — ``segments`` references left
-    unresolved.  Internal: vacuum's reference counting and the
-    metadata-cost audit need the physical shape; everything else wants
-    :func:`read_manifest`."""
-    with open(os.path.join(_manifest_dir(table_path), f"v{version}.json")) as f:
-        return json.load(f)
-
-
-def _resolve_segments(mdir: str, m: dict) -> dict:
-    """Materialize a raw manifest's file list: segment references (in
-    order) followed by the inline tail.  Mutates and returns *m*; the
-    resolved dict carries no ``segments`` key, so re-publishing a
-    loaded manifest (rollback) re-segments cleanly."""
-    segs = m.pop("segments", None)
-    if segs:
-        files: list[dict] = []
-        for s in segs:
-            p = os.path.join(mdir, s)
-            if not os.path.exists(p):
-                raise ValueError(
-                    f"manifest segment {s} missing under {mdir} — "
-                    "reclaimed past this version's retention; read a "
-                    "retained version"
-                )
-            with open(p) as f:
-                files.extend(json.load(f)["entries"])
-        m["files"] = files + (m.get("files") or [])
-    return m
-
-
-def read_manifest(table_path: str, version: int) -> dict:
-    return _resolve_segments(_manifest_dir(table_path),
-                             _raw_manifest(table_path, version))
 
 
 def _write_segment(table_path: str, entries: list[dict]) -> str:
@@ -495,21 +446,6 @@ def _publish_manifest(
 
 
 _NUMERIC_TYPES = ("long", "integer", "double", "float", "short", "decimal")
-
-
-def _key_cols(key) -> list[str]:
-    """Normalize a merge/delete key spec — one column name or a
-    COMPOSITE list of them (r12: the natural-key contract; Iceberg's
-    equality-delete field lists) — to a non-empty, duplicate-free
-    column list."""
-    cols = [key] if isinstance(key, str) else list(key)
-    if not cols or len(set(cols)) != len(cols) or not all(
-            isinstance(c, str) and c for c in cols):
-        raise ValueError(
-            f"key must be a column name or a list of distinct column "
-            f"names, got {key!r}"
-        )
-    return cols
 
 
 def _key_store(key):
@@ -2004,26 +1940,6 @@ def read_join_pruned(spark, table_path: str, dim_df, key: str, *,
                 prune=(key, probe["lo"], probe["hi"]), report=report)
 
 
-def _delete_may_hit(e: dict, d: dict) -> bool:
-    """Can delete file *d* affect data entry *e*?  Positional deletes
-    address exact files (their ``targets`` list IS the affected set);
-    equality deletes intersect by key range, conservative (True) when
-    either side lacks stats — used only to PRUNE the affected-file set
-    for CDC image computation and purge_deletes."""
-    if d.get("kind") == "positional":
-        return e["path"] in (d.get("targets") or ())
-    for k in _key_cols(d["key"]):
-        mn = e.get("stats", {}).get(f"min_{k}")
-        mx = e.get("stats", {}).get(f"max_{k}")
-        dlo = d.get("stats", {}).get(f"min_{k}")
-        dhi = d.get("stats", {}).get(f"max_{k}")
-        if mn is None or mx is None or dlo is None or dhi is None:
-            continue  # no stats on this column: can't rule it out
-        if mn > dhi or mx < dlo:
-            return False  # disjoint on ANY key column: no hit possible
-    return True
-
-
 def _scan_with_deletes(spark, table_path: str, data_entries: list[dict],
                        delete_files: list[dict], schema_json: dict | None,
                        renames: list[dict] | None = None,
@@ -2325,29 +2241,34 @@ def read_row_changes(spark, table_path: str, from_version: int,
       ``update_postimage`` | ``delete``
     - ``_commit_version``: the commit that produced the change
 
-    computed from the BEFORE/AFTER images of each commit's touched
-    files — exactly the files the commit removed from / added to the
-    manifest, which the copy-on-write design keeps proportional to the
-    CHANGE, never the table:
+    One algorithm for every commit type, the Spark edition of the
+    stream's ``cdc_stream._commit_changes``.  Each commit's
+    ``ledger_meta.commit_plan`` (manifests only) either skips it
+    (compact, metadata-only), or names the affected files: the files
+    it removed and added, plus carried files whose applicable delete
+    set changed.  Their VISIBLE images — ``_scan_with_deletes`` under
+    each side's delete files, a plain ``_scan`` when there are none —
+    are then classified:
 
-    - ``append`` / ``stream-append``: added files are pure inserts
-      (file-list CDC is already row-exact here);
-    - ``compact``: restates the same rows — ZERO row changes emitted,
-      which is what lets maintenance commits run without waking every
-      downstream subscriber;
-    - ``merge``: before/after images joined on the commit's recorded
-      merge key; keys only in the after-image are inserts, keys in
-      both with any differing column emit update_preimage +
-      update_postimage (rows merely CARRIED by the rewrite — matched
-      by key, byte-identical — emit nothing);
-    - ``delete``: before-image rows whose key left the after-image;
-    - ``overwrite``: full before/after ``exceptAll`` diff (delete +
-      insert rows) — O(table) because overwrite itself is.
+    - a commit that records a merge/delete KEY (merge, delete, in
+      either copy-on-write or merge-on-read mode) is joined on it:
+      keys only in the after-image are inserts, keys in both with any
+      differing non-key column (null-safe) emit update_preimage +
+      update_postimage (rows merely CARRIED — matched by key,
+      identical — emit nothing), keys only in the before-image are
+      deletes.  A delete commit emits only the deletes;
+    - a key-less commit (append, overwrite, overwrite-partitions,
+      rollback, positional delete/update) is a multiset ``exceptAll``
+      diff: before-only rows are deletes and after-only rows inserts,
+      or update_preimage/update_postimage for a positional update.
+      An append is all inserts (its plan lists only the added files).
 
     Assumes merge/delete-maintained tables keep *key* unique (the
     upsert contract those commits enforce).  Cost: scans only each
-    commit's touched files, so consuming a merge that rewrote 3 files
-    of a 100 TB table reads 6 files' worth of rows, not the table."""
+    commit's affected files, so consuming a merge that rewrote 3 files
+    of a 100 TB table reads 6 files' worth of rows, not the table.
+    A window spanning a column rename, or whose commits' manifests
+    were vacuumed, fails loudly."""
     from pyspark.sql import functions as F
 
     if from_version >= to_version:
@@ -2375,343 +2296,70 @@ def read_row_changes(spark, table_path: str, from_version: int,
             "carry different column names; split the window at the "
             "rename commit"
         )
+
+    def image(entries: list[dict], m: dict):
+        if not entries:
+            return None
+        return _scan_with_deletes(
+            spark, table_path, entries, m.get("delete_files") or [],
+            m.get("schema"), renames=m.get("renames"),
+            defaults=m.get("defaults"), widens=m.get("widens"))
+
     pieces = []
-    for v in range(from_version + 1, to_version + 1):
-        if v not in vs:
-            continue  # vacuumed intermediate manifests can't be diffed
-        cur = read_manifest(table_path, v)
-        prev = read_manifest(table_path, v - 1) if (v - 1) in vs else None
-        if prev is None:
-            raise ValueError(
-                f"read_row_changes: v{v - 1} vacuumed — cannot compute "
-                f"the before-image of commit v{v}"
+    # every retained commit in the window is diffed against its
+    # predecessor: a vacuumed gap fails in commit_plan, naming the
+    # missing before-image version
+    for v in [x for x in vs if from_version < x <= to_version]:
+        plan = commit_plan(table_path, v, "read_row_changes")
+        if plan["kind"] == "skip":
+            continue
+        before = image(plan["before"], plan["prev"])
+        after = image(plan["after"], plan["cur"])
+        if plan["key"] is None:
+            t_del, t_ins = (
+                ("update_preimage", "update_postimage")
+                if plan["op"] == "update" else ("delete", "insert")
             )
-        prev_paths = {e["path"] for e in prev["files"]}
-        cur_paths = {e["path"] for e in cur["files"]}
-        added = [e for e in cur["files"] if e["path"] not in prev_paths]
-        removed = [e for e in prev["files"] if e["path"] not in cur_paths]
-        op = cur.get("operation")
-        if op == "compact":
-            continue  # same rows, new layout: no row changes by contract
-        if op == "update" and cur.get("mode") == "positional":
-            # one atomic commit: positional delete of the matched
-            # coordinates + their post-image files.  Pre-images are
-            # the coordinate rows (prior deletes applied), post-images
-            # the added files; identical restatements cancel via the
-            # multiset diff (a no-op assignment emits nothing) — the
-            # same Counter-diff contract the streaming classifier uses,
-            # so the two feeds stay bit-equal.
-            prev_del_paths = {d["path"] for d in prev.get("delete_files", [])}
-            new_dels = [d for d in cur.get("delete_files", [])
-                        if d["path"] not in prev_del_paths]
-            before = None
-            for d in new_dels:
-                tset = set(d.get("targets") or ())
-                cands = [e for e in cur["files"] if e["path"] in tset]
-                if not cands:
-                    continue
-                img = _scan_with_deletes(
-                    spark, table_path, cands,
-                    prev.get("delete_files", []), cur.get("schema"),
-                    renames=cur.get("renames"),
-                    defaults=cur.get("defaults"),
-                    widens=cur.get("widens"), with_pos=True,
-                )
-                coords = spark.read.parquet(
-                    os.path.join(table_path, d["path"])
-                ).select(
-                    F.col("file_rel").alias("_file_rel"),
-                    F.col("pos").alias("_pos"),
-                )
-                got = img.join(
-                    coords, ["_file_rel", "_pos"], "left_semi"
-                ).drop("_file_rel", "_pos")
-                before = got if before is None else before.unionByName(got)
-            after = (_scan(spark, table_path, added, cur.get("schema"),
-                           renames=cur.get("renames"),
-                           defaults=cur.get("defaults"),
-                           widens=cur.get("widens"))
-                     if added else None)
             if before is not None and after is not None:
-                pieces.append(tagged(before.exceptAll(
-                    after.select(*before.columns)), "update_preimage", v))
-                pieces.append(tagged(after.exceptAll(
-                    before.select(*after.columns)), "update_postimage", v))
-            elif after is not None:
-                pieces.append(tagged(after, "update_postimage", v))
-            elif before is not None:
-                pieces.append(tagged(before, "update_preimage", v))
-            continue
-        if op == "delete" and cur.get("mode") == "positional":
-            # no data file changed hands: the commit's NEW positional
-            # delete files define the change.  Pre-images come from
-            # exactly the TARGET files (file identity, no stats
-            # pruning needed), with the PRIOR pending deletes applied
-            # so already-invisible rows aren't re-emitted, semi-joined
-            # on the (file, ordinal) coordinates.
-            prev_del_paths = {d["path"] for d in prev.get("delete_files", [])}
-            new_dels = [d for d in cur.get("delete_files", [])
-                        if d["path"] not in prev_del_paths]
-            for d in new_dels:
-                tset = set(d.get("targets") or ())
-                cands = [e for e in cur["files"] if e["path"] in tset]
-                if not cands:
-                    continue
-                img = _scan_with_deletes(
-                    spark, table_path, cands,
-                    prev.get("delete_files", []), cur.get("schema"),
-                    renames=cur.get("renames"),
-                    defaults=cur.get("defaults"), widens=cur.get("widens"), with_pos=True,
+                before, after = (
+                    before.exceptAll(after.select(*before.columns)),
+                    after.exceptAll(before.select(*after.columns)),
                 )
-                coords = spark.read.parquet(
-                    os.path.join(table_path, d["path"])
-                ).select(
-                    F.col("file_rel").alias("_file_rel"),
-                    F.col("pos").alias("_pos"),
-                )
-                gone = img.join(
-                    coords, ["_file_rel", "_pos"], "left_semi"
-                ).drop("_file_rel", "_pos")
-                pieces.append(tagged(gone, "delete", v))
+            if before is not None:
+                pieces.append(tagged(before, t_del, v))
+            if after is not None:
+                pieces.append(tagged(after, t_ins, v))
             continue
-        if op == "delete" and cur.get("mode") == "merge-on-read":
-            # no data file changed hands: the commit's NEW equality-
-            # delete files define the change.  Pre-images come from the
-            # data files whose key range can contain the deleted keys
-            # (stats-pruned) AND whose sequence number the delete
-            # applies to, with the PRIOR pending deletes applied so
-            # already-invisible rows aren't re-emitted.
-            prev_del_paths = {d["path"] for d in prev.get("delete_files", [])}
-            new_dels = [d for d in cur.get("delete_files", [])
-                        if d["path"] not in prev_del_paths]
-            for d in new_dels:
-                dcols = _key_cols(d["key"])
-                keys = spark.read.parquet(
-                    os.path.join(table_path, d["path"])
-                ).select(*dcols).distinct()
-                b = keys.agg(*[a for c in dcols for a in (
-                    F.min(c).alias(f"lo_{c}"), F.max(c).alias(f"hi_{c}")
-                )]).collect()[0]  # single-row probe — bounded
-                cands = []
-                for e in cur["files"]:
-                    if e.get("seq", 0) >= d.get("seq", 0):
-                        continue  # delete applies only to older data
-                    overlaps = True
-                    for c in dcols:
-                        mn = e["stats"].get(f"min_{c}")
-                        mx = e["stats"].get(f"max_{c}")
-                        if mn is None or mx is None:
-                            continue
-                        if mn > b[f"hi_{c}"] or mx < b[f"lo_{c}"]:
-                            overlaps = False
-                            break
-                    if overlaps:
-                        cands.append(e)
-                if not cands:
-                    continue
-                img = _scan_with_deletes(
-                    spark, table_path, cands,
-                    prev.get("delete_files", []), cur.get("schema"),
-                    renames=cur.get("renames"),
-                    defaults=cur.get("defaults"), widens=cur.get("widens"),
-                ) if prev.get("delete_files") else _scan(
-                    spark, table_path, cands, cur.get("schema"),
-                    renames=cur.get("renames"),
-                    defaults=cur.get("defaults"), widens=cur.get("widens"))
-                pieces.append(
-                    tagged(img.join(keys, dcols, "left_semi"), "delete", v)
-                )
+        kcols = _key_cols(plan["key"])
+        if before is None:  # no file could hold a matched key
+            pieces.append(tagged(after, "insert", v))
             continue
-        if op == "merge" and cur.get("mode") == "merge-on-read":
-            # zero-rewrite upsert: added data files ARE the post-images;
-            # the before-image is the surviving OLDER rows for the
-            # source keys (stats-pruned candidates, prior deletes
-            # applied).  Classification then matches copy-on-write
-            # merge: keys absent before are inserts, present keys with
-            # any differing column emit pre+post, identical restatements
-            # emit nothing.
-            mcols = _key_cols(cur["key"])
-            after = _scan(spark, table_path, added, cur.get("schema"),
-                          renames=cur.get("renames"),
-                          defaults=cur.get("defaults"), widens=cur.get("widens"))
-            prev_del_paths = {d["path"] for d in prev.get("delete_files", [])}
-            new_del = [d for d in cur.get("delete_files", [])
-                       if d["path"] not in prev_del_paths]
-            keys = spark.read.parquet(*[
-                os.path.join(table_path, d["path"]) for d in new_del
-            ]).select(*mcols).distinct()
-            b = keys.agg(*[a for c in mcols for a in (
-                F.min(c).alias(f"lo_{c}"), F.max(c).alias(f"hi_{c}")
-            )]).collect()[0]  # single-row probe — bounded
-            cands = []
-            for e in prev["files"]:
-                overlaps = True
-                for c in mcols:
-                    mn = e["stats"].get(f"min_{c}")
-                    mx = e["stats"].get(f"max_{c}")
-                    if mn is None or mx is None:
-                        continue
-                    if mn > b[f"hi_{c}"] or mx < b[f"lo_{c}"]:
-                        overlaps = False
-                        break
-                if overlaps:
-                    cands.append(e)
-            before = None
-            if cands:
-                img = _scan_with_deletes(
-                    spark, table_path, cands,
-                    prev.get("delete_files", []), prev.get("schema"),
-                    renames=prev.get("renames"),
-                    defaults=prev.get("defaults"), widens=prev.get("widens"),
-                ) if prev.get("delete_files") else _scan(
-                    spark, table_path, cands, prev.get("schema"),
-                    renames=prev.get("renames"),
-                    defaults=prev.get("defaults"), widens=prev.get("widens"))
-                before = img.join(keys, mcols, "left_semi")
-            if before is None:
-                pieces.append(tagged(after, "insert", v))
-                continue
+        if after is not None and plan["op"] != "delete":
             pieces.append(tagged(
-                after.join(before.select(*mcols), mcols, "left_anti"),
+                after.join(before.select(*kcols), kcols, "left_anti"),
                 "insert", v))
             common = [c for c in after.columns if c in set(before.columns)]
-            non_key = [c for c in common if c not in mcols]
-            a2, b2 = after.alias("a"), before.alias("b")
-            mcond = None
-            for c in mcols:
+            non_key = [c for c in common if c not in kcols]
+            b, a = before.alias("b"), after.alias("a")
+            kcond = None
+            for c in kcols:
                 eqc = F.col(f"a.{c}") == F.col(f"b.{c}")
-                mcond = eqc if mcond is None else (mcond & eqc)
-            changed = a2.join(
-                b2, mcond, "inner"
-            ).filter(~F.struct(
-                *[F.col(f"a.{c}") for c in non_key]).eqNullSafe(
-                F.struct(*[F.col(f"b.{c}") for c in non_key])))
+                kcond = eqc if kcond is None else (kcond & eqc)
+            changed = a.join(b, kcond, "inner") \
+                .filter(~F.struct(*[F.col(f"a.{c}") for c in non_key])
+                        .eqNullSafe(
+                    F.struct(*[F.col(f"b.{c}") for c in non_key])))
             pieces.append(tagged(
                 changed.select(*[F.col(f"b.{c}").alias(c) for c in common]),
                 "update_preimage", v))
             pieces.append(tagged(
                 changed.select(*[F.col(f"a.{c}").alias(c) for c in common]),
                 "update_postimage", v))
-            # matched-DELETE intents (merge matrix): keys the commit's
-            # delete file retracts with NO re-inserted post-image are
-            # pure deletes — their pre-image rows emit as such
-            pieces.append(tagged(
-                before.join(after.select(*mcols), mcols, "left_anti"),
-                "delete", v))
-            continue
-        prev_dels = prev.get("delete_files") or []
-        cur_dels = cur.get("delete_files") or []
-        if prev_dels or cur_dels:
-            # images must be VISIBLE-state images: apply each side's
-            # equality-delete set, and include carried files whose
-            # applicable-delete set changed (a rollback dropping a
-            # delete file is an UNDELETE — its rows re-enter the
-            # visible state and must be emitted; stats-pruned).  The
-            # copy-on-write merge/delete branches below never run with
-            # pending deletes (those commits refuse), so only the
-            # append/overwrite/key-less paths see these images. (r12)
-            prev_by = {e["path"]: e for e in prev["files"]}
-            cur_by = {e["path"]: e for e in cur["files"]}
-            new_dels = [d for d in cur_dels
-                        if d["path"] not in {x["path"] for x in prev_dels}]
-            gone_dels = [d for d in prev_dels
-                         if d["path"] not in {x["path"] for x in cur_dels}]
-            aff_prev, aff_cur = list(removed), list(added)
-            for p in prev_by.keys() & cur_by.keys():
-                changed = [d for d in new_dels
-                           if d.get("seq", 0) > cur_by[p].get("seq", 0)]
-                changed += [d for d in gone_dels
-                            if d.get("seq", 0) > prev_by[p].get("seq", 0)]
-                if any(_delete_may_hit(cur_by[p], d) for d in changed):
-                    aff_prev.append(prev_by[p])
-                    aff_cur.append(cur_by[p])
-            after = (_scan_with_deletes(spark, table_path, aff_cur,
-                                        cur_dels, cur.get("schema"),
-                                        renames=cur.get("renames"),
-                                        defaults=cur.get("defaults"), widens=cur.get("widens"))
-                     if aff_cur else None)
-            before = (_scan_with_deletes(spark, table_path, aff_prev,
-                                         prev_dels, prev.get("schema"),
-                                         renames=prev.get("renames"),
-                                         defaults=prev.get("defaults"), widens=prev.get("widens"))
-                      if aff_prev else None)
-        else:
-            after = (_scan(spark, table_path, added, cur.get("schema"),
-                           renames=cur.get("renames"),
-                           defaults=cur.get("defaults"), widens=cur.get("widens"))
-                     if added else None)
-            before = (_scan(spark, table_path, removed,
-                            prev.get("schema"),
-                            renames=prev.get("renames"),
-                            defaults=prev.get("defaults"), widens=prev.get("widens"))
-                      if removed else None)
-        if op in ("append", "stream-append"):
-            if after is not None:
-                pieces.append(tagged(after, "insert", v))
-            continue
-        if op == "overwrite":
-            if before is not None and after is not None:
-                pieces.append(tagged(before.exceptAll(
-                    after.select(*before.columns)), "delete", v))
-                pieces.append(tagged(after.exceptAll(
-                    before.select(*after.columns)), "insert", v))
-            elif after is not None:
-                pieces.append(tagged(after, "insert", v))
-            elif before is not None:
-                pieces.append(tagged(before, "delete", v))
-            continue
-        key = cur.get("key")
-        kcols = _key_cols(key) if key is not None else None
-        if key is None or (before is None and after is None):
-            # unknown copy-on-write op without a recorded key: row-level
-            # diff degrades to the overwrite treatment over the images
-            if before is not None and after is not None:
-                pieces.append(tagged(before.exceptAll(
-                    after.select(*before.columns)), "delete", v))
-                pieces.append(tagged(after.exceptAll(
-                    before.select(*after.columns)), "insert", v))
-            elif after is not None:
-                pieces.append(tagged(after, "insert", v))
-            elif before is not None:
-                pieces.append(tagged(before, "delete", v))
-            continue
-        if op == "delete":
-            if before is not None:
-                gone = (before.join(after.select(*kcols), kcols,
-                                    "left_anti")
-                        if after is not None else before)
-                pieces.append(tagged(gone, "delete", v))
-            continue
-        # merge: inserts + updates, carried-identical rows excluded
-        if before is None:
-            if after is not None:  # pure insert — no file could match
-                pieces.append(tagged(after, "insert", v))
-            continue
-        pieces.append(tagged(
-            after.join(before.select(*kcols), kcols, "left_anti"),
-            "insert", v))
-        common = [c for c in after.columns if c in set(before.columns)]
-        non_key = [c for c in common if c not in kcols]
-        b, a = before.alias("b"), after.alias("a")
-        kcond = None
-        for c in kcols:
-            eqc = F.col(f"a.{c}") == F.col(f"b.{c}")
-            kcond = eqc if kcond is None else (kcond & eqc)
-        changed = a.join(b, kcond, "inner") \
-            .filter(~F.struct(*[F.col(f"a.{c}") for c in non_key]).eqNullSafe(
-                F.struct(*[F.col(f"b.{c}") for c in non_key])))
-        pieces.append(tagged(
-            changed.select(*[F.col(f"b.{c}").alias(c) for c in common]),
-            "update_preimage", v))
-        pieces.append(tagged(
-            changed.select(*[F.col(f"a.{c}").alias(c) for c in common]),
-            "update_postimage", v))
-        # matched-DELETE intents (merge matrix): keys present in the
-        # before-image that the rewrite kept out of the after-image
-        # are pure deletes (empty for plain upserts — kept rows carry)
-        pieces.append(tagged(
-            before.join(after.select(*kcols), kcols, "left_anti"),
-            "delete", v))
+        # keys the after-image no longer holds: deletes (for a merge,
+        # its matched-DELETE intents; empty for plain upserts)
+        gone = (before.join(after.select(*kcols), kcols, "left_anti")
+                if after is not None else before)
+        pieces.append(tagged(gone, "delete", v))
 
     if not pieces:
         # zero changes (e.g. only compact commits in range): an EMPTY
@@ -4435,8 +4083,8 @@ def purge_deletes(spark, table_path: str, n_files: int = 1) -> int | None:
 
     The affected set is chosen from manifest stats alone: a data file
     is rewritten only when some delete file with a HIGHER sequence
-    number has an intersecting key range (``_delete_may_hit`` — the
-    same pruning the CDC image computation uses); every other file is
+    number has an intersecting key range (``delete_applies`` — the
+    same rule the change feeds use); every other file is
     carried by reference, byte-untouched.  On a 100 TB table where a
     retraction touched a few key ranges, this rewrites those files and
     drops the delete files in one commit — O(affected), never
@@ -4452,8 +4100,7 @@ def purge_deletes(spark, table_path: str, n_files: int = 1) -> int | None:
         return None
     affected = [
         e for e in manifest["files"]
-        if any(d.get("seq", 0) > e.get("seq", 0) and _delete_may_hit(e, d)
-               for d in deletes)
+        if any(delete_applies(e, d) for d in deletes)
     ]
     untouched = [e for e in manifest["files"] if e not in affected]
     entries: list[dict] = []

@@ -2,11 +2,13 @@
 cdc_stream.py).
 
 The classifier is pinned AGAINST the batch feed (read_row_changes) —
-the two must agree bit-for-bit across every copy-on-write commit type
-— plus the stream-protocol contracts: deterministic
-readBetweenOffsets replay, no offset advance on an idle table,
-per-commit batching, schema inference from the manifest, and loud
-failures on merge-on-read commits and vacuumed offsets.
+the batch feed, the simple reader and the dist reader must agree row
+for row across copy-on-write, merge-on-read, partition-overwrite,
+write-audit-publish and branch-publish commits — plus the
+stream-protocol contracts: deterministic readBetweenOffsets replay, no
+offset advance on an idle table, per-commit batching, schema inference
+from the manifest, metadata-only partition planning, and a loud
+failure on vacuumed offsets.
 """
 
 from __future__ import annotations
@@ -38,6 +40,60 @@ def _chain(spark, tmp_path, name="t"):
     return t
 
 
+def _partition_chain(spark, tmp_path, name="parts"):
+    """overwrite partitioned by p -> set-partition-spec ->
+    overwrite_partitions replacing p=1 (half its rows restated, half
+    changed) and adding p=5: the key-less partition diff."""
+    t = os.path.join(str(tmp_path), name)
+    rows = spark.range(1, 41).select(
+        F.col("id").alias("k"), (F.col("id") % 4).alias("p"),
+        (F.col("id") * 10).alias("val"),
+    )
+    S.overwrite(rows, t, n_files=1, partition_by="p")
+    S.set_partition_spec(t, "p")
+    repl = rows.filter("p = 1").select(
+        "k", "p",
+        F.when(F.col("k") < 20, F.col("val")).otherwise(-1).alias("val"),
+    ).unionByName(spark.createDataFrame([(45, 5, 450)],
+                                        "k long, p long, val long"))
+    S.overwrite_partitions(repl, t)
+    return t
+
+
+def _wap_chain(spark, tmp_path, name="wap"):
+    """overwrite -> stage an append -> a main append lands -> publish
+    the stage (an append composed onto the moved base)."""
+    t = os.path.join(str(tmp_path), name)
+    S.overwrite(spark.range(1, 20).select(
+        F.col("id").alias("k"), (F.col("id") * 10).alias("val")),
+        t, n_files=1)
+    S.stage_append(spark.createDataFrame([(100, 1), (101, 2)],
+                                         "k long, val long"),
+                   t, "audit", n_files=2)
+    S.append(spark.createDataFrame([(50, 5)], "k long, val long"), t,
+             n_files=1)
+    S.publish_staged(t, "audit")
+    return t
+
+
+def _branch_chain(spark, tmp_path, name="br"):
+    """overwrite -> branch merge (update + insert) and branch delete ->
+    publish_branch: the branch's rewrite commits graduate as main
+    merge/delete commits."""
+    t = os.path.join(str(tmp_path), name)
+    S.overwrite(spark.range(1, 30).select(
+        F.col("id").alias("k"), (F.col("id") * 10).alias("val")),
+        t, n_files=2)
+    S.create_branch(t, "b")
+    S.branch_merge(spark.createDataFrame([(3, 333), (90, 900)],
+                                         "k long, val long"),
+                   t, "b", key="k")
+    S.branch_delete_rows(spark.createDataFrame([(4,), (90,)], "k long"),
+                         t, "b", key="k")
+    S.publish_branch(t, "b")
+    return t
+
+
 def _reader(t, **opts):
     src = C.LedgerCdcDataSource(
         options={"path": t, **{k.lower(): str(v) for k, v in opts.items()}}
@@ -45,19 +101,29 @@ def _reader(t, **opts):
     return src.simpleStreamReader(src.schema()), src
 
 
-def test_stream_classifier_matches_batch_feed(spark, tmp_path):
-    t = _chain(spark, tmp_path)
-    reader, _src = _reader(t, maxVersionsPerBatch=10)
+@pytest.mark.parametrize(
+    "chain", [_chain, _partition_chain, _wap_chain, _branch_chain],
+    ids=["copy_on_write", "overwrite_partitions", "publish_staged",
+         "publish_branch"],
+)
+def test_stream_classifier_matches_batch_feed(spark, tmp_path, chain):
+    # the batch feed, the simple reader and the dist reader agree row
+    # for row over the whole chain
+    t = chain(spark, tmp_path)
+    last = S.versions(t)[-1]
+    reader, src = _reader(t, maxVersionsPerBatch=10)
     rows, off = reader.read({"version": 1})
     got = sorted(rows)
-    assert off == {"version": 5, "snap": 1}
-    batch = S.read_row_changes(spark, t, 1, 5)
+    assert off == {"version": last, "snap": 1}
+    batch = S.read_row_changes(spark, t, 1, last)
     want = sorted(
-        tuple(r) for r in batch.select(
-            "k", "val", "_change_type", "_commit_version"
-        ).collect()
+        tuple(r) for r in batch.select(*src.schema().fieldNames()).collect()
     )
-    assert got == want
+    assert got == want and got
+    dist, _ = _dist_reader(t)
+    drows, end = _drain_dist(dist, {"version": 1, "snap": 1})
+    assert end == {"version": last, "snap": 1}
+    assert sorted(drows) == want
 
 
 def test_read_between_offsets_replays_exactly(spark, tmp_path):
@@ -366,6 +432,35 @@ def test_dist_append_fans_out_per_file(spark, tmp_path):
     parts = reader.partitions({"version": 1, "snap": 1},
                               {"version": 2, "snap": 1})
     assert [p.kind for p in parts] == ["insert_file"] * 3
+
+
+def test_dist_plans_large_append_from_metadata_fast(tmp_path):
+    # planning reads the two manifests once: an append onto a
+    # 10,000-file table plans one insert_file partition well inside a
+    # second (no data file exists — planning must not touch any)
+    import json
+    import time
+
+    mdir = tmp_path / "wide" / "_manifests"
+    mdir.mkdir(parents=True)
+    schema = {"type": "struct", "fields": [
+        {"name": "k", "type": "long", "nullable": True, "metadata": {}}]}
+    files = [{"path": f"data/f{i:05d}.parquet", "seq": 1,
+              "stats": {"min_k": i, "max_k": i}} for i in range(10_000)]
+    new = {"path": "data/new.parquet", "seq": 2,
+           "stats": {"min_k": 10_000, "max_k": 10_000}}
+    for v, fl in ((1, files), (2, files + [new])):
+        (mdir / f"v{v}.json").write_text(json.dumps(
+            {"operation": "append", "version": v, "files": fl,
+             "schema": schema}))
+    reader, _ = _dist_reader(str(tmp_path / "wide"))
+    t0 = time.perf_counter()
+    parts = reader.partitions({"version": 1, "snap": 1},
+                              {"version": 2, "snap": 1})
+    elapsed = time.perf_counter() - t0
+    assert [p.kind for p in parts] == ["insert_file"]
+    assert parts[0].payload["entry"]["path"] == "data/new.parquet"
+    assert elapsed < 1.0, f"planning took {elapsed:.2f} s"
 
 
 def test_dist_rows_match_simple_reader_cow_and_mor(spark, tmp_path):
