@@ -68,7 +68,7 @@ from pyspark.sql.types import LongType, StringType, StructField, StructType
 from magshield_data_pipeline_spark.sources.ledger_meta import (
     _key_cols,
     commit_plan,
-    delete_applies,
+    delete_index,
     feed_manifest,
     read_manifest,
     versions,
@@ -298,7 +298,7 @@ def _visible_rows(table_path: str, entries: list[dict],
                   defaults: list[dict] | None = None) -> list[dict]:
     """The VISIBLE rows of *entries* under *delete_files*: each
     entry's rows minus those of every delete file that applies to it
-    (``ledger_meta.delete_applies``) — the driver-side twin of
+    (``ledger_meta.delete_index``) — the driver-side twin of
     ``snapshots._scan_with_deletes``.  *keysets* caches delete-file
     key sets across calls within one commit diff.  An equality
     delete's recorded key is era-mapped to its CURRENT name for the
@@ -307,8 +307,9 @@ def _visible_rows(table_path: str, entries: list[dict],
     import pyarrow.parquet as pq
 
     out: list[dict] = []
+    applying = delete_index(delete_files)
     for e in sorted(entries, key=lambda x: x["path"]):
-        dels = [d for d in delete_files if delete_applies(e, d)]
+        dels = applying(e)
         eq = [d for d in dels if d.get("kind") != "positional"]
         pos = [d for d in dels if d.get("kind") == "positional"]
         # a projected field set may exclude a delete key: read it as a
@@ -685,13 +686,13 @@ class LedgerCdcDistStreamReader(DataSourceStreamReader):
         v0 = int(start["version"])
         if not start.get("snap", 1):
             man = feed_manifest(self.path, v0, "ledger_cdc_dist")
-            dels = man.get("delete_files") or []
+            applying = delete_index(man.get("delete_files") or [])
             for e in man["files"]:
                 if not _file_may_match(e, self.filters):
                     continue  # filter pushdown: metadata-pruned
                 parts.append(LedgerCdcPartition("snapshot_file", {
                     "entry": e,
-                    "deletes": [d for d in dels if delete_applies(e, d)],
+                    "deletes": applying(e),
                     "version": v0,
                 }))
         for v in range(v0 + 1, int(end["version"]) + 1):

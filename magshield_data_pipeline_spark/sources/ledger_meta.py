@@ -5,8 +5,10 @@ readers (``cdc_stream``):
 - manifest access: :func:`versions`, :func:`read_manifest` (segment
   references resolved) and :func:`feed_manifest` (a missing manifest
   is a vacuumed version, raised loudly);
-- the key and delete rules: :func:`_key_cols` and
-  :func:`delete_applies` (which delete files apply to a data file);
+- the key and delete rules: :func:`_key_cols`, :func:`delete_applies`
+  (which delete files apply to a data file) and :func:`delete_index`
+  (the same rule over one delete set, positional targets indexed
+  once);
 - :func:`commit_plan`: what one commit changed, decided from its
   manifest and its predecessor's alone.
 
@@ -134,6 +136,24 @@ def delete_applies(e: dict, d: dict) -> bool:
     return True
 
 
+def delete_index(delete_files: list[dict]):
+    """Index one delete set for :func:`delete_applies`: returns
+    ``applying(e)``, the delete files that can hide rows of data entry
+    *e*, in order.  Each positional delete's ``targets`` becomes one
+    frozenset per delete file here, so checking every data file
+    against a delete that targets N of them costs O(N), not O(N^2)."""
+    index = [(d, frozenset(d.get("targets") or ())
+              if d.get("kind") == "positional" else None)
+             for d in delete_files]
+
+    def applying(e: dict) -> list[dict]:
+        return [d for d, targets in index
+                if (e["path"] in targets if targets is not None
+                    else delete_applies(e, d))]
+
+    return applying
+
+
 def commit_plan(table_path: str, v: int, who: str) -> dict:
     """What commit *v* changed, from its manifest and its
     predecessor's alone.  The plan's ``kind`` is one of:
@@ -175,11 +195,10 @@ def commit_plan(table_path: str, v: int, who: str) -> dict:
         return {**plan, "kind": "inserts", "after": added}
     before, after = removed, added
     if new_dels or gone_dels:
+        hit_new, hit_gone = delete_index(new_dels), delete_index(gone_dels)
         for p, e_cur in cur_by.items():
             e_prev = prev_by.get(p)
-            if e_prev is not None and (
-                    any(delete_applies(e_cur, d) for d in new_dels)
-                    or any(delete_applies(e_prev, d) for d in gone_dels)):
+            if e_prev is not None and (hit_new(e_cur) or hit_gone(e_prev)):
                 before.append(e_prev)
                 after.append(e_cur)
     return {**plan, "kind": "diff" if before or after else "skip",

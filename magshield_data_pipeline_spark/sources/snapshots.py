@@ -13,8 +13,13 @@ contract, stdlib only):
   exact files that make up that snapshot;
 - a manifest is published with stage-then-``os.link`` — exclusive
   creation, so of two racing writers allocating the same version
-  exactly ONE wins and the loser retries at N+1 (optimistic
-  concurrency, the Iceberg commit protocol on a filesystem);
+  exactly ONE wins (optimistic concurrency, the Iceberg commit
+  protocol on a filesystem).  Every commit takes ONE path,
+  ``_commit``: it describes what it changes relative to its parent
+  manifest, ``_build_manifest`` turns that into the manifest for any
+  (parent, version), and the loser of a race re-resolves on the new
+  latest (pure additions), rebases (``isolation="snapshot"``, provably
+  disjoint) or refuses loudly;
 - data files are IMMUTABLE and never deleted by table operations:
   ``overwrite`` and ``compact`` publish a new manifest that simply
   stops listing old files, so a reader holding version N's file list
@@ -65,7 +70,7 @@ from magshield_data_pipeline_spark.sources.ledger_meta import (
     _manifest_dir,
     _raw_manifest,
     commit_plan,
-    delete_applies,
+    delete_index,
     read_manifest,
     versions,
 )
@@ -240,12 +245,6 @@ def _merge_schema(carried: dict | None, new: dict) -> dict:
     return {"type": "struct", "fields": merged_fields}
 
 
-#: default for ``_publish_manifest(partition_spec=...)``: carry the
-#: latest manifest's active spec forward unchanged (every commit type
-#: keeps the table's declared layout until ``set_partition_spec``
-#: explicitly changes it — the same carry contract as constraints).
-_SPEC_CARRY = object()
-
 #: writer sentinel: ``append(..., partition_by=CURRENT_SPEC)`` lays the
 #: commit's files out under the table's ACTIVE partition spec (set by
 #: ``set_partition_spec``) — the Iceberg writer contract: the table
@@ -254,195 +253,236 @@ _SPEC_CARRY = object()
 #: byte of old data.
 CURRENT_SPEC = object()
 
+#: versioned TABLE metadata: every commit carries each key from its
+#: parent manifest until one explicitly replaces it or appends an event
+#: to it (``_build_manifest``), and a rebase refuses when any of them
+#: drifted (``_meta_drift``).  CHECK constraints, the active partition
+#: spec, and the rename / initial-default / drop / widen histories
+#: that let readers map each file's stored columns by sequence number.
+_TABLE_META = ("constraints", "partition_spec", "renames", "defaults",
+               "drops", "widens")
 
-def _publish_manifest(
-    table_path: str,
-    operation: str,
-    entries: list[dict],
-    carry: bool = False,
-    schema: dict | None = None,
-    constraints: dict | None = None,
-    validated: dict | None = None,
-    revalidate=None,
-    partition_spec=_SPEC_CARRY,
-    schema_replace: bool = False,
-    rename_event: dict | None = None,
-    default_event: dict | None = None,
-    defaults_replace: list | None = None,
-    drop_event: dict | None = None,
-    drops_replace: list | None = None,
-    widen_event: dict | None = None,
-    widens_replace: list | None = None,
-) -> int:
-    """Optimistic commit: stage the manifest, then exclusively link it
-    as the next version; on collision (a concurrent writer took the
-    number) retry at the next one.  ``carry=True`` (append semantics)
-    re-resolves the carried-forward file list against the CURRENT
-    latest on every retry — a concurrent commit that wins the version
-    race must have its files carried, never lost-updated away (the
-    append-append conflict is resolvable by construction: both file
-    sets are additions).  ``schema`` is the incoming data's schema
-    (``StructType.jsonValue()``); under ``carry`` it is merged into the
-    carried manifest's schema (add-column evolution), otherwise it
-    REPLACES the schema outright.  Returns the committed version."""
+
+def _evolve_schema(parent: dict, schema: dict) -> dict:
+    """Append's implicit add-column evolution of the parent's schema by
+    the incoming *schema* (``_merge_schema``), refusing to re-introduce
+    a DROPPED name: that would resurrect old files' stale bytes — the
+    drop/re-add handshake requires ``add_column``, which masks them
+    with an initial default."""
+    carried = parent.get("schema")
+    dropped = {d["col"] for d in parent.get("drops") or []}
+    names = {f["name"] for f in (carried or {"fields": []})["fields"]}
+    revived = [f["name"] for f in schema["fields"]
+               if f["name"] in dropped and f["name"] not in names]
+    if revived:
+        raise ValueError(
+            f"column(s) {revived} were previously DROPPED — re-add via "
+            "snapshots.add_column (implicit re-introduction would "
+            "resurrect old files' stale values)"
+        )
+    return _merge_schema(carried, schema)
+
+
+def _build_manifest(parent: dict | None, v: int, c: dict,
+                    rebased_from: int | None = None) -> dict:
+    """The manifest that commit description *c* publishes as version
+    *v* on top of *parent* (None for a table's first commit) — the one
+    place every ledger manifest is written.  A description states the
+    commit relative to its parent, so a retry on a newer latest or a
+    rebase is the same call with another ``(parent, v)``:
+
+    - ``op`` and ``tags``: the operation name and the extra keys it
+      records (``mode``, ``key``, ``txn``, ``batch_id``,
+      ``replaced_partitions``, ``rollback_of``, ...);
+    - ``add`` / ``add_deletes``: the data and delete entries the
+      commit wrote, stamped ``seq = v`` — what lets a merge-on-read
+      delete apply only to data committed BEFORE it (the Iceberg v2
+      sequence-number contract); carried entries keep the seq of the
+      commit that created them;
+    - ``drop``: paths of parent data or delete files the commit stops
+      listing; ``replace=True`` lists none of the parent's (overwrite,
+      compact: the new files ARE the content, and pending deletes are
+      materialized or moot);
+    - ``schema``: None carries the parent's; otherwise it replaces it,
+      or with ``evolve=True`` is merged into it (``_evolve_schema``);
+    - ``meta`` / ``events``: per ``_TABLE_META`` key, a replacement
+      value, or an event appended to the carried history and stamped
+      with ``v`` (readers undo renames, fill defaults and resolve
+      widened types by comparing event versions to file sequence
+      numbers).  Empty values are not written.
+
+    ``onto`` builds on that manifest instead of the parent (rollback:
+    an empty commit on top of an older snapshot, at the next version).
+    ``rebased_from`` records the version a rebased commit first tried.
+    """
+    parent = c.get("onto") or parent or {}
+    drop = c.get("drop") or ()
+
+    def carried(entries):
+        if c.get("replace"):
+            return []
+        return [e for e in entries or [] if e["path"] not in drop]
+
+    m = {**(c.get("tags") or {}), "operation": c["op"], "version": v,
+         "committed_at": time.time()}
+    m["files"] = carried(parent.get("files")) + [
+        {**e, "seq": v} for e in c.get("add") or []]
+    dels = carried(parent.get("delete_files")) + [
+        {**e, "seq": v} for e in c.get("add_deletes") or []]
+    if dels:
+        m["delete_files"] = dels
+    schema = c.get("schema")
+    if schema is None:
+        schema = parent.get("schema")
+    elif c.get("evolve"):
+        schema = _evolve_schema(parent, schema)
+    if schema is not None:
+        m["schema"] = schema
+    meta, events = c.get("meta") or {}, c.get("events") or {}
+    for k in _TABLE_META:
+        val = meta[k] if k in meta else parent.get(k)
+        if k in events:
+            val = list(val or []) + [{**events[k], "v": v}]
+        if val:
+            m[k] = val
+    if rebased_from is not None:
+        m["rebased_from"] = rebased_from
+    return m
+
+
+def _try_link(table_path: str, v: int, manifest: dict) -> bool:
+    """One exclusive-create publish attempt of *manifest* as version
+    *v* — stage, then ``os.link`` (of two writers allocating the same
+    version exactly ONE wins): True iff this writer won.  The staged
+    file is cleaned up either way and nothing is discarded on a loss,
+    so the caller may retry or rebase with the same data files."""
     d = _manifest_dir(table_path)
-    os.makedirs(d, exist_ok=True)
     staged = os.path.join(d, f".staged-{uuid.uuid4().hex}.json")
-    while True:
-        prior = versions(table_path)
-        v = (prior or [0])[-1] + 1
-        latest_manifest = (
-            read_manifest(table_path, prior[-1]) if prior else None
-        )
-        carried_manifest = latest_manifest if carry else None
-        carried = carried_manifest["files"] if carried_manifest else []
-        committed_schema = schema
-        if carried_manifest is not None:
-            if schema is None:
-                # metadata-only commit (set-constraint): CARRY the
-                # recorded schema — dropping it reverted readers of the
-                # new version to footer inference, losing evolved
-                # columns' null-fill (latent since r11, surfaced by
-                # branch_merge reading a set-constraint base) (r12)
-                committed_schema = carried_manifest.get("schema")
-            elif schema_replace:
-                # rename/drop/add_column: the transformed schema
-                # replaces the carried one outright (merging would keep
-                # the old field AND append the new at the end)
-                committed_schema = schema
-            else:
-                committed_schema = _merge_schema(
-                    carried_manifest.get("schema"), schema
-                )
-                # re-introducing a DROPPED name via implicit add-column
-                # evolution would resurrect old files' stale bytes —
-                # the drop/re-add handshake requires add_column (which
-                # masks them with an initial default)
-                dropped = {
-                    d["col"] for d in
-                    (carried_manifest.get("drops") or [])
-                }
-                carried_names = {
-                    f["name"] for f in
-                    (carried_manifest.get("schema") or {"fields": []})
-                    ["fields"]
-                }
-                revived = [
-                    f["name"] for f in schema["fields"]
-                    if f["name"] in dropped
-                    and f["name"] not in carried_names
-                ]
-                if revived:
-                    raise ValueError(
-                        f"column(s) {revived} were previously DROPPED "
-                        "— re-add via snapshots.add_column (implicit "
-                        "re-introduction would resurrect old files' "
-                        "stale values)"
-                    )
-        # stamp this commit's NEW entries with their sequence number —
-        # what lets a merge-on-read delete file apply only to data
-        # committed BEFORE it (the Iceberg v2 sequence-number contract);
-        # carried entries keep the seq of the commit that created them
-        stamped = [{**e, "seq": v} for e in entries]
-        manifest = {
-            "operation": operation,
-            "version": v,
-            "committed_at": time.time(),
-            "files": carried + stamped,
-        }
-        if carried_manifest and carried_manifest.get("delete_files"):
-            # appends COMPOSE with pending merge-on-read deletes: the
-            # delete files are carried forward (dropping them would
-            # silently undelete); overwrite/compact replace content and
-            # correctly drop them (compact is the materialization)
-            manifest["delete_files"] = carried_manifest["delete_files"]
-        if committed_schema is not None:
-            manifest["schema"] = committed_schema
-        # CHECK constraints are table metadata: they survive EVERY
-        # commit type (including overwrite) until explicitly changed —
-        # pass constraints={} to drop them all
-        committed_constraints = (
-            constraints if constraints is not None
-            else (latest_manifest or {}).get("constraints")
-        )
-        if revalidate is not None and (
-                (committed_constraints or {}) != (validated or {})):
-            # ADVICE r11 low (TOCTOU): a constraint added between the
-            # caller's validation and this link would commit unvalidated
-            # rows — re-validate the incoming data against the set this
-            # commit will actually carry (rare: only on a lost race or
-            # a constraint landing mid-commit), then carry on.  Raises
-            # on violation, table unchanged.
-            revalidate(committed_constraints or {})
-            validated = committed_constraints
-        if committed_constraints:
-            manifest["constraints"] = committed_constraints
-        # the ACTIVE partition spec is table metadata like constraints:
-        # carried by every commit until explicitly re-declared; per-FILE
-        # specs on manifest entries are untouched (old files keep the
-        # layout they were written with — partition EVOLUTION never
-        # rewrites data)
-        committed_spec = (
-            partition_spec if partition_spec is not _SPEC_CARRY
-            else (latest_manifest or {}).get("partition_spec")
-        )
-        if committed_spec is not None:
-            manifest["partition_spec"] = committed_spec
-        # column-rename history is table metadata too: carried by every
-        # commit; a rename_event is stamped with THIS commit's version
-        # (resolved inside the retry loop) — readers undo renames newer
-        # than a file's sequence number to find its stored column names
-        committed_renames = (latest_manifest or {}).get("renames")
-        if rename_event is not None:
-            committed_renames = list(committed_renames or []) + [
-                {**rename_event, "v": v}
-            ]
-        if committed_renames:
-            manifest["renames"] = committed_renames
-        # initial-default history: a column added WITH a default fills
-        # that value (not null) in files older than the add commit —
-        # carried like renames, version-stamped inside the retry loop
-        committed_defaults = (
-            defaults_replace if defaults_replace is not None
-            else (latest_manifest or {}).get("defaults")
-        )
-        if default_event is not None:
-            committed_defaults = list(committed_defaults or []) + [
-                {**default_event, "v": v}
-            ]
-        if committed_defaults:
-            manifest["defaults"] = committed_defaults
-        committed_drops = (
-            drops_replace if drops_replace is not None
-            else (latest_manifest or {}).get("drops")
-        )
-        if drop_event is not None:
-            committed_drops = list(committed_drops or []) + [
-                {**drop_event, "v": v}
-            ]
-        if committed_drops:
-            manifest["drops"] = committed_drops
-        # type-widening history: carried like renames, version-stamped
-        # inside the retry loop — readers resolve each file's stored
-        # (narrower) physical type from the events newer than its seq
-        committed_widens = (
-            widens_replace if widens_replace is not None
-            else (latest_manifest or {}).get("widens")
-        )
-        if widen_event is not None:
-            committed_widens = list(committed_widens or []) + [
-                {**widen_event, "v": v}
-            ]
-        if committed_widens:
-            manifest["widens"] = committed_widens
-        with open(staged, "w") as f:
-            _dump_manifest(table_path, v, manifest, f)
-        try:
-            os.link(staged, os.path.join(d, f"v{v}.json"))
-        except FileExistsError:
-            continue  # lost the race — re-resolve against the new latest
+    with open(staged, "w") as f:
+        _dump_manifest(table_path, v, manifest, f)
+    try:
+        os.link(staged, os.path.join(d, f"v{v}.json"))
+    except FileExistsError:
+        return False
+    finally:
         os.unlink(staged)
-        return v
+    return True
+
+
+def _latest(table_path: str) -> tuple[int, dict | None]:
+    vs = versions(table_path)
+    return (vs[-1], read_manifest(table_path, vs[-1])) if vs else (0, None)
+
+
+def _commit(table_path: str, c: dict, *, who: str | None = None,
+            base: tuple[int, dict] | None = None, conflict=None,
+            check=None, isolation: str = "serializable",
+            race_inject=None, discard: bool = True) -> int | None:
+    """Publish commit description *c* (see ``_build_manifest``) — the
+    one commit path of the ledger.  Each attempt builds the manifest
+    for ``(parent, parent version + 1)`` and links it (``_try_link``);
+    a lost race is handled by one of three policies:
+
+    - RE-RESOLVE (no *base*): the commit adds files or metadata
+      without reading data, so the parent is simply the CURRENT latest
+      on every attempt — a concurrent commit that wins the version
+      race is carried, never lost-updated away (append, stream-append,
+      adopt, overwrite, the schema / constraint / spec commits,
+      publish_staged, rollback).  *check(parent_version, parent)* runs
+      before each attempt: it may raise (a CHECK constraint landed and
+      the data fails it) or return True to stop without committing
+      (an epoch or rollback already in place) — the written files are
+      then reclaimed and None is returned.
+    - REBASE (*base* given, ``isolation="snapshot"``, a *conflict*
+      check): the commit read *base* = ``(version, manifest)``, so its
+      first attempt is exactly base+1.  On a loss, ``conflict(latest)``
+      decides whether the commits in between are provably disjoint
+      from what it read — file-level validation from manifests, no
+      data re-read (``_cow_rebase_conflict``, ``_meta_drift``,
+      ``_positional_conflict``).  If so the same description is
+      re-built on the latest, reusing the written data files: a rebase
+      costs one manifest link, never a rewrite — the Iceberg
+      commit.retry contract that lets concurrent writers compose.
+    - REFUSE (otherwise): the written files are reclaimed and the
+      conflict surfaces as a loud RuntimeError instead of a lost update
+      (the Iceberg validate-snapshot-id contract; the caller redoes
+      the operation on the new snapshot).  ``discard=False`` keeps the
+      files when something else still references them (a branch).
+
+    *race_inject* is a deterministic race-injection hook for tests and
+    registry queries: called once, after the data files are on disk and
+    before the first attempt — a commit it makes is exactly a
+    concurrent writer winning the race.  A committed ``txn`` or
+    ``batch_id`` tag advances its durable high-water file (the replay
+    check that survives vacuum).  Returns the committed version."""
+    os.makedirs(_manifest_dir(table_path), exist_ok=True)
+    written = ((c.get("add") or []) + (c.get("add_deletes") or [])
+               if discard else [])
+    if race_inject is not None:
+        race_inject()
+    pv, parent = base or _latest(table_path)
+    rebased_from = None
+    while True:
+        if check is not None and check(pv, parent):
+            _discard_commit_dirs(table_path, written)
+            return None
+        v = pv + 1
+        if _try_link(table_path, v,
+                     _build_manifest(parent, v, c, rebased_from)):
+            tags = c.get("tags") or {}
+            if tags.get("txn"):
+                _advance_txn(table_path, *tags["txn"])
+            if tags.get("batch_id") is not None:
+                _advance_high_water(table_path, tags["batch_id"])
+            return v
+        pv, parent = _latest(table_path)
+        if base is None:
+            continue  # re-resolve against the new latest
+        if isolation != "snapshot" or conflict is None:
+            _discard_commit_dirs(table_path, written)
+            raise RuntimeError(
+                f"{who}: concurrent commit took v{v} at {table_path} "
+                f"after this {who} read its base — retry against the "
+                "new snapshot (serializable conflict)"
+            )
+        why = conflict(parent)
+        if why:
+            _discard_commit_dirs(table_path, written)
+            raise RuntimeError(
+                f"{who}: snapshot-isolation conflict at {table_path}: "
+                f"{why} — redo the {who} against the new snapshot"
+            )
+        rebased_from = base[0] + 1
+
+
+def _publish_manifest(table_path: str, operation: str,
+                      entries: list[dict], carry: bool = False,
+                      schema: dict | None = None, check=None) -> int:
+    """Re-resolving commit of freshly written *entries*: with
+    ``carry=True`` they join the latest snapshot's files and *schema*
+    (``StructType.jsonValue()``) evolves its schema — append
+    semantics; otherwise they REPLACE the content and *schema* the
+    schema (overwrite).  Table metadata is carried either way."""
+    return _commit(table_path, {
+        "op": operation, "add": entries, "replace": not carry,
+        "schema": schema, "evolve": carry,
+    }, check=check)
+
+
+def _revalidating(df, table_path: str, validated: dict | None):
+    """A ``_commit`` check closing the constraint TOCTOU window: a
+    CHECK constraint added between the caller's validation of *df* and
+    the link would commit unvalidated rows, so re-validate *df* against
+    the set the commit will actually carry whenever it differs from
+    *validated* (rare: only on a lost race or a constraint landing
+    mid-commit).  Raises on violation, table unchanged."""
+    def check(_pv, parent) -> bool:
+        cons = (parent or {}).get("constraints") or {}
+        if cons != (validated or {}):
+            _validate_constraints(df, table_path, cons)
+        return False
+
+    return check
 
 
 _NUMERIC_TYPES = ("long", "integer", "double", "float", "short", "decimal")
@@ -905,10 +945,8 @@ def set_partition_spec(table_path: str, partition_by) -> int:
         name, source, transform, param = spec
         stored = {"name": name, "source": source,
                   "transform": transform, "param": param}
-    return _publish_manifest(
-        table_path, "set-partition-spec", [], carry=True,
-        partition_spec=stored,
-    )
+    return _commit(table_path, {"op": "set-partition-spec",
+                                "meta": {"partition_spec": stored}})
 
 
 def active_partition_spec(table_path: str, version: int | None = None):
@@ -1221,8 +1259,7 @@ def append(df, table_path: str, n_files: int = 2,
     return _publish_manifest(
         table_path, "append", entries, carry=True,
         schema=df.schema.jsonValue(),
-        validated=validated,
-        revalidate=lambda cons: _validate_constraints(df, table_path, cons),
+        check=_revalidating(df, table_path, validated),
     )
 
 
@@ -1244,8 +1281,7 @@ def overwrite(df, table_path: str, n_files: int = 2,
                                 bloom_for=bloom_for, ndv_for=ndv_for)
     return _publish_manifest(
         table_path, "overwrite", entries, schema=df.schema.jsonValue(),
-        validated=validated,
-        revalidate=lambda cons: _validate_constraints(df, table_path, cons),
+        check=_revalidating(df, table_path, validated),
     )
 
 
@@ -1328,27 +1364,15 @@ def overwrite_partitions(df, table_path: str, n_files: int = 1) -> int:
     if not replaced:
         raise ValueError("overwrite_partitions: source has no rows")
     _validate_constraints(df, table_path)
-    kept = [e for e in manifest["files"]
-            if e["partition"][p_name] not in replaced]
-    entries = [
-        {**e, "seq": base_version + 1}
-        for e in _write_data_files(df, table_path, n_files,
-                                   partition_by=active_pb)
-    ]
-    new_manifest = {
-        "operation": "overwrite-partitions",
-        "version": base_version + 1,
-        "committed_at": time.time(),
-        "replaced_partitions": sorted(replaced),
-        "files": kept + entries,
-        "schema": (manifest.get("schema")
-                   if manifest.get("schema") is not None
-                   else df.schema.jsonValue()),
-    }
-    _carry_table_meta(new_manifest, manifest)
-    _publish_at_exactly(table_path, base_version + 1, new_manifest,
-                        entries, op="overwrite_partitions")
-    return base_version + 1
+    return _commit(table_path, {
+        "op": "overwrite-partitions",
+        "tags": {"replaced_partitions": sorted(replaced)},
+        "add": _write_data_files(df, table_path, n_files,
+                                 partition_by=active_pb),
+        "drop": {e["path"] for e in manifest["files"]
+                 if e["partition"][p_name] in replaced},
+        "schema": manifest.get("schema") or df.schema.jsonValue(),
+    }, who="overwrite_partitions", base=(base_version, manifest))
 
 
 def compact(spark, table_path: str, n_files: int = 1,
@@ -1364,21 +1388,26 @@ def compact(spark, table_path: str, n_files: int = 1,
     cover disjoint key ranges, turning the manifest min/max stats into
     an effective pruning index for reads and stats-pruned MERGEs —
     interleaved ingestion order makes every file span the whole key
-    range, and stats prune nothing until a clustering rewrite."""
-    latest = versions(table_path)[-1]
-    content = read(spark, table_path, latest)
-    entries = _write_data_files(content, table_path, n_files,
-                                cluster_by=cluster_by,
-                                bloom_for=bloom_for,
-                                zorder_by=zorder_by,
-                                ndv_for=ndv_for)
-    return _publish_manifest(
-        table_path, "compact", entries, schema=content.schema.jsonValue(),
+    range, and stats prune nothing until a clustering rewrite.
+    Serializable: the rewrite is of the snapshot it read, so a commit
+    landing meanwhile fails it loudly (re-resolving would drop that
+    commit's rows from the new content)."""
+    base = _latest(table_path)
+    content = read(spark, table_path, base[0])
+    return _commit(table_path, {
+        "op": "compact",
+        "add": _write_data_files(content, table_path, n_files,
+                                 cluster_by=cluster_by,
+                                 bloom_for=bloom_for,
+                                 zorder_by=zorder_by,
+                                 ndv_for=ndv_for),
+        "replace": True,
+        "schema": content.schema.jsonValue(),
         # every rewritten file now stores the CURRENT (widened) types:
         # the widen era history is inert and is retired here, which is
         # what re-enables rename/drop on previously-widened columns
-        widens_replace=[],
-    )
+        "meta": {"widens": []},
+    }, who="compact", base=base)
 
 
 def version_as_of(table_path: str, ts: float) -> int:
@@ -1970,6 +1999,7 @@ def _scan_with_deletes(spark, table_path: str, data_entries: list[dict],
     eq_dels = [d for d in delete_files
                if d.get("kind", "equality") != "positional"]
     pos_dels = [d for d in delete_files if d.get("kind") == "positional"]
+    pos_applying = delete_index(pos_dels)
     groups: dict[tuple, list[dict]] = {}
     for e in data_entries:
         eq_app = tuple(
@@ -1978,10 +2008,7 @@ def _scan_with_deletes(spark, table_path: str, data_entries: list[dict],
                 if d.get("seq", 0) > e.get("seq", 0)
             )
         )
-        pos_app = tuple(sorted(
-            d["path"] for d in pos_dels
-            if e["path"] in set(d.get("targets") or ())
-        ))
+        pos_app = tuple(sorted(d["path"] for d in pos_applying(e)))
         groups.setdefault((eq_app, pos_app), []).append(e)
     frames = []
     for applicable in sorted(groups):
@@ -2641,20 +2668,30 @@ def remove_orphans(table_path: str, older_than_seconds: float = 86400.0
 def append_stream_batch(df, table_path: str, batch_id: int,
                         n_files: int = 1) -> int | None:
     """Exactly-once per-epoch commit for ``writeStream.foreachBatch``:
-    commit *df* as an append whose manifest RECORDS the epoch id, and
-    make replays no-ops — Structured Streaming re-runs a failed epoch
+    an ``append`` of *df* whose manifest RECORDS the epoch id, with
+    replays made no-ops — Structured Streaming re-runs a failed epoch
     with the SAME batch_id, so idempotence of this call is what turns
     the sink's at-least-once delivery into exactly-once table state
     (the Delta/Iceberg ``txnAppId``/``txnVersion`` contract).
 
+    The commit is an append in every other respect (one commit path,
+    ``_commit``): it carries the parent's files, pending delete files
+    and table metadata (constraints, partition spec, rename / default /
+    drop / widen histories), evolves the schema by add-column only,
+    stamps its new entries with their sequence number, and
+    re-validates CHECK constraints that landed mid-commit.  Its files
+    land under the table's active partition spec, when one is
+    declared.  Operation ``stream-append``, tag ``batch_id``.
+
     Returns the committed version, or ``None`` when this epoch was
     already committed (replay) — decided BEFORE writing data files,
-    and re-checked after losing a manifest race, so two concurrent
-    attempts of one epoch commit exactly once.  The decision consults
-    BOTH the retained manifests and the durable high-water batch_id
-    file (advanced on every commit, carried forward by ``vacuum``), so
-    a replay of an epoch whose manifest retention already dropped is
-    still a no-op — exactly-once survives vacuum."""
+    and re-checked before every publish attempt, so two concurrent
+    attempts of one epoch commit exactly once (the loser reclaims its
+    files).  The decision consults BOTH the retained manifests and the
+    durable high-water batch_id file (advanced on every commit,
+    carried forward by ``vacuum``), so a replay of an epoch whose
+    manifest retention already dropped is still a no-op — exactly-once
+    survives vacuum."""
     def _committed() -> bool:
         hw = _read_high_water(table_path)
         if hw is not None and batch_id <= hw:
@@ -2672,73 +2709,20 @@ def append_stream_batch(df, table_path: str, batch_id: int,
                 return False
         return False
 
-    def _discard(written: list[dict]) -> None:
-        # a lost replay race leaves OUR files referenced by no manifest;
-        # reclaim them here rather than leaning on remove_orphans
-        _discard_commit_dirs(table_path, written)
-
     if _committed():
         return None
     validated = table_constraints(table_path)
     _validate_constraints(df, table_path, validated)
-    # streamed batches land under the table's ACTIVE partition spec
-    # when one is declared — the same writer contract as merge/delete
-    # rewrites: the declared layout owns every write path
     entries = _write_data_files(
         df, table_path, n_files,
         partition_by=active_partition_spec(table_path),
     )
-    d = _manifest_dir(table_path)
-    os.makedirs(d, exist_ok=True)
-    staged = os.path.join(d, f".staged-{uuid.uuid4().hex}.json")
-    while True:
-        if _committed():  # a racing replay of THIS epoch won
-            if os.path.exists(staged):
-                os.unlink(staged)
-            _discard(entries)
-            return None
-        # resolve carry against the CURRENT latest inside the loop: a
-        # concurrent commit of a DIFFERENT epoch that wins the version
-        # race must have its files carried forward on our retry, never
-        # lost-updated away (the append-append conflict is resolvable
-        # by construction — both file sets are additions)
-        prior = versions(table_path)
-        prior_manifest = (
-            read_manifest(table_path, prior[-1]) if prior else None
-        )
-        carry = prior_manifest["files"] if prior_manifest else []
-        v = (prior or [0])[-1] + 1
-        manifest = {
-            "operation": "stream-append",
-            "batch_id": batch_id,
-            "version": v,
-            "committed_at": time.time(),
-            "files": carry + entries,
-            "schema": _merge_schema(
-                prior_manifest.get("schema") if prior_manifest else None,
-                df.schema.jsonValue(),
-            ),
-        }
-        carried_cons = (prior_manifest or {}).get("constraints") or {}
-        if carried_cons != (validated or {}):
-            # same TOCTOU close as _publish_manifest (ADVICE r11): a
-            # constraint that landed since this epoch validated must
-            # re-validate the batch before the commit carries it
-            _validate_constraints(df, table_path, carried_cons)
-            validated = carried_cons
-        if carried_cons:
-            manifest["constraints"] = carried_cons
-        if (prior_manifest or {}).get("partition_spec"):
-            manifest["partition_spec"] = prior_manifest["partition_spec"]
-        with open(staged, "w") as f:
-            _dump_manifest(table_path, v, manifest, f)
-        try:
-            os.link(staged, os.path.join(d, f"v{v}.json"))
-        except FileExistsError:
-            continue  # lost the version race — re-resolve and retry
-        os.unlink(staged)
-        _advance_high_water(table_path, batch_id)
-        return v
+    revalidate = _revalidating(df, table_path, validated)
+    return _commit(table_path, {
+        "op": "stream-append", "tags": {"batch_id": batch_id},
+        "add": entries, "schema": df.schema.jsonValue(), "evolve": True,
+    }, check=lambda pv, parent: (
+        _committed() or revalidate(pv, parent)))
 
 
 def merge(source_df, table_path: str, key, n_files: int = 1,
@@ -2820,7 +2804,7 @@ def merge(source_df, table_path: str, key, n_files: int = 1,
     writers this is the difference between MOR upserts composing and
     every committer but one failing per round (the Iceberg
     commit.retry contract).  ``race_inject`` is a deterministic
-    race-injection hook for tests (see ``_publish_optimistic``)."""
+    race-injection hook for tests (see ``_commit``)."""
     from pyspark.sql import functions as F
 
     if mode not in ("copy-on-write", "merge-on-read"):
@@ -2914,73 +2898,35 @@ def merge(source_df, table_path: str, key, n_files: int = 1,
     # declared layout instead of gradually shedding partition metadata
     # with every rewritten file (the Iceberg writer contract)
     active_pb = active_partition_spec(table_path)
+    commit = {
+        "op": "merge",
+        "tags": {"key": _key_store(key),
+                 **({"txn": list(txn)} if txn is not None else {})},
+        "schema": (schema_json if schema_json is not None
+                   else source_df.schema.jsonValue()),
+    }
     if mode == "merge-on-read":
-        v = base_version + 1
-        data_entries = [
-            {**e, "seq": v}
-            for e in _write_data_files(upsert_df, table_path, n_files,
-                                       partition_by=active_pb)
-        ]
-        del_entries = [
-            {**e, "key": _key_store(key), "seq": v}
+        # MOR reads NO data files, so the only unsound rebase is
+        # metadata drift; restamping seq to the committed version
+        # reproduces the serial order exactly (the delete now also
+        # covers rows a concurrent commit inserted — what a serial
+        # MERGE at that version would do)
+        commit["tags"]["mode"] = "merge-on-read"
+        commit["add"] = _write_data_files(upsert_df, table_path, n_files,
+                                          partition_by=active_pb)
+        commit["add_deletes"] = [
+            {**e, "key": _key_store(key)}
             for e in _write_data_files(
                 source_df.select(*_key_cols(key)).distinct(),
                 table_path, 1
             )
         ]
-        new_manifest = {
-            "operation": "merge",
-            "mode": "merge-on-read",
-            "key": _key_store(key),
-            "version": v,
-            "committed_at": time.time(),
-            "files": manifest["files"] + data_entries,
-            "delete_files": manifest.get("delete_files", []) + del_entries,
-        }
-        if schema_json is not None:
-            new_manifest["schema"] = schema_json
-        else:
-            new_manifest["schema"] = source_df.schema.jsonValue()
-        _carry_table_meta(new_manifest, manifest)
-        if txn is not None:
-            new_manifest["txn"] = list(txn)
-
-        def _mor_rebase(latest: dict, new_v: int):
-            # MOR reads NO data files, so the only unsound rebase is
-            # metadata drift; restamping seq to new_v reproduces the
-            # serial order exactly (the delete now also covers rows a
-            # concurrent commit inserted — what a serial MERGE at
-            # new_v would do)
-            why = _meta_drift(manifest, latest)
-            if why:
-                return why
-            d2 = [{**e, "seq": new_v} for e in data_entries]
-            dl2 = [{**e, "seq": new_v} for e in del_entries]
-            m2 = {
-                "operation": "merge",
-                "mode": "merge-on-read",
-                "key": _key_store(key),
-                "version": new_v,
-                "committed_at": time.time(),
-                "rebased_from": v,
-                "files": latest["files"] + d2,
-                "delete_files": latest.get("delete_files", []) + dl2,
-                "schema": new_manifest["schema"],
-            }
-            _carry_table_meta(m2, latest)
-            if txn is not None:
-                m2["txn"] = list(txn)
-            return m2, d2 + dl2
-
-        committed = _publish_optimistic(
-            table_path, base_version, new_manifest,
-            data_entries + del_entries, op="merge",
-            isolation=isolation, rebase=_mor_rebase,
+        return _commit(
+            table_path, commit, who="merge",
+            base=(base_version, manifest), isolation=isolation,
+            conflict=lambda latest: _meta_drift(manifest, latest),
             race_inject=race_inject,
         )
-        if txn is not None:
-            _advance_txn(table_path, txn[0], txn[1])
-        return committed
     kcols = _key_cols(key)
     brow = source_df.agg(*[a for c in kcols for a in (
         F.min(c).alias(f"lo_{c}"), F.max(c).alias(f"hi_{c}")
@@ -2988,12 +2934,7 @@ def merge(source_df, table_path: str, key, n_files: int = 1,
     if brow[f"lo_{kcols[0]}"] is None:
         raise ValueError("merge: source has no rows (or all-null keys)")
     kbounds = {c: (brow[f"lo_{c}"], brow[f"hi_{c}"]) for c in kcols}
-    touched, untouched = [], []
-    for e in manifest["files"]:
-        if _entry_overlaps(e, kbounds):
-            touched.append(e)
-        else:
-            untouched.append(e)
+    touched = [e for e in manifest["files"] if _entry_overlaps(e, kbounds)]
     spark = source_df.sparkSession
     if touched:
         existing = _scan(
@@ -3015,121 +2956,16 @@ def merge(source_df, table_path: str, key, n_files: int = 1,
         )
     else:
         result = upsert_df  # pure insert: no file can hold a match
-    entries = _write_data_files(result, table_path, n_files,
-                                partition_by=active_pb)
-    entries = [{**e, "seq": base_version + 1} for e in entries]
-    committed_schema = (schema_json if schema_json is not None
-                        else source_df.schema.jsonValue())
-    new_manifest = {
-        "operation": "merge",
-        "key": _key_store(key),
-        "version": base_version + 1,
-        "committed_at": time.time(),
-        "files": untouched + entries,
-        "schema": committed_schema,
-    }
-    _carry_table_meta(new_manifest, manifest)
-    if txn is not None:
-        new_manifest["txn"] = list(txn)
+    commit["add"] = _write_data_files(result, table_path, n_files,
+                                      partition_by=active_pb)
     read_paths = {e["path"] for e in touched}
-
-    def _cow_rebase(latest: dict, new_v: int):
-        why = _cow_rebase_conflict(manifest, latest, kbounds,
-                                   read_paths)
-        if why:
-            return why
-        restamped = [{**e, "seq": new_v} for e in entries]
-        carried = [e for e in latest["files"]
-                   if e["path"] not in read_paths]
-        m2 = {
-            "operation": "merge",
-            "key": _key_store(key),
-            "version": new_v,
-            "committed_at": time.time(),
-            "rebased_from": base_version + 1,
-            "files": carried + restamped,
-            "schema": committed_schema,
-        }
-        _carry_table_meta(m2, latest)
-        if txn is not None:
-            m2["txn"] = list(txn)
-        return m2, restamped
-
-    committed = _publish_optimistic(
-        table_path, base_version, new_manifest, entries, op="merge",
-        isolation=isolation, rebase=_cow_rebase, race_inject=race_inject,
+    commit["drop"] = read_paths
+    return _commit(
+        table_path, commit, who="merge", base=(base_version, manifest),
+        isolation=isolation, race_inject=race_inject,
+        conflict=lambda latest: _cow_rebase_conflict(
+            manifest, latest, kbounds, read_paths),
     )
-    if txn is not None:
-        _advance_txn(table_path, txn[0], txn[1])
-    return committed
-
-
-def _carry_table_meta(new_manifest: dict, prior: dict | None) -> dict:
-    """Copy versioned TABLE metadata (CHECK constraints, the active
-    partition spec) from *prior* onto a hand-built manifest — every
-    commit type carries both until explicitly changed (the same
-    contract ``_publish_manifest`` enforces for carry-path commits).
-    The cleared-spec tombstone (empty dict) is falsy and drops here,
-    which is exactly its meaning."""
-    if prior:
-        if prior.get("constraints"):
-            new_manifest["constraints"] = prior["constraints"]
-        if prior.get("partition_spec"):
-            new_manifest["partition_spec"] = prior["partition_spec"]
-        if prior.get("renames"):
-            new_manifest["renames"] = prior["renames"]
-        if prior.get("defaults"):
-            new_manifest["defaults"] = prior["defaults"]
-        if prior.get("drops"):
-            new_manifest["drops"] = prior["drops"]
-        if prior.get("widens"):
-            new_manifest["widens"] = prior["widens"]
-    return new_manifest
-
-
-def _publish_at_exactly(table_path: str, v: int, manifest: dict,
-                        entries: list[dict], op: str) -> None:
-    """Publish *manifest* as exactly version *v* or fail — the
-    serializable-conflict half of copy-on-write commits (merge/delete):
-    if ANY other commit landed since the caller read its base version,
-    the exclusive link loses, the caller's rewrite files are reclaimed,
-    and the conflict surfaces loudly instead of lost-updating (the
-    Iceberg validate-snapshot-id contract; the caller retries on the
-    new base)."""
-    d = _manifest_dir(table_path)
-    staged = os.path.join(d, f".staged-{uuid.uuid4().hex}.json")
-    with open(staged, "w") as f:
-        _dump_manifest(table_path, v, manifest, f)
-    try:
-        os.link(staged, os.path.join(d, f"v{v}.json"))
-    except FileExistsError:
-        os.unlink(staged)
-        # our rewrite is unreferenced — reclaim its whole commit dir
-        _discard_commit_dirs(table_path, entries)
-        raise RuntimeError(
-            f"{op}: concurrent commit took v{v} at {table_path} after "
-            f"this {op} read its base — retry against the new snapshot "
-            "(serializable conflict)"
-        )
-    os.unlink(staged)
-
-
-def _try_link(table_path: str, v: int, manifest: dict) -> bool:
-    """One exclusive-create publish attempt of *manifest* as version
-    *v*: True iff this writer won the link race (the staged file is
-    cleaned up either way, nothing is discarded on a loss — rebase may
-    still reuse the commit's data files)."""
-    d = _manifest_dir(table_path)
-    staged = os.path.join(d, f".staged-{uuid.uuid4().hex}.json")
-    with open(staged, "w") as f:
-        _dump_manifest(table_path, v, manifest, f)
-    try:
-        os.link(staged, os.path.join(d, f"v{v}.json"))
-    except FileExistsError:
-        os.unlink(staged)
-        return False
-    os.unlink(staged)
-    return True
 
 
 def _meta_drift(base_m: dict, latest_m: dict) -> str | None:
@@ -3138,8 +2974,7 @@ def _meta_drift(base_m: dict, latest_m: dict) -> str | None:
     (rewritten files were produced under the base's schema/layout/
     constraint set) — conservative refusal, the caller redoes the whole
     operation on the new base."""
-    for k in ("constraints", "partition_spec", "renames",
-              "defaults", "drops", "widens"):
+    for k in _TABLE_META:
         if (base_m.get(k) or None) != (latest_m.get(k) or None):
             return f"table metadata {k!r} changed concurrently"
 
@@ -3198,54 +3033,22 @@ def _cow_rebase_conflict(base_m: dict, latest_m: dict,
     return None
 
 
-def _publish_optimistic(table_path: str, base_version: int,
-                        manifest: dict, entries: list[dict], op: str, *,
-                        isolation: str = "serializable",
-                        rebase=None, race_inject=None) -> int:
-    """Publish a merge/delete commit prepared against *base_version*.
-
-    ``isolation="serializable"`` is ``_publish_at_exactly``: exactly
-    base+1 or a loud conflict.  ``isolation="snapshot"`` is the
-    multi-writer contract that matters at 1000 concurrent writers: on
-    losing the version race, *rebase(latest_manifest, new_version)* is
-    asked to re-target the ALREADY-WRITTEN data files onto the new
-    latest — it returns the re-based ``(manifest, entries)`` when the
-    intervening commits are provably disjoint from this operation's
-    read/write set (file-level validation, no data re-read, no
-    rewrite redone), or a conflict-reason string, which surfaces as
-    the same loud RuntimeError as serializable mode.  Either refusal
-    reclaims the unpublished commit's files.
-
-    *race_inject* is a deterministic race-injection point for tests
-    and the driver query: called once after the rewrite files are on
-    disk and before the first publish attempt — a commit it makes is
-    exactly a concurrent writer winning the race."""
-    if isolation not in ("serializable", "snapshot"):
-        raise ValueError(f"{op}: unknown isolation {isolation!r}")
-    if race_inject is not None:
-        race_inject()
-    v = base_version + 1
-    while True:
-        if _try_link(table_path, v, manifest):
-            return v
-        if isolation != "snapshot" or rebase is None:
-            _discard_commit_dirs(table_path, entries)
-            raise RuntimeError(
-                f"{op}: concurrent commit took v{v} at {table_path} "
-                f"after this {op} read its base — retry against the "
-                "new snapshot (serializable conflict)"
-            )
-        latest_v = versions(table_path)[-1]
-        latest = read_manifest(table_path, latest_v)
-        out = rebase(latest, latest_v + 1)
-        if isinstance(out, str):
-            _discard_commit_dirs(table_path, entries)
-            raise RuntimeError(
-                f"{op}: snapshot-isolation conflict at {table_path}: "
-                f"{out} — redo the {op} against the new snapshot"
-            )
-        manifest, entries = out
-        v = latest_v + 1
+def _positional_conflict(base_m: dict, latest_m: dict,
+                         targets: list[str]) -> str | None:
+    """The rebase check of the positional commits (``delete_where``,
+    ``update_where``): no metadata drift, every target file still
+    live (a position addresses one immutable file), and the same
+    pending delete set (the match set was computed under it)."""
+    why = _meta_drift(base_m, latest_m)
+    if why:
+        return why
+    if not set(targets) <= {e["path"] for e in latest_m["files"]}:
+        return ("a concurrent commit rewrote/removed file(s) this "
+                "commit's positional delete targets")
+    if ({d["path"] for d in latest_m.get("delete_files") or []}
+            != {d["path"] for d in base_m.get("delete_files") or []}):
+        return "delete files changed concurrently"
+    return None
 
 
 def delete(keys_df, table_path: str, key, n_files: int = 1,
@@ -3290,7 +3093,7 @@ def delete(keys_df, table_path: str, key, n_files: int = 1,
     ``merge`` — ``"snapshot"`` rebases over provably-disjoint
     concurrent commits instead of refusing (file-level validation for
     copy-on-write, metadata-drift-only for merge-on-read; see
-    ``_publish_optimistic``).
+    ``_commit``).
     """
     from pyspark.sql import functions as F
 
@@ -3307,67 +3110,32 @@ def delete(keys_df, table_path: str, key, n_files: int = 1,
         )
     base_version = vs[-1]
     manifest = read_manifest(table_path, base_version)
-    schema_json = manifest.get("schema")
+    commit = {
+        "op": "delete",
+        "tags": {"key": _key_store(key),
+                 **({"txn": list(txn)} if txn is not None else {})},
+        "schema": manifest.get("schema"),
+    }
     if mode == "merge-on-read":
-        entries = _write_data_files(
-            keys_df.select(*_key_cols(key)).distinct(), table_path,
-            n_files
-        )
-        new_manifest = {
-            "operation": "delete",
-            "mode": "merge-on-read",
-            "key": _key_store(key),
-            "version": base_version + 1,
-            "committed_at": time.time(),
-            "files": manifest["files"],  # untouched, carried whole
-            "delete_files": manifest.get("delete_files", []) + [
-                {**e, "key": _key_store(key), "seq": base_version + 1}
-                for e in entries
-            ],
-        }
-        if schema_json is not None:
-            new_manifest["schema"] = schema_json
-        _carry_table_meta(new_manifest, manifest)
-        if txn is not None:
-            new_manifest["txn"] = list(txn)
-        del_entries = new_manifest["delete_files"][
-            len(manifest.get("delete_files", [])):]
-
-        def _mor_del_rebase(latest: dict, new_v: int):
-            # equality deletes read no data files; restamping seq to
-            # new_v gives the serial order's semantics (concurrent
-            # inserts of a deleted key are deleted too, exactly as a
-            # DELETE committing after them would) — refuse only on
-            # table-metadata drift (isolation="snapshot", r12)
-            why = _meta_drift(manifest, latest)
-            if why:
-                return why
-            dl2 = [{**d, "seq": new_v} for d in del_entries]
-            m2 = {
-                "operation": "delete",
-                "mode": "merge-on-read",
-                "key": _key_store(key),
-                "version": new_v,
-                "committed_at": time.time(),
-                "rebased_from": base_version + 1,
-                "files": latest["files"],
-                "delete_files": latest.get("delete_files", []) + dl2,
-            }
-            if schema_json is not None:
-                m2["schema"] = schema_json
-            _carry_table_meta(m2, latest)
-            if txn is not None:
-                m2["txn"] = list(txn)
-            return m2, dl2
-
-        committed = _publish_optimistic(
-            table_path, base_version, new_manifest, entries, op="delete",
-            isolation=isolation, rebase=_mor_del_rebase,
+        # equality deletes read no data files; restamping seq to the
+        # committed version gives the serial order's semantics
+        # (concurrent inserts of a deleted key are deleted too, exactly
+        # as a DELETE committing after them would) — refuse only on
+        # table-metadata drift (isolation="snapshot", r12)
+        commit["tags"]["mode"] = "merge-on-read"
+        commit["add_deletes"] = [
+            {**e, "key": _key_store(key)}
+            for e in _write_data_files(
+                keys_df.select(*_key_cols(key)).distinct(), table_path,
+                n_files
+            )
+        ]
+        return _commit(
+            table_path, commit, who="delete",
+            base=(base_version, manifest), isolation=isolation,
+            conflict=lambda latest: _meta_drift(manifest, latest),
             race_inject=race_inject,
         )
-        if txn is not None:
-            _advance_txn(table_path, txn[0], txn[1])
-        return committed
     if manifest.get("delete_files"):
         raise ValueError(
             "delete: table has pending merge-on-read delete files — "
@@ -3382,77 +3150,30 @@ def delete(keys_df, table_path: str, key, n_files: int = 1,
     if brow[f"lo_{kcols[0]}"] is None:
         raise ValueError("delete: keys_df has no rows (or all-null keys)")
     kbounds = {c: (brow[f"lo_{c}"], brow[f"hi_{c}"]) for c in kcols}
-    touched, untouched = [], []
-    for e in manifest["files"]:
-        if _entry_overlaps(e, kbounds):
-            touched.append(e)
-        else:
-            untouched.append(e)
-    entries: list[dict] = []
+    touched = [e for e in manifest["files"] if _entry_overlaps(e, kbounds)]
     if touched:
-        spark = keys_df.sparkSession
         existing = _scan(
-            spark, table_path, touched, schema_json,
+            keys_df.sparkSession, table_path, touched, commit["schema"],
             renames=manifest.get("renames"),
             defaults=manifest.get("defaults"), widens=manifest.get("widens"),
         )
         kept = existing.join(keys, kcols, "left_anti")
-        entries = [
-            {**e, "seq": base_version + 1}
-            for e in _write_data_files(
-                kept, table_path, n_files,
-                # rewrites keep the declared layout (see merge)
-                partition_by=active_partition_spec(table_path),
-            )
-        ]
+        commit["add"] = _write_data_files(
+            kept, table_path, n_files,
+            # rewrites keep the declared layout (see merge)
+            partition_by=active_partition_spec(table_path),
+        )
     # no touched files → every file's key range misses the delete set:
     # publish a carry-only manifest anyway so the txn marker lands and
     # the commit is observable (a no-op delete is still a commit)
-    new_manifest = {
-        "operation": "delete",
-        "key": _key_store(key),
-        "version": base_version + 1,
-        "committed_at": time.time(),
-        "files": untouched + entries,
-    }
-    if schema_json is not None:
-        new_manifest["schema"] = schema_json
-    _carry_table_meta(new_manifest, manifest)
-    if txn is not None:
-        new_manifest["txn"] = list(txn)
     read_paths = {e["path"] for e in touched}
-
-    def _cow_del_rebase(latest: dict, new_v: int):
-        why = _cow_rebase_conflict(manifest, latest, kbounds,
-                                   read_paths)
-        if why:
-            return why
-        restamped = [{**e, "seq": new_v} for e in entries]
-        carried = [e for e in latest["files"]
-                   if e["path"] not in read_paths]
-        m2 = {
-            "operation": "delete",
-            "key": _key_store(key),
-            "version": new_v,
-            "committed_at": time.time(),
-            "rebased_from": base_version + 1,
-            "files": carried + restamped,
-        }
-        if schema_json is not None:
-            m2["schema"] = schema_json
-        _carry_table_meta(m2, latest)
-        if txn is not None:
-            m2["txn"] = list(txn)
-        return m2, restamped
-
-    committed = _publish_optimistic(
-        table_path, base_version, new_manifest, entries, op="delete",
-        isolation=isolation, rebase=_cow_del_rebase,
-        race_inject=race_inject,
+    commit["drop"] = read_paths
+    return _commit(
+        table_path, commit, who="delete", base=(base_version, manifest),
+        isolation=isolation, race_inject=race_inject,
+        conflict=lambda latest: _cow_rebase_conflict(
+            manifest, latest, kbounds, read_paths),
     )
-    if txn is not None:
-        _advance_txn(table_path, txn[0], txn[1])
-    return committed
 
 
 def delete_where(spark, table_path: str, predicate: str,
@@ -3538,80 +3259,24 @@ def delete_where(spark, table_path: str, predicate: str,
         r["file_rel"]
         for r in matches.select("file_rel").distinct().collect()
     )  # bounded by the snapshot's FILE count, never its rows
-    v = base_version + 1
-    if not targets:
-        new_manifest = {
-            "operation": "delete",
-            "mode": "positional",
-            "version": v,
-            "committed_at": time.time(),
-            "files": manifest["files"],
-        }
-        if dels:
-            new_manifest["delete_files"] = dels
-        if schema_json is not None:
-            new_manifest["schema"] = schema_json
-        _carry_table_meta(new_manifest, manifest)
-        if txn is not None:
-            new_manifest["txn"] = list(txn)
-        entries: list[dict] = []
-    else:
-        entries = [
-            {**e, "kind": "positional", "targets": targets, "seq": v}
+    commit = {
+        "op": "delete",
+        "tags": {"mode": "positional",
+                 **({"txn": list(txn)} if txn is not None else {})},
+        "schema": schema_json,
+    }
+    if targets:
+        commit["add_deletes"] = [
+            {**e, "kind": "positional", "targets": targets}
             for e in _write_data_files(matches, table_path, 1)
         ]
-        new_manifest = {
-            "operation": "delete",
-            "mode": "positional",
-            "version": v,
-            "committed_at": time.time(),
-            "files": manifest["files"],
-            "delete_files": dels + entries,
-        }
-        if schema_json is not None:
-            new_manifest["schema"] = schema_json
-        _carry_table_meta(new_manifest, manifest)
-        if txn is not None:
-            new_manifest["txn"] = list(txn)
-
-    def _pos_rebase(latest: dict, new_v: int):
-        why = _meta_drift(manifest, latest)
-        if why:
-            return why
-        latest_paths = {e["path"] for e in latest["files"]}
-        if not set(targets) <= latest_paths:
-            return ("a concurrent commit rewrote/removed file(s) this "
-                    "positional delete targets")
-        if ({d["path"] for d in latest.get("delete_files") or []}
-                != {d["path"] for d in dels}):
-            return "delete files changed concurrently"
-        restamped = [{**d, "seq": new_v} for d in entries]
-        m2 = {
-            "operation": "delete",
-            "mode": "positional",
-            "version": new_v,
-            "committed_at": time.time(),
-            "rebased_from": v,
-            "files": latest["files"],
-        }
-        if dels or restamped:
-            m2["delete_files"] = (latest.get("delete_files") or []) \
-                + restamped
-        if schema_json is not None:
-            m2["schema"] = schema_json
-        _carry_table_meta(m2, latest)
-        if txn is not None:
-            m2["txn"] = list(txn)
-        return m2, restamped
-
-    committed = _publish_optimistic(
-        table_path, base_version, new_manifest, entries,
-        op="delete_where", isolation=isolation, rebase=_pos_rebase,
+    return _commit(
+        table_path, commit, who="delete_where",
+        base=(base_version, manifest), isolation=isolation,
         race_inject=race_inject,
+        conflict=lambda latest: _positional_conflict(
+            manifest, latest, targets),
     )
-    if txn is not None:
-        _advance_txn(table_path, txn[0], txn[1])
-    return committed
 
 
 def update_where(spark, table_path: str, predicate: str,
@@ -3698,26 +3363,13 @@ def update_where(spark, table_path: str, predicate: str,
         r["file_rel"]
         for r in coords.select("file_rel").distinct().collect()
     )  # bounded by the snapshot's FILE count
-    v = base_version + 1
-    if not targets:
-        new_manifest = {
-            "operation": "update",
-            "mode": "positional",
-            "version": v,
-            "committed_at": time.time(),
-            "files": manifest["files"],
-        }
-        if dels:
-            new_manifest["delete_files"] = dels
-        if schema_json is not None:
-            new_manifest["schema"] = schema_json
-        _carry_table_meta(new_manifest, manifest)
-        if txn is not None:
-            new_manifest["txn"] = list(txn)
-        entries: list[dict] = []
-        data_entries: list[dict] = []
-        del_entries: list[dict] = []
-    else:
+    commit = {
+        "op": "update",
+        "tags": {"mode": "positional",
+                 **({"txn": list(txn)} if txn is not None else {})},
+        "schema": schema_json,
+    }
+    if targets:
         post = matched.drop("_file_rel", "_pos")
         if schema_json is not None:
             st = StructType.fromJson(schema_json)
@@ -3729,70 +3381,21 @@ def update_where(spark, table_path: str, predicate: str,
             for col, expr in sorted(assignments.items()):
                 post = post.withColumn(col, F.expr(expr))
         _validate_constraints(post, table_path)
-        data_entries = [
-            {**e, "seq": v}
-            for e in _write_data_files(
-                post, table_path, n_files,
-                partition_by=active_partition_spec(table_path),
-            )
-        ]
-        del_entries = [
-            {**e, "kind": "positional", "targets": targets, "seq": v}
+        commit["add"] = _write_data_files(
+            post, table_path, n_files,
+            partition_by=active_partition_spec(table_path),
+        )
+        commit["add_deletes"] = [
+            {**e, "kind": "positional", "targets": targets}
             for e in _write_data_files(coords, table_path, 1)
         ]
-        entries = data_entries + del_entries
-        new_manifest = {
-            "operation": "update",
-            "mode": "positional",
-            "version": v,
-            "committed_at": time.time(),
-            "files": manifest["files"] + data_entries,
-            "delete_files": dels + del_entries,
-        }
-        if schema_json is not None:
-            new_manifest["schema"] = schema_json
-        _carry_table_meta(new_manifest, manifest)
-        if txn is not None:
-            new_manifest["txn"] = list(txn)
-
-    def _upd_rebase(latest: dict, new_v: int):
-        why = _meta_drift(manifest, latest)
-        if why:
-            return why
-        latest_paths = {e["path"] for e in latest["files"]}
-        if not set(targets) <= latest_paths:
-            return ("a concurrent commit rewrote/removed file(s) this "
-                    "update targets")
-        if ({d["path"] for d in latest.get("delete_files") or []}
-                != {d["path"] for d in dels}):
-            return "delete files changed concurrently"
-        d2 = [{**e, "seq": new_v} for e in data_entries]
-        dl2 = [{**d, "seq": new_v} for d in del_entries]
-        m2 = {
-            "operation": "update",
-            "mode": "positional",
-            "version": new_v,
-            "committed_at": time.time(),
-            "rebased_from": v,
-            "files": latest["files"] + d2,
-        }
-        if dels or dl2:
-            m2["delete_files"] = (latest.get("delete_files") or []) + dl2
-        if schema_json is not None:
-            m2["schema"] = schema_json
-        _carry_table_meta(m2, latest)
-        if txn is not None:
-            m2["txn"] = list(txn)
-        return m2, d2 + dl2
-
-    committed = _publish_optimistic(
-        table_path, base_version, new_manifest, entries,
-        op="update_where", isolation=isolation, rebase=_upd_rebase,
+    return _commit(
+        table_path, commit, who="update_where",
+        base=(base_version, manifest), isolation=isolation,
         race_inject=race_inject,
+        conflict=lambda latest: _positional_conflict(
+            manifest, latest, targets),
     )
-    if txn is not None:
-        _advance_txn(table_path, txn[0], txn[1])
-    return committed
 
 
 # ---------------------------------------------------------------------------
@@ -3871,10 +3474,8 @@ def add_constraint(spark, table_path: str, name: str, expr: str) -> int:
             f"add_constraint: existing data violates {name!r} "
             f"({expr}) on {int(n_bad)} row(s) — clean up first"
         )
-    return _publish_manifest(
-        table_path, "set-constraint", [], carry=True,
-        constraints={**cons, name: expr},
-    )
+    return _commit(table_path, {"op": "set-constraint",
+                                "meta": {"constraints": {**cons, name: expr}}})
 
 
 def drop_constraint(table_path: str, name: str) -> int:
@@ -3882,10 +3483,8 @@ def drop_constraint(table_path: str, name: str) -> int:
     cons = table_constraints(table_path)
     if name not in cons:
         raise ValueError(f"drop_constraint: no constraint {name!r}")
-    return _publish_manifest(
-        table_path, "set-constraint", [], carry=True,
-        constraints={k: v for k, v in cons.items() if k != name},
-    )
+    return _commit(table_path, {"op": "set-constraint", "meta": {
+        "constraints": {k: v for k, v in cons.items() if k != name}}})
 
 
 def _refs_dir(table_path: str) -> str:
@@ -3964,35 +3563,20 @@ def rollback(table_path: str, to_version: int) -> int:
     if to_version not in vs:
         raise ValueError(f"rollback: version {to_version} not in {vs}")
     target = read_manifest(table_path, to_version)
-    d = _manifest_dir(table_path)
-    while True:
-        latest = versions(table_path)[-1]
-        if latest == to_version:
-            return latest  # already there: no-op, no empty commit
-        manifest = {
-            k: v for k, v in target.items()
-            if k not in ("version", "committed_at", "operation",
-                         "batch_id", "txn", "key", "mode")
-            # key/mode describe the operation that MADE the target
-            # snapshot, not the rollback — carrying them misled the
-            # CDC feeds into keyed/merge-on-read classification (r12)
-        }
-        manifest.update(
-            operation="rollback",
-            version=latest + 1,
-            committed_at=time.time(),
-            rollback_of=to_version,
-        )
-        staged = os.path.join(d, f".staged-{uuid.uuid4().hex}.json")
-        with open(staged, "w") as f:
-            _dump_manifest(table_path, latest + 1, manifest, f)
-        try:
-            os.link(staged, os.path.join(d, f"v{latest + 1}.json"))
-        except FileExistsError:
-            os.unlink(staged)
-            continue  # lost the race — re-resolve and retry
-        os.unlink(staged)
-        return latest + 1
+    # an empty commit ON TOP OF the target snapshot: its files, delete
+    # files, schema and table metadata carry verbatim, and so does any
+    # other key it recorded — except what describes the operation that
+    # MADE it: key/mode carried on misled the CDC feeds into keyed/
+    # merge-on-read classification (r12)
+    skip = {"version", "committed_at", "operation", "batch_id", "txn",
+            "key", "mode", "files", "delete_files", "schema",
+            *_TABLE_META}
+    v = _commit(table_path, {
+        "op": "rollback", "onto": target,
+        "tags": {**{k: val for k, val in target.items()
+                    if k not in skip}, "rollback_of": to_version},
+    }, check=lambda pv, _p: pv == to_version)
+    return to_version if v is None else v  # already there: no commit
 
 
 # ---------------------------------------------------------------------------
@@ -4041,7 +3625,6 @@ def optimize(spark, table_path: str, small_file_rows: int,
     small = [e for e in manifest["files"] if _is_small(e)]
     if len(small) < 2:
         return None
-    big = [e for e in manifest["files"] if not _is_small(e)]
     if target_bytes is not None and all(
             e.get("bytes") is not None for e in small):
         total_b = sum(e["bytes"] for e in small)
@@ -4055,23 +3638,11 @@ def optimize(spark, table_path: str, small_file_rows: int,
     content = _scan(spark, table_path, small, manifest.get("schema"),
                     renames=manifest.get("renames"),
                     defaults=manifest.get("defaults"), widens=manifest.get("widens"))
-    entries = [
-        {**e, "seq": base_version + 1}
-        for e in _write_data_files(content, table_path, n_out)
-    ]
-    new_manifest = {
-        "operation": "compact",
-        "mode": "bin-pack",
-        "version": base_version + 1,
-        "committed_at": time.time(),
-        "files": big + entries,
-    }
-    if manifest.get("schema") is not None:
-        new_manifest["schema"] = manifest["schema"]
-    _carry_table_meta(new_manifest, manifest)
-    _publish_at_exactly(table_path, base_version + 1, new_manifest,
-                        entries, op="optimize")
-    return base_version + 1
+    return _commit(table_path, {
+        "op": "compact", "tags": {"mode": "bin-pack"},
+        "add": _write_data_files(content, table_path, n_out),
+        "drop": {e["path"] for e in small},
+    }, who="optimize", base=(base_version, manifest))
 
 
 def purge_deletes(spark, table_path: str, n_files: int = 1) -> int | None:
@@ -4098,11 +3669,8 @@ def purge_deletes(spark, table_path: str, n_files: int = 1) -> int | None:
     deletes = manifest.get("delete_files")
     if not deletes:
         return None
-    affected = [
-        e for e in manifest["files"]
-        if any(delete_applies(e, d) for d in deletes)
-    ]
-    untouched = [e for e in manifest["files"] if e not in affected]
+    applying = delete_index(deletes)
+    affected = [e for e in manifest["files"] if applying(e)]
     entries: list[dict] = []
     if affected:
         # scan ONLY the affected files with their applicable deletes
@@ -4113,28 +3681,17 @@ def purge_deletes(spark, table_path: str, n_files: int = 1) -> int | None:
             renames=manifest.get("renames"),
             defaults=manifest.get("defaults"), widens=manifest.get("widens"),
         )
-        entries = [
-            {**e, "seq": base_version + 1}
-            for e in _write_data_files(survivors, table_path, n_files)
-        ]
-    new_manifest = {
-        # published as a compact variant (like optimize's bin-pack):
-        # visible content is IDENTICAL before and after, so every CDC
-        # consumer's "compact = zero changes" contract applies verbatim
-        "operation": "compact",
-        "mode": "purge-deletes",
-        "version": base_version + 1,
-        "committed_at": time.time(),
-        "files": untouched + entries,
-        # delete_files intentionally dropped: this commit materializes
-        # them into the affected files' rewrites
-    }
-    if manifest.get("schema") is not None:
-        new_manifest["schema"] = manifest["schema"]
-    _carry_table_meta(new_manifest, manifest)
-    _publish_at_exactly(table_path, base_version + 1, new_manifest,
-                        entries, op="purge_deletes")
-    return base_version + 1
+        entries = _write_data_files(survivors, table_path, n_files)
+    # published as a compact variant (like optimize's bin-pack): visible
+    # content is IDENTICAL before and after, so every CDC consumer's
+    # "compact = zero changes" contract applies verbatim; the delete
+    # files are dropped — this commit materializes them into the
+    # affected files' rewrites
+    return _commit(table_path, {
+        "op": "compact", "tags": {"mode": "purge-deletes"},
+        "add": entries,
+        "drop": {x["path"] for x in affected + deletes},
+    }, who="purge_deletes", base=(base_version, manifest))
 
 
 def recluster(spark, table_path: str, cluster_by: list[str],
@@ -4206,7 +3763,6 @@ def recluster(spark, table_path: str, cluster_by: list[str],
     affected = [e for g in groups if len(g) > 1 for e in g]
     if not affected:
         return None  # already pairwise-disjoint: no commit
-    untouched = [e for g in groups if len(g) == 1 for e in g]
     deletes = manifest.get("delete_files") or []
     content = (_scan_with_deletes(spark, table_path, affected, deletes,
                                   manifest.get("schema"),
@@ -4217,31 +3773,18 @@ def recluster(spark, table_path: str, cluster_by: list[str],
                           manifest.get("schema"),
                           renames=manifest.get("renames"),
                           defaults=manifest.get("defaults"), widens=manifest.get("widens")))
-    entries = [
-        {**e, "seq": base_version + 1}
-        for e in _write_data_files(
+    # content-identical, so CDC-silent; pending delete files stay in
+    # force for the untouched files (lower seq) — the rewritten
+    # entries' higher seq ends their applicability there
+    return _commit(table_path, {
+        "op": "compact", "tags": {"mode": "recluster"},
+        "add": _write_data_files(
             content, table_path,
             n_files if n_files is not None else max(1, len(affected)),
             cluster_by=cluster_by,
-        )
-    ]
-    new_manifest = {
-        "operation": "compact",  # content-identical: CDC-silent
-        "mode": "recluster",
-        "version": base_version + 1,
-        "committed_at": time.time(),
-        "files": untouched + entries,
-    }
-    if deletes:
-        # still in force for the untouched files (lower seq); the
-        # rewritten entries' higher seq ends their applicability there
-        new_manifest["delete_files"] = deletes
-    if manifest.get("schema") is not None:
-        new_manifest["schema"] = manifest["schema"]
-    _carry_table_meta(new_manifest, manifest)
-    _publish_at_exactly(table_path, base_version + 1, new_manifest,
-                        entries, op="recluster")
-    return base_version + 1
+        ),
+        "drop": {e["path"] for e in affected},
+    }, who="recluster", base=(base_version, manifest))
 
 
 def maintain(spark, table_path: str, *, small_file_rows: int,
@@ -4527,28 +4070,25 @@ def publish_staged(table_path: str, name: str) -> int:
     try:
         with open(claimed) as f:
             st = json.load(f)
-        if "constraints" in st and (
-                table_constraints(table_path) != st["constraints"]):
-            # TOCTOU close (ADVICE r11): a constraint added after the
-            # stage was validated would graduate unvalidated rows —
-            # fail loudly; the auditor re-validates and re-stages
-            raise ValueError(
-                f"publish_staged: table constraints changed since stage "
-                f"{name!r} was validated — discard and re-stage under "
-                "the current constraint set"
-            )
-        def _refuse_drift(cons: dict) -> None:
-            raise ValueError(
-                f"publish_staged: table constraints changed while "
-                f"publishing stage {name!r} — discard and re-stage "
-                "under the current constraint set"
-            )
+
+        def _refuse_drift(_pv, parent) -> bool:
+            # TOCTOU close (ADVICE r11), checked on every attempt: a
+            # constraint added after the stage was validated would
+            # graduate unvalidated rows — fail loudly; the auditor
+            # re-validates and re-stages
+            if ((parent or {}).get("constraints") or {}) != (
+                    st["constraints"] or {}):
+                raise ValueError(
+                    f"publish_staged: table constraints changed since "
+                    f"stage {name!r} was validated — discard and "
+                    "re-stage under the current constraint set"
+                )
+            return False
 
         v = _publish_manifest(
             table_path, "append", st["entries"], carry=True,
             schema=st.get("schema"),
-            validated=st.get("constraints") or {},
-            revalidate=_refuse_drift if "constraints" in st else None,
+            check=_refuse_drift if "constraints" in st else None,
         )
     except BaseException:
         os.rename(claimed, p)  # publish failed: the stage survives
@@ -4731,11 +4271,8 @@ def drop_column(table_path: str, name: str) -> int:
         **schema,
         "fields": [f for f in schema["fields"] if f["name"] != name],
     }
-    return _publish_manifest(
-        table_path, "drop-column", [], carry=True,
-        schema=new_schema, schema_replace=True,
-        drop_event={"col": name},
-    )
+    return _commit(table_path, {"op": "drop-column", "schema": new_schema,
+                                "events": {"drops": {"col": name}}})
 
 
 def add_column(table_path: str, name: str, dtype: str,
@@ -4774,23 +4311,16 @@ def add_column(table_path: str, name: str, dtype: str,
              "metadata": {}}
         ],
     }
-    was_dropped = any(
-        d["col"] == name for d in m.get("drops") or []
-    )
-    return _publish_manifest(
-        table_path, "add-column", [], carry=True,
-        schema=new_schema, schema_replace=True,
+    commit = {"op": "add-column", "schema": new_schema}
+    was_dropped = any(d["col"] == name for d in m.get("drops") or [])
+    if was_dropped:
+        commit["meta"] = {
+            "drops": [d for d in m["drops"] if d["col"] != name]}
+    if default is not None or was_dropped:
         # a re-added dropped name records an event even with no user
         # default: the fill MASKS the old files' stale stored bytes
-        default_event=(
-            {"col": name, "value": default}
-            if default is not None or was_dropped else None
-        ),
-        drops_replace=(
-            [d for d in m["drops"] if d["col"] != name]
-            if was_dropped else None
-        ),
-    )
+        commit["events"] = {"defaults": {"col": name, "value": default}}
+    return _commit(table_path, commit)
 
 
 def rename_column(table_path: str, old: str, new: str) -> int:
@@ -4884,18 +4414,14 @@ def rename_column(table_path: str, old: str, new: str) -> int:
     }
     # initial defaults follow the column to its new name (they fill by
     # CURRENT name at scan time)
-    new_defaults = None
+    commit = {"op": "rename-column", "schema": new_schema,
+              "events": {"renames": {"old": old, "new": new}}}
     if any(d["col"] == old for d in m.get("defaults") or []):
-        new_defaults = [
+        commit["meta"] = {"defaults": [
             {**d, "col": new} if d["col"] == old else d
             for d in m["defaults"]
-        ]
-    return _publish_manifest(
-        table_path, "rename-column", [], carry=True,
-        schema=new_schema, schema_replace=True,
-        rename_event={"old": old, "new": new},
-        defaults_replace=new_defaults,
-    )
+        ]}
+    return _commit(table_path, commit)
 
 
 #: lossless type promotions ``widen_column`` accepts — exactly the
@@ -4973,11 +4499,10 @@ def widen_column(table_path: str, name: str, to_type: str) -> int:
             for f in schema["fields"]
         ],
     }
-    return _publish_manifest(
-        table_path, "widen-column", [], carry=True,
-        schema=new_schema, schema_replace=True,
-        widen_event={"col": name, "from": frm, "to": to_type},
-    )
+    return _commit(table_path, {
+        "op": "widen-column", "schema": new_schema,
+        "events": {"widens": {"col": name, "from": frm, "to": to_type}},
+    })
 
 
 def table_column_stats(table_path: str, col: str,
@@ -5389,35 +4914,21 @@ def publish_branch(table_path: str, name: str) -> list[int]:
                     schema=c.get("schema"),
                 )
             else:
-                # replay the chain at exactly base+1.. — any concurrent
-                # commit fails the exclusive link loudly and the except
-                # handler restores the branch (no torn publish: the
-                # first link is also the first side effect)
-                v = versions(table_path)[-1] + 1
-                new_paths = {e["path"] for e in c["entries"]}
-                op = {"branch-append": "append",
-                      "branch-merge": "merge",
-                      "branch-delete": "delete"}[c["operation"]]
-                files = c.get("files")
-                if files is None:  # append inside a mixed chain
-                    files = read_manifest(table_path, v - 1)["files"] \
-                        + c["entries"]
-                manifest = {
-                    "operation": op,
-                    "version": v,
-                    "committed_at": time.time(),
-                    "files": [
-                        {**e, "seq": v} if e["path"] in new_paths else e
-                        for e in files
-                    ],
-                }
-                if c.get("schema") is not None:
-                    manifest["schema"] = c["schema"]
-                if c.get("key") is not None:
-                    manifest["key"] = c["key"]
-                _carry_table_meta(manifest, base)
-                _publish_at_exactly(table_path, v, manifest, [],
-                                    op="publish_branch")
+                # replay the chain on exactly the current main tip — any
+                # concurrent commit fails the exclusive link loudly and
+                # the except handler restores the branch (no torn
+                # publish: the first link is also the first side
+                # effect).  A rewrite commit recorded its full
+                # post-state: it drops the tip files that state lacks.
+                tip = _latest(table_path)
+                live = {e["path"] for e in c.get("files", tip[1]["files"])}
+                v = _commit(table_path, {
+                    "op": c["operation"][len("branch-"):],
+                    "tags": {"key": c["key"]} if "key" in c else {},
+                    "add": c["entries"],
+                    "drop": {e["path"] for e in tip[1]["files"]} - live,
+                    "schema": c.get("schema"),
+                }, who="publish_branch", base=tip, discard=False)
             published.append(v)
             os.unlink(_branch_commit_path(table_path, name, k))
     except BaseException:

@@ -463,6 +463,49 @@ def test_dist_plans_large_append_from_metadata_fast(tmp_path):
     assert elapsed < 1.0, f"planning took {elapsed:.2f} s"
 
 
+def test_wide_positional_delete_plans_from_metadata_fast(
+        tmp_path, monkeypatch):
+    # one positional delete targeting 5,000 files: the dist reader's
+    # bootstrap and commit plan and the merge-on-read scan's grouping
+    # each answer one membership check per file, indexed once per
+    # delete file, so the whole metadata pass stays well inside a
+    # second (no data file exists, and the Spark side of the scan is
+    # mocked)
+    import json
+    import time
+    from unittest import mock
+
+    t = tmp_path / "wide_pos"
+    mdir = t / "_manifests"
+    mdir.mkdir(parents=True)
+    schema = {"type": "struct", "fields": [
+        {"name": "k", "type": "long", "nullable": True, "metadata": {}}]}
+    files = [{"path": f"data/f{i:05d}.parquet", "seq": 1, "rows": 1,
+              "stats": {"min_k": i, "max_k": i}} for i in range(5_000)]
+    dl = {"path": "data/pos.parquet", "kind": "positional", "seq": 2,
+          "rows": 5_000, "targets": [e["path"] for e in files]}
+    (mdir / "v1.json").write_text(json.dumps(
+        {"operation": "append", "version": 1, "files": files,
+         "schema": schema}))
+    (mdir / "v2.json").write_text(json.dumps(
+        {"operation": "delete", "mode": "positional", "version": 2,
+         "files": files, "delete_files": [dl], "schema": schema}))
+    monkeypatch.setattr(S, "_scan", lambda *a, **k: mock.MagicMock())
+    monkeypatch.setattr(F, "col", lambda name: mock.MagicMock())
+    reader, _ = _dist_reader(str(t))
+    t0 = time.perf_counter()
+    boot = reader.partitions({"version": 2, "snap": 0},
+                             {"version": 2, "snap": 1})
+    diff = reader.partitions({"version": 1, "snap": 1},
+                             {"version": 2, "snap": 1})
+    S._scan_with_deletes(mock.MagicMock(), str(t), files, [dl], schema)
+    elapsed = time.perf_counter() - t0
+    assert len(boot) == 5_000
+    assert all(p.payload["deletes"] == [dl] for p in boot)
+    assert [p.kind for p in diff] == ["commit_diff"]
+    assert elapsed < 1.0, f"metadata pass took {elapsed:.2f} s"
+
+
 def test_dist_rows_match_simple_reader_cow_and_mor(spark, tmp_path):
     for chain, last in ((_chain, 5), (_mor_chain, 6)):
         t = chain(spark, tmp_path, name=f"par_{last}")

@@ -227,3 +227,64 @@ def test_unknown_isolation_refused(spark, tmp_path):
     S.overwrite(_kv(spark, 0, 10), t)
     with pytest.raises(ValueError, match="isolation"):
         S.merge(_kv(spark, 0, 5), t, key="k", isolation="banana")
+
+
+#: the six DML forms that rebase under isolation="snapshot", each
+#: touching only keys 0-9 (a race appending keys 500-509 is disjoint)
+_DML = {
+    "cow_merge": lambda spark, t, **kw: S.merge(
+        _kv(spark, 0, 10, mult=-1), t, key="k", **kw),
+    "mor_merge": lambda spark, t, **kw: S.merge(
+        _kv(spark, 0, 10, mult=-1), t, key="k", mode="merge-on-read",
+        **kw),
+    "cow_delete": lambda spark, t, **kw: S.delete(
+        spark.range(0, 5).select(F.col("id").alias("k")), t, key="k",
+        **kw),
+    "mor_delete": lambda spark, t, **kw: S.delete(
+        spark.range(0, 5).select(F.col("id").alias("k")), t, key="k",
+        mode="merge-on-read", **kw),
+    "delete_where": lambda spark, t, **kw: S.delete_where(
+        spark, t, "k < 5", **kw),
+    "update_where": lambda spark, t, **kw: S.update_where(
+        spark, t, "k < 5", {"v": "v + 1"}, **kw),
+}
+
+
+def _canonical(t, v):
+    """Manifest *v* with its commit time and rebase marker masked and
+    every written path (entries, stats, positional targets) replaced
+    by its order of first appearance — two tables that ran the same
+    commits compare equal.  Positional delete files store paths, so
+    their byte sizes are masked too."""
+    import json
+    import re
+
+    m = S.read_manifest(t, v)
+    m.pop("committed_at")
+    m.pop("rebased_from", None)
+    for d in m.get("delete_files") or []:
+        if d.get("kind") == "positional":
+            d["bytes"] = None
+    text = json.dumps(m, sort_keys=True)
+    names: dict[str, str] = {}
+    return re.sub(r"data/snap-[0-9a-f]+/[^\"]+?\.parquet",
+                  lambda x: names.setdefault(x.group(0), f"f{len(names)}"),
+                  text)
+
+
+@pytest.mark.parametrize("dml", list(_DML))
+def test_rebase_equals_serial(spark, tmp_path, dml):
+    # a commit rebased over a disjoint concurrent append publishes the
+    # manifest the same operation publishes when it runs after the
+    # append: one builder serves the first attempt and the rebase
+    ta, tb = _tbl(tmp_path, "rebased"), _tbl(tmp_path, "serial")
+    for t in (ta, tb):
+        S.overwrite(_kv(spark, 0, 100), t, n_files=2)
+    v = _DML[dml](spark, ta, isolation="snapshot", race_inject=lambda: (
+        S.append(_kv(spark, 500, 510), ta, n_files=1)))
+    assert S.read_manifest(ta, v)["rebased_from"] == 2
+    S.append(_kv(spark, 500, 510), tb, n_files=1)
+    assert _DML[dml](spark, tb) == v == 3
+    for ver in (2, 3):
+        assert _canonical(ta, ver) == _canonical(tb, ver)
+    assert _rows(spark, ta) == _rows(spark, tb)

@@ -131,19 +131,73 @@ def test_vacuum_keeps_files_shared_with_retained_versions(spark, tmp_path):
     assert sorted(r.k for r in S.read(spark, t).collect()) == list(range(6))
 
 
-def test_stream_batch_commit_is_exactly_once(spark, tmp_path):
-    t = _tbl(tmp_path, "t9")
-    b0 = spark.range(0, 4).withColumnRenamed("id", "k")
-    b1 = spark.range(4, 6).withColumnRenamed("id", "k")
-    assert S.append_stream_batch(b0, t, batch_id=0) == 1
-    assert S.append_stream_batch(b1, t, batch_id=1) == 2
-    # epoch REPLAY (failure re-run with the same batch_id): no-op,
-    # no new version, table content unchanged
-    assert S.append_stream_batch(b0, t, batch_id=0) is None
-    assert S.versions(t) == [1, 2]
-    assert sorted(r.k for r in S.read(spark, t).collect()) == list(range(6))
-    # the ledger records which epoch produced each version
-    assert S.read_manifest(t, 2)["batch_id"] == 1
+#: table states an epoch commit must compose with exactly as an append
+#: does: pending merge-on-read deletes, and each kind of carried table
+#: metadata (rename / drop / initial-default / widen history, CHECK
+#: constraints)
+_STREAM_SETUPS = {
+    "plain": lambda spark, t: None,
+    "mor_delete": lambda spark, t: S.delete(
+        spark.createDataFrame([(1,), (2,), (3,)], "k long"), t, key="k",
+        mode="merge-on-read"),
+    "rename_column": lambda spark, t: S.rename_column(t, "v", "w"),
+    "drop_column": lambda spark, t: S.drop_column(t, "v"),
+    "add_column_default": lambda spark, t: S.add_column(
+        t, "d", "long", default=7),
+    "widen_column": lambda spark, t: S.widen_column(t, "v", "long"),
+    "add_constraint": lambda spark, t: S.add_constraint(
+        spark, t, "k_nonneg", "k >= 0"),
+}
+
+
+def _masked(m):
+    """A manifest minus what an append and a stream append of the
+    same batch legitimately differ in: operation, batch id, commit
+    time and file paths."""
+    out = {k: v for k, v in m.items()
+           if k not in ("operation", "batch_id", "committed_at")}
+    for k in ("files", "delete_files"):
+        if k in out:
+            out[k] = [{**e, "path": None} for e in out[k]]
+    return out
+
+
+@pytest.mark.parametrize("setup", list(_STREAM_SETUPS))
+def test_stream_batch_commit_is_exactly_once(spark, tmp_path, setup):
+    # an epoch commit is an append that records its batch id: on any
+    # table state it publishes the manifest append publishes and reads
+    # the same rows, and a replay of the epoch is a no-op
+    from pyspark.sql.types import StructType
+
+    base = spark.createDataFrame([(i, i * 10) for i in range(12)],
+                                 "k long, v int")
+    ta, ts = _tbl(tmp_path, "appended"), _tbl(tmp_path, "streamed")
+    for t in (ta, ts):
+        S.overwrite(base, t, n_files=2)
+        _STREAM_SETUPS[setup](spark, t)
+    schema = StructType.fromJson(
+        S.read_manifest(ta, S.versions(ta)[-1])["schema"])
+    batch = spark.createDataFrame(
+        [tuple(100 + i if f.name == "k" else i for f in schema.fields)
+         for i in range(2)], schema)
+    va = S.append(batch, ta, n_files=1)
+    vs = S.append_stream_batch(batch, ts, batch_id=0)
+    assert vs == va
+    ms = S.read_manifest(ts, vs)
+    assert (ms["operation"], ms["batch_id"]) == ("stream-append", 0)
+    assert _masked(ms) == _masked(S.read_manifest(ta, va))
+    old = {e["path"] for e in S.read_manifest(ts, vs - 1)["files"]}
+    assert [e["seq"] for e in ms["files"] if e["path"] not in old] == [vs]
+
+    def rows(t):
+        return sorted(tuple(r) for r in S.read(spark, t).collect())
+
+    assert rows(ts) == rows(ta)
+    # epoch REPLAY (failure re-run with the same batch_id): no-op, no
+    # new version, table content unchanged
+    assert S.append_stream_batch(batch, ts, batch_id=0) is None
+    assert S.versions(ts)[-1] == vs
+    assert rows(ts) == rows(ta)
 
 
 def test_commit_survives_empty_part_files(spark, tmp_path):
