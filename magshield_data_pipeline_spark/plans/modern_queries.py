@@ -1673,17 +1673,10 @@ FROM allch
 )
 def snapshot_cdc_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Scale: per-trigger cost = the new commits' touched files (the
-    # copy-on-write contract), never the table; the simple-reader
-    # protocol's ~2s/batch floor dominates wall time here, so the
-    # drain covers all three commits in ONE micro-batch
-    # (maxVersionsPerBatch=3) — batch count, not data, sets the cost
-    # (same adjudication as paged_stream_scan).
-    import ast as _ast
-    import tempfile as _tempfile
-    import time as _time
-    import uuid as _uuid
-
+    # copy-on-write contract), never the table; one AvailableNow drain
+    # delivers all three commits.
     from magshield_data_pipeline_spark.sources import cdc_stream as C
+    from magshield_data_pipeline_spark.streaming import windows as W
 
     base = row_cdc_source_table(spark, sf_dir)
     C.register(spark)
@@ -1691,41 +1684,14 @@ def snapshot_cdc_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.readStream.format("ledger_cdc")
         .option("path", base)
         .option("startversion", 1)
-        .option("maxversionsperbatch", 3)
         .load()
     )
-    name = f"cdc_stream_{_uuid.uuid4().hex[:8]}"
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation",
-                _tempfile.mkdtemp(prefix=f"ckpt_{name}_"))
-        .trigger(processingTime="0 seconds")
-        .start()
-    )
-    try:
-        deadline = _time.time() + 120
-        while _time.time() < deadline:
-            prog = q.lastProgress
-            if prog and prog["sources"]:
-                end = prog["sources"][0]["endOffset"]
-                end = _ast.literal_eval(end) if isinstance(end, str) else end
-                if end and int(end.get("version", 0)) >= 4:
-                    break
-            _time.sleep(0.05)
-        else:
-            raise TimeoutError(
-                "snapshot_cdc_stream: offset never reached v4"
-            )
-    finally:
-        q.stop()
-        q.awaitTermination(30)
+    drained = W.run_available_now(stream, output_mode="append")
     # one-pass rollup over the drained memory table (was: five
     # filtered agg branches over a persisted scan — see
     # _cdc_change_rollup; persist dropped, the table is scanned once)
     return _cdc_change_rollup(
-        spark.table(name), "n_docs",
+        drained, "n_docs",
         {"id_sum": F.col("doc_id"), "text_chars": F.length("text")},
     )
 
@@ -1784,11 +1750,9 @@ SELECT 'view_commits', CAST(3 AS BIGINT), CAST(NULL AS BIGINT),
 )
 def snapshot_ivm_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Scale: per-trigger cost = the commits' touched files (CDC) +
-    # O(affected groups) (the fold's stats-pruned merge); the one
-    # micro-batch here is the simple-reader protocol floor, not data.
-    import ast as _ast
+    # O(affected groups) (the fold's stats-pruned merge); one
+    # AvailableNow drain folds the whole chain in one micro-batch.
     import tempfile as _tempfile
-    import time as _time
     import uuid as _uuid
 
     from magshield_data_pipeline_spark.operators import ivm
@@ -1820,7 +1784,6 @@ def snapshot_ivm_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.readStream.format("ledger_cdc")
         .option("path", src)
         .option("startversion", 1)
-        .option("maxversionsperbatch", 3)
         .load()
     )
 
@@ -1831,30 +1794,14 @@ def snapshot_ivm_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     name = f"ivm_stream_{_uuid.uuid4().hex[:8]}"
-    q = (
+    (
         stream.writeStream.foreachBatch(fold)
         .option("checkpointLocation",
                 _tempfile.mkdtemp(prefix=f"ckpt_{name}_"))
-        .trigger(processingTime="0 seconds")
+        .trigger(availableNow=True)
         .start()
+        .awaitTermination()
     )
-    try:
-        deadline = _time.time() + 120
-        while _time.time() < deadline:
-            prog = q.lastProgress
-            if prog and prog["sources"]:
-                end = prog["sources"][0]["endOffset"]
-                end = _ast.literal_eval(end) if isinstance(end, str) else end
-                if end and int(end.get("version", 0)) >= 4:
-                    break
-            _time.sleep(0.05)
-        else:
-            raise TimeoutError(
-                "snapshot_ivm_stream: offset never reached v4"
-            )
-    finally:
-        q.stop()
-        q.awaitTermination(30)
 
     def vrow(stage: str, df: DataFrame) -> DataFrame:
         return df.agg(
@@ -2599,16 +2546,11 @@ FROM final
 def snapshot_cdc_stream_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Scale: per-trigger cost = each commit's AFFECTED files (added
     # files + carried files whose applicable equality-delete set
-    # changed, stats-pruned) — never the table; one micro-batch covers
-    # the whole chain (maxVersionsPerBatch=5), so the simple-reader
-    # protocol floor, not data, sets wall time here.
-    import ast as _ast
-    import tempfile as _tempfile
-    import time as _time
-    import uuid as _uuid
-
+    # changed, stats-pruned) — never the table; one AvailableNow drain
+    # covers the whole chain.
     from magshield_data_pipeline_spark.sources import cdc_stream as C
     from magshield_data_pipeline_spark.sources import snapshots as SN
+    from magshield_data_pipeline_spark.streaming import windows as W
 
     base = mor_cdc_source_table(spark, sf_dir)
     C.register(spark)
@@ -2616,40 +2558,13 @@ def snapshot_cdc_stream_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.readStream.format("ledger_cdc")
         .option("path", base)
         .option("startversion", 1)
-        .option("maxversionsperbatch", 5)
         .load()
     )
-    name = f"cdc_mor_{_uuid.uuid4().hex[:8]}"
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation",
-                _tempfile.mkdtemp(prefix=f"ckpt_{name}_"))
-        .trigger(processingTime="0 seconds")
-        .start()
-    )
-    try:
-        deadline = _time.time() + 120
-        while _time.time() < deadline:
-            prog = q.lastProgress
-            if prog and prog["sources"]:
-                end = prog["sources"][0]["endOffset"]
-                end = _ast.literal_eval(end) if isinstance(end, str) else end
-                if end and int(end.get("version", 0)) >= 6:
-                    break
-            _time.sleep(0.05)
-        else:
-            raise TimeoutError(
-                "snapshot_cdc_stream_mor: offset never reached v6"
-            )
-    finally:
-        q.stop()
-        q.awaitTermination(30)
+    drained = W.run_available_now(stream, output_mode="append")
     # one-pass rollup over the drained memory table (was: five
     # filtered agg branches over a persisted scan — _cdc_change_rollup)
     out = _cdc_change_rollup(
-        spark.table(name), "n_docs",
+        drained, "n_docs",
         {"id_sum": F.col("doc_id"), "text_chars": F.length("text")},
     )
     # the post-compact visible state: revived keys present, deleted
@@ -3330,67 +3245,6 @@ def snapshot_txn_group(spark: SparkSession, sf_dir: str) -> DataFrame:
         cur_cut.unionByName(idx_cut).unionByName(pending)
         .unionByName(versions_row)
     )
-
-
-@register(
-    "snapshot_cdc_stream_dist",
-    sql=_SNAP_CDC_STREAM_MOR_SQL,
-    description="DISTRIBUTED streaming CDC reader (r12 — the "
-    "executor-side twin of ledger_cdc, closing the one documented "
-    "driver-materialization seam): readStream.format('ledger_cdc_"
-    "dist') plans partitions from MANIFEST METADATA on the driver — "
-    "one partition per added file for appends and snapshot-bootstrap "
-    "files (embarrassingly parallel inserts), one per non-append "
-    "commit for the visible-state diff — and materializes all rows "
-    "ON EXECUTORS; drained over the same merge-on-read chain as "
-    "snapshot_cdc_stream_mor (MOR merge, MOR delete, re-insert, "
-    "set-constraint, compact) with the SAME oracle: the hash pins "
-    "that the distributed reader is bit-identical to the simple "
-    "reader and the batch feed ([EXT] at 100 TB per-commit CDC "
-    "memory lands on the cluster, not the driver, and distinct "
-    "commits in a batch diff in parallel)",
-)
-def snapshot_cdc_stream_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Scale: partition plan = metadata only; per-partition cost = one
-    # file (appends/bootstrap) or one commit's affected files (diff).
-    import tempfile as _tempfile
-    import uuid as _uuid
-
-    from magshield_data_pipeline_spark.sources import cdc_stream as C
-    from magshield_data_pipeline_spark.sources import snapshots as SN
-
-    base = mor_cdc_source_table(spark, sf_dir)
-    C.register(spark)
-    name = f"cdc_dist_{_uuid.uuid4().hex[:8]}"
-    q = (
-        spark.readStream.format("ledger_cdc_dist")
-        .option("path", base)
-        .option("startversion", 1)
-        .load()
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation",
-                _tempfile.mkdtemp(prefix=f"ckpt_{name}_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    # one-pass rollup over the drained memory table (was: five
-    # filtered agg branches over a persisted scan — _cdc_change_rollup)
-    out = _cdc_change_rollup(
-        spark.table(name), "n_docs",
-        {"id_sum": F.col("doc_id"), "text_chars": F.length("text")},
-    )
-    out = out.unionByName(
-        SN.read(spark, base).agg(
-            F.lit("final_state").alias("change"),
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("doc_id").cast("long").alias("id_sum"),
-            F.sum(F.length("text")).cast("long").alias("text_chars"),
-        )
-    )
-    return out
 
 
 _SNAP_IVM_CHAIN_SQL = """
@@ -4382,11 +4236,9 @@ SELECT CAST(-1 AS BIGINT), CAST(3 AS BIGINT), CAST(NULL AS BIGINT),
 )
 def snapshot_scd2_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Scale: per-trigger cost = the batch's touched files (CDC) + the
-    # delta-envelope slice of the key-clustered mirror; the single
-    # micro-batch here is the simple-reader protocol floor, not data.
-    import ast as _ast
+    # delta-envelope slice of the key-clustered mirror; one
+    # AvailableNow drain folds the whole chain in one micro-batch.
     import tempfile as _tempfile
-    import time as _time
     import uuid as _uuid
 
     from magshield_data_pipeline_spark.operators import scd
@@ -4401,7 +4253,7 @@ def snapshot_scd2_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     mirror = scratch_path(
         "snap_scd2_stream", sf_dir,
         "init@v1; ledger_cdc foreachBatch apply_scd2_changes "
-        "txn=batch_id, maxversionsperbatch=3",
+        "txn=batch_id, whole chain in one batch",
     )
     ensure_scratch(
         mirror,
@@ -4413,7 +4265,6 @@ def snapshot_scd2_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.readStream.format("ledger_cdc")
         .option("path", src)
         .option("startversion", 1)
-        .option("maxversionsperbatch", 3)
         .load()
     )
 
@@ -4424,30 +4275,14 @@ def snapshot_scd2_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     name = f"scd2_stream_{_uuid.uuid4().hex[:8]}"
-    q = (
+    (
         stream.writeStream.foreachBatch(fold)
         .option("checkpointLocation",
                 _tempfile.mkdtemp(prefix=f"ckpt_{name}_"))
-        .trigger(processingTime="0 seconds")
+        .trigger(availableNow=True)
         .start()
+        .awaitTermination()
     )
-    try:
-        deadline = _time.time() + 120
-        while _time.time() < deadline:
-            prog = q.lastProgress
-            if prog and prog["sources"]:
-                end = prog["sources"][0]["endOffset"]
-                end = _ast.literal_eval(end) if isinstance(end, str) else end
-                if end and int(end.get("version", 0)) >= 4:
-                    break
-            _time.sleep(0.05)
-        else:
-            raise TimeoutError(
-                "snapshot_scd2_stream: offset never reached v4"
-            )
-    finally:
-        q.stop()
-        q.awaitTermination(30)
 
     hist = SN.read(spark, mirror)
     rows = hist.select(
@@ -5984,21 +5819,15 @@ SELECT 'delete', 0, NULL, NULL, NULL
 )
 def snapshot_cdc_stream_evolve(spark: SparkSession,
                                sf_dir: str) -> DataFrame:
-    # Scale: per-trigger cost = the commits' touched files; the
-    # ~2 s/batch simple-reader floor dominates wall here, so the
-    # drain covers every commit in one micro-batch (batch count, not
-    # data, sets the cost — same adjudication as snapshot_cdc_stream).
-    import ast as _ast
-    import tempfile as _tempfile
-    import time as _time
-    import uuid as _uuid
-
+    # Scale: per-trigger cost = the commits' touched files; one
+    # AvailableNow drain covers every commit.
     from magshield_data_pipeline_spark.sources import cdc_stream as C
     from magshield_data_pipeline_spark.sources import snapshots as SN
     from magshield_data_pipeline_spark.sources.scratch import (
         ensure_scratch,
         scratch_path,
     )
+    from magshield_data_pipeline_spark.streaming import windows as W
 
     docs = read_table(spark, sf_dir, "documents").select(
         "doc_id", F.length("text").cast("long").alias("nc")
@@ -6032,40 +5861,13 @@ def snapshot_cdc_stream_evolve(spark: SparkSession,
         spark.readStream.format("ledger_cdc")
         .option("path", base)
         .option("startversion", 1)
-        .option("maxversionsperbatch", 4)
         .load()
     )
-    name = f"cdc_evolve_{_uuid.uuid4().hex[:8]}"
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation",
-                _tempfile.mkdtemp(prefix=f"ckpt_{name}_"))
-        .trigger(processingTime="0 seconds")
-        .start()
-    )
-    try:
-        deadline = _time.time() + 120
-        while _time.time() < deadline:
-            prog = q.lastProgress
-            if prog and prog["sources"]:
-                end = prog["sources"][0]["endOffset"]
-                end = _ast.literal_eval(end) if isinstance(end, str) else end
-                if end and int(end.get("version", 0)) >= 5:
-                    break
-            _time.sleep(0.05)
-        else:
-            raise TimeoutError(
-                "snapshot_cdc_stream_evolve: offset never reached v5"
-            )
-    finally:
-        q.stop()
-        q.awaitTermination(30)
+    drained = W.run_available_now(stream, output_mode="append")
     # one-pass rollup over the drained memory table (was: five
     # filtered agg branches over a persisted scan — _cdc_change_rollup)
     return _cdc_change_rollup(
-        spark.table(name), "n_rows",
+        drained, "n_rows",
         {"id_sum": F.col("doc_id"), "chars_sum": F.col("chars"),
          "flag_sum": F.col("flag")},
     )

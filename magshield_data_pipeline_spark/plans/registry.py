@@ -219,10 +219,10 @@ _WINDOW_PINS: list[tuple[str, int]] = [
     # (snapshot_cdc_stream's r12 pin PRUNED in session 5: the window
     # holds exactly 50 and tiers 1+3 reached 51 when the six session-5
     # queries entered; cdc_stream.py's touched surface is re-proven
-    # this round by three MANDATORY tier-3 entries exercising the same
-    # readers — snapshot_cdc_stream_evolve (new, era mapping),
-    # snapshot_cdc_stream_mor, snapshot_cdc_stream_dist — plus the
-    # all-registry local parity suite; the least marginal slot.)
+    # this round by two MANDATORY tier-3 entries exercising the same
+    # reader — snapshot_cdc_stream_evolve (new, era mapping) and
+    # snapshot_cdc_stream_mor — plus the all-registry local parity
+    # suite; the least marginal slot.)
     ("snapshot_ivm_view", 12),
     ("snapshot_ivm_stream", 12),
     ("snapshot_row_cdc", 12),
@@ -241,7 +241,6 @@ _WINDOW_PINS: list[tuple[str, int]] = [
     # update_where) enter via tier 3; these pin the touched NEIGHBORS.
     ("snapshot_mor_purge", 12),
     ("snapshot_cdc_stream_mor", 12),
-    ("snapshot_cdc_stream_dist", 12),
     ("snapshot_scd2_stream", 12),
     ("snapshot_auto_maintain", 12),
     ("snapshot_drop_column", 12),

@@ -7,32 +7,34 @@ with the LEDGER VERSION as the checkpointed stream offset.
 
 This upgrades the batch feed (``snapshots.read_row_changes``) to a
 subscription: a consumer checkpoints its position in the table's
-commit history and each trigger delivers only the commits it hasn't
-seen.  ``readBetweenOffsets`` replays a version range exactly —
-deterministic recovery, the contract checkpointing needs.
+commit history and each trigger delivers every commit it hasn't seen,
+up to the table's latest version — so ``Trigger.AvailableNow`` drains
+the whole backlog and stops.  Offsets are ledger versions, so a batch
+between two offsets replays exactly (deterministic recovery).
 
-One change-feed algorithm serves the batch feed and both readers
-here: ``ledger_meta.commit_plan`` decides from the two manifests alone
+One reader (:class:`LedgerCdcStreamReader`) plans each batch on the
+driver from manifests alone and materializes rows on executors.  One
+change-feed algorithm serves it and the batch feed:
+``ledger_meta.commit_plan`` decides from the two manifests alone
 whether a commit is skipped (compacts and metadata-only commits emit
 ZERO rows, so maintenance never wakes a subscriber), is an append's
-pure inserts, or is a diff of the VISIBLE rows of its affected files —
-the files it added or removed, plus carried files whose applicable
-delete set changed (``ledger_meta.delete_applies``: positional
-``targets``, or the Iceberg v2 sequence-number rule with key-range
-stats, so a key re-inserted after a delete survives and IS
-delivered).  This module is the pure-Python edition of that diff
-(:func:`_commit_changes`); ``read_row_changes`` is the Spark edition.
-Both classify a commit that records a merge key by key (update
-pre/post pairs, carried-identical rows excluded) and any other commit
-as a multiset diff — merge-on-read merges/deletes, positional
-deletes/updates, overwrites and rollbacks (undeletes included) alike.
+pure inserts (one partition per added file), or is a diff of the
+VISIBLE rows of its affected files (one partition per commit) — the
+files it added or removed, plus carried files whose applicable delete
+set changed (``ledger_meta.delete_applies``: positional ``targets``,
+or the Iceberg v2 sequence-number rule with key-range stats, so a key
+re-inserted after a delete survives and IS delivered).  This module
+is the pure-Python edition of that diff (:func:`_commit_changes`,
+run only inside executor partitions); ``read_row_changes`` is the
+Spark edition.  Both classify a commit that records a merge key by
+key (update pre/post pairs, carried-identical rows excluded) and any
+other commit as a multiset diff — merge-on-read merges/deletes,
+positional deletes/updates, overwrites and rollbacks (undeletes
+included) alike.
 
 Scale shape: per-trigger cost is each new commit's AFFECTED FILES
-only, never the table.  The simple reader materializes each batch's
-rows on the driver (the simple-reader protocol pickles them from
-there, as in ``sources/paged.py``) — bounded by the commit's change
-size; the ``ledger_cdc_dist`` reader plans partitions from the same
-commit plan and materializes rows on executors.
+only, never the table; a partition holds one file or one commit's
+affected files, so no batch's rows pass through the driver.
 
 Schema-evolution HISTORY is covered too (r12 session 5): each file is
 read under its ERA's stored column names — renames undone per file
@@ -55,13 +57,11 @@ from __future__ import annotations
 import datetime
 import os
 from collections import Counter
-from typing import Iterator
 
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceStreamReader,
     InputPartition,
-    SimpleDataSourceStreamReader,
 )
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
@@ -79,7 +79,7 @@ META_COLS = ("_change_type", "_commit_version")
 
 def _cast_part(raw, dtype) -> object:
     """Type a hive-directory partition STRING through the stream
-    schema's field type — the driver-side twin of the batch path's
+    schema's field type — the Python twin of the batch path's
     ``F.lit(v).cast(f.dataType)`` (ADVICE r11 medium: emitting the raw
     string into e.g. a LongType field corrupted the tuple diff)."""
     if raw is None:
@@ -186,8 +186,7 @@ def _rows_of(table_path: str, entries: list[dict], fields: list[str],
             # default masks, no partition restore, every field stored
             # under its own name — the arrow table's row dicts ARE the
             # requested rows, so skip the per-row re-keying dictcomp
-            # (the diff loop below runs once per drained commit on the
-            # driver; ~60 ms of per-row Python per drain at sf0.1)
+            # (~60 ms of per-row Python per drain at sf0.1)
             out.extend(tbl.to_pylist())
             continue
         for d in tbl.to_pylist():
@@ -210,16 +209,13 @@ _FILTER_OPS = {
 }
 
 
-def _table_types(table_path: str, fallback_schema) -> dict:
-    """Column -> DataType from the table's LATEST manifest schema
-    (every column, not just the projected stream fields); falls back
-    to the stream schema for pre-schema chains."""
-    vs = versions(table_path)
-    if vs:
-        man = read_manifest(table_path, vs[-1])
-        if man.get("schema"):
-            full = StructType.fromJson(man["schema"])
-            return {f.name: f.dataType for f in full.fields}
+def _table_types(man: dict, fallback_schema) -> dict:
+    """Column -> DataType from manifest *man*'s schema (every column,
+    not just the projected stream fields); falls back to the stream
+    schema for pre-schema chains."""
+    if man.get("schema"):
+        full = StructType.fromJson(man["schema"])
+        return {f.name: f.dataType for f in full.fields}
     return {f.name: f.dataType for f in fallback_schema.fields
             if f.name not in META_COLS}
 
@@ -298,7 +294,7 @@ def _visible_rows(table_path: str, entries: list[dict],
                   defaults: list[dict] | None = None) -> list[dict]:
     """The VISIBLE rows of *entries* under *delete_files*: each
     entry's rows minus those of every delete file that applies to it
-    (``ledger_meta.delete_index``) — the driver-side twin of
+    (``ledger_meta.delete_index``) — the Python twin of
     ``snapshots._scan_with_deletes``.  *keysets* caches delete-file
     key sets across calls within one commit diff.  An equality
     delete's recorded key is era-mapped to its CURRENT name for the
@@ -392,47 +388,26 @@ def _commit_changes(table_path: str, v: int, fields: list[str],
                     types: dict | None = None,
                     filters: list[tuple] | None = None,
                     renames: list[dict] | None = None,
-                    defaults: list[dict] | None = None,
-                    schema_v: int | None = None) -> list[tuple]:
-    """Classify commit *v*'s net row changes — the pure-Python edition
-    of ``snapshots.read_row_changes`` over the same
-    ``ledger_meta.commit_plan`` (pinned against the batch feed in
-    tests):
+                    defaults: list[dict] | None = None) -> list[tuple]:
+    """Classify the net row changes of commit *v*, a ``diff`` plan —
+    the pure-Python edition of ``snapshots.read_row_changes`` over the
+    same ``ledger_meta.commit_plan`` (pinned against the batch feed in
+    tests).  Runs inside one executor partition of
+    :class:`LedgerCdcStreamReader`:
 
-    1. the plan skips compacts and metadata-only commits (set-
-       constraint, no-op rollback: the stream advances past them
-       instead of wedging), lists an append's added files as pure
-       inserts, and otherwise names the affected files on each side;
-    2. before = visible rows of the prev-side files under the prev
+    1. before = visible rows of the prev-side files under the prev
        delete set; after = visible rows of the cur-side files under
        the cur delete set;
-    3. multiset diff (identical restatements cancel — carried rows
+    2. multiset diff (identical restatements cancel — carried rows
        emit nothing); when the commit records a merge key, matching
        delete+insert pairs on one key classify as
        update_preimage/update_postimage, exactly the batch contract.
 
     Cost: the commit's affected files only, never the table."""
     plan = commit_plan(table_path, v, "ledger_cdc")
-    if schema_v is not None:
-        _schema_boundary(plan["cur"], schema_v, "ledger_cdc")
-    if plan["kind"] == "skip":
-        return []
-
-    def tup(d: dict, change: str) -> tuple:
-        return tuple(d[f] for f in fields) + (change, v)
-
     filters = filters or []
     f_extras = sorted({c for c, _op, _v in filters} - set(fields))
     pred = _row_pred(filters) if filters else None
-
-    if plan["kind"] == "inserts":
-        # filter pushdown prunes whole files by manifest stats first
-        kept = [e for e in plan["after"] if _file_may_match(e, filters)]
-        rows = _rows_of(table_path, kept, list(fields) + f_extras, types,
-                        renames, defaults)
-        if pred is not None:
-            rows = [r for r in rows if pred(r)]
-        return [tup(d, "insert") for d in rows]
 
     # under a column PROJECTION the merge key may be excluded from the
     # output — materialize it as a working column anyway so update
@@ -521,10 +496,37 @@ def _commit_changes(table_path: str, v: int, fields: list[str],
     return out
 
 
-class LedgerCdcStreamReader(SimpleDataSourceStreamReader):
-    """Offset = the last CONSUMED ledger version; each trigger advances
-    by up to ``maxVersionsPerBatch`` commits (default 1 — one commit
-    per micro-batch keeps batches bounded by commit size).
+class LedgerCdcPartition(InputPartition):
+    """One unit of executor-side CDC materialization: ``kind`` is
+    ``snapshot_file`` (bootstrap: one base file + its applicable
+    delete files), ``insert_file`` (one added file of an ``inserts``
+    plan, no deletes), or ``commit_diff`` (one whole ``diff`` plan —
+    the diff needs the commit's affected files together, so it stays a
+    single unit)."""
+
+    def __init__(self, kind: str, payload: dict) -> None:
+        self.kind = kind
+        self.payload = payload
+
+
+class LedgerCdcStreamReader(DataSourceStreamReader):
+    """Offset = the last CONSUMED ledger version (``{"version": v,
+    "snap": 0|1}``); each trigger drains to the table's latest
+    version.  The driver plans partitions from MANIFEST METADATA ONLY —
+    each commit's ``ledger_meta.commit_plan`` — and executors
+    materialize the rows:
+
+    - a snapshot bootstrap fans out one ``snapshot_file`` partition
+      PER BASE FILE (its applicable delete files shipped in the
+      partition spec);
+    - an ``inserts`` plan (an append) fans out one ``insert_file``
+      partition PER ADDED FILE (pure inserts, embarrassingly parallel);
+    - a ``diff`` plan becomes ONE ``commit_diff`` partition running
+      :func:`_commit_changes` — distinct commits in a batch diff in
+      parallel; a ``skip`` plan gets no partition.
+
+    The partition plan, not a batch count, bounds memory, so an
+    AvailableNow trigger delivers the whole backlog in one batch.
 
     ``initialSnapshot=true`` makes the FIRST micro-batch deliver the
     table's full state at ``startVersion`` as ``insert`` rows (tagged
@@ -537,139 +539,24 @@ class LedgerCdcStreamReader(SimpleDataSourceStreamReader):
     def __init__(self, options: dict, schema: StructType) -> None:
         self.path = options["path"]
         self.start = int(options.get("startversion", 1))
-        self.max_per_batch = int(options.get("maxversionsperbatch", 1))
         self.initial_snapshot = (
             str(options.get("initialsnapshot", "false")).lower() == "true"
         )
         self.fields = [f.name for f in schema.fields
                        if f.name not in META_COLS]
-        # types from the TABLE schema (not the projected stream
-        # schema): filter/delete-key working columns outside the
-        # projection still need typed partition restore and literal
-        # coercion
-        self.types = _table_types(self.path, schema)
-        self.filters = _parse_filters(options.get("filters", ""),
-                                      self.types)
         # the schema-inference point: per-file era mapping serves all
         # rename/default/widen history AT OR BEFORE this version;
         # events beyond it fail the stream for a restart (_schema_boundary)
         vs = versions(self.path)
         self.schema_v = vs[-1] if vs else 0
         man = read_manifest(self.path, self.schema_v) if vs else {}
-        self.renames = man.get("renames") or []
-        self.defaults = man.get("defaults") or []
-
-    def initialOffset(self) -> dict:
-        return {"version": self.start,
-                "snap": 0 if self.initial_snapshot else 1}
-
-    def _snapshot_rows(self) -> list[tuple]:
-        # the bootstrap delivers the VISIBLE state at startVersion —
-        # pending merge-on-read deletes are reconciled exactly as a
-        # read() of that version would (sequence-number contract);
-        # filters prune files by manifest stats before any read
-        man = feed_manifest(self.path, self.start, "ledger_cdc")
-        files = [e for e in man["files"]
-                 if _file_may_match(e, self.filters)]
-        extras = sorted({c for c, _o, _v in self.filters}
-                        - set(self.fields))
-        rows = _visible_rows(self.path, files,
-                             man.get("delete_files") or [],
-                             list(self.fields) + extras, self.types, {},
-                             self.renames, self.defaults)
-        if self.filters:
-            pred = _row_pred(self.filters)
-            rows = [r for r in rows if pred(r)]
-        return [
-            tuple(d[f] for f in self.fields) + ("insert", self.start)
-            for d in rows
-        ]
-
-    def _range_rows(self, from_v: int, to_v: int) -> list[tuple]:
-        # a LIST, not a generator: the simple-reader protocol pickles
-        # prefetched rows (same note as sources/paged.py:288)
-        out: list[tuple] = []
-        for v in range(from_v + 1, to_v + 1):
-            out.extend(
-                _commit_changes(self.path, v, self.fields, self.types,
-                                self.filters, self.renames,
-                                self.defaults, self.schema_v)
-            )
-        return out
-
-    def read(self, start: dict) -> tuple:
-        v0 = int(start["version"])
-        if not start.get("snap", 1):
-            # bootstrap batch: the full snapshot at startVersion
-            return iter(self._snapshot_rows()), {"version": v0, "snap": 1}
-        vs = versions(self.path)
-        latest = vs[-1] if vs else v0
-        target = min(latest, v0 + self.max_per_batch)
-        if target <= v0:
-            return iter([]), {"version": v0, "snap": 1}
-        return (iter(self._range_rows(v0, target)),
-                {"version": target, "snap": 1})
-
-    def readBetweenOffsets(self, start: dict, end: dict) -> Iterator[tuple]:
-        if not start.get("snap", 1):
-            # recovery of the bootstrap batch replays the snapshot
-            return iter(self._snapshot_rows())
-        return iter(
-            self._range_rows(int(start["version"]), int(end["version"]))
-        )
-
-
-class LedgerCdcPartition(InputPartition):
-    """One unit of executor-side CDC materialization: ``kind`` is
-    ``snapshot_file`` (bootstrap: one base file + its applicable
-    delete files), ``insert_file`` (one added file of an ``inserts``
-    plan), or ``commit_diff`` (one whole ``diff`` plan — the diff
-    needs the commit's affected files together, so it stays a single
-    unit, but on an EXECUTOR, not the driver)."""
-
-    def __init__(self, kind: str, payload: dict) -> None:
-        self.kind = kind
-        self.payload = payload
-
-
-class LedgerCdcDistStreamReader(DataSourceStreamReader):
-    """The DISTRIBUTED twin of :class:`LedgerCdcStreamReader` (r12):
-    the simple-reader protocol materializes every batch's rows on the
-    driver — bounded by commit size, but still the one non-scalable
-    seam the r11 notes documented.  This reader plans partitions from
-    MANIFEST METADATA ONLY on the driver — each commit's
-    ``ledger_meta.commit_plan`` — and materializes rows on executors:
-
-    - a snapshot bootstrap fans out one partition PER BASE FILE (its
-      applicable delete files shipped in the partition spec);
-    - an ``inserts`` plan (an append) fans out one partition PER ADDED
-      FILE (pure inserts, embarrassingly parallel);
-    - a ``diff`` plan becomes ONE ``commit_diff`` partition running
-      the same visible-state diff as the simple reader — per-commit
-      memory moves off the driver, and distinct commits in a batch
-      diff in parallel; a ``skip`` plan gets no partition.
-
-    No ``maxVersionsPerBatch``: each trigger drains to the table's
-    latest version (the partition plan, not the batch count, bounds
-    memory).  Offsets are identical to the simple reader's
-    (``{"version": v, "snap": 0|1}``), so checkpoints carry the same
-    meaning.  Rows are bit-identical to the simple reader — pinned in
-    tests/test_cdc_stream.py."""
-
-    def __init__(self, options: dict, schema: StructType) -> None:
-        self.path = options["path"]
-        self.start = int(options.get("startversion", 1))
-        self.initial_snapshot = (
-            str(options.get("initialsnapshot", "false")).lower() == "true"
-        )
-        self.fields = [f.name for f in schema.fields
-                       if f.name not in META_COLS]
-        self.types = _table_types(self.path, schema)
+        # types from the TABLE schema (not the projected stream
+        # schema): filter/delete-key working columns outside the
+        # projection still need typed partition restore and literal
+        # coercion
+        self.types = _table_types(man, schema)
         self.filters = _parse_filters(options.get("filters", ""),
                                       self.types)
-        vs = versions(self.path)
-        self.schema_v = vs[-1] if vs else 0
-        man = read_manifest(self.path, self.schema_v) if vs else {}
         self.renames = man.get("renames") or []
         self.defaults = man.get("defaults") or []
 
@@ -685,7 +572,10 @@ class LedgerCdcDistStreamReader(DataSourceStreamReader):
         parts: list[LedgerCdcPartition] = []
         v0 = int(start["version"])
         if not start.get("snap", 1):
-            man = feed_manifest(self.path, v0, "ledger_cdc_dist")
+            # the bootstrap delivers the VISIBLE state at startVersion:
+            # pending merge-on-read deletes apply per file, exactly as
+            # a read() of that version would (sequence-number contract)
+            man = feed_manifest(self.path, v0, "ledger_cdc")
             applying = delete_index(man.get("delete_files") or [])
             for e in man["files"]:
                 if not _file_may_match(e, self.filters):
@@ -696,14 +586,14 @@ class LedgerCdcDistStreamReader(DataSourceStreamReader):
                     "version": v0,
                 }))
         for v in range(v0 + 1, int(end["version"]) + 1):
-            plan = commit_plan(self.path, v, "ledger_cdc_dist")
-            _schema_boundary(plan["cur"], self.schema_v, "ledger_cdc_dist")
+            plan = commit_plan(self.path, v, "ledger_cdc")
+            _schema_boundary(plan["cur"], self.schema_v, "ledger_cdc")
             if plan["kind"] == "inserts":
                 for e in plan["after"]:
                     if not _file_may_match(e, self.filters):
                         continue  # filter pushdown: metadata-pruned
                     parts.append(LedgerCdcPartition("insert_file", {
-                        "entry": e, "version": v,
+                        "entry": e, "deletes": [], "version": v,
                     }))
             elif plan["kind"] == "diff":
                 parts.append(LedgerCdcPartition("commit_diff",
@@ -714,55 +604,26 @@ class LedgerCdcDistStreamReader(DataSourceStreamReader):
         p = partition.payload
         if partition.kind == "noop":
             return iter([])
+        if partition.kind == "commit_diff":
+            return iter(_commit_changes(self.path, p["version"],
+                                        self.fields, self.types,
+                                        self.filters, self.renames,
+                                        self.defaults))
+        # snapshot_file / insert_file: one file's visible rows, inserts
         extras = sorted({c for c, _o, _v in self.filters}
                         - set(self.fields))
-        pred = _row_pred(self.filters) if self.filters else None
-        if partition.kind == "snapshot_file":
-            rows = _visible_rows(self.path, [p["entry"]], p["deletes"],
-                                 list(self.fields) + extras,
-                                 self.types, {}, self.renames,
-                                 self.defaults)
-            if pred is not None:
-                rows = [r for r in rows if pred(r)]
-            v = p["version"]
-            return iter(
-                tuple(d[f] for f in self.fields) + ("insert", v)
-                for d in rows
-            )
-        if partition.kind == "insert_file":
-            rows = _rows_of(self.path, [p["entry"]],
-                            list(self.fields) + extras, self.types,
-                            self.renames, self.defaults)
-            if pred is not None:
-                rows = [r for r in rows if pred(r)]
-            v = p["version"]
-            return iter(
-                tuple(d[f] for f in self.fields) + ("insert", v)
-                for d in rows
-            )
-        return iter(_commit_changes(self.path, p["version"],
-                                    self.fields, self.types,
-                                    self.filters, self.renames,
-                                    self.defaults, self.schema_v))
+        rows = _visible_rows(self.path, [p["entry"]], p["deletes"],
+                             list(self.fields) + extras, self.types, {},
+                             self.renames, self.defaults)
+        if self.filters:
+            pred = _row_pred(self.filters)
+            rows = [r for r in rows if pred(r)]
+        v = p["version"]
+        return iter(tuple(d[f] for f in self.fields) + ("insert", v)
+                    for d in rows)
 
     def commit(self, end: dict) -> None:
         pass  # offsets are ledger versions; nothing external to ack
-
-
-class LedgerCdcDistDataSource(DataSource):
-    """``spark.readStream.format("ledger_cdc_dist")`` — executor-side
-    row materialization (see :class:`LedgerCdcDistStreamReader`);
-    schema inference shared with the simple source."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "ledger_cdc_dist"
-
-    def schema(self) -> StructType:
-        return LedgerCdcDataSource.schema(self)
-
-    def streamReader(self, schema: StructType) -> LedgerCdcDistStreamReader:
-        return LedgerCdcDistStreamReader(dict(self.options), schema)
 
 
 class LedgerCdcDataSource(DataSource):
@@ -793,8 +654,8 @@ class LedgerCdcDataSource(DataSource):
         wanted = self.options.get("columns")
         if wanted:
             # COLUMN PROJECTION: the subscriber names the columns it
-            # needs and never pays for the table's width — executor/
-            # driver reads prune to exactly these (plus working
+            # needs and never pays for the table's width — executor
+            # reads prune to exactly these (plus working
             # columns for delete keys and update pairing, stripped on
             # emission).  Semantics: the CDC feed OF THE PROJECTED
             # VIEW — a commit changing only unselected columns emits
@@ -817,8 +678,7 @@ class LedgerCdcDataSource(DataSource):
             ]
         )
 
-    def simpleStreamReader(self, schema: StructType
-                           ) -> LedgerCdcStreamReader:
+    def streamReader(self, schema: StructType) -> LedgerCdcStreamReader:
         return LedgerCdcStreamReader(dict(self.options), schema)
 
 
@@ -826,7 +686,7 @@ def register(spark) -> None:
     """Ship this module and the ``ledger_meta`` helpers it calls BY
     VALUE (the caller session's workers don't have the package on
     sys.path — same rule as sources/paged.py) and register the
-    sources."""
+    source."""
     import sys
 
     from pyspark import cloudpickle
@@ -836,4 +696,3 @@ def register(spark) -> None:
     cloudpickle.register_pickle_by_value(ledger_meta)
     cloudpickle.register_pickle_by_value(sys.modules[__name__])
     spark.dataSource.register(LedgerCdcDataSource)
-    spark.dataSource.register(LedgerCdcDistDataSource)

@@ -1,6 +1,6 @@
 """The metadata-only half of the snapshot ledger's change feed, shared
-by the batch feed (``snapshots.read_row_changes``) and both streaming
-readers (``cdc_stream``):
+by the batch feed (``snapshots.read_row_changes``) and the streaming
+reader (``cdc_stream``):
 
 - manifest access: :func:`versions`, :func:`read_manifest` (segment
   references resolved) and :func:`feed_manifest` (a missing manifest

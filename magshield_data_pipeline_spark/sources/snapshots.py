@@ -2840,7 +2840,11 @@ def merge(source_df, table_path: str, key, n_files: int = 1,
             if meta_cols:
                 source_df = source_df.drop(*meta_cols)
                 upsert_df = upsert_df.drop(*meta_cols)
-    _validate_constraints(source_df, table_path)
+    # constraints and partition spec come from the base manifest: a
+    # concurrent change to either fails the publish (serializable) or
+    # the rebase (_meta_drift)
+    _validate_constraints(source_df, table_path,
+                          manifest.get("constraints") or {})
     if mode == "copy-on-write" and manifest.get("delete_files"):
         raise ValueError(
             "merge: table has pending merge-on-read delete files — "
@@ -2897,7 +2901,7 @@ def merge(source_df, table_path: str, key, n_files: int = 1,
     # spec (when one is declared): an upsert-maintained table keeps its
     # declared layout instead of gradually shedding partition metadata
     # with every rewritten file (the Iceberg writer contract)
-    active_pb = active_partition_spec(table_path)
+    active_pb = _spec_to_partition_by(manifest.get("partition_spec") or None)
     commit = {
         "op": "merge",
         "tags": {"key": _key_store(key),
@@ -3161,7 +3165,8 @@ def delete(keys_df, table_path: str, key, n_files: int = 1,
         commit["add"] = _write_data_files(
             kept, table_path, n_files,
             # rewrites keep the declared layout (see merge)
-            partition_by=active_partition_spec(table_path),
+            partition_by=_spec_to_partition_by(
+                manifest.get("partition_spec") or None),
         )
     # no touched files → every file's key range misses the delete set:
     # publish a carry-only manifest anyway so the txn marker lands and

@@ -2,13 +2,15 @@
 cdc_stream.py).
 
 The classifier is pinned AGAINST the batch feed (read_row_changes) —
-the batch feed, the simple reader and the dist reader must agree row
-for row across copy-on-write, merge-on-read, partition-overwrite,
-write-audit-publish and branch-publish commits — plus the
-stream-protocol contracts: deterministic readBetweenOffsets replay, no
-offset advance on an idle table, per-commit batching, schema inference
-from the manifest, metadata-only partition planning, and a loud
-failure on vacuumed offsets.
+the batch feed and the stream reader must agree row for row across
+copy-on-write, merge-on-read, partition-overwrite, write-audit-publish
+and branch-publish commits — plus the stream-protocol contracts:
+deterministic replay between two offsets, no offset advance on an idle
+table, an AvailableNow drain delivering the whole backlog, schema
+inference from the manifest, metadata-only partition planning, and a
+loud failure on vacuumed offsets.  Reader tests go through
+``latestOffset`` + ``partitions`` + ``read`` (conftest ``cdc_drain``),
+the calls Spark makes per trigger.
 """
 
 from __future__ import annotations
@@ -20,6 +22,8 @@ from pyspark.sql import functions as F
 
 from magshield_data_pipeline_spark.sources import cdc_stream as C
 from magshield_data_pipeline_spark.sources import snapshots as S
+from tests.conftest import cdc_drain as _drain
+from tests.conftest import cdc_reader as _reader
 
 
 def _chain(spark, tmp_path, name="t"):
@@ -94,25 +98,18 @@ def _branch_chain(spark, tmp_path, name="br"):
     return t
 
 
-def _reader(t, **opts):
-    src = C.LedgerCdcDataSource(
-        options={"path": t, **{k.lower(): str(v) for k, v in opts.items()}}
-    )
-    return src.simpleStreamReader(src.schema()), src
-
-
 @pytest.mark.parametrize(
     "chain", [_chain, _partition_chain, _wap_chain, _branch_chain],
     ids=["copy_on_write", "overwrite_partitions", "publish_staged",
          "publish_branch"],
 )
 def test_stream_classifier_matches_batch_feed(spark, tmp_path, chain):
-    # the batch feed, the simple reader and the dist reader agree row
-    # for row over the whole chain
+    # the batch feed and the stream reader agree row for row over the
+    # whole chain
     t = chain(spark, tmp_path)
     last = S.versions(t)[-1]
-    reader, src = _reader(t, maxVersionsPerBatch=10)
-    rows, off = reader.read({"version": 1})
+    reader, src = _reader(t)
+    rows, off = _drain(reader, {"version": 1, "snap": 1})
     got = sorted(rows)
     assert off == {"version": last, "snap": 1}
     batch = S.read_row_changes(spark, t, 1, last)
@@ -120,41 +117,54 @@ def test_stream_classifier_matches_batch_feed(spark, tmp_path, chain):
         tuple(r) for r in batch.select(*src.schema().fieldNames()).collect()
     )
     assert got == want and got
-    dist, _ = _dist_reader(t)
-    drows, end = _drain_dist(dist, {"version": 1, "snap": 1})
-    assert end == {"version": last, "snap": 1}
-    assert sorted(drows) == want
 
 
 def test_read_between_offsets_replays_exactly(spark, tmp_path):
     t = _chain(spark, tmp_path)
     reader, _ = _reader(t)
-    a = list(reader.readBetweenOffsets({"version": 1}, {"version": 3}))
-    b = list(reader.readBetweenOffsets({"version": 1}, {"version": 3}))
+    start, end = {"version": 1, "snap": 1}, {"version": 3, "snap": 1}
+    a, _ = _drain(reader, start, end)
+    b, _ = _drain(_reader(t)[0], start, end)
     assert a == b and len(a) > 0  # deterministic recovery
+    assert {r[-1] for r in a} == {2, 3}  # exactly the commits in (1, 3]
 
 
-def test_one_commit_per_batch_by_default(spark, tmp_path):
-    t = _chain(spark, tmp_path)
-    reader, _ = _reader(t)
-    rows, off = reader.read({"version": 1})
-    assert off == {"version": 2, "snap": 1}
-    assert {r[-1] for r in rows} == {2}  # only commit v2's changes
+def test_available_now_drains_whole_backlog(spark, tmp_path):
+    # four appends behind the stream's start: one AvailableNow drain
+    # with default options delivers every commit, v2..v5, and stops
+    # (Spark asks an AvailableNow source for its latest offset once)
+    from magshield_data_pipeline_spark.streaming import windows as W
+
+    t = os.path.join(str(tmp_path), "backlog")
+    S.overwrite(spark.range(3).select(F.col("id").alias("k")), t,
+                n_files=1)
+    for k in (10, 11, 12, 13):
+        S.append(spark.createDataFrame([(k,)], "k long"), t, n_files=1)
+    C.register(spark)
+    stream = spark.readStream.format("ledger_cdc").option("path", t).load()
+    got = sorted(tuple(r) for r in
+                 W.run_available_now(stream, output_mode="append")
+                 .collect())
+    assert got == [(10, "insert", 2), (11, "insert", 3),
+                   (12, "insert", 4), (13, "insert", 5)]
 
 
 def test_idle_table_does_not_advance_offset(spark, tmp_path):
     t = _chain(spark, tmp_path)
-    reader, _ = _reader(t, maxVersionsPerBatch=10)
-    _, off = reader.read({"version": 1})
-    rows, off2 = reader.read(off)
-    assert off2 == off and list(rows) == []
+    reader, _ = _reader(t)
+    _, off = _drain(reader, {"version": 1, "snap": 1})
+    rows, off2 = _drain(reader, off)
+    assert off2 == off and rows == []
 
 
 def test_compact_commit_emits_zero_rows(spark, tmp_path):
     t = _chain(spark, tmp_path)
     reader, _ = _reader(t)
-    rows, off = reader.read({"version": 3})  # (3, 4] = the compact
-    assert off == {"version": 4, "snap": 1} and list(rows) == []
+    # (3, 4] = the compact: planned as no work at all
+    start, end = {"version": 3, "snap": 1}, {"version": 4, "snap": 1}
+    assert [p.kind for p in reader.partitions(start, end)] == ["noop"]
+    rows, _ = _drain(reader, start, end)
+    assert rows == []
 
 
 def test_schema_inferred_from_manifest(spark, tmp_path):
@@ -179,9 +189,9 @@ def test_merge_on_read_delete_emits_preimages(spark, tmp_path):
     S.delete(spark.createDataFrame([(2,)], "k long"), t, key="k",
              mode="merge-on-read")
     reader, _ = _reader(t)
-    rows, off = reader.read({"version": 1})
+    rows, off = _drain(reader, {"version": 1, "snap": 1})
     assert off == {"version": 2, "snap": 1}
-    assert list(rows) == [(2, 2, "delete", 2)]
+    assert rows == [(2, 2, "delete", 2)]
 
 
 def test_vacuumed_offset_raises_loudly(spark, tmp_path):
@@ -189,25 +199,26 @@ def test_vacuumed_offset_raises_loudly(spark, tmp_path):
     S.vacuum(t, keep_versions=1)
     reader, _ = _reader(t)
     with pytest.raises(ValueError, match="vacuumed"):
-        reader.read({"version": 1})
+        _drain(reader, {"version": 1, "snap": 1})
 
 
 def test_initial_snapshot_bootstraps_then_streams_changes(spark, tmp_path):
-    # Delta's startingVersion contract: batch 0 = the full v1 state as
-    # inserts, later batches = the change feed; applying snapshot +
-    # changes reproduces the table exactly
+    # Delta's startingVersion contract: the full v1 state as inserts,
+    # then the change feed; applying snapshot + changes reproduces the
+    # table exactly
     t = _chain(spark, tmp_path)
-    reader, _ = _reader(t, initialSnapshot=True, maxVersionsPerBatch=10)
+    reader, _ = _reader(t, initialSnapshot=True)
     off0 = reader.initialOffset()
     assert off0 == {"version": 1, "snap": 0}
-    snap, off1 = reader.read(off0)
-    snap = list(snap)
-    assert off1 == {"version": 1, "snap": 1}
+    off1 = {"version": 1, "snap": 1}
+    snap, _ = _drain(reader, off0, off1)
     assert len(snap) == 199 and {r[-2] for r in snap} == {"insert"}
     assert {r[-1] for r in snap} == {1}  # tagged with the start version
     # recovery of the bootstrap batch replays it byte-identically
-    assert sorted(reader.readBetweenOffsets(off0, off1)) == sorted(snap)
-    changes, off2 = reader.read(off1)
+    assert sorted(_drain(reader, off0, off1)[0]) == sorted(snap)
+    changes, off2 = _drain(reader, off1)
+    # a first trigger from the initial offset delivers both at once
+    assert sorted(_drain(reader, off0)[0]) == sorted(snap + changes)
     state = {r[0]: r[1] for r in snap}  # k -> val
     for r in sorted(changes, key=lambda x: x[-1]):
         k, val, ct, _v = r
@@ -231,7 +242,7 @@ def test_initial_snapshot_applies_pending_mor_deletes(spark, tmp_path):
     S.delete(spark.createDataFrame([(2,)], "k long"), t, key="k",
              mode="merge-on-read")
     reader, _ = _reader(t, initialSnapshot=True, startVersion=2)
-    snap, off = reader.read(reader.initialOffset())
+    snap, off = _drain(reader, reader.initialOffset())
     got = sorted(r[0] for r in snap)
     want = sorted(r.k for r in S.read(spark, t, 2).collect())
     assert got == want == [0, 1, 3, 4]
@@ -263,8 +274,8 @@ def _mor_chain(spark, tmp_path, name="mor_t"):
 
 def test_mor_chain_matches_batch_feed(spark, tmp_path):
     t = _mor_chain(spark, tmp_path)
-    reader, _ = _reader(t, maxVersionsPerBatch=10)
-    rows, off = reader.read({"version": 1})
+    reader, _ = _reader(t)
+    rows, off = _drain(reader, {"version": 1, "snap": 1})
     got = sorted(rows)
     assert off == {"version": 6, "snap": 1}
     batch = S.read_row_changes(spark, t, 1, 6)
@@ -279,7 +290,8 @@ def test_mor_chain_matches_batch_feed(spark, tmp_path):
 def test_mor_merge_emits_pre_post_pairs(spark, tmp_path):
     t = _mor_chain(spark, tmp_path)
     reader, _ = _reader(t)
-    rows, _ = reader.read({"version": 1})  # (1, 2] = the MOR merge
+    rows, _ = _drain(reader, {"version": 1, "snap": 1},
+                     {"version": 2, "snap": 1})  # the MOR merge
     got = sorted(rows)
     assert got == [
         (5, 50, "update_preimage", 2),
@@ -293,8 +305,9 @@ def test_reinsert_after_mor_delete_is_delivered(spark, tmp_path):
     # to OLDER files, so the v4 re-insert must stream as an insert
     t = _mor_chain(spark, tmp_path)
     reader, _ = _reader(t)
-    rows, _ = reader.read({"version": 3})  # (3, 4] = the re-insert
-    assert list(rows) == [(9, 90909, "insert", 4)]
+    rows, _ = _drain(reader, {"version": 3, "snap": 1},
+                     {"version": 4, "snap": 1})  # the re-insert
+    assert rows == [(9, 90909, "insert", 4)]
     # and the final table state keeps it (read-side contract)
     assert S.read(spark, t).filter(F.col("k") == 9).count() == 1
 
@@ -305,11 +318,12 @@ def test_metadata_only_commit_advances_without_wedging(spark, tmp_path):
     # advance the offset
     t = _mor_chain(spark, tmp_path)
     reader, _ = _reader(t)
-    rows, off = reader.read({"version": 4})  # (4, 5] = set-constraint
-    assert list(rows) == [] and off == {"version": 5, "snap": 1}
+    rows, off = _drain(reader, {"version": 4, "snap": 1},
+                       {"version": 5, "snap": 1})  # set-constraint
+    assert rows == []
     # and the compact after it is silent too
-    rows, off = reader.read(off)
-    assert list(rows) == [] and off == {"version": 6, "snap": 1}
+    rows, off = _drain(reader, off)
+    assert rows == [] and off == {"version": 6, "snap": 1}
 
 
 def test_rollback_streams_as_multiset_diff(spark, tmp_path):
@@ -322,7 +336,7 @@ def test_rollback_streams_as_multiset_diff(spark, tmp_path):
     S.append(spark.createDataFrame([(50,), (51,)], "k long"), t, n_files=1)
     S.rollback(t, 1)  # v3: drops the appended file
     reader, _ = _reader(t)
-    rows, off = reader.read({"version": 2})  # (2, 3] = the rollback
+    rows, off = _drain(reader, {"version": 2, "snap": 1})  # the rollback
     got = sorted(rows)
     assert off == {"version": 3, "snap": 1}
     assert got == [(50, "delete", 3), (51, "delete", 3)]
@@ -346,7 +360,7 @@ def test_rollback_past_mor_delete_streams_undelete(spark, tmp_path):
              mode="merge-on-read")
     S.rollback(t, 1)  # v3: the delete file is gone — k=3,4 undeleted
     reader, _ = _reader(t)
-    rows, off = reader.read({"version": 2})
+    rows, off = _drain(reader, {"version": 2, "snap": 1})
     got = sorted(rows)
     assert off == {"version": 3, "snap": 1}
     assert got == [(3, 30, "insert", 3), (4, 40, "insert", 3)]
@@ -377,7 +391,7 @@ def test_partition_values_restore_typed(spark, tmp_path):
         t, n_files=1, partition_by="bucket",
     )
     reader, _ = _reader(t)
-    rows, _ = reader.read({"version": 1})
+    rows, _ = _drain(reader, {"version": 1, "snap": 1})
     got = sorted(rows)
     assert all(isinstance(r[1], int) for r in got), got
     assert got == [(10, 0, "insert", 2), (11, 1, "insert", 2),
@@ -387,32 +401,18 @@ def test_partition_values_restore_typed(spark, tmp_path):
 def test_mor_replay_between_offsets_deterministic(spark, tmp_path):
     t = _mor_chain(spark, tmp_path)
     reader, _ = _reader(t)
-    a = list(reader.readBetweenOffsets({"version": 1}, {"version": 4}))
-    b = list(reader.readBetweenOffsets({"version": 1}, {"version": 4}))
+    start, end = {"version": 1, "snap": 1}, {"version": 4, "snap": 1}
+    a, _ = _drain(reader, start, end)
+    b, _ = _drain(reader, start, end)
     assert a == b and len(a) > 0
 
 
 # ---------------------------------------------------------------------------
-# r12: distributed stream reader (executor-side materialization)
-
-def _dist_reader(t, **opts):
-    src = C.LedgerCdcDistDataSource(
-        options={"path": t, **{k.lower(): str(v) for k, v in opts.items()}}
-    )
-    return src.streamReader(src.schema()), src
-
-
-def _drain_dist(reader, start):
-    end = reader.latestOffset()
-    rows = []
-    for p in reader.partitions(start, end):
-        rows.extend(reader.read(p))
-    return rows, end
-
+# r12: partition planning (executor-side materialization)
 
 def test_dist_partition_plan_shapes(spark, tmp_path):
     t = _mor_chain(spark, tmp_path)
-    reader, _ = _dist_reader(t)
+    reader, _ = _reader(t)
     parts = reader.partitions({"version": 1, "snap": 1},
                               {"version": 6, "snap": 1})
     kinds = [p.kind for p in parts]
@@ -428,7 +428,7 @@ def test_dist_append_fans_out_per_file(spark, tmp_path):
                 n_files=1)
     S.append(spark.range(10, 40).select(F.col("id").alias("k")), t,
              n_files=3)
-    reader, _ = _dist_reader(t)
+    reader, _ = _reader(t)
     parts = reader.partitions({"version": 1, "snap": 1},
                               {"version": 2, "snap": 1})
     assert [p.kind for p in parts] == ["insert_file"] * 3
@@ -453,7 +453,7 @@ def test_dist_plans_large_append_from_metadata_fast(tmp_path):
         (mdir / f"v{v}.json").write_text(json.dumps(
             {"operation": "append", "version": v, "files": fl,
              "schema": schema}))
-    reader, _ = _dist_reader(str(tmp_path / "wide"))
+    reader, _ = _reader(str(tmp_path / "wide"))
     t0 = time.perf_counter()
     parts = reader.partitions({"version": 1, "snap": 1},
                               {"version": 2, "snap": 1})
@@ -492,7 +492,7 @@ def test_wide_positional_delete_plans_from_metadata_fast(
          "files": files, "delete_files": [dl], "schema": schema}))
     monkeypatch.setattr(S, "_scan", lambda *a, **k: mock.MagicMock())
     monkeypatch.setattr(F, "col", lambda name: mock.MagicMock())
-    reader, _ = _dist_reader(str(t))
+    reader, _ = _reader(str(t))
     t0 = time.perf_counter()
     boot = reader.partitions({"version": 2, "snap": 0},
                              {"version": 2, "snap": 1})
@@ -506,31 +506,19 @@ def test_wide_positional_delete_plans_from_metadata_fast(
     assert elapsed < 1.0, f"metadata pass took {elapsed:.2f} s"
 
 
-def test_dist_rows_match_simple_reader_cow_and_mor(spark, tmp_path):
-    for chain, last in ((_chain, 5), (_mor_chain, 6)):
-        t = chain(spark, tmp_path, name=f"par_{last}")
-        simple, _ = _reader(t, maxVersionsPerBatch=10)
-        want = sorted(simple._range_rows(1, last))
-        dist, _ = _dist_reader(t)
-        got, end = _drain_dist(dist, {"version": 1, "snap": 1})
-        assert end == {"version": last, "snap": 1}
-        assert sorted(got) == want
-
-
 def test_dist_bootstrap_applies_deletes_per_file(spark, tmp_path):
     t = os.path.join(str(tmp_path), "dboot")
     S.overwrite(spark.range(9).select(F.col("id").alias("k")), t,
                 n_files=3)
     S.delete(spark.createDataFrame([(2,), (7,)], "k long"), t, key="k",
              mode="merge-on-read")
-    simple, _ = _reader(t, initialSnapshot=True, startVersion=2)
-    want = sorted(simple._snapshot_rows())
-    dist, _ = _dist_reader(t, initialSnapshot=True, startVersion=2)
+    want = sorted((r.k, "insert", 2) for r in S.read(spark, t).collect())
+    dist, _ = _reader(t, initialSnapshot=True, startVersion=2)
     parts = dist.partitions({"version": 2, "snap": 0},
                             {"version": 2, "snap": 1})
     assert [p.kind for p in parts] == ["snapshot_file"] * 3
     got = sorted(r for p in parts for r in dist.read(p))
-    assert got == want
+    assert got == want and len(got) == 7
 
 
 def test_dist_stream_end_to_end_matches_batch_feed(spark, tmp_path):
@@ -541,7 +529,7 @@ def test_dist_stream_end_to_end_matches_batch_feed(spark, tmp_path):
     C.register(spark)
     name = f"dist_{_uuid.uuid4().hex[:8]}"
     q = (
-        spark.readStream.format("ledger_cdc_dist")
+        spark.readStream.format("ledger_cdc")
         .option("path", t)
         .option("startversion", 1)
         .load()
@@ -577,9 +565,9 @@ def test_stream_across_add_column_commit(spark, tmp_path):
                                    "k long, tag string"), t, n_files=1)
     S.append(spark.createDataFrame([(20, "z")], "k long, tag string"),
              t, n_files=1)
-    reader, src = _reader(t, maxVersionsPerBatch=10)
+    reader, src = _reader(t)
     assert "tag" in src.schema().fieldNames()
-    rows, off = reader.read({"version": 1})
+    rows, off = _drain(reader, {"version": 1, "snap": 1})
     got = sorted(rows)
     assert off == {"version": 3, "snap": 1}
     batch = S.read_row_changes(spark, t, 1, 3)
@@ -587,10 +575,6 @@ def test_stream_across_add_column_commit(spark, tmp_path):
         "k", "tag", "_change_type", "_commit_version").collect())
     assert got == want
     assert (10, "x", "insert", 2) in got
-    # dist twin agrees
-    dist, _ = _dist_reader(t)
-    drows, _ = _drain_dist(dist, {"version": 1, "snap": 1})
-    assert sorted(drows) == want
 
 
 def test_column_projection_feed(spark, tmp_path):
@@ -615,30 +599,17 @@ def test_column_projection_feed(spark, tmp_path):
     )
     # full feed sees both updates
     full, _ = _reader(t)
-    rows_full, _ = full.read({"version": 1})
+    rows_full, _ = _drain(full, {"version": 1, "snap": 1})
     assert {r[0] for r in rows_full if r[-2] == "update_postimage"} \
         == {2, 3}
     # projected feed (val only, key EXCLUDED from the projection):
     # the k=3 change cancels, the k=2 change pairs
-    src = C.LedgerCdcDataSource(
-        options={"path": t, "columns": "val"}
-    )
+    reader, src = _reader(t, columns="val")
     assert src.schema().fieldNames() == [
         "val", "_change_type", "_commit_version"]
-    reader = src.simpleStreamReader(src.schema())
-    rows, _ = reader.read({"version": 1})
+    rows, _ = _drain(reader, {"version": 1, "snap": 1})
     assert sorted(rows) == [
         (20, "update_preimage", 2), (999, "update_postimage", 2)]
-    # dist twin under the same projection agrees
-    dsrc = C.LedgerCdcDistDataSource(
-        options={"path": t, "columns": "val"}
-    )
-    dreader = dsrc.streamReader(dsrc.schema())
-    got = sorted(r for p in dreader.partitions(
-        {"version": 1, "snap": 1}, {"version": 2, "snap": 1})
-        for r in dreader.read(p))
-    assert got == [(20, "update_preimage", 2),
-                   (999, "update_postimage", 2)]
     # unknown column fails loudly
     bad = C.LedgerCdcDataSource(options={"path": t, "columns": "nope"})
     with pytest.raises(ValueError, match="not in the table schema"):
@@ -656,16 +627,13 @@ def test_column_projection_with_mor_deletes(spark, tmp_path):
     )
     S.delete(spark.createDataFrame([(4,)], "k long"), t, key="k",
              mode="merge-on-read")
-    src = C.LedgerCdcDataSource(options={"path": t, "columns": "val"})
-    reader = src.simpleStreamReader(src.schema())
-    rows, _ = reader.read({"version": 1})
-    assert list(rows) == [(40, "delete", 2)]
+    reader, _ = _reader(t, columns="val")
+    rows, _ = _drain(reader, {"version": 1, "snap": 1})
+    assert rows == [(40, "delete", 2)]
     # bootstrap at v2 applies the pending delete under the projection
-    src2 = C.LedgerCdcDataSource(options={
-        "path": t, "columns": "val", "initialsnapshot": "true",
-        "startversion": "2"})
-    r2 = src2.simpleStreamReader(src2.schema())
-    snap, _ = r2.read(r2.initialOffset())
+    r2, _ = _reader(t, columns="val", initialSnapshot=True,
+                    startVersion=2)
+    snap, _ = _drain(r2, r2.initialOffset())
     assert sorted(x[0] for x in snap) == [10, 20, 30, 50]
 
 
@@ -687,7 +655,7 @@ def test_dist_stream_checkpoint_restart_resumes(spark, tmp_path):
     def _run():
         # a FILE sink (memory sinks refuse checkpoint recovery)
         q = (
-            spark.readStream.format("ledger_cdc_dist")
+            spark.readStream.format("ledger_cdc")
             .option("path", t)
             .option("startversion", 1)
             .load()
@@ -732,20 +700,14 @@ def test_filtered_feed_prunes_files_and_rows(spark, tmp_path):
     e = S._write_data_files(rows, t, 4, cluster_by=["k"])
     S._publish_manifest(t, "append", e, carry=True,
                         schema=rows.schema.jsonValue())
-    # dist reader: the k >= 301 filter must plan ONE insert partition
-    dsrc = C.LedgerCdcDistDataSource(
-        options={"path": t, "filters": "k>=301"})
-    dr = dsrc.streamReader(dsrc.schema())
+    # the k >= 301 filter must plan ONE insert partition
+    dr, _ = _reader(t, filters="k>=301")
     parts = dr.partitions({"version": 1, "snap": 1},
                           {"version": 2, "snap": 1})
     assert [p.kind for p in parts] == ["insert_file"]  # 3 of 4 pruned
     got = sorted(r for p in parts for r in dr.read(p))
     assert len(got) == 100 and all(r[0] >= 301 for r in got)
-    # simple reader agrees
-    src = C.LedgerCdcDataSource(options={"path": t, "filters": "k>=301"})
-    rr = src.simpleStreamReader(src.schema())
-    rows2, _ = rr.read({"version": 1})
-    assert sorted(rows2) == got
+    assert got == sorted((k, k * 10, "insert", 2) for k in range(301, 401))
 
 
 def test_filter_boundary_crossing_updates_relabel(spark, tmp_path):
@@ -763,9 +725,8 @@ def test_filter_boundary_crossing_updates_relabel(spark, tmp_path):
             [(1, 40), (2, 7), (3, 70)], "k long, val long"),
         t, key="k", n_files=1,
     )
-    src = C.LedgerCdcDataSource(options={"path": t, "filters": "val>=10"})
-    reader = src.simpleStreamReader(src.schema())
-    rows, _ = reader.read({"version": 1})
+    reader, _ = _reader(t, filters="val>=10")
+    rows, _ = _drain(reader, {"version": 1, "snap": 1})
     got = sorted(rows)
     assert got == [
         (1, 40, "insert", 2),             # entered the range
@@ -793,10 +754,8 @@ def test_filter_column_outside_projection(spark, tmp_path):
     S.append(spark.range(9, 15).select(F.col("id").alias("k"),
                                        (F.col("id") * 10).alias("val")),
              t, n_files=1)
-    src = C.LedgerCdcDataSource(
-        options={"path": t, "columns": "val", "filters": "k>=12"})
-    reader = src.simpleStreamReader(src.schema())
-    rows, _ = reader.read({"version": 1})
+    reader, _ = _reader(t, columns="val", filters="k>=12")
+    rows, _ = _drain(reader, {"version": 1, "snap": 1})
     assert sorted(rows) == [(120, "insert", 2), (130, "insert", 2),
                             (140, "insert", 2)]
 
@@ -806,18 +765,9 @@ def test_filter_parse_and_bootstrap(spark, tmp_path):
     S.overwrite(spark.range(10).select(F.col("id").alias("k")), t,
                 n_files=1)
     with pytest.raises(ValueError, match="cannot parse filter"):
-        C.LedgerCdcDataSource(
-            options={"path": t, "filters": "k !! 3"}
-        ).simpleStreamReader(
-            C.LedgerCdcDataSource(options={"path": t}).schema())
+        _reader(t, filters="k !! 3")
     with pytest.raises(ValueError, match="not in the table schema"):
-        C.LedgerCdcDataSource(
-            options={"path": t, "filters": "zz>=1"}
-        ).simpleStreamReader(
-            C.LedgerCdcDataSource(options={"path": t}).schema())
-    src = C.LedgerCdcDataSource(
-        options={"path": t, "filters": "k>=4;k<8",
-                 "initialsnapshot": "true"})
-    reader = src.simpleStreamReader(src.schema())
-    snap, _ = reader.read(reader.initialOffset())
+        _reader(t, filters="zz>=1")
+    reader, _ = _reader(t, filters="k>=4;k<8", initialSnapshot=True)
+    snap, _ = _drain(reader, reader.initialOffset())
     assert sorted(r[0] for r in snap) == [4, 5, 6, 7]

@@ -1,5 +1,5 @@
 """Streaming CDC across schema-evolution history (r12 session 5):
-the readers era-map every file like the batch scan — renames undone
+the reader era-maps every file like the batch scan — renames undone
 per file seq, initial defaults masking pre-add files and re-added
 dropped names, era-mapped merge keys and equality-delete keys — so a
 table with rename/default/drop HISTORY streams fine.  Only an
@@ -15,30 +15,9 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from magshield_data_pipeline_spark.sources import cdc_stream as C
 from magshield_data_pipeline_spark.sources import snapshots as S
-
-
-def _reader(t, **opts):
-    src = C.LedgerCdcDataSource(
-        options={"path": t, **{k.lower(): str(v) for k, v in opts.items()}}
-    )
-    return src.simpleStreamReader(src.schema()), src
-
-
-def _dist_reader(t, **opts):
-    src = C.LedgerCdcDistDataSource(
-        options={"path": t, **{k.lower(): str(v) for k, v in opts.items()}}
-    )
-    return src.streamReader(src.schema()), src
-
-
-def _drain_dist(reader, start):
-    end = reader.latestOffset()
-    rows = []
-    for p in reader.partitions(start, end):
-        rows.extend(reader.read(p))
-    return rows, end
+from tests.conftest import cdc_drain as _drain
+from tests.conftest import cdc_reader as _reader
 
 
 def _renamed_chain(spark, tmp_path, name="ren"):
@@ -59,9 +38,9 @@ def _renamed_chain(spark, tmp_path, name="ren"):
 
 def test_stream_over_rename_history_emits_current_names(spark, tmp_path):
     t = _renamed_chain(spark, tmp_path)
-    reader, src = _reader(t, maxVersionsPerBatch=10)
+    reader, src = _reader(t)
     assert [f.name for f in src.schema().fields][:2] == ["k", "score"]
-    rows, off = reader.read({"version": 1})
+    rows, off = _drain(reader, {"version": 1, "snap": 1})
     rows = sorted(rows)
     assert off == {"version": 4, "snap": 1}
     # v2's update pair + insert materialize from pre-rename files
@@ -76,9 +55,9 @@ def test_stream_over_rename_history_emits_current_names(spark, tmp_path):
 def test_bootstrap_snapshot_era_maps(spark, tmp_path):
     t = _renamed_chain(spark, tmp_path)
     reader, _ = _reader(t, initialSnapshot=True, startVersion=2)
-    rows, off = reader.read(reader.initialOffset())
+    rows, off = _drain(reader, reader.initialOffset(),
+                       {"version": 2, "snap": 1})
     rows = sorted(rows)
-    assert off == {"version": 2, "snap": 1}
     got = {(r[0], r[1]) for r in rows}
     want = {(k, k * 10) for k in range(1, 50) if k != 5}
     want |= {(5, 999), (100, 1000)}
@@ -99,7 +78,7 @@ def test_default_masks_pre_add_and_readded_files(spark, tmp_path):
     reader, src = _reader(t, initialSnapshot=True, startVersion=5)
     assert [f.name for f in src.schema().fields][:3] == [
         "k", "w", "grade"]
-    rows, _ = reader.read(reader.initialOffset())
+    rows, _ = _drain(reader, reader.initialOffset())
     got = sorted(rows)
     # old files: w masked to None (not the stale 101..103), grade=7
     assert [(r[0], r[1], r[2]) for r in got] == [
@@ -113,23 +92,23 @@ def test_evolution_newer_than_schema_raises_for_restart(spark, tmp_path):
         t, n_files=1)
     S.append(spark.createDataFrame([(9, 90)], "k long, val long"), t,
              n_files=1)
-    reader, _ = _reader(t)  # schema_v = 2, one commit per batch
+    reader, _ = _reader(t)  # schema_v = 2
     S.rename_column(t, "val", "score")  # v3, mid-stream
     S.append(spark.createDataFrame([(10, 100)], "k long, score long"),
              t, n_files=1)
-    rows, off = reader.read({"version": 1})  # v2 still fine
-    assert off == {"version": 2, "snap": 1} and len(list(rows)) == 1
+    off = {"version": 2, "snap": 1}
+    rows, _ = _drain(reader, {"version": 1, "snap": 1}, off)  # v2 fine
+    assert len(rows) == 1
     with pytest.raises(ValueError, match="restart the stream"):
-        reader.read(off)
+        _drain(reader, off)
     # restart: a fresh reader (schema_v = 4) serves the WHOLE chain,
     # including pre-rename commits, under the new name
-    reader2, src2 = _reader(t, maxVersionsPerBatch=10)
+    reader2, src2 = _reader(t)
     assert "score" in [f.name for f in src2.schema().fields]
-    rows2, off2 = reader2.read(off)
+    rows2, off2 = _drain(reader2, off)
     assert sorted(rows2) == [(10, 100, "insert", 4)]
     assert off2 == {"version": 4, "snap": 1}
-    replay = sorted(reader2.readBetweenOffsets({"version": 1},
-                                               {"version": 2}))
+    replay, _ = _drain(reader2, {"version": 1, "snap": 1}, off)
     assert replay == [(9, 90, "insert", 2)]
 
 
@@ -146,25 +125,16 @@ def test_era_mapped_delete_key_after_purge_and_rename(spark, tmp_path):
              mode="merge-on-read")
     S.purge_deletes(spark, t)
     S.rename_column(t, "k", "kid")
-    reader, src = _reader(t, maxVersionsPerBatch=10,
-                          initialSnapshot=True, startVersion=2)
+    reader, src = _reader(t, initialSnapshot=True, startVersion=2)
     assert [f.name for f in src.schema().fields][0] == "kid"
-    rows, _ = reader.read(reader.initialOffset())
+    rows, _ = _drain(reader, reader.initialOffset(),
+                     {"version": 2, "snap": 1})
     got = {(r[0], r[1]) for r in rows}
     assert got == {(k, k * 10) for k in range(1, 10) if k != 3}
     # and the v2 delete commit itself streams as a pre-image
-    changes = list(reader.readBetweenOffsets({"version": 1},
-                                             {"version": 2}))
+    changes, _ = _drain(reader, {"version": 1, "snap": 1},
+                        {"version": 2, "snap": 1})
     assert changes == [(3, 30, "delete", 2)]
-
-
-def test_dist_reader_matches_simple_over_history(spark, tmp_path):
-    t = _renamed_chain(spark, tmp_path, name="dist_ren")
-    simple, _ = _reader(t, maxVersionsPerBatch=10)
-    srows, _ = simple.read({"version": 1})
-    dist, _ = _dist_reader(t)
-    drows, _ = _drain_dist(dist, {"version": 1, "snap": 1})
-    assert sorted(srows) == sorted(drows)
 
 
 def test_dist_boundary_raises_for_restart(spark, tmp_path):
@@ -172,7 +142,7 @@ def test_dist_boundary_raises_for_restart(spark, tmp_path):
     S.overwrite(spark.range(1, 5).select(
         F.col("id").alias("k"), (F.col("id") * 10).alias("val")),
         t, n_files=1)
-    dist, _ = _dist_reader(t)  # schema_v = 1
+    dist, _ = _reader(t)  # schema_v = 1
     S.rename_column(t, "val", "score")
     with pytest.raises(ValueError, match="restart the stream"):
         dist.partitions({"version": 1, "snap": 1},
@@ -184,8 +154,8 @@ def test_era_feed_matches_batch_feed_per_window(spark, tmp_path):
     (which refuses spanning windows — the stream's era mapping makes
     the SPAN work, pinned against per-era batch windows)."""
     t = _renamed_chain(spark, tmp_path, name="parity")
-    reader, _ = _reader(t, maxVersionsPerBatch=10)
-    rows, _ = reader.read({"version": 1})
+    reader, _ = _reader(t)
+    rows, _ = _drain(reader, {"version": 1, "snap": 1})
     got = sorted(rows)
     with pytest.raises(ValueError, match="split the window"):
         S.read_row_changes(spark, t, 1, 4)

@@ -15,8 +15,8 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from magshield_data_pipeline_spark.sources import cdc_stream as C
 from magshield_data_pipeline_spark.sources import snapshots as S
+from tests.conftest import cdc_drain, cdc_reader
 
 
 def _t(spark, tmp_path, name="ck"):
@@ -83,10 +83,9 @@ def test_cdc_feeds_classify_on_composite_tuple(spark, tmp_path):
                    ("update_postimage", 7, 7),
                    ("update_preimage", 3, 4),
                    ("update_preimage", 7, 7)]
-    src = C.LedgerCdcDataSource(
-        options={"path": t, "maxversionsperbatch": "10"})
-    reader = src.simpleStreamReader(src.schema())
-    srows, off = reader.read({"version": 1})
+    reader, _ = cdc_reader(t)
+    srows, off = cdc_drain(reader, {"version": 1, "snap": 1})
+    assert off == {"version": 4, "snap": 1}
     want = sorted(tuple(r) for r in feed.select(
         "g", "s", "val", "_change_type", "_commit_version").collect())
     assert sorted(srows) == want
@@ -176,21 +175,3 @@ def test_branch_composite_merge_and_delete(spark, tmp_path):
     r = S.read(spark, t)
     assert r.filter("g=3 and s=4").collect()[0].val == -1
     assert r.filter("g=5 and s=5").count() == 0
-
-
-def test_composite_dist_stream_matches_simple(spark, tmp_path):
-    t = _t(spark, tmp_path)
-    S.merge(spark.createDataFrame([(3, 4, -1), (99, 0, -2)],
-                                  "g long, s long, val long"),
-            t, key=["g", "s"], mode="merge-on-read")
-    src = C.LedgerCdcDataSource(
-        options={"path": t, "maxversionsperbatch": "10"})
-    simple = src.simpleStreamReader(src.schema())
-    srows, _ = simple.read({"version": 1})
-    dsrc = C.LedgerCdcDistDataSource(options={"path": t})
-    dist = dsrc.streamReader(dsrc.schema())
-    drows = []
-    for p in dist.partitions({"version": 1, "snap": 1},
-                             dist.latestOffset()):
-        drows.extend(dist.read(p))
-    assert sorted(srows) == sorted(drows)

@@ -204,60 +204,64 @@ def test_refresh_merge_carries_disjoint_view_files(spark, tmp_path):
 
 def test_streaming_fold_per_commit_equals_recompute(spark, tmp_path):
     # ledger_cdc -> foreachBatch -> apply_changes, ONE COMMIT PER
-    # BATCH (distinct batch ids as txn versions): the streaming entry
-    # point must converge to the batch recompute, including the
-    # group-death retract arriving in its own micro-batch
-    import ast
+    # BATCH: one AvailableNow drain per source commit on one
+    # checkpoint (a long-running consumer's shape), so each commit,
+    # the group-death retract included, is its own micro-batch and its
+    # own txn version — and after every drain the streamed view equals
+    # the batch recompute at that version
     import tempfile
-    import time
 
     from magshield_data_pipeline_spark.sources import cdc_stream as C
 
-    src = _src(spark, tmp_path)
+    t = os.path.join(str(tmp_path), "src")
+    S.overwrite(spark.range(1, 7).select(
+        F.col("id").alias("k"),
+        (F.col("id") % 3).alias("grp"),
+        (F.col("id") * 10).alias("val"),
+    ), t, n_files=2)
     view = os.path.join(str(tmp_path), "sview")
-    ivm.init_agg_view(spark, src, view, _grp(), "grp", _measures(),
+    ivm.init_agg_view(spark, t, view, _grp(), "grp", _measures(),
                       version=1)
     C.register(spark)
-    stream = (
-        spark.readStream.format("ledger_cdc")
-        .option("path", src)
-        .load()  # maxVersionsPerBatch defaults to 1
-    )
+    stream = spark.readStream.format("ledger_cdc").option("path", t).load()
+    ckpt = tempfile.mkdtemp()
+    batches: list[tuple[int, list[int]]] = []
 
     def fold(bdf, bid):
+        vs = sorted({r[0] for r in bdf.select("_commit_version").collect()})
+        batches.append((int(bid), vs))
         ivm.apply_changes(spark, view, bdf, _grp(), "grp", _measures(),
                           txn_version=int(bid), app="ivm-s")
 
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", tempfile.mkdtemp())
-        .trigger(processingTime="0 seconds")
-        .start()
-    )
-    try:
-        deadline = time.time() + 90
-        while time.time() < deadline:
-            p = q.lastProgress
-            if p and p["sources"]:
-                end = p["sources"][0]["endOffset"]
-                end = ast.literal_eval(end) if isinstance(end, str) else end
-                if end and int(end.get("version", 0)) >= 4:
-                    break
-            time.sleep(0.2)
-        else:
-            raise TimeoutError("stream never reached v4")
-    finally:
-        q.stop()
-        q.awaitTermination(30)
-    fresh = (
-        S.read(spark, src)
-        .groupBy("grp")
-        .agg(F.count(F.lit(1)).alias("n_rows"),
-             F.sum("val").alias("val_sum"))
-    )
-    got = S.read(spark, view).select("grp", "n_rows", "val_sum")
-    diff = got.exceptAll(fresh).unionByName(fresh.exceptAll(got))
-    assert not diff.head(1)
+    commits = [  # (one source commit, the versions its batch carries)
+        # v2: MERGE (update k=1, insert k=7/8)
+        (lambda: S.merge(spark.createDataFrame(
+            [(1, 1, 999), (7, 1, 70), (8, 2, 80)],
+            "k long, grp long, val long"), t, key="k", n_files=1), [2]),
+        # v3: DELETE group 0 entirely — the group-death retract
+        (lambda: S.delete(spark.createDataFrame([(3,), (6,)], "k long"),
+                          t, key="k", n_files=1), [3]),
+        # v4: clustering compact — an empty batch, nothing folded
+        (lambda: S.compact(spark, t, n_files=1, cluster_by=["k"]), []),
+    ]
+    for bid, (commit, carried) in enumerate(commits):
+        commit()
+        (stream.writeStream.foreachBatch(fold)
+         .option("checkpointLocation", ckpt)
+         .trigger(availableNow=True)
+         .start()
+         .awaitTermination())
+        assert batches[-1] == (bid, carried)
+        fresh = (
+            S.read(spark, t)
+            .groupBy("grp")
+            .agg(F.count(F.lit(1)).alias("n_rows"),
+                 F.sum("val").alias("val_sum"))
+        )
+        got = S.read(spark, view).select("grp", "n_rows", "val_sum")
+        diff = got.exceptAll(fresh).unionByName(fresh.exceptAll(got))
+        assert not diff.head(1), f"diverged after batch {bid}"
+    assert [b for b, _ in batches] == [0, 1, 2]
     assert sorted(r.grp for r in got.collect()) == [1, 2]
 
 

@@ -135,18 +135,14 @@ def test_vacuum_grace_protects_fresh_segments(spark, tmp_path):
 
 
 def test_streaming_cdc_over_segmented_table(spark, tmp_path):
-    from magshield_data_pipeline_spark.sources import cdc_stream
+    from tests.conftest import cdc_drain, cdc_reader
 
     t = _wide(spark, tmp_path, n_files=80, rows=1000)
     S.append(spark.range(1000, 1005).select(
         F.col("id").alias("k"), (F.col("id") * 3).alias("v")), t,
         n_files=1)
-    reader = cdc_stream.LedgerCdcStreamReader(
-        {"path": t, "startversion": "1"},
-        cdc_stream.LedgerCdcDataSource({"path": t}).schema(),
-    )
-    rows, off = reader.read(reader.initialOffset())
-    rows = list(rows)
+    reader, _ = cdc_reader(t, startVersion=1)
+    rows, off = cdc_drain(reader, reader.initialOffset())
     assert off == {"version": 2, "snap": 1}
     assert sorted(r[0] for r in rows) == [1000, 1001, 1002, 1003, 1004]
     assert {r[-2] for r in rows} == {"insert"}

@@ -14,8 +14,8 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from magshield_data_pipeline_spark.sources import cdc_stream as C
 from magshield_data_pipeline_spark.sources import snapshots as S
+from tests.conftest import cdc_drain, cdc_reader
 
 
 def _t(spark, tmp_path, name="t"):
@@ -57,9 +57,8 @@ def test_cdc_feeds_classify_matrix(spark, tmp_path, mode):
     got = sorted((x._change_type, x.k) for x in feed.collect())
     assert got == [("delete", 7), ("insert", 100),
                    ("update_postimage", 5), ("update_preimage", 5)]
-    src = C.LedgerCdcDataSource(options={"path": t})
-    reader = src.simpleStreamReader(src.schema())
-    srows, _ = reader.read({"version": 1})
+    reader, _ = cdc_reader(t)
+    srows, _ = cdc_drain(reader, {"version": 1, "snap": 1})
     want = sorted(tuple(x) for x in feed.select(
         "k", "val", "_change_type", "_commit_version").collect())
     assert sorted(srows) == want

@@ -12,8 +12,8 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from magshield_data_pipeline_spark.sources import cdc_stream as C
 from magshield_data_pipeline_spark.sources import snapshots as S
+from tests.conftest import cdc_drain, cdc_reader
 
 
 def _tbl(tmp_path, name):
@@ -138,10 +138,9 @@ def test_stream_classifier_matches_batch_feed(spark, tmp_path):
     S.delete_where(spark, t, "v = 6")
     S.append(_kv(spark, 200, 220), t, n_files=1)
     S.delete_where(spark, t, "k >= 210")
-    src = C.LedgerCdcDataSource(
-        options={"path": t, "maxversionsperbatch": "10"})
-    reader = src.simpleStreamReader(src.schema())
-    rows, off = reader.read({"version": 1})
+    reader, _ = cdc_reader(t)
+    start = {"version": 1, "snap": 1}
+    rows, off = cdc_drain(reader, start)
     assert off["version"] == 4
     got = sorted(rows)
     want = sorted(
@@ -151,8 +150,7 @@ def test_stream_classifier_matches_batch_feed(spark, tmp_path):
     )
     assert got == want
     # deterministic replay
-    assert sorted(reader.readBetweenOffsets(
-        {"version": 1}, {"version": 4})) == got
+    assert sorted(cdc_drain(reader, start, off)[0]) == got
 
 
 def test_snapshot_isolation_rebase_and_conflicts(spark, tmp_path):

@@ -9,8 +9,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from magshield_data_pipeline_spark.sources import cdc_stream as C
 from magshield_data_pipeline_spark.sources import snapshots as S
+from tests.conftest import cdc_drain, cdc_reader
 
 
 def _tbl(tmp_path, name):
@@ -61,10 +61,8 @@ def test_stream_parity_with_batch_feed(spark, tmp_path):
     S.overwrite(_kv(spark), t, n_files=2)
     S.update_where(spark, t, "v = 2", {"v": "v + 50"})
     S.update_where(spark, t, "k < 5", {"v": "0"})
-    src = C.LedgerCdcDataSource(
-        options={"path": t, "maxversionsperbatch": "10"})
-    reader = src.simpleStreamReader(src.schema())
-    rows, off = reader.read({"version": 1})
+    reader, _ = cdc_reader(t)
+    rows, off = cdc_drain(reader, {"version": 1, "snap": 1})
     assert off["version"] == 3
     want = sorted(
         tuple(r) for r in S.read_row_changes(spark, t, 1, 3).select(
