@@ -67,7 +67,7 @@ from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from magshield_data_pipeline_spark.sources.ledger_meta import (
     _key_cols,
-    commit_plan,
+    commit_plans,
     delete_index,
     feed_manifest,
     read_manifest,
@@ -384,15 +384,17 @@ def _schema_boundary(man: dict, schema_v: int, who: str) -> None:
             )
 
 
-def _commit_changes(table_path: str, v: int, fields: list[str],
+def _commit_changes(table_path: str, v: int, plan: dict,
+                    fields: list[str],
                     types: dict | None = None,
                     filters: list[tuple] | None = None,
                     renames: list[dict] | None = None,
                     defaults: list[dict] | None = None) -> list[tuple]:
-    """Classify the net row changes of commit *v*, a ``diff`` plan —
-    the pure-Python edition of ``snapshots.read_row_changes`` over the
-    same ``ledger_meta.commit_plan`` (pinned against the batch feed in
-    tests).  Runs inside one executor partition of
+    """Classify the net row changes of commit *v*, whose ``diff``
+    *plan* the driver made (``ledger_meta.commit_plan``, its manifests
+    trimmed to their delete files) — the pure-Python edition of
+    ``snapshots.read_row_changes`` over the same plan (pinned against
+    the batch feed in tests).  Runs inside one executor partition of
     :class:`LedgerCdcStreamReader`:
 
     1. before = visible rows of the prev-side files under the prev
@@ -404,7 +406,6 @@ def _commit_changes(table_path: str, v: int, fields: list[str],
        update_preimage/update_postimage, exactly the batch contract.
 
     Cost: the commit's affected files only, never the table."""
-    plan = commit_plan(table_path, v, "ledger_cdc")
     filters = filters or []
     f_extras = sorted({c for c, _op, _v in filters} - set(fields))
     pred = _row_pred(filters) if filters else None
@@ -513,17 +514,19 @@ class LedgerCdcStreamReader(DataSourceStreamReader):
     """Offset = the last CONSUMED ledger version (``{"version": v,
     "snap": 0|1}``); each trigger drains to the table's latest
     version.  The driver plans partitions from MANIFEST METADATA ONLY —
-    each commit's ``ledger_meta.commit_plan`` — and executors
-    materialize the rows:
+    one ``ledger_meta.commit_plans`` walk, each manifest read once —
+    and executors materialize the rows:
 
     - a snapshot bootstrap fans out one ``snapshot_file`` partition
       PER BASE FILE (its applicable delete files shipped in the
       partition spec);
     - an ``inserts`` plan (an append) fans out one ``insert_file``
       partition PER ADDED FILE (pure inserts, embarrassingly parallel);
-    - a ``diff`` plan becomes ONE ``commit_diff`` partition running
-      :func:`_commit_changes` — distinct commits in a batch diff in
-      parallel; a ``skip`` plan gets no partition.
+    - a ``diff`` plan becomes ONE ``commit_diff`` partition carrying
+      the plan (its manifests trimmed to their delete files) to
+      :func:`_commit_changes`, which never plans again — distinct
+      commits in a batch diff in parallel; a ``skip`` plan gets no
+      partition.
 
     The partition plan, not a batch count, bounds memory, so an
     AvailableNow trigger delivers the whole backlog in one batch.
@@ -571,6 +574,7 @@ class LedgerCdcStreamReader(DataSourceStreamReader):
     def partitions(self, start: dict, end: dict):
         parts: list[LedgerCdcPartition] = []
         v0 = int(start["version"])
+        man = None
         if not start.get("snap", 1):
             # the bootstrap delivers the VISIBLE state at startVersion:
             # pending merge-on-read deletes apply per file, exactly as
@@ -585,8 +589,8 @@ class LedgerCdcStreamReader(DataSourceStreamReader):
                     "deletes": applying(e),
                     "version": v0,
                 }))
-        for v in range(v0 + 1, int(end["version"]) + 1):
-            plan = commit_plan(self.path, v, "ledger_cdc")
+        for v, plan in commit_plans(self.path, v0, int(end["version"]),
+                                    "ledger_cdc", first=man):
             _schema_boundary(plan["cur"], self.schema_v, "ledger_cdc")
             if plan["kind"] == "inserts":
                 for e in plan["after"]:
@@ -596,8 +600,15 @@ class LedgerCdcStreamReader(DataSourceStreamReader):
                         "entry": e, "deletes": [], "version": v,
                     }))
             elif plan["kind"] == "diff":
-                parts.append(LedgerCdcPartition("commit_diff",
-                                                {"version": v}))
+                # the executor needs only the delete files of the two
+                # manifests, never their whole file lists
+                parts.append(LedgerCdcPartition("commit_diff", {
+                    "version": v,
+                    "plan": {**plan, **{
+                        side: {"delete_files":
+                               plan[side].get("delete_files") or []}
+                        for side in ("prev", "cur")}},
+                }))
         return parts or [LedgerCdcPartition("noop", {})]
 
     def read(self, partition: LedgerCdcPartition):
@@ -606,7 +617,7 @@ class LedgerCdcStreamReader(DataSourceStreamReader):
             return iter([])
         if partition.kind == "commit_diff":
             return iter(_commit_changes(self.path, p["version"],
-                                        self.fields, self.types,
+                                        p["plan"], self.fields, self.types,
                                         self.filters, self.renames,
                                         self.defaults))
         # snapshot_file / insert_file: one file's visible rows, inserts

@@ -10,7 +10,8 @@ reader (``cdc_stream``):
   (the same rule over one delete set, positional targets indexed
   once);
 - :func:`commit_plan`: what one commit changed, decided from its
-  manifest and its predecessor's alone.
+  manifest and its predecessor's alone; :func:`commit_plans` walks a
+  version window, reading each manifest once.
 
 Nothing here reads a data file or touches Spark, and the module imports
 only the standard library: ``cdc_stream.register`` ships it by value
@@ -154,9 +155,10 @@ def delete_index(delete_files: list[dict]):
     return applying
 
 
-def commit_plan(table_path: str, v: int, who: str) -> dict:
-    """What commit *v* changed, from its manifest and its
-    predecessor's alone.  The plan's ``kind`` is one of:
+def commit_plan(prev: dict, cur: dict) -> dict:
+    """What the commit that published manifest *cur* changed, from it
+    and its predecessor's manifest *prev* alone.  The plan's ``kind``
+    is one of:
 
     - ``skip``: nothing visible can have changed — a compact (same
       rows, new layout, by contract), a metadata-only commit, or new
@@ -174,8 +176,6 @@ def commit_plan(table_path: str, v: int, who: str) -> dict:
     indexed once by path.  The plan also carries ``op``, ``key`` (the
     commit's recorded merge/delete key, or None) and the two manifests
     ``prev`` / ``cur`` (schema and delete files for the images)."""
-    cur = feed_manifest(table_path, v, who)
-    prev = feed_manifest(table_path, v - 1, who)
     plan = {"op": cur.get("operation"), "key": cur.get("key"),
             "prev": prev, "cur": cur, "before": [], "after": []}
     if plan["op"] == "compact":
@@ -203,3 +203,21 @@ def commit_plan(table_path: str, v: int, who: str) -> dict:
                 after.append(e_cur)
     return {**plan, "kind": "diff" if before or after else "skip",
             "before": before, "after": after}
+
+
+def commit_plans(table_path: str, from_version: int, to_version: int,
+                 who: str, first: dict | None = None):
+    """Yield ``(v, commit_plan)`` for every retained commit in
+    (*from_version*, *to_version*], reading each manifest once: the
+    previous iteration's manifest is the next one's ``prev``.  A
+    commit whose predecessor is gone (vacuumed) fails loudly, naming
+    that version.  *first* is *from_version*'s manifest when the
+    caller already holds it."""
+    prev_v, prev = from_version, first
+    for v in [x for x in versions(table_path)
+              if from_version < x <= to_version]:
+        if prev is None or prev_v != v - 1:
+            prev = feed_manifest(table_path, v - 1, who)
+        cur = feed_manifest(table_path, v, who)
+        yield v, commit_plan(prev, cur)
+        prev_v, prev = v, cur

@@ -42,7 +42,17 @@ contract, stdlib only):
   ONLY those are rewritten (untouched files are carried by reference),
   and the commit validates its base version at publish time —
   a concurrent commit fails the merge loudly instead of being
-  lost-updated (the Iceberg serializable-conflict contract).
+  lost-updated (the Iceberg serializable-conflict contract);
+- every read of a snapshot's rows goes through ONE scan,
+  ``_scan_manifest``: the manifest it is given supplies the schema,
+  the rename / default / widen histories and the pending delete files
+  (a would-be snapshot — ``read_staged``, ``read_branch`` — is built
+  with ``_build_manifest`` and scanned the same way).  Row-level
+  rewrites share one core per key form: ``_cow_rewrite`` (copy-on-write
+  by key: merge, delete and their branch twins),
+  ``_equality_delete_commit`` (merge-on-read by key) and
+  ``_positional_commit`` (by predicate: delete_where, update_where).
+  An operation resolves its base snapshot once (``_base``).
 
 At 100 TB this is precisely the scan contract that makes planning
 cheap: the manifest bounds the file listing (no directory walks), and
@@ -69,7 +79,7 @@ from magshield_data_pipeline_spark.sources.ledger_meta import (
     _key_cols,
     _manifest_dir,
     _raw_manifest,
-    commit_plan,
+    commit_plans,
     delete_index,
     read_manifest,
     versions,
@@ -374,10 +384,25 @@ def _latest(table_path: str) -> tuple[int, dict | None]:
     return (vs[-1], read_manifest(table_path, vs[-1])) if vs else (0, None)
 
 
+def _base(table_path: str, who: str,
+          version: int | None = None) -> tuple[int, dict]:
+    """``(version, manifest)`` of *version* (default: the latest) — the
+    snapshot an operation reads.  An empty table, or a version not
+    retained, fails loudly in *who*'s name."""
+    vs = versions(table_path)
+    if not vs:
+        raise ValueError(f"{who}: {table_path} has no versions")
+    v = vs[-1] if version is None else version
+    if v not in vs:
+        raise ValueError(f"{who}: version {v} not in {vs} at {table_path}")
+    return v, read_manifest(table_path, v)
+
+
 def _commit(table_path: str, c: dict, *, who: str | None = None,
             base: tuple[int, dict] | None = None, conflict=None,
             check=None, isolation: str = "serializable",
-            race_inject=None, discard: bool = True) -> int | None:
+            race_inject=None, discard: bool = True,
+            latest: tuple[int, dict | None] | None = None) -> int | None:
     """Publish commit description *c* (see ``_build_manifest``) — the
     one commit path of the ledger.  Each attempt builds the manifest
     for ``(parent, parent version + 1)`` and links it (``_try_link``);
@@ -392,7 +417,9 @@ def _commit(table_path: str, c: dict, *, who: str | None = None,
       before each attempt: it may raise (a CHECK constraint landed and
       the data fails it) or return True to stop without committing
       (an epoch or rollback already in place) — the written files are
-      then reclaimed and None is returned.
+      then reclaimed and None is returned.  *latest* is the
+      ``(version, manifest)`` the caller already resolved (and
+      validated against): the first attempt's parent, saving a read.
     - REBASE (*base* given, ``isolation="snapshot"``, a *conflict*
       check): the commit read *base* = ``(version, manifest)``, so its
       first attempt is exactly base+1.  On a loss, ``conflict(latest)``
@@ -420,7 +447,7 @@ def _commit(table_path: str, c: dict, *, who: str | None = None,
                if discard else [])
     if race_inject is not None:
         race_inject()
-    pv, parent = base or _latest(table_path)
+    pv, parent = base or latest or _latest(table_path)
     rebased_from = None
     while True:
         if check is not None and check(pv, parent):
@@ -457,7 +484,8 @@ def _commit(table_path: str, c: dict, *, who: str | None = None,
 
 def _publish_manifest(table_path: str, operation: str,
                       entries: list[dict], carry: bool = False,
-                      schema: dict | None = None, check=None) -> int:
+                      schema: dict | None = None, check=None,
+                      latest: tuple[int, dict | None] | None = None) -> int:
     """Re-resolving commit of freshly written *entries*: with
     ``carry=True`` they join the latest snapshot's files and *schema*
     (``StructType.jsonValue()``) evolves its schema — append
@@ -466,7 +494,17 @@ def _publish_manifest(table_path: str, operation: str,
     return _commit(table_path, {
         "op": operation, "add": entries, "replace": not carry,
         "schema": schema, "evolve": carry,
-    }, check=check)
+    }, check=check, latest=latest)
+
+
+def _validated(df, table_path: str,
+               latest: tuple[int, dict | None]) -> dict:
+    """Validate *df* against the CHECK constraints of *latest* (the
+    parent a re-resolving commit's first attempt uses) and return that
+    constraint set, for ``_revalidating``."""
+    cons = (latest[1] or {}).get("constraints") or {}
+    _validate_constraints(df, table_path, cons)
+    return cons
 
 
 def _revalidating(df, table_path: str, validated: dict | None):
@@ -800,12 +838,8 @@ def approx_ndv(table_path: str, col: str, version: int | None = None
     merge would silently under-count."""
     import math
 
-    vs = versions(table_path)
-    if not vs:
-        raise ValueError(f"approx_ndv: {table_path} has no versions")
-    v = vs[-1] if version is None else version
     merged = [0] * _NDV_M
-    for e in read_manifest(table_path, v)["files"]:
+    for e in _base(table_path, "approx_ndv", version)[1]["files"]:
         sk = (e.get("ndv") or {}).get(col)
         if sk is None:
             if e["rows"] == 0:
@@ -906,10 +940,16 @@ def _transform_probe_values(spark, spec, dtype, values: list) -> list[str]:
     )
 
 
-def _spec_to_partition_by(sp: dict | None):
-    """A stored spec dict back to the ``partition_by`` argument form
-    (None / identity column name / transform tuple)."""
-    if sp is None:
+def _active_spec(m: dict | None):
+    """Manifest *m*'s active partition spec in ``partition_by``
+    argument form (None / identity column name / transform tuple) —
+    None when never set or cleared (the empty-dict tombstone
+    ``set_partition_spec(path, None)`` writes).  Rewrites and
+    post-images land under it: an upsert-maintained table keeps its
+    declared layout instead of shedding partition metadata with every
+    rewritten file (the Iceberg writer contract)."""
+    sp = (m or {}).get("partition_spec")
+    if not sp:
         return None
     t = sp["transform"]
     if t == "identity":
@@ -950,25 +990,21 @@ def set_partition_spec(table_path: str, partition_by) -> int:
 
 
 def active_partition_spec(table_path: str, version: int | None = None):
-    """The table's active partition spec at *version* (default latest),
-    in ``partition_by`` argument form — None when never set or cleared
-    (the empty-dict tombstone ``set_partition_spec(path, None)``
-    writes)."""
-    vs = versions(table_path)
-    if not vs:
+    """The table's active partition spec at *version* (default latest)
+    — ``_active_spec`` of its manifest; None for an empty table."""
+    if not versions(table_path):
         return None
-    v = vs[-1] if version is None else version
-    sp = read_manifest(table_path, v).get("partition_spec")
-    return _spec_to_partition_by(sp or None)
+    return _active_spec(_base(table_path, "active_partition_spec",
+                              version)[1])
 
 
-def _resolve_partition_by(table_path: str, partition_by):
+def _resolve_partition_by(latest: tuple[int, dict | None], partition_by):
     """Writer-side CURRENT_SPEC resolution: the sentinel reads the
-    active spec off the latest manifest; anything else passes through
+    active spec off the *latest* manifest; anything else passes through
     (an explicit per-commit spec always wins — that is what makes
     mixed-spec tables possible at all)."""
     if partition_by is CURRENT_SPEC:
-        return active_partition_spec(table_path)
+        return _active_spec(latest[1])
     return partition_by
 
 
@@ -1250,16 +1286,16 @@ def append(df, table_path: str, n_files: int = 2,
     recorded.  ``partition_by=CURRENT_SPEC`` resolves the table's
     ACTIVE spec (``set_partition_spec``) at write time — the writer
     that keeps honoring the declared layout across spec evolutions."""
-    partition_by = _resolve_partition_by(table_path, partition_by)
-    validated = table_constraints(table_path)
-    _validate_constraints(df, table_path, validated)
-    entries = _write_data_files(df, table_path, n_files,
-                                partition_by=partition_by,
-                                bloom_for=bloom_for, ndv_for=ndv_for)
+    latest = _latest(table_path)
+    validated = _validated(df, table_path, latest)
+    entries = _write_data_files(
+        df, table_path, n_files,
+        partition_by=_resolve_partition_by(latest, partition_by),
+        bloom_for=bloom_for, ndv_for=ndv_for)
     return _publish_manifest(
         table_path, "append", entries, carry=True,
         schema=df.schema.jsonValue(),
-        check=_revalidating(df, table_path, validated),
+        check=_revalidating(df, table_path, validated), latest=latest,
     )
 
 
@@ -1273,15 +1309,15 @@ def overwrite(df, table_path: str, n_files: int = 2,
     for type changes that ``append`` refuses).  ``partition_by``
     writes under an identity partition spec; ``CURRENT_SPEC`` resolves
     the table's active spec like ``append``."""
-    partition_by = _resolve_partition_by(table_path, partition_by)
-    validated = table_constraints(table_path)
-    _validate_constraints(df, table_path, validated)
-    entries = _write_data_files(df, table_path, n_files,
-                                partition_by=partition_by,
-                                bloom_for=bloom_for, ndv_for=ndv_for)
+    latest = _latest(table_path)
+    validated = _validated(df, table_path, latest)
+    entries = _write_data_files(
+        df, table_path, n_files,
+        partition_by=_resolve_partition_by(latest, partition_by),
+        bloom_for=bloom_for, ndv_for=ndv_for)
     return _publish_manifest(
         table_path, "overwrite", entries, schema=df.schema.jsonValue(),
-        check=_revalidating(df, table_path, validated),
+        check=_revalidating(df, table_path, validated), latest=latest,
     )
 
 
@@ -1314,21 +1350,15 @@ def overwrite_partitions(df, table_path: str, n_files: int = 1) -> int:
     base+1."""
     from pyspark.sql import functions as F
 
-    vs = versions(table_path)
-    if not vs:
-        raise ValueError(
-            f"overwrite_partitions: {table_path} has no versions — use "
-            "overwrite/append with partition_by for the first commit"
-        )
-    base_version = vs[-1]
-    manifest = read_manifest(table_path, base_version)
+    base = _base(table_path, "overwrite_partitions")
+    manifest = base[1]
     if manifest.get("delete_files"):
         raise ValueError(
             "overwrite_partitions: pending delete files — compact()/"
             "purge_deletes() first (partition replacement under "
             "deletes is ambiguous)"
         )
-    active_pb = active_partition_spec(table_path)
+    active_pb = _active_spec(manifest)
     spec = _partition_spec(active_pb)
     if spec is None:
         raise ValueError(
@@ -1363,7 +1393,7 @@ def overwrite_partitions(df, table_path: str, n_files: int = 1) -> int:
     }  # one distinct over the DERIVED value — bounded by partitions
     if not replaced:
         raise ValueError("overwrite_partitions: source has no rows")
-    _validate_constraints(df, table_path)
+    _validate_constraints(df, table_path, manifest.get("constraints") or {})
     return _commit(table_path, {
         "op": "overwrite-partitions",
         "tags": {"replaced_partitions": sorted(replaced)},
@@ -1372,7 +1402,7 @@ def overwrite_partitions(df, table_path: str, n_files: int = 1) -> int:
         "drop": {e["path"] for e in manifest["files"]
                  if e["partition"][p_name] in replaced},
         "schema": manifest.get("schema") or df.schema.jsonValue(),
-    }, who="overwrite_partitions", base=(base_version, manifest))
+    }, who="overwrite_partitions", base=base)
 
 
 def compact(spark, table_path: str, n_files: int = 1,
@@ -1557,20 +1587,14 @@ def clone_table(spark, source_path: str, dest_path: str,
     the clone pair stays valid wherever the root lands; absolute
     (the default) is right when source and dest live on independent
     roots."""
-    vs = versions(source_path)
-    if not vs:
-        raise ValueError(f"clone_table: {source_path} has no versions")
     if ref is not None:
         version = resolve_ref(source_path, ref)
-    v = vs[-1] if version is None else version
-    if v not in vs:
-        raise ValueError(f"clone_table: version {v} not in {vs}")
+    v, m = _base(source_path, "clone_table", version)
     if versions(dest_path):
         raise ValueError(
             f"clone_table: {dest_path} already has versions — clone "
             "targets a fresh path"
         )
-    m = read_manifest(source_path, v)
     if any(d.get("kind") == "positional"
            for d in m.get("delete_files") or []):
         raise ValueError(
@@ -1772,7 +1796,7 @@ def read(spark, table_path: str, version: int | None = None, *,
         return session_memo(
             spark, ("ledger", os.path.abspath(table_path), v,
                     path_stamp(mpath)),
-            lambda: _scan_manifest(spark, table_path, v,
+            lambda: _scan_manifest(spark, table_path,
                                    read_manifest(table_path, v)),
         )
     manifest = read_manifest(table_path, v)
@@ -1784,18 +1808,9 @@ def read(spark, table_path: str, version: int | None = None, *,
         # form is what a Z-ordered layout serves: every range must
         # intersect the file's per-column bounding box
         ranges = [prune] if isinstance(prune[0], str) else list(prune)
-        kept = []
-        for e in entries:
-            ok = True
-            for col, lo, hi in ranges:
-                mn = e["stats"].get(f"min_{col}")
-                mx = e["stats"].get(f"max_{col}")
-                if mn is not None and mx is not None and (mn > hi or mx < lo):
-                    ok = False
-                    break
-            if ok:
-                kept.append(e)
-        entries = kept
+        entries = [e for e in entries
+                   if all(_entry_overlaps(e, {col: (lo, hi)})
+                          for col, lo, hi in ranges)]
     if partitions:
         wanted = {col: {str(x) for x in vals}
                   for col, vals in partitions.items()}
@@ -1878,34 +1893,33 @@ def read(spark, table_path: str, version: int | None = None, *,
             )
     if report is not None:
         report["files_scanned"] = len(entries)
-    return _scan_manifest(spark, table_path, v, manifest, entries,
+    return _scan_manifest(spark, table_path, manifest, entries,
                           with_coords)
 
 
-def _scan_manifest(spark, table_path: str, v: int, manifest: dict,
+def _scan_manifest(spark, table_path: str, manifest: dict,
                    entries: list[dict] | None = None,
-                   with_coords: bool = False):
-    """The scan plan of *entries* (default: all of version *v*'s files)
-    under *manifest*'s schema, renames, defaults and delete files."""
+                   with_pos: bool = False):
+    """The visible rows of *entries* (default: all of *manifest*'s
+    files) — the ledger's one scan entry.  Everything comes from the
+    manifest it is given: the schema, the rename / default / widen
+    histories, and the pending delete files (``_scan_with_deletes``
+    when there are any, else a plain ``_scan``).  A would-be snapshot
+    (``read_staged``, ``read_branch``) is scanned the same way, so its
+    new entries must carry the sequence numbers publish will stamp.
+    ``with_pos=True`` keeps each row's ``_file_rel`` / ``_pos``
+    coordinate."""
     if entries is None:
         entries = manifest["files"]
     if not entries:
         raise ValueError(
-            f"snapshot v{v} at {table_path} has no files after pruning"
+            f"snapshot v{manifest.get('version')} at {table_path} has no "
+            "files after pruning"
         )
-    deletes = manifest.get("delete_files")
-    if deletes:
-        return _scan_with_deletes(spark, table_path, entries, deletes,
-                                  manifest.get("schema"),
-                                  renames=manifest.get("renames"),
-                                  defaults=manifest.get("defaults"),
-                                  widens=manifest.get("widens"),
-                                  with_pos=with_coords)
-    return _scan(spark, table_path, entries, manifest.get("schema"),
-                 renames=manifest.get("renames"),
-                 defaults=manifest.get("defaults"),
-                 widens=manifest.get("widens"),
-                 with_pos=with_coords)
+    if manifest.get("delete_files"):
+        return _scan_with_deletes(spark, table_path, entries, manifest,
+                                  with_pos)
+    return _scan(spark, table_path, entries, manifest, with_pos)
 
 
 def read_join_pruned(spark, table_path: str, dim_df, key: str, *,
@@ -1970,13 +1984,9 @@ def read_join_pruned(spark, table_path: str, dim_df, key: str, *,
 
 
 def _scan_with_deletes(spark, table_path: str, data_entries: list[dict],
-                       delete_files: list[dict], schema_json: dict | None,
-                       renames: list[dict] | None = None,
-                       defaults: list[dict] | None = None,
-                       with_pos: bool = False,
-                       widens: list[dict] | None = None):
-    """Merge-on-read: scan the data files and ANTI-JOIN the pending
-    delete files.  Two delete forms, the Iceberg v2 pair:
+                       manifest: dict, with_pos: bool = False):
+    """Merge-on-read: scan the data files and ANTI-JOIN *manifest*'s
+    pending delete files.  Two delete forms, the Iceberg v2 pair:
 
     - EQUALITY deletes apply ONLY to data files whose sequence number
       is LOWER than their own (re-inserts survive), anti-joined on the
@@ -1996,6 +2006,7 @@ def _scan_with_deletes(spark, table_path: str, data_entries: list[dict],
     output rows (``delete_where`` computing its match set)."""
     from pyspark.sql import functions as F
 
+    delete_files = manifest["delete_files"]
     eq_dels = [d for d in delete_files
                if d.get("kind", "equality") != "positional"]
     pos_dels = [d for d in delete_files if d.get("kind") == "positional"]
@@ -2014,9 +2025,8 @@ def _scan_with_deletes(spark, table_path: str, data_entries: list[dict],
     for applicable in sorted(groups):
         eq_app, pos_app = applicable
         need_pos = with_pos or bool(pos_app)
-        df = _scan(spark, table_path, groups[applicable], schema_json,
-                   renames=renames, defaults=defaults, with_pos=need_pos,
-                   widens=widens)
+        df = _scan(spark, table_path, groups[applicable], manifest,
+                   need_pos)
         if pos_app:
             dels = spark.read.parquet(
                 *[os.path.join(table_path, p) for p in pos_app]
@@ -2042,11 +2052,9 @@ def _scan_with_deletes(spark, table_path: str, data_entries: list[dict],
     return out
 
 
-def _scan(spark, table_path: str, entries: list[dict],
-          schema_json: dict | None, renames: list[dict] | None = None,
-          defaults: list[dict] | None = None, with_pos: bool = False,
-          widens: list[dict] | None = None):
-    """Scan exactly the files of *entries*, under the MANIFEST schema
+def _scan(spark, table_path: str, entries: list[dict], manifest: dict,
+          with_pos: bool = False):
+    """Scan exactly the files of *entries*, under *manifest*'s schema
     when the commit recorded one: a file written before an add-column
     commit lacks the column in its footer, and the reader fills it
     with null — which is what makes schema evolution a pure metadata
@@ -2054,11 +2062,11 @@ def _scan(spark, table_path: str, entries: list[dict],
     were recorded fall back to footer-inferred reads (their chains
     never evolved).
 
-    *renames* is the manifest's column-rename history: for each file,
-    every rename NEWER than the file's sequence number is undone to
-    find the name the column is STORED under in that file's footer,
-    and the read aliases it back to the current name — rename as pure
-    metadata, per-era (``rename_column``).
+    The manifest's ``renames`` history: for each file, every rename
+    NEWER than the file's sequence number is undone to find the name
+    the column is STORED under in that file's footer, and the read
+    aliases it back to the current name — rename as pure metadata,
+    per-era (``rename_column``).
 
     Entries carrying a ``partition`` (identity partition-spec writes)
     are grouped by partition value and the column is RESTORED from the
@@ -2074,11 +2082,11 @@ def _scan(spark, table_path: str, entries: list[dict],
     (``delete_where``).  Engine-side metadata columns, zero extra
     I/O.
 
-    *widens* is the manifest's type-widening history
-    (``widen_column``): a file committed BEFORE a widen commit stores
-    the column under its NARROWER physical type — the read uses the
-    stored type for that file's era and casts up engine-side (exact
-    by construction: only lossless promotions are ever recorded)."""
+    The manifest's ``widens`` history (``widen_column``): a file
+    committed BEFORE a widen commit stores the column under its
+    NARROWER physical type — the read uses the stored type for that
+    file's era and casts up engine-side (exact by construction: only
+    lossless promotions are ever recorded)."""
     from pyspark.sql import functions as F
     from pyspark.sql.types import (
         DoubleType,
@@ -2097,10 +2105,11 @@ def _scan(spark, table_path: str, entries: list[dict],
         "float": FloatType(),
         "double": DoubleType(),
     }
+    schema_json = manifest.get("schema")
     full = StructType.fromJson(schema_json) if schema_json else None
-    rename_hist = sorted(renames or [], key=lambda r: r["v"])
-    default_hist = defaults or []
-    widen_hist = sorted(widens or [], key=lambda w: w["v"])
+    rename_hist = sorted(manifest.get("renames") or [], key=lambda r: r["v"])
+    default_hist = manifest.get("defaults") or []
+    widen_hist = sorted(manifest.get("widens") or [], key=lambda w: w["v"])
 
     def _stored_types(seq: int) -> tuple:
         # (col, narrower type name) for columns this file's era stores
@@ -2240,20 +2249,17 @@ def read_changes(spark, table_path: str, from_version: int,
             f"{to_version}"
         )
     old = {e["path"] for e in read_manifest(table_path, from_version)["files"]}
-    added = [
-        e
-        for e in read_manifest(table_path, to_version)["files"]
-        if e["path"] not in old
-    ]
+    to_m = read_manifest(table_path, to_version)
+    added = [e for e in to_m["files"] if e["path"] not in old]
     if not added:
         raise ValueError(
             f"read_changes: no files added between v{from_version} and "
             f"v{to_version}"
         )
-    to_m = read_manifest(table_path, to_version)
-    return _scan(spark, table_path, added, to_m.get("schema"),
-                 renames=to_m.get("renames"),
-                 defaults=to_m.get("defaults"), widens=to_m.get("widens"))
+    # the added files' rows as written: deletes committed after them
+    # are not this feed's to apply (append-only contract)
+    return _scan_manifest(spark, table_path, {**to_m, "delete_files": []},
+                          added)
 
 
 def read_row_changes(spark, table_path: str, from_version: int,
@@ -2273,9 +2279,8 @@ def read_row_changes(spark, table_path: str, from_version: int,
     ``ledger_meta.commit_plan`` (manifests only) either skips it
     (compact, metadata-only), or names the affected files: the files
     it removed and added, plus carried files whose applicable delete
-    set changed.  Their VISIBLE images — ``_scan_with_deletes`` under
-    each side's delete files, a plain ``_scan`` when there are none —
-    are then classified:
+    set changed.  Their VISIBLE images — ``_scan_manifest`` under each
+    side's manifest — are then classified:
 
     - a commit that records a merge/delete KEY (merge, delete, in
       either copy-on-write or merge-on-read mode) is joined on it:
@@ -2312,7 +2317,12 @@ def read_row_changes(spark, table_path: str, from_version: int,
         return df.withColumn("_change_type", F.lit(change_type)) \
                  .withColumn("_commit_version", F.lit(commit_v).cast("long"))
 
-    to_renames = read_manifest(table_path, to_version).get("renames") or []
+    # every retained commit in the window is diffed against its
+    # predecessor: a vacuumed gap fails here, naming the missing
+    # before-image version
+    plans = list(commit_plans(table_path, from_version, to_version,
+                              "read_row_changes"))
+    to_renames = plans[-1][1]["cur"].get("renames") or []
     spanned = [r for r in to_renames
                if from_version < r["v"] <= to_version]
     if spanned:
@@ -2327,17 +2337,10 @@ def read_row_changes(spark, table_path: str, from_version: int,
     def image(entries: list[dict], m: dict):
         if not entries:
             return None
-        return _scan_with_deletes(
-            spark, table_path, entries, m.get("delete_files") or [],
-            m.get("schema"), renames=m.get("renames"),
-            defaults=m.get("defaults"), widens=m.get("widens"))
+        return _scan_manifest(spark, table_path, m, entries)
 
     pieces = []
-    # every retained commit in the window is diffed against its
-    # predecessor: a vacuumed gap fails in commit_plan, naming the
-    # missing before-image version
-    for v in [x for x in vs if from_version < x <= to_version]:
-        plan = commit_plan(table_path, v, "read_row_changes")
+    for v, plan in plans:
         if plan["kind"] == "skip":
             continue
         before = image(plan["before"], plan["prev"])
@@ -2711,18 +2714,18 @@ def append_stream_batch(df, table_path: str, batch_id: int,
 
     if _committed():
         return None
-    validated = table_constraints(table_path)
-    _validate_constraints(df, table_path, validated)
+    latest = _latest(table_path)
+    validated = _validated(df, table_path, latest)
     entries = _write_data_files(
         df, table_path, n_files,
-        partition_by=active_partition_spec(table_path),
+        partition_by=_active_spec(latest[1]),
     )
     revalidate = _revalidating(df, table_path, validated)
     return _commit(table_path, {
         "op": "stream-append", "tags": {"batch_id": batch_id},
         "add": entries, "schema": df.schema.jsonValue(), "evolve": True,
     }, check=lambda pv, parent: (
-        _committed() or revalidate(pv, parent)))
+        _committed() or revalidate(pv, parent)), latest=latest)
 
 
 def merge(source_df, table_path: str, key, n_files: int = 1,
@@ -2813,14 +2816,8 @@ def merge(source_df, table_path: str, key, n_files: int = 1,
         raise ValueError(f"merge: unknown isolation {isolation!r}")
     if txn is not None and _txn_committed(table_path, txn[0], txn[1]):
         return None
-    vs = versions(table_path)
-    if not vs:
-        raise ValueError(
-            f"merge: {table_path} has no versions — commit an initial "
-            "overwrite/append first"
-        )
-    base_version = vs[-1]
-    manifest = read_manifest(table_path, base_version)
+    base = _base(table_path, "merge")
+    manifest = base[1]
     # MERGE-matrix split (matched_delete_where): evaluate the intent
     # predicate FIRST, then drop source columns the table lacks —
     # they are predicate-only metadata (a CDC feed's op column), not
@@ -2897,11 +2894,6 @@ def merge(source_df, table_path: str, key, n_files: int = 1,
         evolved = _merge_schema(schema_json, source_df.schema.jsonValue())
         if evolve_schema and extra:
             schema_json = evolved
-    # rewrites and post-images land under the table's ACTIVE partition
-    # spec (when one is declared): an upsert-maintained table keeps its
-    # declared layout instead of gradually shedding partition metadata
-    # with every rewritten file (the Iceberg writer contract)
-    active_pb = _spec_to_partition_by(manifest.get("partition_spec") or None)
     commit = {
         "op": "merge",
         "tags": {"key": _key_store(key),
@@ -2910,66 +2902,96 @@ def merge(source_df, table_path: str, key, n_files: int = 1,
                    else source_df.schema.jsonValue()),
     }
     if mode == "merge-on-read":
-        # MOR reads NO data files, so the only unsound rebase is
-        # metadata drift; restamping seq to the committed version
-        # reproduces the serial order exactly (the delete now also
-        # covers rows a concurrent commit inserted — what a serial
-        # MERGE at that version would do)
-        commit["tags"]["mode"] = "merge-on-read"
         commit["add"] = _write_data_files(upsert_df, table_path, n_files,
-                                          partition_by=active_pb)
-        commit["add_deletes"] = [
-            {**e, "key": _key_store(key)}
-            for e in _write_data_files(
-                source_df.select(*_key_cols(key)).distinct(),
-                table_path, 1
-            )
-        ]
-        return _commit(
-            table_path, commit, who="merge",
-            base=(base_version, manifest), isolation=isolation,
-            conflict=lambda latest: _meta_drift(manifest, latest),
-            race_inject=race_inject,
-        )
-    kcols = _key_cols(key)
-    brow = source_df.agg(*[a for c in kcols for a in (
-        F.min(c).alias(f"lo_{c}"), F.max(c).alias(f"hi_{c}")
-    )]).collect()[0]
-    if brow[f"lo_{kcols[0]}"] is None:
-        raise ValueError("merge: source has no rows (or all-null keys)")
-    kbounds = {c: (brow[f"lo_{c}"], brow[f"hi_{c}"]) for c in kcols}
-    touched = [e for e in manifest["files"] if _entry_overlaps(e, kbounds)]
-    spark = source_df.sparkSession
-    if touched:
-        existing = _scan(
-            spark, table_path, touched, schema_json,
-            renames=manifest.get("renames"),
-            defaults=manifest.get("defaults"), widens=manifest.get("widens"),
-        )
-        kept = existing.join(source_df.select(*kcols), kcols,
-                             "left_anti")
-        # under evolve_schema the source carries NEW columns: carried
-        # rows null-fill them (allowMissingColumns), matching what the
-        # manifest schema does for untouched files
-        result = kept.unionByName(
-            upsert_df.select(*[
-                c for c in upsert_df.columns
-                if c in set(existing.columns) or evolve_schema
-            ]),
-            allowMissingColumns=True,
-        )
-    else:
-        result = upsert_df  # pure insert: no file can hold a match
-    commit["add"] = _write_data_files(result, table_path, n_files,
-                                      partition_by=active_pb)
-    read_paths = {e["path"] for e in touched}
-    commit["drop"] = read_paths
+                                          partition_by=_active_spec(manifest))
+        return _equality_delete_commit(
+            source_df, table_path, key, commit, base, 1, who="merge",
+            isolation=isolation, race_inject=race_inject)
+    commit["add"], commit["drop"], kbounds = _cow_rewrite(
+        source_df.select(*_key_cols(key)), table_path, manifest,
+        "merge: source has no rows (or all-null keys)", n_files,
+        upsert=upsert_df, evolve=evolve_schema)
     return _commit(
-        table_path, commit, who="merge", base=(base_version, manifest),
+        table_path, commit, who="merge", base=base,
         isolation=isolation, race_inject=race_inject,
         conflict=lambda latest: _cow_rebase_conflict(
-            manifest, latest, kbounds, read_paths),
+            manifest, latest, kbounds, commit["drop"]),
     )
+
+
+def _cow_rewrite(keys, table_path: str, manifest: dict, empty: str,
+                 n_files: int, upsert=None,
+                 evolve: bool = False) -> tuple[list, set, dict]:
+    """The copy-on-write key rewrite of ``merge``, ``delete``,
+    ``branch_merge`` and ``branch_delete_rows``: remove every row of
+    *manifest*'s snapshot whose key appears in *keys* (a frame of the
+    key columns), then add the *upsert* rows, if any.
+
+    One tiny agg job probes *keys*' per-column [min, max] (*empty* is
+    the error when it finds no rows); the manifest's per-file stats
+    select the files that can hold one of them (``_entry_overlaps``) —
+    every other file is CARRIED BY REFERENCE, byte-untouched, which at
+    100 TB is the difference between rewriting a few files and
+    rewriting the table.  Files with no recorded stats on a key column
+    are conservatively rewritten.  The touched files' visible rows
+    minus the keys, plus *upsert* (under ``evolve`` its new columns
+    null-fill the carried rows), land under the base manifest's active
+    partition spec.
+
+    Returns ``(added entries, dropped paths, kbounds)`` — the commit
+    description's ``add`` / ``drop`` and the key box
+    ``_cow_rebase_conflict`` validates a rebase against."""
+    from pyspark.sql import functions as F
+
+    kcols = list(keys.columns)
+    brow = keys.agg(*[a for c in kcols for a in (
+        F.min(c).alias(f"lo_{c}"), F.max(c).alias(f"hi_{c}")
+    )]).collect()[0]  # single-row agg probe — bounded
+    if brow[f"lo_{kcols[0]}"] is None:
+        raise ValueError(empty)
+    kbounds = {c: (brow[f"lo_{c}"], brow[f"hi_{c}"]) for c in kcols}
+    touched = [e for e in manifest["files"] if _entry_overlaps(e, kbounds)]
+    result = upsert
+    if touched:
+        result = _scan_manifest(keys.sparkSession, table_path, manifest,
+                                touched).join(keys, kcols, "left_anti")
+        if upsert is not None:
+            # under evolve the source carries NEW columns: carried rows
+            # null-fill them (allowMissingColumns), matching what the
+            # manifest schema does for untouched files
+            result = result.unionByName(
+                upsert.select(*[c for c in upsert.columns
+                                if c in set(result.columns) or evolve]),
+                allowMissingColumns=True,
+            )
+    # no touched files and nothing to upsert: every file's key range
+    # misses the keys — a carry-only commit (still observable)
+    added = [] if result is None else _write_data_files(
+        result, table_path, n_files, partition_by=_active_spec(manifest))
+    return added, {e["path"] for e in touched}, kbounds
+
+
+def _equality_delete_commit(keys_df, table_path: str, key, commit: dict,
+                            base: tuple[int, dict], n_files: int, *,
+                            who: str, **commit_kw) -> int:
+    """The merge-on-read arm of ``merge`` and ``delete``: commit the
+    distinct keys of *keys_df* as an EQUALITY-DELETE file beside
+    whatever *commit* already adds, in one link.  It rewrites nothing
+    and reads no data file, so the only unsound rebase is table
+    metadata drift; restamping the sequence numbers to the committed
+    version gives exactly the serial order's semantics (the delete
+    also covers rows a concurrent commit inserted — what a serial
+    commit at that version would do)."""
+    commit["tags"]["mode"] = "merge-on-read"
+    commit["add_deletes"] = [
+        {**e, "key": _key_store(key)}
+        for e in _write_data_files(
+            keys_df.select(*_key_cols(key)).distinct(), table_path,
+            n_files)
+    ]
+    return _commit(table_path, commit, who=who, base=base,
+                   conflict=lambda latest: _meta_drift(base[1], latest),
+                   **commit_kw)
 
 
 def _meta_drift(base_m: dict, latest_m: dict) -> str | None:
@@ -3099,21 +3121,14 @@ def delete(keys_df, table_path: str, key, n_files: int = 1,
     copy-on-write, metadata-drift-only for merge-on-read; see
     ``_commit``).
     """
-    from pyspark.sql import functions as F
-
     if mode not in ("copy-on-write", "merge-on-read"):
         raise ValueError(f"delete: unknown mode {mode!r}")
     if isolation not in ("serializable", "snapshot"):
         raise ValueError(f"delete: unknown isolation {isolation!r}")
     if txn is not None and _txn_committed(table_path, txn[0], txn[1]):
         return None
-    vs = versions(table_path)
-    if not vs:
-        raise ValueError(
-            f"delete: {table_path} has no versions — nothing to delete"
-        )
-    base_version = vs[-1]
-    manifest = read_manifest(table_path, base_version)
+    base = _base(table_path, "delete")
+    manifest = base[1]
     commit = {
         "op": "delete",
         "tags": {"key": _key_store(key),
@@ -3121,63 +3136,23 @@ def delete(keys_df, table_path: str, key, n_files: int = 1,
         "schema": manifest.get("schema"),
     }
     if mode == "merge-on-read":
-        # equality deletes read no data files; restamping seq to the
-        # committed version gives the serial order's semantics
-        # (concurrent inserts of a deleted key are deleted too, exactly
-        # as a DELETE committing after them would) — refuse only on
-        # table-metadata drift (isolation="snapshot", r12)
-        commit["tags"]["mode"] = "merge-on-read"
-        commit["add_deletes"] = [
-            {**e, "key": _key_store(key)}
-            for e in _write_data_files(
-                keys_df.select(*_key_cols(key)).distinct(), table_path,
-                n_files
-            )
-        ]
-        return _commit(
-            table_path, commit, who="delete",
-            base=(base_version, manifest), isolation=isolation,
-            conflict=lambda latest: _meta_drift(manifest, latest),
-            race_inject=race_inject,
-        )
+        return _equality_delete_commit(
+            keys_df, table_path, key, commit, base, n_files, who="delete",
+            isolation=isolation, race_inject=race_inject)
     if manifest.get("delete_files"):
         raise ValueError(
             "delete: table has pending merge-on-read delete files — "
             "compact() to materialize them before a copy-on-write "
             "delete (rewritten files would resurrect deleted rows)"
         )
-    kcols = _key_cols(key)
-    keys = keys_df.select(*kcols).distinct()
-    brow = keys.agg(*[a for c in kcols for a in (
-        F.min(c).alias(f"lo_{c}"), F.max(c).alias(f"hi_{c}")
-    )]).collect()[0]  # single-row agg probe — bounded
-    if brow[f"lo_{kcols[0]}"] is None:
-        raise ValueError("delete: keys_df has no rows (or all-null keys)")
-    kbounds = {c: (brow[f"lo_{c}"], brow[f"hi_{c}"]) for c in kcols}
-    touched = [e for e in manifest["files"] if _entry_overlaps(e, kbounds)]
-    if touched:
-        existing = _scan(
-            keys_df.sparkSession, table_path, touched, commit["schema"],
-            renames=manifest.get("renames"),
-            defaults=manifest.get("defaults"), widens=manifest.get("widens"),
-        )
-        kept = existing.join(keys, kcols, "left_anti")
-        commit["add"] = _write_data_files(
-            kept, table_path, n_files,
-            # rewrites keep the declared layout (see merge)
-            partition_by=_spec_to_partition_by(
-                manifest.get("partition_spec") or None),
-        )
-    # no touched files → every file's key range misses the delete set:
-    # publish a carry-only manifest anyway so the txn marker lands and
-    # the commit is observable (a no-op delete is still a commit)
-    read_paths = {e["path"] for e in touched}
-    commit["drop"] = read_paths
+    commit["add"], commit["drop"], kbounds = _cow_rewrite(
+        keys_df.select(*_key_cols(key)).distinct(), table_path, manifest,
+        "delete: keys_df has no rows (or all-null keys)", n_files)
     return _commit(
-        table_path, commit, who="delete", base=(base_version, manifest),
+        table_path, commit, who="delete", base=base,
         isolation=isolation, race_inject=race_inject,
         conflict=lambda latest: _cow_rebase_conflict(
-            manifest, latest, kbounds, read_paths),
+            manifest, latest, kbounds, commit["drop"]),
     )
 
 
@@ -3223,64 +3198,63 @@ def delete_where(spark, table_path: str, predicate: str,
     Zero matches publishes a carry-only commit (observable no-op, the
     txn marker still lands).  Returns the committed version, or None
     on a replayed txn."""
-    from pyspark.sql import functions as F
-
     if isolation not in ("serializable", "snapshot"):
         raise ValueError(f"delete_where: unknown isolation {isolation!r}")
     if txn is not None and _txn_committed(table_path, txn[0], txn[1]):
         return None
-    vs = versions(table_path)
-    if not vs:
-        raise ValueError(
-            f"delete_where: {table_path} has no versions — nothing to "
-            "delete"
-        )
-    base_version = vs[-1]
-    manifest = read_manifest(table_path, base_version)
-    schema_json = manifest.get("schema")
-    dels = manifest.get("delete_files") or []
+    base = _base(table_path, "delete_where")
+    return _positional_commit(spark, table_path, base, predicate, {
+        "op": "delete",
+        "tags": {"mode": "positional",
+                 **({"txn": list(txn)} if txn is not None else {})},
+        "schema": base[1].get("schema"),
+    }, who="delete_where", isolation=isolation, race_inject=race_inject)
+
+
+def _positional_commit(spark, table_path: str, base: tuple[int, dict],
+                       predicate: str, commit: dict, *, who: str,
+                       post=None, n_files: int = 1, **commit_kw) -> int:
+    """The positional match of ``delete_where`` and ``update_where``:
+    evaluate *predicate* once over the *base* snapshot's visible rows
+    with their ``(file, ordinal)`` coordinates, and commit the matches'
+    coordinates as one positional delete file targeting the matched
+    files — plus, when *post* is given, the post-images it maps the
+    matched rows to, under the base's active partition spec.  Adopted
+    external files are refused (coordinates are table-relative); zero
+    matches publishes a carry-only commit; a rebase is validated by
+    ``_positional_conflict``."""
+    from pyspark.sql import functions as F
+
+    manifest = base[1]
     if any(e.get("external") for e in manifest["files"]):
         raise ValueError(
-            "delete_where: table lists ADOPTED external files — "
+            f"{who}: table lists ADOPTED external files — "
             "positional coordinates are table-relative; compact() to "
             "internalize them first"
         )
-    if dels:
-        visible = _scan_with_deletes(
-            spark, table_path, manifest["files"], dels, schema_json,
-            renames=manifest.get("renames"),
-            defaults=manifest.get("defaults"), widens=manifest.get("widens"), with_pos=True,
-        )
-    else:
-        visible = _scan(
-            spark, table_path, manifest["files"], schema_json,
-            renames=manifest.get("renames"),
-            defaults=manifest.get("defaults"), widens=manifest.get("widens"), with_pos=True,
-        )
-    matches = visible.filter(predicate).select(
+    matched = _scan_manifest(spark, table_path, manifest,
+                             with_pos=True).filter(predicate)
+    coords = matched.select(
         F.col("_file_rel").alias("file_rel"), F.col("_pos").alias("pos")
     )
     targets = sorted(
         r["file_rel"]
-        for r in matches.select("file_rel").distinct().collect()
+        for r in coords.select("file_rel").distinct().collect()
     )  # bounded by the snapshot's FILE count, never its rows
-    commit = {
-        "op": "delete",
-        "tags": {"mode": "positional",
-                 **({"txn": list(txn)} if txn is not None else {})},
-        "schema": schema_json,
-    }
     if targets:
+        if post is not None:
+            commit["add"] = _write_data_files(
+                post(matched.drop("_file_rel", "_pos")), table_path,
+                n_files, partition_by=_active_spec(manifest))
         commit["add_deletes"] = [
             {**e, "kind": "positional", "targets": targets}
-            for e in _write_data_files(matches, table_path, 1)
+            for e in _write_data_files(coords, table_path, 1)
         ]
     return _commit(
-        table_path, commit, who="delete_where",
-        base=(base_version, manifest), isolation=isolation,
-        race_inject=race_inject,
+        table_path, commit, who=who, base=base,
         conflict=lambda latest: _positional_conflict(
             manifest, latest, targets),
+        **commit_kw,
     )
 
 
@@ -3326,16 +3300,9 @@ def update_where(spark, table_path: str, predicate: str,
         raise ValueError("update_where: no assignments")
     if txn is not None and _txn_committed(table_path, txn[0], txn[1]):
         return None
-    vs = versions(table_path)
-    if not vs:
-        raise ValueError(
-            f"update_where: {table_path} has no versions — nothing to "
-            "update"
-        )
-    base_version = vs[-1]
-    manifest = read_manifest(table_path, base_version)
+    base = _base(table_path, "update_where")
+    manifest = base[1]
     schema_json = manifest.get("schema")
-    dels = manifest.get("delete_files") or []
     bad = [c for c in assignments
            if schema_json is not None
            and c not in {f["name"] for f in schema_json["fields"]}]
@@ -3344,63 +3311,27 @@ def update_where(spark, table_path: str, predicate: str,
             f"update_where: assignment column(s) {bad} not in the "
             "table schema — UPDATE never evolves the schema"
         )
-    if any(e.get("external") for e in manifest["files"]):
-        raise ValueError(
-            "update_where: table lists ADOPTED external files — "
-            "positional coordinates are table-relative; compact() to "
-            "internalize them first"
-        )
-    scan_kw = dict(renames=manifest.get("renames"),
-                   defaults=manifest.get("defaults"),
-                   widens=manifest.get("widens"), with_pos=True)
-    if dels:
-        visible = _scan_with_deletes(spark, table_path,
-                                     manifest["files"], dels,
-                                     schema_json, **scan_kw)
-    else:
-        visible = _scan(spark, table_path, manifest["files"],
-                        schema_json, **scan_kw)
-    matched = visible.filter(predicate)
-    coords = matched.select(
-        F.col("_file_rel").alias("file_rel"), F.col("_pos").alias("pos")
-    )
-    targets = sorted(
-        r["file_rel"]
-        for r in coords.select("file_rel").distinct().collect()
-    )  # bounded by the snapshot's FILE count
-    commit = {
+
+    def post(matched):
+        # each assignment evaluated engine-side, cast to the column's
+        # declared type; post-images validate against the base's CHECK
+        # constraints (a concurrent change fails the publish or rebase)
+        st = StructType.fromJson(schema_json) if schema_json else None
+        for col, expr in sorted(assignments.items()):
+            val = F.expr(expr)
+            matched = matched.withColumn(
+                col, val.cast(st[col].dataType) if st else val)
+        _validate_constraints(matched, table_path,
+                              manifest.get("constraints") or {})
+        return matched
+
+    return _positional_commit(spark, table_path, base, predicate, {
         "op": "update",
         "tags": {"mode": "positional",
                  **({"txn": list(txn)} if txn is not None else {})},
         "schema": schema_json,
-    }
-    if targets:
-        post = matched.drop("_file_rel", "_pos")
-        if schema_json is not None:
-            st = StructType.fromJson(schema_json)
-            for col, expr in sorted(assignments.items()):
-                post = post.withColumn(
-                    col, F.expr(expr).cast(st[col].dataType)
-                )
-        else:
-            for col, expr in sorted(assignments.items()):
-                post = post.withColumn(col, F.expr(expr))
-        _validate_constraints(post, table_path)
-        commit["add"] = _write_data_files(
-            post, table_path, n_files,
-            partition_by=active_partition_spec(table_path),
-        )
-        commit["add_deletes"] = [
-            {**e, "kind": "positional", "targets": targets}
-            for e in _write_data_files(coords, table_path, 1)
-        ]
-    return _commit(
-        table_path, commit, who="update_where",
-        base=(base_version, manifest), isolation=isolation,
-        race_inject=race_inject,
-        conflict=lambda latest: _positional_conflict(
-            manifest, latest, targets),
-    )
+    }, who="update_where", post=post, n_files=n_files,
+        isolation=isolation, race_inject=race_inject)
 
 
 # ---------------------------------------------------------------------------
@@ -3410,10 +3341,7 @@ def table_constraints(table_path: str) -> dict[str, str]:
     """The CHECK constraints recorded on the latest snapshot (empty if
     none).  Constraints are MANIFEST metadata — versioned with the
     table, carried by every commit type, visible to time travel."""
-    vs = versions(table_path)
-    if not vs:
-        return {}
-    return read_manifest(table_path, vs[-1]).get("constraints") or {}
+    return (_latest(table_path)[1] or {}).get("constraints") or {}
 
 
 def _validate_constraints(df, table_path: str,
@@ -3457,10 +3385,7 @@ def add_constraint(spark, table_path: str, name: str, expr: str) -> int:
     CONSTRAINT contract — and every later append/overwrite/merge
     validates its incoming rows (O(delta)) and refuses loudly on
     violation.  Returns the committed version."""
-    vs = versions(table_path)
-    if not vs:
-        raise ValueError(f"add_constraint: {table_path} has no versions")
-    cons = table_constraints(table_path)
+    cons = _base(table_path, "add_constraint")[1].get("constraints") or {}
     if name in cons:
         raise ValueError(
             f"add_constraint: {name!r} already exists "
@@ -3606,11 +3531,8 @@ def optimize(spark, table_path: str, small_file_rows: int,
     ``None`` when fewer than two files are undersized (nothing worth
     packing — an empty maintenance commit would just churn manifests).
     """
-    vs = versions(table_path)
-    if not vs:
-        raise ValueError(f"optimize: {table_path} has no versions")
-    base_version = vs[-1]
-    manifest = read_manifest(table_path, base_version)
+    base = _base(table_path, "optimize")
+    manifest = base[1]
     if manifest.get("delete_files"):
         raise ValueError(
             "optimize: table has pending merge-on-read delete files — "
@@ -3640,14 +3562,12 @@ def optimize(spark, table_path: str, small_file_rows: int,
             1 if target_rows is None
             else max(1, -(-total // max(1, target_rows)))
         )
-    content = _scan(spark, table_path, small, manifest.get("schema"),
-                    renames=manifest.get("renames"),
-                    defaults=manifest.get("defaults"), widens=manifest.get("widens"))
+    content = _scan_manifest(spark, table_path, manifest, small)
     return _commit(table_path, {
         "op": "compact", "tags": {"mode": "bin-pack"},
         "add": _write_data_files(content, table_path, n_out),
         "drop": {e["path"] for e in small},
-    }, who="optimize", base=(base_version, manifest))
+    }, who="optimize", base=base)
 
 
 def purge_deletes(spark, table_path: str, n_files: int = 1) -> int | None:
@@ -3666,11 +3586,8 @@ def purge_deletes(spark, table_path: str, n_files: int = 1) -> int | None:
     drops the delete files in one commit — O(affected), never
     O(table).  Returns the new version, or None when there are no
     pending delete files (nothing to purge is not an error)."""
-    vs = versions(table_path)
-    if not vs:
-        raise ValueError(f"purge_deletes: {table_path} has no versions")
-    base_version = vs[-1]
-    manifest = read_manifest(table_path, base_version)
+    base = _base(table_path, "purge_deletes")
+    manifest = base[1]
     deletes = manifest.get("delete_files")
     if not deletes:
         return None
@@ -3681,11 +3598,7 @@ def purge_deletes(spark, table_path: str, n_files: int = 1) -> int | None:
         # scan ONLY the affected files with their applicable deletes
         # reconciled (sequence-number semantics preserved), rewrite
         # them clean
-        survivors = _scan_with_deletes(
-            spark, table_path, affected, deletes, manifest.get("schema"),
-            renames=manifest.get("renames"),
-            defaults=manifest.get("defaults"), widens=manifest.get("widens"),
-        )
+        survivors = _scan_manifest(spark, table_path, manifest, affected)
         entries = _write_data_files(survivors, table_path, n_files)
     # published as a compact variant (like optimize's bin-pack): visible
     # content is IDENTICAL before and after, so every CDC consumer's
@@ -3696,7 +3609,7 @@ def purge_deletes(spark, table_path: str, n_files: int = 1) -> int | None:
         "op": "compact", "tags": {"mode": "purge-deletes"},
         "add": entries,
         "drop": {x["path"] for x in affected + deletes},
-    }, who="purge_deletes", base=(base_version, manifest))
+    }, who="purge_deletes", base=base)
 
 
 def recluster(spark, table_path: str, cluster_by: list[str],
@@ -3729,11 +3642,8 @@ def recluster(spark, table_path: str, cluster_by: list[str],
     disjoint (nothing to do is not an error)."""
     if not cluster_by:
         raise ValueError("recluster: cluster_by needs >= 1 column")
-    vs = versions(table_path)
-    if not vs:
-        raise ValueError(f"recluster: {table_path} has no versions")
-    base_version = vs[-1]
-    manifest = read_manifest(table_path, base_version)
+    base = _base(table_path, "recluster")
+    manifest = base[1]
     col = cluster_by[0]
     neg_inf, pos_inf = object(), object()  # sort-stable sentinels
 
@@ -3768,16 +3678,7 @@ def recluster(spark, table_path: str, cluster_by: list[str],
     affected = [e for g in groups if len(g) > 1 for e in g]
     if not affected:
         return None  # already pairwise-disjoint: no commit
-    deletes = manifest.get("delete_files") or []
-    content = (_scan_with_deletes(spark, table_path, affected, deletes,
-                                  manifest.get("schema"),
-                                  renames=manifest.get("renames"),
-                                  defaults=manifest.get("defaults"), widens=manifest.get("widens"))
-               if deletes
-               else _scan(spark, table_path, affected,
-                          manifest.get("schema"),
-                          renames=manifest.get("renames"),
-                          defaults=manifest.get("defaults"), widens=manifest.get("widens")))
+    content = _scan_manifest(spark, table_path, manifest, affected)
     # content-identical, so CDC-silent; pending delete files stay in
     # force for the untouched files (lower seq) — the rewritten
     # entries' higher seq ends their applicability there
@@ -3789,7 +3690,7 @@ def recluster(spark, table_path: str, cluster_by: list[str],
             cluster_by=cluster_by,
         ),
         "drop": {e["path"] for e in affected},
-    }, who="recluster", base=(base_version, manifest))
+    }, who="recluster", base=base)
 
 
 def maintain(spark, table_path: str, *, small_file_rows: int,
@@ -3896,14 +3797,8 @@ def files_table(spark, table_path: str, version: int | None = None):
         LongType, StringType, StructField, StructType,
     )
 
-    vs = versions(table_path)
-    if not vs:
-        raise ValueError(f"files_table: {table_path} has no versions")
-    v = vs[-1] if version is None else version
-    if v not in vs:
-        raise ValueError(f"files_table: version {v} not in {vs}")
     rows = []
-    for e in read_manifest(table_path, v)["files"]:
+    for e in _base(table_path, "files_table", version)[1]["files"]:
         part = e.get("partition")
         rows.append((
             e["path"],
@@ -3937,14 +3832,9 @@ def delete_files_table(spark, table_path: str,
         LongType, StringType, StructField, StructType,
     )
 
-    vs = versions(table_path)
-    if not vs:
-        raise ValueError(f"delete_files_table: {table_path} has no versions")
-    v = vs[-1] if version is None else version
-    if v not in vs:
-        raise ValueError(f"delete_files_table: version {v} not in {vs}")
     rows = []
-    for d in read_manifest(table_path, v).get("delete_files") or []:
+    m = _base(table_path, "delete_files_table", version)[1]
+    for d in m.get("delete_files") or []:
         kind = d.get("kind", "equality")
         rows.append((
             d["path"],
@@ -3989,11 +3879,8 @@ def stage_append(df, table_path: str, name: str, n_files: int = 2,
     row predicates (distribution shifts, cross-table joins, model
     gates).  Exactly one stage per *name* may exist (exclusive create,
     same primitive as every commit)."""
-    _validate_constraints(df, table_path)
-    vs = versions(table_path)
-    if not vs:
-        raise ValueError(f"stage_append: {table_path} has no versions — "
-                         "commit an initial overwrite first")
+    base_version, base = _base(table_path, "stage_append")
+    _validate_constraints(df, table_path, base.get("constraints") or {})
     p = _wap_path(table_path, name)
     if os.path.exists(p):
         raise ValueError(
@@ -4002,10 +3889,9 @@ def stage_append(df, table_path: str, name: str, n_files: int = 2,
         )
     entries = _write_data_files(df, table_path, n_files,
                                 bloom_for=bloom_for)
-    base = read_manifest(table_path, vs[-1])
     staged = {
         "operation": "wap-append",
-        "base_version": vs[-1],
+        "base_version": base_version,
         "staged_at": time.time(),
         "entries": entries,  # THIS stage's new files only
         "schema": _merge_schema(base.get("schema"), df.schema.jsonValue()),
@@ -4042,17 +3928,26 @@ def staged(table_path: str) -> list[str]:
 
 
 def read_staged(spark, table_path: str, name: str):
-    """The AUDIT surface: scan the would-be snapshot (current latest
-    plus the staged files) without publishing anything."""
+    """The AUDIT surface: scan the would-be snapshot without publishing
+    anything — the manifest ``publish_staged`` would link on the
+    current latest, so pending deletes hide exactly the base rows they
+    will hide once published."""
     p = _wap_path(table_path, name)
     if not os.path.exists(p):
         raise ValueError(f"read_staged: no stage {name!r} at {table_path}")
     with open(p) as f:
         st = json.load(f)
-    latest = read_manifest(table_path, versions(table_path)[-1])
-    return _scan(spark, table_path, latest["files"] + st["entries"],
-                 st.get("schema"), renames=latest.get("renames"),
-                 defaults=latest.get("defaults"), widens=latest.get("widens"))
+    v, latest = _base(table_path, "read_staged")
+    return _scan_manifest(spark, table_path,
+                          _build_manifest(latest, v + 1, _stage_commit(st)))
+
+
+def _stage_commit(st: dict) -> dict:
+    """The commit description that publishes staged manifest *st*: an
+    append of its entries (``_build_manifest`` stamps them newer than
+    every pending delete) evolving the schema by add-column."""
+    return {"op": "append", "add": st["entries"],
+            "schema": st.get("schema"), "evolve": True}
 
 
 def publish_staged(table_path: str, name: str) -> int:
@@ -4090,11 +3985,8 @@ def publish_staged(table_path: str, name: str) -> int:
                 )
             return False
 
-        v = _publish_manifest(
-            table_path, "append", st["entries"], carry=True,
-            schema=st.get("schema"),
-            check=_refuse_drift if "constraints" in st else None,
-        )
+        v = _commit(table_path, _stage_commit(st),
+                    check=_refuse_drift if "constraints" in st else None)
     except BaseException:
         os.rename(claimed, p)  # publish failed: the stage survives
         raise
@@ -4120,11 +4012,7 @@ def table_rows(table_path: str, version: int | None = None) -> int:
     stay true.  Refuses tables with PENDING merge-on-read deletes
     (their visible count needs the equality-delete reconciliation a
     scan does; ``compact()`` first) rather than over-counting."""
-    vs = versions(table_path)
-    if not vs:
-        raise ValueError(f"table_rows: {table_path} has no versions")
-    v = vs[-1] if version is None else version
-    m = read_manifest(table_path, v)
+    m = _base(table_path, "table_rows", version)[1]
     if m.get("delete_files"):
         raise ValueError(
             "table_rows: pending merge-on-read delete files make the "
@@ -4142,11 +4030,8 @@ def table_bytes(table_path: str, version: int | None = None) -> int:
     EXECUTES the join's child stages under AQE (throwaway jobs, twice
     the work at any scale).  Entries written before ``bytes`` was
     recorded count 0 — conservative for small-table decisions."""
-    vs = versions(table_path)
-    if not vs:
-        raise ValueError(f"table_bytes: {table_path} has no versions")
-    v = vs[-1] if version is None else version
-    return sum(e.get("bytes", 0) for e in read_manifest(table_path, v)["files"])
+    m = _base(table_path, "table_bytes", version)[1]
+    return sum(e.get("bytes", 0) for e in m["files"])
 
 
 def changed_file_count(table_path: str, from_version: int,
@@ -4216,10 +4101,7 @@ def drop_column(table_path: str, name: str) -> int:
     constraints referencing the name; a pending merge-on-read delete
     keyed on it; open branches or staged commits (consistency with
     rename)."""
-    vs = versions(table_path)
-    if not vs:
-        raise ValueError(f"drop_column: {table_path} has no versions")
-    m = read_manifest(table_path, vs[-1])
+    m = _base(table_path, "drop_column")[1]
     schema = m.get("schema")
     if schema is None:
         raise ValueError(
@@ -4296,10 +4178,7 @@ def add_column(table_path: str, name: str, dtype: str,
 
     *dtype* is a Spark type name (``long``/``double``/``string``/...)
     as accepted by schema JSON."""
-    vs = versions(table_path)
-    if not vs:
-        raise ValueError(f"add_column: {table_path} has no versions")
-    m = read_manifest(table_path, vs[-1])
+    m = _base(table_path, "add_column")[1]
     schema = m.get("schema")
     if schema is None:
         raise ValueError(
@@ -4352,10 +4231,7 @@ def rename_column(table_path: str, old: str, new: str) -> int:
     that is any file's partition source or the table's active
     partition-spec source (partition values/probes are keyed by
     source name)."""
-    vs = versions(table_path)
-    if not vs:
-        raise ValueError(f"rename_column: {table_path} has no versions")
-    m = read_manifest(table_path, vs[-1])
+    m = _base(table_path, "rename_column")[1]
     schema = m.get("schema")
     if schema is None:
         raise ValueError(
@@ -4466,10 +4342,7 @@ def widen_column(table_path: str, name: str, to_type: str) -> int:
 
     Refusals: unknown column, no recorded schema, non-whitelisted
     promotion, same-type no-op, rename history on the column."""
-    vs = versions(table_path)
-    if not vs:
-        raise ValueError(f"widen_column: {table_path} has no versions")
-    m = read_manifest(table_path, vs[-1])
+    m = _base(table_path, "widen_column")[1]
     schema = m.get("schema")
     if schema is None:
         raise ValueError(
@@ -4524,11 +4397,7 @@ def table_column_stats(table_path: str, col: str,
     ``purge_deletes()`` first) and columns with any stat-less file
     (no recorded bounds — e.g. an all-null file or a pre-stats
     commit — would make the extremum a guess)."""
-    vs = versions(table_path)
-    if not vs:
-        raise ValueError(f"table_column_stats: {table_path} has no versions")
-    v = vs[-1] if version is None else version
-    m = read_manifest(table_path, v)
+    v, m = _base(table_path, "table_column_stats", version)
     if m.get("delete_files"):
         raise ValueError(
             "table_column_stats: pending merge-on-read delete files "
@@ -4587,12 +4456,7 @@ def create_branch(table_path: str, name: str,
     latest).  The anchor is TAGGED (`branch-base-<name>`) so vacuum
     retains it for the branch's whole life.  Exclusive create — one
     branch per name.  Returns the base version."""
-    vs = versions(table_path)
-    if not vs:
-        raise ValueError(f"create_branch: {table_path} has no versions")
-    base = vs[-1] if from_version is None else from_version
-    if base not in vs:
-        raise ValueError(f"create_branch: version {base} not in {vs}")
+    base = _base(table_path, "create_branch", from_version)[0]
     p = _branch_base_path(table_path, name)
     if os.path.exists(p):
         raise ValueError(
@@ -4667,12 +4531,9 @@ def branch_append(df, table_path: str, name: str,
     creation (publish re-checks main hasn't drifted).  Returns the
     branch-local commit number.  Concurrent branch writers race on the
     exclusive commit link; the loser retries at the next number."""
-    base, commits = _branch_state(table_path, name)
+    base, tip = _branch_tip(table_path, name)
     _validate_constraints(df, table_path, base.get("constraints") or {})
-    base_manifest = read_manifest(table_path, base["base_version"])
-    schema = base_manifest.get("schema")
-    for c in commits:
-        schema = c.get("schema") or schema
+    schema = tip.get("schema")
     merged_schema = (
         _merge_schema(schema, df.schema.jsonValue())
         if schema is not None else df.schema.jsonValue()
@@ -4685,37 +4546,39 @@ def branch_append(df, table_path: str, name: str,
     })
 
 
-def _branch_tip(table_path: str, name: str) -> tuple[dict, list, list,
-                                                     dict | None]:
-    """(base payload, tip file list, pending delete files, schema):
-    append commits extend the running file list; merge/delete commits
-    record the FULL post-state and replace it."""
+def _branch_desc(c: dict, parent: dict) -> dict:
+    """The main-line commit description that publishes branch commit
+    *c* on manifest *parent*: an append adds its entries; a rewrite
+    (merge/delete) recorded its FULL post-state in ``files``, so it
+    also drops the parent files that state lacks."""
+    live = {e["path"] for e in c.get("files", parent["files"])}
+    return {
+        "op": c["operation"][len("branch-"):],
+        "tags": {"key": c["key"]} if "key" in c else {},
+        "add": c["entries"],
+        "drop": {e["path"] for e in parent["files"]} - live,
+        "schema": c.get("schema"),
+    }
+
+
+def _branch_tip(table_path: str, name: str) -> tuple[dict, dict]:
+    """(base payload, tip manifest): the snapshot publish would make
+    while main sits at the base — every branch commit built onto the
+    base manifest in order, so branch entries carry the sequence
+    numbers publish stamps (newer than the base's pending deletes and
+    its rename / default / widen events)."""
     base, commits = _branch_state(table_path, name)
-    base_manifest = read_manifest(table_path, base["base_version"])
-    files = list(base_manifest["files"])
-    schema = base_manifest.get("schema")
+    v, m = _base(table_path, "branch", base["base_version"])
     for c in commits:
-        if "files" in c:
-            files = list(c["files"])  # full-state commit (merge/delete)
-        else:
-            files = files + c["entries"]
-        schema = c.get("schema") or schema
-    return base, files, base_manifest.get("delete_files") or [], schema
+        v += 1
+        m = _build_manifest(m, v, _branch_desc(c, m))
+    return base, m
 
 
 def read_branch(spark, table_path: str, name: str):
     """Scan the branch tip: the base snapshot's state plus every
-    branch commit — pending merge-on-read deletes at the base apply
-    exactly as a read() of that version would."""
-    base, files, deletes, schema = _branch_tip(table_path, name)
-    base_m = read_manifest(table_path, base["base_version"])
-    if deletes:
-        return _scan_with_deletes(spark, table_path, files, deletes,
-                                  schema, renames=base_m.get("renames"),
-                                  defaults=base_m.get("defaults"), widens=base_m.get("widens"))
-    return _scan(spark, table_path, files, schema,
-                 renames=base_m.get("renames"),
-                 defaults=base_m.get("defaults"), widens=base_m.get("widens"))
+    branch commit, read exactly as main will read it once published."""
+    return _scan_manifest(spark, table_path, _branch_tip(table_path, name)[1])
 
 
 def _branch_commit(table_path: str, name: str, payload: dict) -> int:
@@ -4741,20 +4604,19 @@ def _branch_commit(table_path: str, name: str, payload: dict) -> int:
 
 def branch_merge(source_df, table_path: str, name: str, key,
                  n_files: int = 1) -> int:
-    """MERGE INTO the branch tip by *key* — the same stats-pruned
-    copy-on-write rewrite as :func:`merge`, landed as a branch commit
+    """MERGE INTO the branch tip by *key* — the copy-on-write rewrite
+    of :func:`merge` (``_cow_rewrite``), landed as a branch commit
     recording the FULL post-state (so later reads and the publish
     replay it exactly); main sees nothing until publish.  A branch
     whose base carries pending merge-on-read deletes refuses (compact
     main first, then branch).  Returns the branch commit number."""
-    from pyspark.sql import functions as F
-
-    base, files, dels, schema_json = _branch_tip(table_path, name)
-    if dels:
+    base, tip = _branch_tip(table_path, name)
+    if tip.get("delete_files"):
         raise ValueError(
             "branch_merge: the branch base has pending merge-on-read "
             "delete files — compact() main before branching rewrites"
         )
+    schema_json = tip.get("schema")
     if schema_json is not None:
         # column guard BEFORE constraint validation: a constraint
         # expression may reference a column the malformed source lacks
@@ -4770,37 +4632,15 @@ def branch_merge(source_df, table_path: str, name: str, key,
         _merge_schema(schema_json, source_df.schema.jsonValue())
     _validate_constraints(source_df, table_path,
                           base.get("constraints") or {})
-    kcols = _key_cols(key)
-    brow = source_df.agg(*[a for c in kcols for a in (
-        F.min(c).alias(f"lo_{c}"), F.max(c).alias(f"hi_{c}")
-    )]).collect()[0]
-    if brow[f"lo_{kcols[0]}"] is None:
-        raise ValueError("branch_merge: source has no rows")
-    kbounds = {c: (brow[f"lo_{c}"], brow[f"hi_{c}"]) for c in kcols}
-    touched = [e for e in files if _entry_overlaps(e, kbounds)]
-    untouched = [e for e in files if e not in touched]
-    spark = source_df.sparkSession
-    if touched:
-        existing = _scan(
-            spark, table_path, touched, schema_json,
-            renames=read_manifest(
-                table_path, base["base_version"]).get("renames"),
-            defaults=read_manifest(
-                table_path, base["base_version"]).get("defaults"),
-            widens=read_manifest(
-                table_path, base["base_version"]).get("widens"),
-        )
-        kept = existing.join(source_df.select(*kcols), kcols,
-                             "left_anti")
-        result = kept.unionByName(source_df.select(*existing.columns))
-    else:
-        result = source_df
-    entries = _write_data_files(result, table_path, n_files)
+    entries, drop, _kbounds = _cow_rewrite(
+        source_df.select(*_key_cols(key)), table_path, tip,
+        "branch_merge: source has no rows", n_files, upsert=source_df)
     return _branch_commit(table_path, name, {
         "operation": "branch-merge",
         "key": _key_store(key),
         "entries": entries,
-        "files": untouched + entries,
+        "files": [e for e in tip["files"] if e["path"] not in drop]
+        + entries,
         "schema": (schema_json if schema_json is not None
                    else source_df.schema.jsonValue()),
     })
@@ -4808,49 +4648,27 @@ def branch_merge(source_df, table_path: str, name: str, key,
 
 def branch_delete_rows(keys_df, table_path: str, name: str, key,
                        n_files: int = 1) -> int:
-    """Row-level DELETE on the branch tip by *key* (stats-pruned
-    copy-on-write rewrite, full post-state recorded) — main sees
+    """Row-level DELETE on the branch tip by *key* (the copy-on-write
+    rewrite of :func:`delete`, full post-state recorded) — main sees
     nothing until publish.  Returns the branch commit number."""
-    from pyspark.sql import functions as F
-
-    base, files, dels, schema_json = _branch_tip(table_path, name)
-    if dels:
+    _base_payload, tip = _branch_tip(table_path, name)
+    if tip.get("delete_files"):
         raise ValueError(
             "branch_delete_rows: the branch base has pending "
             "merge-on-read delete files — compact() main first"
         )
-    kcols = _key_cols(key)
-    keys = keys_df.select(*kcols).distinct()
-    brow = keys.agg(*[a for c in kcols for a in (
-        F.min(c).alias(f"lo_{c}"), F.max(c).alias(f"hi_{c}")
-    )]).collect()[0]
-    if brow[f"lo_{kcols[0]}"] is None:
-        raise ValueError("branch_delete_rows: keys_df has no rows")
-    kbounds = {c: (brow[f"lo_{c}"], brow[f"hi_{c}"]) for c in kcols}
-    touched = [e for e in files if _entry_overlaps(e, kbounds)]
-    untouched = [e for e in files if e not in touched]
-    entries: list[dict] = []
-    if touched:
-        spark = keys_df.sparkSession
-        existing = _scan(
-            spark, table_path, touched, schema_json,
-            renames=read_manifest(
-                table_path, base["base_version"]).get("renames"),
-            defaults=read_manifest(
-                table_path, base["base_version"]).get("defaults"),
-            widens=read_manifest(
-                table_path, base["base_version"]).get("widens"),
-        )
-        kept = existing.join(keys, kcols, "left_anti")
-        entries = _write_data_files(kept, table_path, n_files)
+    entries, drop, _kbounds = _cow_rewrite(
+        keys_df.select(*_key_cols(key)).distinct(), table_path, tip,
+        "branch_delete_rows: keys_df has no rows", n_files)
     payload = {
         "operation": "branch-delete",
         "key": _key_store(key),
         "entries": entries,
-        "files": untouched + entries,
+        "files": [e for e in tip["files"] if e["path"] not in drop]
+        + entries,
     }
-    if schema_json is not None:
-        payload["schema"] = schema_json
+    if tip.get("schema") is not None:
+        payload["schema"] = tip["schema"]
     return _branch_commit(table_path, name, payload)
 
 
@@ -4926,14 +4744,8 @@ def publish_branch(table_path: str, name: str) -> list[int]:
                 # effect).  A rewrite commit recorded its full
                 # post-state: it drops the tip files that state lacks.
                 tip = _latest(table_path)
-                live = {e["path"] for e in c.get("files", tip[1]["files"])}
-                v = _commit(table_path, {
-                    "op": c["operation"][len("branch-"):],
-                    "tags": {"key": c["key"]} if "key" in c else {},
-                    "add": c["entries"],
-                    "drop": {e["path"] for e in tip[1]["files"]} - live,
-                    "schema": c.get("schema"),
-                }, who="publish_branch", base=tip, discard=False)
+                v = _commit(table_path, _branch_desc(c, tip[1]),
+                            who="publish_branch", base=tip, discard=False)
             published.append(v)
             os.unlink(_branch_commit_path(table_path, name, k))
     except BaseException:

@@ -228,3 +228,39 @@ def test_branch_merge_validates_and_prunes(spark, tmp_path):
             spark.createDataFrame([(1,)], "k long"), t, "g", key="k",
             n_files=1)
     S.discard_branch(t, "g")
+
+
+def test_branch_reinsert_survives_base_deletes(spark, tmp_path):
+    # the base's merge-on-read delete of keys 1 and 2 applies to the
+    # base's files only: the branch's re-insert of key 1 is newer, and
+    # reads the same before and after publish
+    t = _t(spark, tmp_path)
+    S.delete(spark.createDataFrame([(1,), (2,)], "k long"), t, key="k",
+             mode="merge-on-read")
+    S.create_branch(t, "re")
+    S.branch_append(spark.createDataFrame([(1,)], "k long"), t, "re",
+                    n_files=1)
+    branch = sorted(r.k for r in S.read_branch(spark, t, "re").collect())
+    S.publish_branch(t, "re")
+    published = sorted(r.k for r in S.read(spark, t).collect())
+    assert published == [0, 1] + list(range(3, 10))
+    assert branch == published
+
+
+def test_branch_files_read_under_current_names_and_values(spark, tmp_path):
+    # a branch append made after a rename and a defaulted add_column
+    # stores the current names and its own values: the branch reads
+    # them as main does after publish (not the pre-rename name's null
+    # or the pre-add default)
+    t = _t(spark, tmp_path)
+    S.add_column(t, "c", "long", default=7)
+    S.rename_column(t, "k", "key")
+    S.create_branch(t, "era")
+    S.branch_append(spark.createDataFrame([(10, 1)], "key long, c long"),
+                    t, "era", n_files=1)
+    branch = sorted(tuple(r) for r in S.read_branch(spark, t, "era")
+                    .collect())
+    S.publish_branch(t, "era")
+    published = sorted(tuple(r) for r in S.read(spark, t).collect())
+    assert published == [(k, 7) for k in range(10)] + [(10, 1)]
+    assert branch == published

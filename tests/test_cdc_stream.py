@@ -498,7 +498,9 @@ def test_wide_positional_delete_plans_from_metadata_fast(
                              {"version": 2, "snap": 1})
     diff = reader.partitions({"version": 1, "snap": 1},
                              {"version": 2, "snap": 1})
-    S._scan_with_deletes(mock.MagicMock(), str(t), files, [dl], schema)
+    S._scan_manifest(mock.MagicMock(), str(t),
+                     {"files": files, "delete_files": [dl],
+                      "schema": schema})
     elapsed = time.perf_counter() - t0
     assert len(boot) == 5_000
     assert all(p.payload["deletes"] == [dl] for p in boot)

@@ -133,3 +133,35 @@ def test_publish_refuses_constraint_drift_since_stage(spark, tmp_path):
     S.stage_append(df, t, "drift2", n_files=1)
     S.publish_staged(t, "drift2")
     assert S.read(spark, t).count() == 15
+
+
+def test_audit_view_applies_pending_deletes(spark, tmp_path):
+    # the audit reads the snapshot publish will make: pending
+    # merge-on-read deletes hide keys 1 and 2 of the base, and the
+    # staged re-insert of key 1 is newer than the delete, so it stays
+    t = _t(spark, tmp_path)
+    S.delete(spark.createDataFrame([(1,), (2,)], "k long"), t, key="k",
+             mode="merge-on-read")
+    S.stage_append(spark.createDataFrame([(1,)], "k long"), t, "re",
+                   n_files=1)
+    audited = sorted(r.k for r in S.read_staged(spark, t, "re").collect())
+    S.publish_staged(t, "re")
+    published = sorted(r.k for r in S.read(spark, t).collect())
+    assert published == [0, 1] + list(range(3, 10))
+    assert audited == published
+
+
+def test_audit_view_reads_staged_files_under_current_names(spark, tmp_path):
+    # rows staged after a rename and a defaulted add_column carry the
+    # current names and their own values in the audit view too
+    t = _t(spark, tmp_path)
+    S.add_column(t, "c", "long", default=7)
+    S.rename_column(t, "k", "key")
+    S.stage_append(spark.createDataFrame([(10, 1)], "key long, c long"),
+                   t, "era", n_files=1)
+    audited = sorted(tuple(r) for r in S.read_staged(spark, t, "era")
+                     .collect())
+    S.publish_staged(t, "era")
+    published = sorted(tuple(r) for r in S.read(spark, t).collect())
+    assert published == [(k, 7) for k in range(10)] + [(10, 1)]
+    assert audited == published
