@@ -36,18 +36,35 @@ Quirks preserved (SURVEY §2.9):
   opportunity's org unless a later Organisation link overrides it
   (task.py:223-246).
 - Q7: dropDuplicates runs on the fully-formatted output, not raw rows.
+
+**Projections are SQL expression text.** Every row-level projection
+(dim projections, the CUSTOMFIELDS lookups, the CASE chains, the
+group-by aggregates, the ``transform``/``filter`` lambdas) is written as
+SQL text and handed to ``selectExpr`` / ``F.expr``, so the JVM parses a
+whole projection in one call. Composing the same trees as ``Column``
+objects costs one py4j round trip per node: the quote export built in
+2,524 round trips and the opportunity export in 5,148 (sf0.001, reads
+warm, counted on the building thread); as text they build in 136 and
+328, and Catalyst analyzes the text to the same optimized plan
+(``tests/test_exports.py::test_export_build_round_trips`` bounds each
+export). The joins, the broadcast gate and ``dropDuplicates`` stay
+DataFrame calls. Each quirk is one text helper here or in
+``functions/scalars.py``; only code constants (field names, formats,
+separators) are interpolated into the text, through ``sql_lit``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from magshield_data_pipeline_spark.functions import scalars as S
+from magshield_data_pipeline_spark.functions.scalars import sql_lit
 from magshield_data_pipeline_spark.sources.parquet import ensure_runtime_confs
 
 # ---------------------------------------------------------------------------
-# shared helpers
+# shared helpers (the quirk helpers return SQL expression text)
+
 
 def _ensure_confs(df: DataFrame) -> None:
     """Exports are pure functions usable from ANY caller session (no
@@ -57,60 +74,68 @@ def _ensure_confs(df: DataFrame) -> None:
     ensure_runtime_confs(df.sparkSession)
 
 
-
-def _dim(df: DataFrame, hint: bool) -> DataFrame:
-    """Apply the broadcast hint only under the dim-size contract (module
+def _dim(df: DataFrame, hint: bool, *exprs: str) -> DataFrame:
+    """The projection *exprs* of *df* (all of it when none are given),
+    with the broadcast hint only under the dim-size contract (module
     header): ``hint=False`` leaves join-strategy choice to AQE."""
+    df = df.selectExpr(*exprs) if exprs else df
     return F.broadcast(df) if hint else df
 
 
-def _cf(col: str = "CUSTOMFIELDS") -> Column:
-    return S.custom_fields_map(col)
+def _with_cf(df: DataFrame) -> DataFrame:
+    """*df* plus its CUSTOMFIELDS dict as the map column ``_cf``."""
+    return df.selectExpr("*", f"{S.custom_fields_map()} AS _cf")
 
 
-def _cf_str_none(m: Column, key: str) -> Column:
+def _cfv(key: str, m: str = "_cf") -> str:
+    """``cf[key]`` — null when the key is missing or its value is null."""
+    return f"element_at({m}, {sql_lit(key)})"
+
+
+def _cf_key_join(key: str, id_col: str):
+    """Join condition: custom field *key*, try-cast to BIGINT, = *id_col*."""
+    return F.expr(f"try_cast({_cfv(key)} AS BIGINT) = {id_col}")
+
+
+def _cf_str_none(key: str) -> str:
     """Q3 — ``str(cf.get(key, ""))``: missing key → '', present-but-null
     value → the literal string 'None'."""
-    return (
-        F.when(~F.map_contains_key(m, F.lit(key)), F.lit(""))
-        .when(F.element_at(m, F.lit(key)).isNull(), F.lit("None"))
-        .otherwise(F.element_at(m, F.lit(key)))
-    )
+    return (f"CASE WHEN NOT map_contains_key(_cf, {sql_lit(key)}) THEN '' "
+            f"WHEN {_cfv(key)} IS NULL THEN 'None' ELSE {_cfv(key)} END")
 
 
-def _cf_fallback(m: Column, key: str, fallback: Column) -> Column:
+def _cf_fallback(key: str, fallback: str) -> str:
     """``cf.get(key, fallback)`` — the fallback applies only when the KEY
     is missing, not when its value is empty (quote.py:212)."""
-    return F.when(
-        F.map_contains_key(m, F.lit(key)), F.element_at(m, F.lit(key))
-    ).otherwise(fallback)
+    return (f"CASE WHEN map_contains_key(_cf, {sql_lit(key)}) "
+            f"THEN {_cfv(key)} ELSE {fallback} END")
 
 
-def _first_nonempty(*cols: Column) -> Column:
+def _first_nonempty(*exprs: str) -> str:
     """Python ``a or b or ""`` chain: skip null AND empty-string values."""
-    return F.coalesce(*[F.nullif(c, F.lit("")) for c in cols], F.lit(""))
+    return S.coalesce_str(*[f"nullif({e}, '')" for e in exprs])
 
 
-def _user_composite(first: str = "FIRST_NAME", last: str = "LAST_NAME",
-                    uid: str = "USER_ID") -> Column:
-    """'USER_ID;First Last' — f-string semantics, no strip
-    (invoice.py:101-106, task.py:186-189)."""
-    return F.concat(
-        F.col(uid).cast("string"),
-        F.lit(";"),
-        F.coalesce(F.col(first), F.lit("")),
-        F.lit(" "),
-        F.coalesce(F.col(last), F.lit("")),
-    )
+# 'First Last' — f-string, no strip (task.py:190-197)
+_FULL_NAME = "concat(coalesce(FIRST_NAME, ''), ' ', coalesce(LAST_NAME, ''))"
+# 'USER_ID;First Last' — f-string semantics, no strip (invoice.py:101-106,
+# task.py:186-189); the owner lookup of invoice, equipment, task and
+# opportunity
+_OWNER_DIM = (
+    "USER_ID AS _uid",
+    "concat(CAST(USER_ID AS STRING), ';', coalesce(FIRST_NAME, ''), ' ', "
+    "coalesce(LAST_NAME, '')) AS _owner",
+)
 
 
-def _full_name(first: str = "FIRST_NAME", last: str = "LAST_NAME") -> Column:
-    """'First Last' — f-string, no strip (task.py:190-197)."""
-    return F.concat(
-        F.coalesce(F.col(first), F.lit("")),
-        F.lit(" "),
-        F.coalesce(F.col(last), F.lit("")),
-    )
+def _clean_str(e: str) -> str:
+    """F1 over the ``''``-defaulted value."""
+    return S.clean_text(S.coalesce_str(e))
+
+
+def _cf_clean(key: str) -> str:
+    """F1 over ``cf.get(key, "")``."""
+    return S.clean_text(S.cf_get("_cf", key))
 
 
 # ---------------------------------------------------------------------------
@@ -138,22 +163,21 @@ def users_export(users: DataFrame) -> DataFrame:
 
 def organisation_export(orgs: DataFrame) -> DataFrame:
     _ensure_confs(orgs)
-    cf = _cf()
-    # P5: bool(cf.get("Active__c", False)) — Python truthiness of the
-    # string value: any non-empty string (even 'False') is True
-    focus = S.truthy_str(F.element_at(cf, F.lit("Active__c")))
-    return orgs.select(
-        F.col("ORGANISATION_ID").alias("Organization ID"),
-        S.clean_text(S.coalesce_str("ORGANISATION_NAME")).alias("Organization Name"),
-        S.format_date_only(S.coalesce_str("DATE_CREATED_UTC")).alias("Date Created"),
-        S.conditional_link_count("LINKS", "Contact").alias("Linked Contacts Count"),
-        focus.alias("Focus Organization"),
-        S.cf_get(cf, "Call_Frequency__c").alias("Call Frequency"),
-        S.cf_get(cf, "Industry__c").alias("Industry"),
-        S.cf_get(cf, "Region__c").alias("Region"),
-        S.cf_get(cf, "Sales_Methodology_Type__c").alias("Customer Type"),
-        S.cf_get(cf, "Organization_Type__c").alias("Organization Type"),
-        S.coalesce_str("ADDRESS_BILLING_COUNTRY").alias("Billing Country"),
+    cf = S.custom_fields_map()
+    return orgs.selectExpr(
+        "ORGANISATION_ID AS `Organization ID`",
+        f"{_clean_str('ORGANISATION_NAME')} AS `Organization Name`",
+        f"{S.format_date_only(S.coalesce_str('DATE_CREATED_UTC'))} AS `Date Created`",
+        f"{S.conditional_link_count('LINKS', 'Contact')} AS `Linked Contacts Count`",
+        # P5: bool(cf.get("Active__c", False)) — Python truthiness of the
+        # string value: any non-empty string (even 'False') is True
+        f"{S.truthy_str(_cfv('Active__c', cf))} AS `Focus Organization`",
+        f"{S.cf_get(cf, 'Call_Frequency__c')} AS `Call Frequency`",
+        f"{S.cf_get(cf, 'Industry__c')} AS `Industry`",
+        f"{S.cf_get(cf, 'Region__c')} AS `Region`",
+        f"{S.cf_get(cf, 'Sales_Methodology_Type__c')} AS `Customer Type`",
+        f"{S.cf_get(cf, 'Organization_Type__c')} AS `Organization Type`",
+        f"{S.coalesce_str('ADDRESS_BILLING_COUNTRY')} AS `Billing Country`",
     ).dropDuplicates()
 
 
@@ -170,76 +194,48 @@ def quote_export(
     broadcast_dims: bool = True,
 ) -> DataFrame:
     _ensure_confs(quotes)
-    cf = _cf()
-    q = quotes.withColumn("_cf", cf)
-    opp = _dim(
-        opportunities.select(
-            F.col("OPPORTUNITY_ID").alias("_opp_id"),
-            F.col("OPPORTUNITY_NAME").alias("_opp_name"),
-        ),
-        broadcast_dims,
-    )
-    org = _dim(
-        organisations.select(
-            F.col("ORGANISATION_ID").alias("_org_id"),
-            F.col("ORGANISATION_NAME").alias("_org_name"),
-        ),
-        broadcast_dims,
-    )
+    opp = _dim(opportunities, broadcast_dims,
+               "OPPORTUNITY_ID AS _opp_id", "OPPORTUNITY_NAME AS _opp_name")
+    org = _dim(organisations, broadcast_dims,
+               "ORGANISATION_ID AS _org_id", "ORGANISATION_NAME AS _org_name")
     # sales person joins on the custom-field value (J3); the reference's
     # fetch_contact strips the full name (quote.py:122-131)
-    con = _dim(
-        contacts.select(
-            F.col("CONTACT_ID").alias("_con_id"),
-            F.trim(_full_name()).alias("_con_name"),
-        ),
-        broadcast_dims,
-    )
+    con = _dim(contacts, broadcast_dims,
+               "CONTACT_ID AS _con_id", f"trim({_FULL_NAME}) AS _con_name")
     joined = (
-        q.join(opp, q["OPPORTUNITY_ID"] == opp["_opp_id"], "left")
-        .join(org, q["ORGANISATION_ID"] == org["_org_id"], "left")
-        .join(
-            con,
-            F.element_at(F.col("_cf"), F.lit("Sales_Person__c")).try_cast("bigint")
-            == con["_con_id"],
-            "left",
-        )
+        _with_cf(quotes)
+        .join(opp, F.expr("OPPORTUNITY_ID = _opp_id"), "left")
+        .join(org, F.expr("ORGANISATION_ID = _org_id"), "left")
+        .join(con, _cf_key_join("Sales_Person__c", "_con_id"), "left")
     )
-    m = F.col("_cf")
-    return joined.select(
-        F.col("QUOTE_ID").alias("Record ID"),
-        F.col("QUOTATION_NUMBER").alias("Quote Number"),
-        F.col("QUOTE_STATUS").alias("Status"),
-        F.col("QUOTATION_NAME").alias("Quote Name"),
-        F.col("SUBTOTAL").alias("Subtotal"),
-        F.col("TOTAL_PRICE").alias("Total Price"),
-        F.col("QUOTATION_EXPIRATION_DATE").alias("Expiration Date"),
-        S.cf_get(m, "GST_Percentage__c").alias("GST %"),
-        S.cf_get(m, "Tax__c").alias("Tax"),
+    return joined.selectExpr(
+        "QUOTE_ID AS `Record ID`",
+        "QUOTATION_NUMBER AS `Quote Number`",
+        "QUOTE_STATUS AS `Status`",
+        "QUOTATION_NAME AS `Quote Name`",
+        "SUBTOTAL AS `Subtotal`",
+        "TOTAL_PRICE AS `Total Price`",
+        "QUOTATION_EXPIRATION_DATE AS `Expiration Date`",
+        f"{S.cf_get('_cf', 'GST_Percentage__c')} AS `GST %`",
+        f"{S.cf_get('_cf', 'Tax__c')} AS `Tax`",
         # fallback only when the key is missing (quote.py:212)
-        _cf_fallback(m, "Grand_Total__c", F.col("GRAND_TOTAL").cast("string")).alias(
-            "Grand Total"
-        ),
-        S.cf_get(m, "Trade_Tariff__c").alias("Trade Tariff"),
-        S.cf_get(m, "Grand_Total_Tariff__c").alias("Grand Total w/ Tariff"),
-        S.cf_get(m, "MagShield_Selling_Entity__c").alias("MagShield Selling Entity"),
-        _cf_str_none(m, "Sales_Person__c").alias("Sales Person Id"),  # Q3
-        S.coalesce_str("_con_name").alias("Sales Person"),
-        F.col("ADDRESS_BILLING_COUNTRY").alias("Billing Country"),
-        F.col("QUOTATION_CURRENCY_CODE").alias("Currency"),
-        F.col("DISCOUNT").alias("Discount"),
+        f"{_cf_fallback('Grand_Total__c', 'CAST(GRAND_TOTAL AS STRING)')} AS `Grand Total`",
+        f"{S.cf_get('_cf', 'Trade_Tariff__c')} AS `Trade Tariff`",
+        f"{S.cf_get('_cf', 'Grand_Total_Tariff__c')} AS `Grand Total w/ Tariff`",
+        f"{S.cf_get('_cf', 'MagShield_Selling_Entity__c')} AS `MagShield Selling Entity`",
+        f"{_cf_str_none('Sales_Person__c')} AS `Sales Person Id`",  # Q3
+        f"{S.coalesce_str('_con_name')} AS `Sales Person`",
+        "ADDRESS_BILLING_COUNTRY AS `Billing Country`",
+        "QUOTATION_CURRENCY_CODE AS `Currency`",
+        "DISCOUNT AS `Discount`",
         # P4: prefer the inline name, else the joined dim's name
-        _first_nonempty(F.col("ORGANISATION_NAME"), F.col("_org_name")).alias(
-            "Organization Name"
-        ),
-        F.col("ORGANISATION_ID").alias("Record ID_1"),
-        S.format_date_quote(S.coalesce_str("DATE_CREATED_UTC")).alias("Date Created"),
-        S.format_date_quote(S.coalesce_str("DATE_UPDATED_UTC")).alias("Date Updated"),
-        _first_nonempty(F.col("OPPORTUNITY_NAME"), F.col("_opp_name")).alias(
-            "Opportunity Name"
-        ),
-        S.cf_get(m, "Shipping_Terms__c").alias("Shipping_Terms__c"),
-        S.coalesce_str("ADDRESS_SHIPPING_COUNTRY").alias("ADDRESS_SHIPPING_COUNTRY"),
+        f"{_first_nonempty('ORGANISATION_NAME', '_org_name')} AS `Organization Name`",
+        "ORGANISATION_ID AS `Record ID_1`",
+        f"{S.format_date_quote(S.coalesce_str('DATE_CREATED_UTC'))} AS `Date Created`",
+        f"{S.format_date_quote(S.coalesce_str('DATE_UPDATED_UTC'))} AS `Date Updated`",
+        f"{_first_nonempty('OPPORTUNITY_NAME', '_opp_name')} AS `Opportunity Name`",
+        f"{S.cf_get('_cf', 'Shipping_Terms__c')} AS `Shipping_Terms__c`",
+        f"{S.coalesce_str('ADDRESS_SHIPPING_COUNTRY')} AS `ADDRESS_SHIPPING_COUNTRY`",
     ).dropDuplicates()
 
 
@@ -251,12 +247,12 @@ def quote_export(
 def _org_struct_dim(organisations: DataFrame) -> DataFrame:
     """The invoice pipeline's org lookup carries a struct payload:
     name + two custom fields (invoice.py:108-120)."""
-    cf = _cf()
-    return organisations.select(
-        F.col("ORGANISATION_ID").alias("_oid"),
-        S.coalesce_str("ORGANISATION_NAME").alias("_oname"),
-        S.cf_get(cf, "Organization_Type__c").alias("_otype"),
-        S.cf_get(cf, "Region__c").alias("_oregion"),
+    cf = S.custom_fields_map()
+    return organisations.selectExpr(
+        "ORGANISATION_ID AS _oid",
+        f"{S.coalesce_str('ORGANISATION_NAME')} AS _oname",
+        f"{S.cf_get(cf, 'Organization_Type__c')} AS _otype",
+        f"{S.cf_get(cf, 'Region__c')} AS _oregion",
     )
 
 
@@ -267,63 +263,46 @@ def invoice_export(
     broadcast_dims: bool = True,
 ) -> DataFrame:
     _ensure_confs(invoices)
-    m = _cf()
-    inv = invoices.withColumn("_cf", m)
-    usr = _dim(
-        users.select(F.col("USER_ID").alias("_uid"), _user_composite().alias("_owner")),
-        broadcast_dims,
-    )
     org = _org_struct_dim(organisations)
 
     def org_role(alias: str) -> DataFrame:
-        return _dim(
-            org.select(
-                F.col("_oid").alias(f"{alias}_id"),
-                F.col("_oname").alias(f"{alias}_name"),
-                F.col("_otype").alias(f"{alias}_type"),
-                F.col("_oregion").alias(f"{alias}_region"),
-            ),
-            broadcast_dims,
-        )
+        return _dim(org, broadcast_dims, f"_oid AS {alias}_id", f"_oname AS {alias}_name",
+                    f"_otype AS {alias}_type", f"_oregion AS {alias}_region")
 
-    inv_org, site_org, chan_org = org_role("_inv"), org_role("_site"), org_role("_chan")
-    cfv = lambda k: F.element_at(F.col("_cf"), F.lit(k))  # noqa: E731
     joined = (
-        inv.join(usr, inv["OWNER_USER_ID"] == usr["_uid"], "left")
-        .join(inv_org, cfv("Invoiced_Organization__c").try_cast("bigint") == F.col("_inv_id"), "left")
+        _with_cf(invoices)
+        .join(_dim(users, broadcast_dims, *_OWNER_DIM), F.expr("OWNER_USER_ID = _uid"), "left")
+        .join(org_role("_inv"), _cf_key_join("Invoiced_Organization__c", "_inv_id"), "left")
         # Q1: the effective site key is Site_Name_Invoice__c — the
         # reference assigns Site_Organization__c then overwrites it
-        .join(site_org, cfv("Site_Name_Invoice__c").try_cast("bigint") == F.col("_site_id"), "left")
-        .join(chan_org, cfv("Channel_Partner_Invoiced__c").try_cast("bigint") == F.col("_chan_id"), "left")
+        .join(org_role("_site"), _cf_key_join("Site_Name_Invoice__c", "_site_id"), "left")
+        .join(org_role("_chan"), _cf_key_join("Channel_Partner_Invoiced__c", "_chan_id"), "left")
     )
-    mm = F.col("_cf")
-    ct = lambda c: S.clean_text(S.coalesce_str(c))  # noqa: E731
-    cfc = lambda k: S.clean_text(S.cf_get(mm, k))  # noqa: E731
-    return joined.select(
-        ct("RECORD_NAME").alias("Invoice Number"),
-        F.col("RECORD_ID").alias("Record ID"),
+    return joined.selectExpr(
+        f"{_clean_str('RECORD_NAME')} AS `Invoice Number`",
+        "RECORD_ID AS `Record ID`",
         # Q4: format_owner_for_invoice returns the 'ID;Name' composite
         # unchanged despite its docstring
-        ct("_owner").alias("Owner"),
-        S.format_date_ui(S.cf_get(mm, "Invoice_Date__c")).alias("Invoice Date"),
-        cfc("Invoiced_Item__c").alias("Item ID"),
-        cfc("Invoiced_Amount__c").alias("Invoiced Amount"),
-        cfc("Invoice_Currency__c").alias("Invoice Currency"),
-        cfc("PO_Number__c").alias("PO Number"),
-        cfc("Item_Quantity__c").alias("Item Quantity"),
-        cfc("Invoiced_Product_Type__c").alias("Product Type"),
-        cfc("Invoiced_Product_for_Equipment_Type__c").alias("Equipment Type"),
-        ct("_inv_name").alias("Entity Owning Equipment"),
-        ct("_inv_type").alias("Organization Type"),
-        ct("_inv_region").alias("Region"),
-        ct("_site_name").alias("Site Name"),
-        ct("_site_type").alias("Organization Type_1"),
-        ct("_site_region").alias("Region_2"),
-        ct("_chan_name").alias("Channel Partner"),
-        ct("_chan_type").alias("Organization Type_3"),
-        ct("_chan_region").alias("Region_4"),
-        cfc("Invoice_Num__c").alias("Invoice #"),
-        cfc("Invoiced_Amount_in_CAD__c").alias("Invoiced Amount in CAD"),
+        f"{_clean_str('_owner')} AS `Owner`",
+        f"{S.format_date_ui(S.cf_get('_cf', 'Invoice_Date__c'))} AS `Invoice Date`",
+        f"{_cf_clean('Invoiced_Item__c')} AS `Item ID`",
+        f"{_cf_clean('Invoiced_Amount__c')} AS `Invoiced Amount`",
+        f"{_cf_clean('Invoice_Currency__c')} AS `Invoice Currency`",
+        f"{_cf_clean('PO_Number__c')} AS `PO Number`",
+        f"{_cf_clean('Item_Quantity__c')} AS `Item Quantity`",
+        f"{_cf_clean('Invoiced_Product_Type__c')} AS `Product Type`",
+        f"{_cf_clean('Invoiced_Product_for_Equipment_Type__c')} AS `Equipment Type`",
+        f"{_clean_str('_inv_name')} AS `Entity Owning Equipment`",
+        f"{_clean_str('_inv_type')} AS `Organization Type`",
+        f"{_clean_str('_inv_region')} AS `Region`",
+        f"{_clean_str('_site_name')} AS `Site Name`",
+        f"{_clean_str('_site_type')} AS `Organization Type_1`",
+        f"{_clean_str('_site_region')} AS `Region_2`",
+        f"{_clean_str('_chan_name')} AS `Channel Partner`",
+        f"{_clean_str('_chan_type')} AS `Organization Type_3`",
+        f"{_clean_str('_chan_region')} AS `Region_4`",
+        f"{_cf_clean('Invoice_Num__c')} AS `Invoice #`",
+        f"{_cf_clean('Invoiced_Amount_in_CAD__c')} AS `Invoiced Amount in CAD`",
     ).dropDuplicates()
 
 
@@ -339,71 +318,47 @@ def equipment_export(
     broadcast_dims: bool = True,
 ) -> DataFrame:
     _ensure_confs(equipment)
-    m = _cf()
-    eq = equipment.withColumn("_cf", m)
-    usr = _dim(
-        users.select(F.col("USER_ID").alias("_uid"), _user_composite().alias("_owner")),
-        broadcast_dims,
-    )
-    org = _dim(
-        organisations.select(
-            F.col("ORGANISATION_ID").alias("_oid"),
-            S.coalesce_str("ORGANISATION_NAME").alias("_oname"),
-        ),
-        broadcast_dims,
-    )
-    cfv = lambda k: F.element_at(F.col("_cf"), F.lit(k))  # noqa: E731
+    org = _dim(organisations, broadcast_dims,
+               "ORGANISATION_ID AS _oid", f"{S.coalesce_str('ORGANISATION_NAME')} AS _oname")
     joined = (
-        eq.join(usr, eq["OWNER_USER_ID"] == usr["_uid"], "left")
+        _with_cf(equipment)
+        .join(_dim(users, broadcast_dims, *_OWNER_DIM), F.expr("OWNER_USER_ID = _uid"), "left")
         .join(
-            org.select(
-                F.col("_oid").alias("_ent_id"), F.col("_oname").alias("_ent_name")
-            ),
-            cfv("Entity_Owning_Equipment_Equipment__c").try_cast("bigint") == F.col("_ent_id"),
+            org.selectExpr("_oid AS _ent_id", "_oname AS _ent_name"),
+            _cf_key_join("Entity_Owning_Equipment_Equipment__c", "_ent_id"),
             "left",
         )
         .join(
-            org.select(
-                F.col("_oid").alias("_site_id"), F.col("_oname").alias("_site_name")
-            ),
-            cfv("Site_Name_Equipment__c").try_cast("bigint") == F.col("_site_id"),
+            org.selectExpr("_oid AS _site_id", "_oname AS _site_name"),
+            _cf_key_join("Site_Name_Equipment__c", "_site_id"),
             "left",
         )
     )
-    mm = F.col("_cf")
     # 'First Last||USER_ID||User' from the 'ID;First Last' composite —
     # '' when there is no owner composite (equiment.py:104-111)
-    owner_site = F.when(
-        F.col("_owner").isNull() | (F.col("_owner") == ""), F.lit("")
-    ).otherwise(
-        F.concat_ws(
-            "||",
-            S.split_part(F.col("_owner"), ";", 1),
-            S.split_part(F.col("_owner"), ";", 0),
-            F.lit("User"),
-        )
+    owner_site = (
+        "CASE WHEN _owner IS NULL OR _owner = '' THEN '' ELSE concat_ws('||', "
+        f"{S.split_part('_owner', ';', 1)}, {S.split_part('_owner', ';', 0)}, 'User') END"
     )
-    cfc = lambda k: S.clean_text(S.cf_get(mm, k))  # noqa: E731
-    return joined.select(
-        F.col("RECORD_ID").alias("Record ID"),
-        S.clean_text(S.coalesce_str("RECORD_NAME")).alias("Equipment Mine - Make - Model"),
-        S.clean_text(S.coalesce_str("_owner")).alias("Owner"),
-        F.col("DATE_CREATED_UTC").alias("Date Created"),
-        F.col("DATE_UPDATED_UTC").alias("Date Updated"),
-        _cf_str_none(mm, "Entity_Owning_Equipment_Equipment__c").alias("Record ID_1"),
-        S.clean_text(S.coalesce_str("_ent_name")).alias("Entity Owning Equipment"),
-        owner_site.alias("Organization"),
-        _cf_str_none(mm, "Site_Name_Equipment__c").alias("Record ID_2"),
-        S.clean_text(S.coalesce_str("_site_name")).alias("Site Name"),
-        owner_site.alias("Organization Owner_3"),
-        cfc("Equipment_Type_Equipment__c").alias("Equipment Type"),
-        cfc("Equipment_Make_Equipment__c").alias("Equipment Make"),
-        cfc("Equipment_Model_Equipment__c").alias("Equipment Model"),
-        S.cf_get(mm, "Equipment_Quantity_Equipment__c").alias("Equipment Quantity"),
-        cfc("Serial_Number_Notes__c").alias("Serial Number Notes"),
-        S.cf_get(mm, "Last_Date_of_Equipment_Details_Confirmed__c").alias(
-            "Last_Date_of_Equipment_Details_Confirmed__c"
-        ),
+    return joined.selectExpr(
+        "RECORD_ID AS `Record ID`",
+        f"{_clean_str('RECORD_NAME')} AS `Equipment Mine - Make - Model`",
+        f"{_clean_str('_owner')} AS `Owner`",
+        "DATE_CREATED_UTC AS `Date Created`",
+        "DATE_UPDATED_UTC AS `Date Updated`",
+        f"{_cf_str_none('Entity_Owning_Equipment_Equipment__c')} AS `Record ID_1`",
+        f"{_clean_str('_ent_name')} AS `Entity Owning Equipment`",
+        f"{owner_site} AS `Organization`",
+        f"{_cf_str_none('Site_Name_Equipment__c')} AS `Record ID_2`",
+        f"{_clean_str('_site_name')} AS `Site Name`",
+        f"{owner_site} AS `Organization Owner_3`",
+        f"{_cf_clean('Equipment_Type_Equipment__c')} AS `Equipment Type`",
+        f"{_cf_clean('Equipment_Make_Equipment__c')} AS `Equipment Make`",
+        f"{_cf_clean('Equipment_Model_Equipment__c')} AS `Equipment Model`",
+        f"{S.cf_get('_cf', 'Equipment_Quantity_Equipment__c')} AS `Equipment Quantity`",
+        f"{_cf_clean('Serial_Number_Notes__c')} AS `Serial Number Notes`",
+        f"{S.cf_get('_cf', 'Last_Date_of_Equipment_Details_Confirmed__c')} "
+        "AS `Last_Date_of_Equipment_Details_Confirmed__c`",
     ).dropDuplicates()
 
 
@@ -425,140 +380,103 @@ def task_export(
     broadcast_dims: bool = True,
 ) -> DataFrame:
     _ensure_confs(tasks)
+
     # --- dim lookups (hinted per the dim-size contract; the reference
     # probes dicts) ---
-    cat = _dim(
-        categories.select(
-            F.col("CATEGORY_ID").alias("_cat_id"),
-            S.coalesce_str("CATEGORY_NAME").alias("_cat_name"),
-        ),
-        broadcast_dims,
+    def dim(df: DataFrame, *exprs: str) -> DataFrame:
+        return _dim(df, broadcast_dims, *exprs)
+
+    cat = dim(categories, "CATEGORY_ID AS _cat_id", f"{S.coalesce_str('CATEGORY_NAME')} AS _cat_name")
+    con = dim(contacts, "CONTACT_ID AS _con_id", f"{_FULL_NAME} AS _con_name")
+    led = dim(leads, "LEAD_ID AS _led_id", f"{_FULL_NAME} AS _led_name")
+    opp = dim(
+        opportunities,
+        "OPPORTUNITY_ID AS _opp_id",
+        f"{S.coalesce_str('OPPORTUNITY_NAME')} AS _opp_name",
+        "ORGANISATION_ID AS _opp_org_id",
     )
-    usr = _dim(
-        users.select(F.col("USER_ID").alias("_uid"), _user_composite().alias("_owner")),
-        broadcast_dims,
-    )
-    con = _dim(
-        contacts.select(
-            F.col("CONTACT_ID").alias("_con_id"), _full_name().alias("_con_name")
-        ),
-        broadcast_dims,
-    )
-    led = _dim(
-        leads.select(F.col("LEAD_ID").alias("_led_id"), _full_name().alias("_led_name")),
-        broadcast_dims,
-    )
-    opp = _dim(
-        opportunities.select(
-            F.col("OPPORTUNITY_ID").alias("_opp_id"),
-            S.coalesce_str("OPPORTUNITY_NAME").alias("_opp_name"),
-            F.col("ORGANISATION_ID").alias("_opp_org_id"),
-        ),
-        broadcast_dims,
-    )
-    org = _dim(
-        organisations.select(
-            F.col("ORGANISATION_ID").alias("_org_id"),
-            S.coalesce_str("ORGANISATION_NAME").alias("_org_name"),
-        ),
-        broadcast_dims,
-    )
+    org = dim(organisations, "ORGANISATION_ID AS _org_id",
+              f"{S.coalesce_str('ORGANISATION_NAME')} AS _org_name")
     # second aliased copy for the opportunity-backfill hop (J4-style)
-    org2 = _dim(
-        organisations.select(
-            F.col("ORGANISATION_ID").alias("_org2_id"),
-            S.coalesce_str("ORGANISATION_NAME").alias("_org2_name"),
-        ),
-        broadcast_dims,
-    )
-    prj = _dim(
-        projects.select(
-            F.col("PROJECT_ID").alias("_prj_id"),
-            S.coalesce_str("PROJECT_NAME").alias("_prj_name"),
-        ),
-        broadcast_dims,
-    )
-    nte = _dim(
-        notes.select(
-            F.col("NOTE_ID").alias("_nte_id"), S.coalesce_str("TITLE").alias("_nte_name")
-        ),
-        broadcast_dims,
-    )
+    org2 = dim(organisations, "ORGANISATION_ID AS _org2_id",
+               f"{S.coalesce_str('ORGANISATION_NAME')} AS _org2_name")
+    prj = dim(projects, "PROJECT_ID AS _prj_id", f"{S.coalesce_str('PROJECT_NAME')} AS _prj_name")
+    nte = dim(notes, "NOTE_ID AS _nte_id", f"{S.coalesce_str('TITLE')} AS _nte_name")
 
     # --- explode LINKS preserving array order (Q5 is order-sensitive) ---
-    exploded = tasks.select(
-        "TASK_ID", F.posexplode_outer("LINKS").alias("_pos", "_lnk")
-    ).select(
-        "TASK_ID",
-        "_pos",
-        F.col("_lnk.LINK_OBJECT_NAME").alias("_typ"),
-        F.col("_lnk.LINK_OBJECT_ID").alias("_lid"),
-    )
-    routed = (
-        exploded.join(con, (F.col("_typ") == "Contact") & (F.col("_lid") == F.col("_con_id")), "left")
-        .join(led, (F.col("_typ") == "Lead") & (F.col("_lid") == F.col("_led_id")), "left")
-        .join(opp, (F.col("_typ") == "Opportunity") & (F.col("_lid") == F.col("_opp_id")), "left")
-        .join(org, (F.col("_typ") == "Organisation") & (F.col("_lid") == F.col("_org_id")), "left")
-        .join(org2, F.col("_opp_org_id") == F.col("_org2_id"), "left")
-        .join(prj, (F.col("_typ") == "Project") & (F.col("_lid") == F.col("_prj_id")), "left")
-        .join(nte, (F.col("_typ") == "Note") & (F.col("_lid") == F.col("_nte_id")), "left")
+    exploded = tasks.selectExpr(
+        "TASK_ID", "posexplode_outer(LINKS) AS (_pos, _lnk)"
+    ).selectExpr(
+        "TASK_ID", "_pos", "_lnk.LINK_OBJECT_NAME AS _typ", "_lnk.LINK_OBJECT_ID AS _lid"
     )
 
-    def last_wins(candidate: Column, value: Column, alias: str) -> Column:
+    def typed(typ: str, id_col: str):
+        return F.expr(f"_typ = {sql_lit(typ)} AND _lid = {id_col}")
+
+    routed = (
+        exploded.join(con, typed("Contact", "_con_id"), "left")
+        .join(led, typed("Lead", "_led_id"), "left")
+        .join(opp, typed("Opportunity", "_opp_id"), "left")
+        .join(org, typed("Organisation", "_org_id"), "left")
+        .join(org2, F.expr("_opp_org_id = _org2_id"), "left")
+        .join(prj, typed("Project", "_prj_id"), "left")
+        .join(nte, typed("Note", "_nte_id"), "left")
+    )
+
+    def last_wins(candidate: str, value: str, alias: str):
         """Q5: the value of the LAST link (by array position) satisfying
         *candidate*; '' when none does. Rows that are not candidates get
         position -1 so they only win when no candidate exists (their
         value is null → coalesced to '')."""
-        key = F.when(candidate, F.col("_pos")).otherwise(F.lit(-1))
-        val = F.when(candidate, F.coalesce(value, F.lit("")))
-        return F.coalesce(F.max_by(val, key), F.lit("")).alias(alias)
+        return F.expr(
+            f"coalesce(max_by(CASE WHEN {candidate} THEN coalesce({value}, '') END, "
+            f"CASE WHEN {candidate} THEN _pos ELSE -1 END), '') AS {alias}"
+        )
 
-    is_c = F.col("_typ") == "Contact"
-    is_l = F.col("_typ") == "Lead"
-    is_o = F.col("_typ") == "Opportunity"
-    is_g = F.col("_typ") == "Organisation"
-    is_p = F.col("_typ") == "Project"
-    is_n = F.col("_typ") == "Note"
+    def is_(typ: str) -> str:
+        return f"(_typ = {sql_lit(typ)})"
+
     # linked_org: set by an Organisation link OR back-filled through an
     # Opportunity link whose opp carries a (truthy) org id (task.py:233-241)
-    org_cand = is_g | (is_o & F.col("_opp_org_id").isNotNull() & (F.col("_opp_org_id") != 0))
-    org_val = F.when(is_g, F.coalesce(F.col("_org_name"), F.lit(""))).otherwise(
-        F.coalesce(F.col("_org2_name"), F.lit(""))
-    )
+    org_cand = (f"({is_('Organisation')} OR ({is_('Opportunity')} "
+                "AND _opp_org_id IS NOT NULL AND _opp_org_id != 0))")
+    org_val = (f"CASE WHEN {is_('Organisation')} THEN coalesce(_org_name, '') "
+               "ELSE coalesce(_org2_name, '') END")
 
     links_resolved = routed.groupBy("TASK_ID").agg(
-        last_wins(is_c, F.coalesce(F.col("_con_name"), F.lit("")), "_linked_contact"),
-        last_wins(is_l, F.coalesce(F.col("_led_name"), F.lit("")), "_linked_lead"),
-        last_wins(is_o, F.col("_opp_name"), "_linked_opp"),
+        last_wins(is_("Contact"), "coalesce(_con_name, '')", "_linked_contact"),
+        last_wins(is_("Lead"), "coalesce(_led_name, '')", "_linked_lead"),
+        last_wins(is_("Opportunity"), "_opp_name", "_linked_opp"),
         last_wins(org_cand, org_val, "_linked_org"),
-        last_wins(is_p, F.col("_prj_name"), "_linked_proj"),
-        last_wins(is_n, F.col("_nte_name"), "_linked_note"),
+        last_wins(is_("Project"), "_prj_name", "_linked_proj"),
+        last_wins(is_("Note"), "_nte_name", "_linked_note"),
     )
 
     enriched = (
         tasks.join(links_resolved, "TASK_ID", "left")
-        .join(cat, tasks["CATEGORY_ID"] == cat["_cat_id"], "left")
-        .join(usr, tasks["OWNER_USER_ID"] == usr["_uid"], "left")
+        .join(cat, F.expr("CATEGORY_ID = _cat_id"), "left")
+        .join(_dim(users, broadcast_dims, *_OWNER_DIM), F.expr("OWNER_USER_ID = _uid"), "left")
     )
-    return enriched.select(
-        F.col("TASK_ID").alias("TaskID"),
-        S.coalesce_str("_cat_name").alias("Category"),
-        F.col("STATUS").alias("Status"),
-        F.col("PERCENT_COMPLETE").alias("Percent Complete"),
-        F.col("PRIORITY").alias("Priority"),
-        S.coalesce_str("_owner").alias("Owner Name"),
-        F.col("ASSIGNED_TEAM_ID").alias("Assigned To Team"),
-        S.format_date_only(S.coalesce_str("ASSIGNED_DATE_UTC")).alias("Date Assigned"),
-        S.format_date_only(S.coalesce_str("DATE_CREATED_UTC")).alias("Date Created"),
-        S.format_date_only(S.coalesce_str("REMINDER_DATE_UTC")).alias("Date Reminder"),
-        S.format_date_only(S.coalesce_str("DUE_DATE")).alias("Date Due"),
-        S.format_date_only(S.coalesce_str("COMPLETED_DATE_UTC")).alias("Date Completed"),
-        S.coalesce_str("_linked_contact").alias("Linked Contact"),
-        S.coalesce_str("_linked_lead").alias("Linked Lead"),
-        S.coalesce_str("_linked_opp").alias("Linked Opportunity"),
-        S.coalesce_str("_linked_org").alias("Linked Organization"),
-        S.coalesce_str("_linked_proj").alias("Linked Project"),
-        S.coalesce_str("_linked_note").alias("Linked Note"),
+    date = lambda c: S.format_date_only(S.coalesce_str(c))  # noqa: E731
+    return enriched.selectExpr(
+        "TASK_ID AS `TaskID`",
+        f"{S.coalesce_str('_cat_name')} AS `Category`",
+        "STATUS AS `Status`",
+        "PERCENT_COMPLETE AS `Percent Complete`",
+        "PRIORITY AS `Priority`",
+        f"{S.coalesce_str('_owner')} AS `Owner Name`",
+        "ASSIGNED_TEAM_ID AS `Assigned To Team`",
+        f"{date('ASSIGNED_DATE_UTC')} AS `Date Assigned`",
+        f"{date('DATE_CREATED_UTC')} AS `Date Created`",
+        f"{date('REMINDER_DATE_UTC')} AS `Date Reminder`",
+        f"{date('DUE_DATE')} AS `Date Due`",
+        f"{date('COMPLETED_DATE_UTC')} AS `Date Completed`",
+        f"{S.coalesce_str('_linked_contact')} AS `Linked Contact`",
+        f"{S.coalesce_str('_linked_lead')} AS `Linked Lead`",
+        f"{S.coalesce_str('_linked_opp')} AS `Linked Opportunity`",
+        f"{S.coalesce_str('_linked_org')} AS `Linked Organization`",
+        f"{S.coalesce_str('_linked_proj')} AS `Linked Project`",
+        f"{S.coalesce_str('_linked_note')} AS `Linked Note`",
     ).dropDuplicates()
 
 
@@ -581,167 +499,112 @@ def opportunity_export(
     broadcast_dims: bool = True,
 ) -> DataFrame:
     _ensure_confs(opportunities)
-    m = _cf()
-    o = opportunities.withColumn("_cf", m)
-    cfv = lambda k: F.element_at(F.col("_cf"), F.lit(k))  # noqa: E731
 
-    org = organisations.select(
-        F.col("ORGANISATION_ID").alias("_oid"),
-        S.coalesce_str("ORGANISATION_NAME").alias("_oname"),
+    def dim(df: DataFrame, *exprs: str) -> DataFrame:
+        return _dim(df, broadcast_dims, *exprs)
+
+    org = organisations.selectExpr(
+        "ORGANISATION_ID AS _oid", f"{S.coalesce_str('ORGANISATION_NAME')} AS _oname"
     )
 
     def org_role(alias: str) -> DataFrame:
-        return _dim(
-            org.select(
-                F.col("_oid").alias(f"{alias}_id"), F.col("_oname").alias(f"{alias}_name")
-            ),
-            broadcast_dims,
-        )
+        return dim(org, f"_oid AS {alias}_id", f"_oname AS {alias}_name")
 
-    usr = _dim(
-        users.select(F.col("USER_ID").alias("_uid"), _user_composite().alias("_owner")),
-        broadcast_dims,
-    )
-    stg = _dim(
-        stages.select(
-            F.col("STAGE_ID").alias("_stg_id"), S.coalesce_str("STAGE_NAME").alias("_stg_name")
-        ),
-        broadcast_dims,
-    )
-    rsn = _dim(
-        state_reasons.select(
-            F.col("STATE_REASON_ID").alias("_rsn_id"),
-            S.coalesce_str("STATE_REASON").alias("_rsn_name"),
-        ),
-        broadcast_dims,
-    )
-    pbk = _dim(
-        pricebooks.select(
-            F.col("PRICEBOOK_ID").alias("_pbk_id"), S.coalesce_str("NAME").alias("_pbk_name")
-        ),
-        broadcast_dims,
-    )
-    prd = _dim(
-        products.select(
-            F.col("PRODUCT_ID").alias("_prd_id"),
-            S.coalesce_str("PRODUCT_FAMILY").alias("_prd_family"),
-        ),
-        broadcast_dims,
-    )
+    stg = dim(stages, "STAGE_ID AS _stg_id", f"{S.coalesce_str('STAGE_NAME')} AS _stg_name")
+    rsn = dim(state_reasons, "STATE_REASON_ID AS _rsn_id",
+              f"{S.coalesce_str('STATE_REASON')} AS _rsn_name")
+    pbk = dim(pricebooks, "PRICEBOOK_ID AS _pbk_id", f"{S.coalesce_str('NAME')} AS _pbk_name")
+    prd = dim(products, "PRODUCT_ID AS _prd_id", f"{S.coalesce_str('PRODUCT_FAMILY')} AS _prd_family")
 
     # J7: line items → pricebook entries → product ids per opportunity
     products_per_opp = (
-        line_items.join(
-            _dim(pricebook_entries, broadcast_dims),
-            "PRICEBOOK_ENTRY_ID",
-        )
-        .groupBy(F.col("OPPORTUNITY_ID").alias("_po_opp"))
-        .agg(F.sort_array(F.collect_list("PRODUCT_ID")).alias("_product_ids"))
+        line_items.join(_dim(pricebook_entries, broadcast_dims), "PRICEBOOK_ENTRY_ID")
+        .groupBy(F.expr("OPPORTUNITY_ID AS _po_opp"))
+        .agg(F.expr("sort_array(collect_list(PRODUCT_ID)) AS _product_ids"))
     )
 
     # J9: site names — Organisation links of the opportunity, excluding
     # its main org, names joined with ' and ' dropping empties
     # (opportunity.py:190-196). Deterministic order: link object id.
     site_names = (
-        opportunity_links.filter(F.col("OBJECT_NAME") == "Opportunity")
-        .filter(F.col("LINK_OBJECT_NAME") == "Organisation")
-        .join(
-            _dim(org, broadcast_dims),
-            F.col("LINK_OBJECT_ID") == F.col("_oid"),
-            "left",
-        )
-        .groupBy(F.col("OBJECT_ID").alias("_sn_opp"))
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("LINK_OBJECT_ID"), F.col("_oid"), F.col("_oname")))
-            ).alias("_site_structs")
-        )
+        opportunity_links.filter("OBJECT_NAME = 'Opportunity'")
+        .filter("LINK_OBJECT_NAME = 'Organisation'")
+        .join(_dim(org, broadcast_dims), F.expr("LINK_OBJECT_ID = _oid"), "left")
+        .groupBy(F.expr("OBJECT_ID AS _sn_opp"))
+        .agg(F.expr("array_sort(collect_list(struct(LINK_OBJECT_ID, _oid, _oname))) AS _site_structs"))
     )
 
     joined = (
-        o.join(org_role("_main"), o["ORGANISATION_ID"] == F.col("_main_id"), "left")
-        .join(org_role("_ent"), cfv("Entity_Owning_Equipment__c").try_cast("bigint") == F.col("_ent_id"), "left")
-        .join(org_role("_chan"), cfv("Channel_Owner__c").try_cast("bigint") == F.col("_chan_id"), "left")
-        .join(usr, o["OWNER_USER_ID"] == usr["_uid"], "left")
-        .join(stg, o["STAGE_ID"] == stg["_stg_id"], "left")
-        .join(rsn, o["STATE_REASON_ID"] == rsn["_rsn_id"], "left")
-        .join(pbk, o["PRICEBOOK_ID"] == pbk["_pbk_id"], "left")
-        .join(products_per_opp, o["OPPORTUNITY_ID"] == F.col("_po_opp"), "left")
-        .join(site_names, o["OPPORTUNITY_ID"] == F.col("_sn_opp"), "left")
+        _with_cf(opportunities)
+        .join(org_role("_main"), F.expr("ORGANISATION_ID = _main_id"), "left")
+        .join(org_role("_ent"), _cf_key_join("Entity_Owning_Equipment__c", "_ent_id"), "left")
+        .join(org_role("_chan"), _cf_key_join("Channel_Owner__c", "_chan_id"), "left")
+        .join(_dim(users, broadcast_dims, *_OWNER_DIM), F.expr("OWNER_USER_ID = _uid"), "left")
+        .join(stg, F.expr("STAGE_ID = _stg_id"), "left")
+        .join(rsn, F.expr("STATE_REASON_ID = _rsn_id"), "left")
+        .join(pbk, F.expr("PRICEBOOK_ID = _pbk_id"), "left")
+        .join(products_per_opp, F.expr("OPPORTUNITY_ID = _po_opp"), "left")
+        .join(site_names, F.expr("OPPORTUNITY_ID = _sn_opp"), "left")
     )
 
     # the reference compares STRINGS with ''-defaults (opportunity.py:
     # 190-196: main_org = str(... or '')), so a null main org keeps every
     # linked site org — a raw column comparison would null out and drop
     # them all
-    main_org_str = F.coalesce(F.col("ORGANISATION_ID").cast("string"), F.lit(""))
-    site_name = F.array_join(
-        F.filter(
-            F.transform(
-                F.coalesce(F.col("_site_structs"), F.array()),
-                lambda s: F.when(
-                    F.coalesce(s["LINK_OBJECT_ID"].cast("string"), F.lit(""))
-                    != main_org_str,
-                    F.coalesce(s["_oname"], F.lit("")),
-                ).otherwise(F.lit("")),
-            ),
-            lambda x: x != "",
-        ),
-        " and ",
+    site_name = (
+        "array_join(filter(transform(coalesce(_site_structs, array()), "
+        "s -> CASE WHEN coalesce(CAST(s.LINK_OBJECT_ID AS STRING), '') "
+        "!= coalesce(CAST(ORGANISATION_ID AS STRING), '') "
+        "THEN coalesce(s._oname, '') ELSE '' END), x -> x != ''), ' and ')"
     )
 
     # J8 fan-out: one row per product id; zero products → one row, pid ''
-    fanned = joined.withColumn(
-        "_pid",
-        F.explode_outer(F.col("_product_ids")),
-    ).join(prd, F.col("_pid") == F.col("_prd_id"), "left")
+    fanned = joined.selectExpr("*", "explode_outer(_product_ids) AS _pid").join(
+        prd, F.expr("_pid = _prd_id"), "left"
+    )
 
-    mm = F.col("_cf")
-    ct = lambda c: S.clean_text(S.coalesce_str(c))  # noqa: E731
     # Trial?: str(cf.get('Trial__c', False)).upper() — missing → 'FALSE',
     # present-null → 'NONE', else upper(value)
     trial = (
-        F.when(~F.map_contains_key(mm, F.lit("Trial__c")), F.lit("FALSE"))
-        .when(F.element_at(mm, F.lit("Trial__c")).isNull(), F.lit("NONE"))
-        .otherwise(F.upper(F.element_at(mm, F.lit("Trial__c"))))
+        "CASE WHEN NOT map_contains_key(_cf, 'Trial__c') THEN 'FALSE' "
+        f"WHEN {_cfv('Trial__c')} IS NULL THEN 'NONE' ELSE upper({_cfv('Trial__c')}) END"
     )
-    owner_name = F.when(
-        F.col("_owner").isNull() | (F.col("_owner") == ""), F.lit("")
-    ).otherwise(S.clean_text(S.split_part(F.col("_owner"), ";", 1)))
-    return fanned.select(
-        F.col("OPPORTUNITY_ID").cast("string").alias("Opportunity ID"),
-        ct("OPPORTUNITY_NAME").alias("Opportunity Name"),
-        ct("_ent_name").alias("Entity Owning Equipment"),
-        site_name.alias("Site Name"),
-        ct("_chan_name").alias("Channel Partner"),
-        F.col("DATE_CREATED_UTC").alias("Date Created"),
-        F.col("FORECAST_CLOSE_DATE").alias("Date Closed (Forecast)"),
-        F.col("ACTUAL_CLOSE_DATE").alias("Date Closed (Actual)"),
-        F.col("OPPORTUNITY_VALUE").alias("Opportunity Value"),
-        F.col("BID_CURRENCY").alias("Bid Currency"),
-        F.col("OPPORTUNITY_STATE").alias("Opportunity State"),
-        S.coalesce_str("_stg_name").alias("Current Pipeline Stage"),
-        F.col("OPPORTUNITY_VALUE").alias("Expected Revenue"),  # Q2
-        F.col("LAST_ACTIVITY_DATE_UTC").alias("Date of Last Activity"),
-        F.col("NEXT_ACTIVITY_DATE_UTC").alias("Date of Next Activity"),
-        F.col("PROBABILITY").alias("Probability"),
-        ct("_rsn_name").alias("State Reason"),
+    owner_name = ("CASE WHEN _owner IS NULL OR _owner = '' THEN '' "
+                  f"ELSE {S.clean_text(S.split_part('_owner', ';', 1))} END")
+    won = S.encode_bool_flag("OPPORTUNITY_STATE = 'WON'")
+    return fanned.selectExpr(
+        "CAST(OPPORTUNITY_ID AS STRING) AS `Opportunity ID`",
+        f"{_clean_str('OPPORTUNITY_NAME')} AS `Opportunity Name`",
+        f"{_clean_str('_ent_name')} AS `Entity Owning Equipment`",
+        f"{site_name} AS `Site Name`",
+        f"{_clean_str('_chan_name')} AS `Channel Partner`",
+        "DATE_CREATED_UTC AS `Date Created`",
+        "FORECAST_CLOSE_DATE AS `Date Closed (Forecast)`",
+        "ACTUAL_CLOSE_DATE AS `Date Closed (Actual)`",
+        "OPPORTUNITY_VALUE AS `Opportunity Value`",
+        "BID_CURRENCY AS `Bid Currency`",
+        "OPPORTUNITY_STATE AS `Opportunity State`",
+        f"{S.coalesce_str('_stg_name')} AS `Current Pipeline Stage`",
+        "OPPORTUNITY_VALUE AS `Expected Revenue`",  # Q2
+        "LAST_ACTIVITY_DATE_UTC AS `Date of Last Activity`",
+        "NEXT_ACTIVITY_DATE_UTC AS `Date of Next Activity`",
+        "PROBABILITY AS `Probability`",
+        f"{_clean_str('_rsn_name')} AS `State Reason`",
         # P5: WON → 'TRUE'/'FALSE'
-        S.encode_bool_flag(F.col("OPPORTUNITY_STATE") == "WON").alias("Won"),
-        trial.alias("Trial?"),
-        S.cf_get(mm, "Quantity__c").alias("Opportunity Product Quantity"),
-        ct("_pbk_name").alias("Pricebook Name"),
-        ct("_owner").alias("Opportunity Owner"),
-        F.when(
-            F.col("_pid").isNotNull(), S.clean_text(S.coalesce_str("_prd_family"))
-        ).otherwise(F.lit("")).alias("Product Family"),
-        S.clean_text(S.cf_get(mm, "Product_Type__c")).alias("Archived Field - Product Type "),
-        F.coalesce(F.col("_pid").cast("string"), F.lit("")).alias("Product ID"),
-        ct("_main_name").alias("Organization Name"),
-        owner_name.alias("Owner Name"),
-        S.clean_text(S.cf_get(mm, "Channel_Type__c")).alias("Channel Type"),
-        S.clean_text(S.cf_get(mm, "GAP_Strategy__c")).alias("GAP Strategy"),
-        S.clean_text(S.cf_get(mm, "Current_State__c")).alias("GAP Current State"),
-        S.cf_get(mm, "Invoice_Number__c").alias("Invoice Number"),
-        S.cf_get(mm, "Purchase_Order__c").alias("Purchase Order"),
+        f"{won} AS `Won`",
+        f"{trial} AS `Trial?`",
+        f"{S.cf_get('_cf', 'Quantity__c')} AS `Opportunity Product Quantity`",
+        f"{_clean_str('_pbk_name')} AS `Pricebook Name`",
+        f"{_clean_str('_owner')} AS `Opportunity Owner`",
+        f"CASE WHEN _pid IS NOT NULL THEN {_clean_str('_prd_family')} ELSE '' END "
+        "AS `Product Family`",
+        f"{_cf_clean('Product_Type__c')} AS `Archived Field - Product Type `",
+        "coalesce(CAST(_pid AS STRING), '') AS `Product ID`",
+        f"{_clean_str('_main_name')} AS `Organization Name`",
+        f"{owner_name} AS `Owner Name`",
+        f"{_cf_clean('Channel_Type__c')} AS `Channel Type`",
+        f"{_cf_clean('GAP_Strategy__c')} AS `GAP Strategy`",
+        f"{_cf_clean('Current_State__c')} AS `GAP Current State`",
+        f"{S.cf_get('_cf', 'Invoice_Number__c')} AS `Invoice Number`",
+        f"{S.cf_get('_cf', 'Purchase_Order__c')} AS `Purchase Order`",
     ).dropDuplicates()

@@ -1,14 +1,25 @@
-"""Scalar functions (SURVEY §2.4 F1–F14) as Spark column expressions.
+"""Scalar functions (SURVEY §2.4 F1–F14) as Spark expressions.
 
-Every helper here returns a ``Column`` built from JVM-side built-ins so the
-whole expression tree stays inside WholeStageCodegen — the reference
-implements each of these as a per-row Python helper (e.g. ``clean_text`` at
+Every helper here builds on JVM-side built-ins so the whole expression
+tree stays inside WholeStageCodegen — the reference implements each of
+these as a per-row Python helper (e.g. ``clean_text`` at
 /root/reference/modules/opportunity.py:115-116, ``format_date`` at
 /root/reference/modules/quote.py:175-182); re-running those row-at-a-time in
 Python UDFs would be the slow path at 100 TB. The single genuinely
 non-relational function (HTML anchor extraction, F11 —
 /root/reference/modules/opportunity_stage.py:85-101) gets a regexp fast path
 with an optional bs4 fallback.
+
+The helpers the CRM exports use (``clean_text``, ``coalesce_str``, the
+``format_date_*`` family, ``split_part``, ``custom_fields_map``,
+``cf_get``, ``conditional_link_count``, ``encode_bool_flag``,
+``truthy_str``) take and return **SQL expression text**: the exports
+compose whole projections as text that the JVM parses once per
+``selectExpr`` (see ``exports.py``), where a ``Column`` tree costs one
+py4j round trip per node. A ``Column`` caller wraps the text in
+``F.expr``. Only code constants (field names, formats, separators) are
+interpolated, through :func:`sql_lit`. The remaining helpers return
+``Column``.
 """
 
 from __future__ import annotations
@@ -18,11 +29,18 @@ import re
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+
+def sql_lit(s: str) -> str:
+    """A Python string constant as a SQL string literal (backslashes and
+    quotes escaped for Spark's default string-literal parsing)."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
 # ---------------------------------------------------------------------------
 # text cleanup
 
 
-def clean_text(c: Column | str) -> Column:
+def clean_text(e: str) -> str:
     """F1 — collapse CR/LF to spaces and trim.
 
     Semantics of ``clean_text`` (/root/reference/modules/opportunity.py:115-116,
@@ -30,17 +48,16 @@ def clean_text(c: Column | str) -> Column:
     ``\\r`` and ``\\n`` becomes one space, then the ends are stripped.
     Nulls pass through (the reference passes non-strings through).
     """
-    return F.trim(F.regexp_replace(F.col(c) if isinstance(c, str) else c, "[\\r\\n]", " "))
+    return rf"trim(regexp_replace({e}, '[\\r\\n]', ' '))"
 
 
-def coalesce_str(*cols: Column | str) -> Column:
+def coalesce_str(*exprs: str) -> str:
     """P3/P4 — first non-null value, defaulting to ``''``.
 
     Mirrors the reference's ``.get(k, "") or fallback`` chains
     (/root/reference/modules/quote.py:220,226).
     """
-    as_cols = [F.col(c) if isinstance(c, str) else c for c in cols]
-    return F.coalesce(*as_cols, F.lit(""))
+    return f"coalesce({', '.join(exprs)}, '')"
 
 
 # ---------------------------------------------------------------------------
@@ -49,38 +66,34 @@ def coalesce_str(*cols: Column | str) -> Column:
 _REF_TS_FMT = "yyyy-MM-dd HH:mm:ss"
 
 
-def try_format_date(c: Column | str, in_fmt: str, out_fmt: str) -> Column:
+def try_format_date(e: str, in_fmt: str, out_fmt: str) -> str:
     """Shared combinator for F2–F4: reformat if parseable, else return the
     input string unchanged (the reference catches the parse error and
     returns the raw value — /root/reference/modules/quote.py:175-182).
     Output is therefore StringType, never Timestamp.
     """
-    col = F.col(c) if isinstance(c, str) else c
-    return F.coalesce(F.date_format(F.try_to_timestamp(col, F.lit(in_fmt)), out_fmt), col)
+    return (f"coalesce(date_format(try_to_timestamp({e}, {sql_lit(in_fmt)}), "
+            f"{sql_lit(out_fmt)}), {e})")
 
 
-def format_date_quote(c: Column | str) -> Column:
+def format_date_quote(e: str) -> str:
     """F2 — ``'2025-08-25 20:41:00'`` → ``'25-Aug-25 8:41 PM'``
     (/root/reference/modules/quote.py:175-182; ``%-I`` → Spark ``h``)."""
-    return try_format_date(c, _REF_TS_FMT, "dd-MMM-yy h:mm a")
+    return try_format_date(e, _REF_TS_FMT, "dd-MMM-yy h:mm a")
 
 
-def format_date_only(c: Column | str) -> Column:
+def format_date_only(e: str) -> str:
     """F3 — → ``'MM/dd/yyyy'`` (/root/reference/modules/task.py:109-116,
     organisation.py:108-116)."""
-    return try_format_date(c, _REF_TS_FMT, "MM/dd/yyyy")
+    return try_format_date(e, _REF_TS_FMT, "MM/dd/yyyy")
 
 
-def format_date_ui(c: Column | str) -> Column:
+def format_date_ui(e: str) -> str:
     """F4 — take the date part before ``' '``, emit ``'dd/MM/yyyy'``
     (/root/reference/modules/invoice.py:137-145); fallback = original
     full string."""
-    col = F.col(c) if isinstance(c, str) else c
-    date_part = F.get(F.split(col, " "), 0)
-    return F.coalesce(
-        F.date_format(F.try_to_timestamp(date_part, F.lit("yyyy-MM-dd")), "dd/MM/yyyy"),
-        col,
-    )
+    return (f"coalesce(date_format(try_to_timestamp(get(split({e}, ' '), 0), "
+            f"'yyyy-MM-dd'), 'dd/MM/yyyy'), {e})")
 
 
 # ---------------------------------------------------------------------------
@@ -105,21 +118,20 @@ def composite_key(id_col: Column | str, name_col: Column | str) -> Column:
     return F.concat_ws(";", i.cast("string"), n)
 
 
-def split_part(c: Column | str, delim: str, index: int) -> Column:
+def split_part(e: str, delim: str, index: int) -> str:
     """F7 — ``val.split(delim)[index]``
     (/root/reference/modules/opportunity.py:230-231). Null-safe: out-of-range
     or null input yields null (caller coalesces).
 
     The delimiter is a *literal* string (Python ``str.split`` semantics),
-    so it is regex-escaped before reaching ``F.split``'s Java-regex
+    so it is regex-escaped before reaching ``split``'s Java-regex
     parameter — ``'||'`` and ``'.'`` are live delimiters in this codebase
     (equipment's ``'Name||ID||User'`` keys, equiment.py:104-111).
     """
-    col = F.col(c) if isinstance(c, str) else c
-    # F.get is 0-based like Python indexing and yields null (never an
+    # get is 0-based like Python indexing and yields null (never an
     # INVALID_ARRAY_INDEX abort) when the index is out of range — the
     # documented contract, independent of the ANSI conf
-    return F.get(F.split(col, re.escape(delim)), index)
+    return f"get(split({e}, {sql_lit(re.escape(delim))}), {int(index)})"
 
 
 def org_owner_site_key(
@@ -144,54 +156,46 @@ def join_nonempty(arr: Column | str, sep: str = " and ") -> Column:
 # nested-array helpers (P1, P7, F9)
 
 
-def custom_fields_map(c: Column | str = "CUSTOMFIELDS") -> Column:
+def custom_fields_map(e: str = "CUSTOMFIELDS") -> str:
     """P1 — ``{FIELD_NAME: FIELD_VALUE}`` dict build
     (/root/reference/modules/quote.py:202 et al.) via ``map_from_entries``.
     Null array → empty map. Requires ``spark.sql.mapKeyDedupPolicy=LAST_WIN``
     (set by the session factory) to match Python-dict last-wins semantics.
     """
-    col = F.col(c) if isinstance(c, str) else c
-    return F.map_from_entries(F.coalesce(col, F.array()))
+    return f"map_from_entries(coalesce({e}, array()))"
 
 
-def cf_get(m: Column, key: str, default: str = "") -> Column:
+def cf_get(m: str, key: str, default: str = "") -> str:
     """``cf.get(key, default)`` over a custom-fields map; missing or null
     value → *default* (matches the reference's ``or ""`` guards)."""
-    return F.coalesce(F.element_at(m, F.lit(key)), F.lit(default))
+    return f"coalesce(element_at({m}, {sql_lit(key)}), {sql_lit(default)})"
 
 
-def filter_links(links: Column | str, object_name: str) -> Column:
-    """P7 — keep LINKS entries of one ``LINK_OBJECT_NAME``
-    (/root/reference/modules/opportunity.py:192-195)."""
-    col = F.col(links) if isinstance(links, str) else links
-    return F.filter(col, lambda l: l["LINK_OBJECT_NAME"] == F.lit(object_name))
-
-
-def conditional_link_count(links: Column | str, object_name: str) -> Column:
+def conditional_link_count(links: str, object_name: str) -> str:
     """F9/A2 — ``sum(1 for l in LINKS if l.LINK_OBJECT_NAME==x)``
     (/root/reference/modules/organisation.py:124). Null LINKS → 0 (the
-    reference defaults to ``[]``)."""
-    col = F.col(links) if isinstance(links, str) else links
-    return F.size(filter_links(F.coalesce(col, F.array()), object_name))
+    reference defaults to ``[]``). The filter keeps the LINKS entries of
+    one ``LINK_OBJECT_NAME`` (P7, opportunity.py:192-195)."""
+    return (f"size(filter(coalesce({links}, array()), "
+            f"l -> l.LINK_OBJECT_NAME = {sql_lit(object_name)}))")
 
 
 # ---------------------------------------------------------------------------
 # CASE / boolean encoders (P5)
 
 
-def encode_bool_flag(cond: Column) -> Column:
+def encode_bool_flag(cond: str) -> str:
     """P5 — ``"TRUE" if cond else "FALSE"``
     (/root/reference/modules/opportunity.py:221)."""
-    return F.when(cond, F.lit("TRUE")).otherwise(F.lit("FALSE"))
+    return f"CASE WHEN {cond} THEN 'TRUE' ELSE 'FALSE' END"
 
 
-def truthy_str(c: Column | str) -> Column:
+def truthy_str(e: str) -> str:
     """P5 — Python truthiness of a string value:
     ``bool(cf.get("Active__c", False))``
     (/root/reference/modules/organisation.py:127). Any non-empty string
     (including ``'False'``) is True; null/missing/'' is False."""
-    col = F.col(c) if isinstance(c, str) else c
-    return F.when(col.isNotNull() & (col != ""), F.lit(True)).otherwise(F.lit(False))
+    return f"CASE WHEN {e} IS NOT NULL AND {e} != '' THEN true ELSE false END"
 
 
 # ---------------------------------------------------------------------------

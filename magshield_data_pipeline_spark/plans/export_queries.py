@@ -13,6 +13,8 @@ relationally.
 Scale: the builders are one groupBy each (LINKS per parent key) plus
 broadcast dim joins; the export functions themselves add no exchange
 beyond the final dropDuplicates — same posture as exports.py documents.
+The builders write their projections as SQL expression text, as the
+exports do, so building an input costs one JVM parse per projection.
 """
 
 from __future__ import annotations
@@ -21,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from magshield_data_pipeline_spark import exports as X
+from magshield_data_pipeline_spark.functions.scalars import sql_lit
 from magshield_data_pipeline_spark.plans.registry import register
 from magshield_data_pipeline_spark.sources.parquet import (
     read_table,
@@ -28,15 +31,31 @@ from magshield_data_pipeline_spark.sources.parquet import (
 )
 
 # ---------------------------------------------------------------------------
+# CRM-shaped input, written as SQL expression text (one JVM parse per
+# projection, as in exports.py)
+
+
+def _field(name: str, value: str) -> str:
+    """One CUSTOMFIELDS entry: the field *name* and its *value* text."""
+    return f"struct({sql_lit(name)} AS FIELD_NAME, {value} AS FIELD_VALUE)"
+
+
+def _fields(*entries: str) -> str:
+    return f"array({', '.join(entries)})"
+
+
+_NO_FIELDS = "CAST(array() AS ARRAY<STRUCT<FIELD_NAME: STRING, FIELD_VALUE: STRING>>)"
+_NULL_STR = "CAST(NULL AS STRING)"
+# the day of month 01-28 every fixture date string derives from its key
+_DAY = "lpad(CAST(o_orderkey % 28 + 1 AS STRING), 2, '0')"
+# the dims the supplier / customer tables stand in for
+_SUPPLIER_USERS = ("s_suppkey AS USER_ID", "s_name AS FIRST_NAME",
+                   "CAST(s_nationkey AS STRING) AS LAST_NAME")
+_CUSTOMER_ORGS = ("c_custkey AS ORGANISATION_ID", "c_name AS ORGANISATION_NAME")
+
+# ---------------------------------------------------------------------------
 # organisation export (P1 map build, P5 truthiness, F1 clean_text,
 # F3 date-or-passthrough, F9 conditional link count, A4 formatted dedup)
-
-
-def _entry(name, value) -> F.Column:
-    return F.struct(
-        F.lit(name).alias("FIELD_NAME"),
-        (F.lit(value) if isinstance(value, str) else value).alias("FIELD_VALUE"),
-    )
 
 
 _ORG_EXPORT_SQL = r"""
@@ -92,60 +111,37 @@ def organisation_export_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = read_table(spark, sf_dir, "orders")
 
     geo = F.broadcast(
-        nation.join(region, nation["n_regionkey"] == region["r_regionkey"]).select(
+        nation.join(region, F.expr("n_regionkey = r_regionkey")).select(
             "n_nationkey", "n_name", "r_name"
         )
     )
-    link_name = (
-        F.when(F.col("o_orderstatus") == "F", "Contact")
-        .when(F.col("o_orderstatus") == "O", "Opportunity")
-        .otherwise("Organisation")
+    link_name = ("CASE WHEN o_orderstatus = 'F' THEN 'Contact' "
+                 "WHEN o_orderstatus = 'O' THEN 'Opportunity' ELSE 'Organisation' END")
+    links = orders.groupBy("o_custkey").agg(F.expr(
+        f"collect_list(struct({link_name} AS LINK_OBJECT_NAME, "
+        "o_orderkey AS LINK_OBJECT_ID)) AS LINKS"
+    ))
+    base_cf = _fields(
+        _field("Call_Frequency__c", "'weekly'"),
+        _field("Region__c", "r_name"),
+        _field("Call_Frequency__c", "c_mktsegment"),
+        _field("Organization_Type__c",
+               "CASE WHEN c_acctbal < 0 THEN 'debtor' ELSE 'credit' END"),
     )
-    links = orders.groupBy("o_custkey").agg(
-        F.collect_list(
-            F.struct(
-                link_name.alias("LINK_OBJECT_NAME"),
-                F.col("o_orderkey").alias("LINK_OBJECT_ID"),
-            )
-        ).alias("LINKS")
-    )
-    base_cf = F.array(
-        _entry("Call_Frequency__c", "weekly"),
-        _entry("Region__c", F.col("r_name")),
-        _entry("Call_Frequency__c", F.col("c_mktsegment")),
-        _entry(
-            "Organization_Type__c",
-            F.when(F.col("c_acctbal") < 0, "debtor").otherwise("credit"),
-        ),
-    )
-    active = F.when(F.col("c_mktsegment") == "BUILDING", F.lit("")).otherwise(
-        F.lit("yes")
-    )
-    cf = F.when(
-        F.col("c_custkey") % 2 == 0,
-        F.concat(base_cf, F.array(_entry("Active__c", active))),
-    ).otherwise(base_cf)
-    datestr = F.when(
-        F.col("c_custkey") % 7 == 0, F.lit("never-created")
-    ).otherwise(
-        F.concat(
-            F.lit("2024-01-"),
-            F.lpad(((F.col("c_custkey") % 28) + 1).cast("string"), 2, "0"),
-            F.lit(" 10:30:00"),
-        )
-    )
+    active = _field("Active__c", "CASE WHEN c_mktsegment = 'BUILDING' THEN '' ELSE 'yes' END")
     orgs = (
-        customer.join(geo, customer["c_nationkey"] == geo["n_nationkey"])
-        .join(links, customer["c_custkey"] == links["o_custkey"], "left")
-        .select(
-            F.col("c_custkey").alias("ORGANISATION_ID"),
-            F.concat(F.col("c_name"), F.lit("\n"), F.col("c_mktsegment")).alias(
-                "ORGANISATION_NAME"
-            ),
-            datestr.alias("DATE_CREATED_UTC"),
-            F.col("LINKS"),
-            cf.alias("CUSTOMFIELDS"),
-            F.col("n_name").alias("ADDRESS_BILLING_COUNTRY"),
+        customer.join(geo, F.expr("c_nationkey = n_nationkey"))
+        .join(links, F.expr("c_custkey = o_custkey"), "left")
+        .selectExpr(
+            "c_custkey AS ORGANISATION_ID",
+            r"concat(c_name, '\n', c_mktsegment) AS ORGANISATION_NAME",
+            "CASE WHEN c_custkey % 7 = 0 THEN 'never-created' ELSE concat('2024-01-', "
+            "lpad(CAST(c_custkey % 28 + 1 AS STRING), 2, '0'), ' 10:30:00') END "
+            "AS DATE_CREATED_UTC",
+            "LINKS",
+            f"CASE WHEN c_custkey % 2 = 0 THEN concat({base_cf}, {_fields(active)}) "
+            f"ELSE {base_cf} END AS CUSTOMFIELDS",
+            "n_name AS ADDRESS_BILLING_COUNTRY",
         )
     )
     return X.organisation_export(orgs)
@@ -226,77 +222,44 @@ def quote_export_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer = read_table(spark, sf_dir, "customer")
     supplier = read_table(spark, sf_dir, "supplier")
 
-    sp_val = F.col("o_custkey").cast("string")
-    cf = (
-        F.when(
-            F.col("o_orderkey") % 5 == 0,
-            F.array(_entry("Sales_Person__c", F.lit(None).cast("string"))),
-        )
-        .when(F.col("o_orderkey") % 5 == 1, F.array().cast(
-            "array<struct<FIELD_NAME:string,FIELD_VALUE:string>>"
-        ))
-        .otherwise(F.array(_entry("Sales_Person__c", sp_val)))
+    sales_person = (
+        f"CASE WHEN o_orderkey % 5 = 0 THEN {_fields(_field('Sales_Person__c', _NULL_STR))} "
+        f"WHEN o_orderkey % 5 = 1 THEN {_NO_FIELDS} "
+        f"ELSE {_fields(_field('Sales_Person__c', 'CAST(o_custkey AS STRING)'))} END"
     )
-    gt = (
-        F.when(F.col("o_orderkey") % 3 == 1, F.array(_entry("Grand_Total__c", F.lit(""))))
-        .when(
-            F.col("o_orderkey") % 3 == 2,
-            F.array(
-                _entry(
-                    "Grand_Total__c",
-                    F.concat(F.lit("override-"), F.col("o_orderkey").cast("string")),
-                )
-            ),
-        )
-        .otherwise(F.array().cast("array<struct<FIELD_NAME:string,FIELD_VALUE:string>>"))
+    override = "concat('override-', CAST(o_orderkey AS STRING))"
+    grand_total = (
+        f"CASE WHEN o_orderkey % 3 = 1 THEN {_fields(_field('Grand_Total__c', sql_lit('')))} "
+        f"WHEN o_orderkey % 3 = 2 THEN {_fields(_field('Grand_Total__c', override))} "
+        f"ELSE {_NO_FIELDS} END"
     )
-    gst = F.array(_entry("GST_Percentage__c", "10"))
-    quotes = orders.select(
-        F.col("o_orderkey").alias("QUOTE_ID"),
-        F.concat(F.lit("Q-"), F.col("o_orderkey").cast("string")).alias(
-            "QUOTATION_NUMBER"
-        ),
-        F.col("o_orderstatus").alias("QUOTE_STATUS"),
-        F.col("o_orderpriority").alias("QUOTATION_NAME"),
-        F.col("o_totalprice").alias("SUBTOTAL"),
-        F.col("o_totalprice").alias("TOTAL_PRICE"),
-        F.date_format("o_orderdate", "yyyy-MM-dd").alias(
-            "QUOTATION_EXPIRATION_DATE"
-        ),
-        F.format_string("%.2f", F.col("o_totalprice")).alias("GRAND_TOTAL"),
-        F.concat(cf, gt, gst).alias("CUSTOMFIELDS"),
-        F.lit("AU").alias("ADDRESS_BILLING_COUNTRY"),
-        F.lit("USD").alias("QUOTATION_CURRENCY_CODE"),
-        F.lit(0.05).alias("DISCOUNT"),
-        F.when(
-            F.col("o_orderkey") % 4 == 0,
-            F.concat(F.lit("Inline-"), F.col("o_custkey").cast("string")),
-        )
-        .otherwise(F.lit(""))
-        .alias("ORGANISATION_NAME"),
-        ((F.col("o_orderkey") % 17) + 1).alias("ORGANISATION_ID"),
-        F.date_format("o_orderdate", "yyyy-MM-dd HH:mm:ss").alias(
-            "DATE_CREATED_UTC"
-        ),
-        F.date_format("o_orderdate", "yyyy-MM-dd HH:mm:ss").alias(
-            "DATE_UPDATED_UTC"
-        ),
-        F.lit("").alias("OPPORTUNITY_NAME"),
-        F.col("o_custkey").alias("OPPORTUNITY_ID"),
-        F.lit(None).cast("string").alias("ADDRESS_SHIPPING_COUNTRY"),
+    gst = _fields(_field("GST_Percentage__c", "'10'"))
+    quotes = orders.selectExpr(
+        "o_orderkey AS QUOTE_ID",
+        "concat('Q-', CAST(o_orderkey AS STRING)) AS QUOTATION_NUMBER",
+        "o_orderstatus AS QUOTE_STATUS",
+        "o_orderpriority AS QUOTATION_NAME",
+        "o_totalprice AS SUBTOTAL",
+        "o_totalprice AS TOTAL_PRICE",
+        "date_format(o_orderdate, 'yyyy-MM-dd') AS QUOTATION_EXPIRATION_DATE",
+        "format_string('%.2f', o_totalprice) AS GRAND_TOTAL",
+        f"concat({sales_person}, {grand_total}, {gst}) AS CUSTOMFIELDS",
+        "'AU' AS ADDRESS_BILLING_COUNTRY",
+        "'USD' AS QUOTATION_CURRENCY_CODE",
+        "CAST(0.05 AS DOUBLE) AS DISCOUNT",
+        "CASE WHEN o_orderkey % 4 = 0 THEN concat('Inline-', CAST(o_custkey AS STRING)) "
+        "ELSE '' END AS ORGANISATION_NAME",
+        "o_orderkey % 17 + 1 AS ORGANISATION_ID",
+        "date_format(o_orderdate, 'yyyy-MM-dd HH:mm:ss') AS DATE_CREATED_UTC",
+        "date_format(o_orderdate, 'yyyy-MM-dd HH:mm:ss') AS DATE_UPDATED_UTC",
+        "'' AS OPPORTUNITY_NAME",
+        "o_custkey AS OPPORTUNITY_ID",
+        f"{_NULL_STR} AS ADDRESS_SHIPPING_COUNTRY",
     )
-    opportunities = customer.select(
-        F.col("c_custkey").alias("OPPORTUNITY_ID"),
-        F.col("c_name").alias("OPPORTUNITY_NAME"),
-    )
-    organisations = supplier.select(
-        F.col("s_suppkey").alias("ORGANISATION_ID"),
-        F.col("s_name").alias("ORGANISATION_NAME"),
-    )
-    contacts = customer.select(
-        F.col("c_custkey").alias("CONTACT_ID"),
-        F.col("c_name").alias("FIRST_NAME"),
-        F.lit(None).cast("string").alias("LAST_NAME"),
+    opportunities = customer.selectExpr("c_custkey AS OPPORTUNITY_ID", "c_name AS OPPORTUNITY_NAME")
+    organisations = supplier.selectExpr("s_suppkey AS ORGANISATION_ID", "s_name AS ORGANISATION_NAME")
+    contacts = customer.selectExpr(
+        "c_custkey AS CONTACT_ID", "c_name AS FIRST_NAME", f"{_NULL_STR} AS LAST_NAME"
     )
     # dims derive from customer/supplier (scale with SF) — per exports.py's
     # dim-size contract, no forced broadcast: AQE decides
@@ -308,6 +271,7 @@ def quote_export_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # task export (J10-J11, Q5 order-sensitive last-wins fold, F3 dates)
 
+# the oracle twins' spelling of _DAY
 _DD = "lpad(CAST(o_orderkey % 28 + 1 AS VARCHAR), 2, '0')"
 
 _TASK_EXPORT_SQL = f"""
@@ -433,112 +397,62 @@ def task_export_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = read_table(spark, sf_dir, "part")
 
     typ = (
-        F.when(F.col("l_partkey") % 6 == 0, "Contact")
-        .when(F.col("l_partkey") % 6 == 1, "Lead")
-        .when(F.col("l_partkey") % 6 == 2, "Opportunity")
-        .when(F.col("l_partkey") % 6 == 3, "Organisation")
-        .when(F.col("l_partkey") % 6 == 4, "Project")
-        .otherwise("Note")
+        "CASE WHEN l_partkey % 6 = 0 THEN 'Contact' WHEN l_partkey % 6 = 1 THEN 'Lead' "
+        "WHEN l_partkey % 6 = 2 THEN 'Opportunity' WHEN l_partkey % 6 = 3 THEN 'Organisation' "
+        "WHEN l_partkey % 6 = 4 THEN 'Project' ELSE 'Note' END"
     )
     lid = (
-        F.when(F.col("l_partkey") % 6 == 0, (F.col("l_partkey") % 1500) + 1)
-        .when(F.col("l_partkey") % 6 == 1, F.col("l_suppkey") % 25)
-        .when(F.col("l_partkey") % 6 == 2, F.col("l_partkey"))
-        .when(
-            F.col("l_partkey") % 6 == 3,
-            F.when(F.col("l_suppkey") % 3 == 0, F.lit(999999)).otherwise(
-                (F.col("l_suppkey") % 1500) + 1
-            ),
-        )
-        .when(F.col("l_partkey") % 6 == 4, F.col("l_suppkey") % 25)
-        .otherwise(F.col("l_suppkey") % 5)
+        "CASE WHEN l_partkey % 6 = 0 THEN l_partkey % 1500 + 1 "
+        "WHEN l_partkey % 6 = 1 THEN l_suppkey % 25 "
+        "WHEN l_partkey % 6 = 2 THEN l_partkey "
+        "WHEN l_partkey % 6 = 3 THEN "
+        "CASE WHEN l_suppkey % 3 = 0 THEN 999999 ELSE l_suppkey % 1500 + 1 END "
+        "WHEN l_partkey % 6 = 4 THEN l_suppkey % 25 ELSE l_suppkey % 5 END"
     )
-    sortable = F.struct(
-        F.col("l_linenumber").alias("a"),
-        F.col("l_partkey").alias("b"),
-        F.col("l_suppkey").alias("c"),
-        typ.alias("t"),
-        lid.cast("long").alias("i"),
-    )
+    sortable = (f"struct(l_linenumber AS a, l_partkey AS b, l_suppkey AS c, "
+                f"{typ} AS t, CAST({lid} AS BIGINT) AS i)")
     links = (
         lineitem.groupBy("l_orderkey")
-        .agg(F.array_sort(F.collect_list(sortable)).alias("_s"))
-        .select(
+        .agg(F.expr(f"array_sort(collect_list({sortable})) AS _s"))
+        .selectExpr(
             "l_orderkey",
-            F.transform(
-                "_s",
-                lambda s: F.struct(
-                    s["t"].alias("LINK_OBJECT_NAME"),
-                    s["i"].alias("LINK_OBJECT_ID"),
-                ),
-            ).alias("LINKS"),
+            "transform(_s, s -> struct(s.t AS LINK_OBJECT_NAME, s.i AS LINK_OBJECT_ID)) AS LINKS",
         )
     )
-    dd = F.lpad(((F.col("o_orderkey") % 28) + 1).cast("string"), 2, "0")
-    iso = lambda mm: F.concat(F.lit(f"2024-{mm}-"), dd, F.lit(" 10:00:00"))  # noqa: E731
-    tasks = orders.join(
-        links, orders["o_orderkey"] == links["l_orderkey"], "left"
-    ).select(
-        F.col("o_orderkey").alias("TASK_ID"),
-        (F.col("o_custkey") % 5).alias("CATEGORY_ID"),
-        F.col("o_orderstatus").alias("STATUS"),
-        (F.col("o_orderkey") % 100).cast("double").alias("PERCENT_COMPLETE"),
-        F.col("o_orderpriority").alias("PRIORITY"),
-        ((F.col("o_custkey") % 100) + 1).alias("OWNER_USER_ID"),
-        (F.col("o_custkey") % 10).alias("ASSIGNED_TEAM_ID"),
-        F.when(F.col("o_orderkey") % 7 == 0, "tbd").otherwise(iso("01")).alias(
-            "ASSIGNED_DATE_UTC"
-        ),
-        F.when(F.col("o_orderkey") % 5 == 0, "n/a").otherwise(iso("02")).alias(
-            "DATE_CREATED_UTC"
-        ),
-        F.lit("").alias("REMINDER_DATE_UTC"),
-        iso("03").alias("DUE_DATE"),
-        F.when(F.col("o_orderstatus") == "F", iso("04")).otherwise("").alias(
-            "COMPLETED_DATE_UTC"
-        ),
-        F.col("LINKS"),
+    iso = lambda mm: f"concat('2024-{mm}-', {_DAY}, ' 10:00:00')"  # noqa: E731
+    tasks = orders.join(links, F.expr("o_orderkey = l_orderkey"), "left").selectExpr(
+        "o_orderkey AS TASK_ID",
+        "o_custkey % 5 AS CATEGORY_ID",
+        "o_orderstatus AS STATUS",
+        "CAST(o_orderkey % 100 AS DOUBLE) AS PERCENT_COMPLETE",
+        "o_orderpriority AS PRIORITY",
+        "o_custkey % 100 + 1 AS OWNER_USER_ID",
+        "o_custkey % 10 AS ASSIGNED_TEAM_ID",
+        f"CASE WHEN o_orderkey % 7 = 0 THEN 'tbd' ELSE {iso('01')} END AS ASSIGNED_DATE_UTC",
+        f"CASE WHEN o_orderkey % 5 = 0 THEN 'n/a' ELSE {iso('02')} END AS DATE_CREATED_UTC",
+        "'' AS REMINDER_DATE_UTC",
+        f"{iso('03')} AS DUE_DATE",
+        f"CASE WHEN o_orderstatus = 'F' THEN {iso('04')} ELSE '' END AS COMPLETED_DATE_UTC",
+        "LINKS",
     )
     return X.task_export(
         tasks=tasks,
-        categories=region.select(
-            F.col("r_regionkey").alias("CATEGORY_ID"),
-            F.col("r_name").alias("CATEGORY_NAME"),
+        categories=region.selectExpr("r_regionkey AS CATEGORY_ID", "r_name AS CATEGORY_NAME"),
+        users=supplier.selectExpr(*_SUPPLIER_USERS),
+        contacts=customer.selectExpr(
+            "c_custkey AS CONTACT_ID", "c_name AS FIRST_NAME", "c_mktsegment AS LAST_NAME"
         ),
-        users=supplier.select(
-            F.col("s_suppkey").alias("USER_ID"),
-            F.col("s_name").alias("FIRST_NAME"),
-            F.col("s_nationkey").cast("string").alias("LAST_NAME"),
+        leads=nation.selectExpr(
+            "n_nationkey AS LEAD_ID", "n_name AS FIRST_NAME", "'lead' AS LAST_NAME"
         ),
-        contacts=customer.select(
-            F.col("c_custkey").alias("CONTACT_ID"),
-            F.col("c_name").alias("FIRST_NAME"),
-            F.col("c_mktsegment").alias("LAST_NAME"),
+        opportunities=part.selectExpr(
+            "p_partkey AS OPPORTUNITY_ID",
+            "p_name AS OPPORTUNITY_NAME",
+            "CASE WHEN p_partkey % 5 = 0 THEN 0 ELSE p_partkey % 1500 + 1 END AS ORGANISATION_ID",
         ),
-        leads=nation.select(
-            F.col("n_nationkey").alias("LEAD_ID"),
-            F.col("n_name").alias("FIRST_NAME"),
-            F.lit("lead").alias("LAST_NAME"),
-        ),
-        opportunities=part.select(
-            F.col("p_partkey").alias("OPPORTUNITY_ID"),
-            F.col("p_name").alias("OPPORTUNITY_NAME"),
-            F.when(F.col("p_partkey") % 5 == 0, F.lit(0))
-            .otherwise((F.col("p_partkey") % 1500) + 1)
-            .alias("ORGANISATION_ID"),
-        ),
-        organisations=customer.select(
-            F.col("c_custkey").alias("ORGANISATION_ID"),
-            F.col("c_name").alias("ORGANISATION_NAME"),
-        ),
-        projects=nation.select(
-            F.col("n_nationkey").alias("PROJECT_ID"),
-            F.concat(F.lit("proj-"), F.col("n_name")).alias("PROJECT_NAME"),
-        ),
-        notes=region.select(
-            F.col("r_regionkey").alias("NOTE_ID"),
-            F.concat(F.lit("note-"), F.col("r_name")).alias("TITLE"),
-        ),
+        organisations=customer.selectExpr(*_CUSTOMER_ORGS),
+        projects=nation.selectExpr("n_nationkey AS PROJECT_ID", "concat('proj-', n_name) AS PROJECT_NAME"),
+        notes=region.selectExpr("r_regionkey AS NOTE_ID", "concat('note-', r_name) AS TITLE"),
         broadcast_dims=False,
     )
 
@@ -546,8 +460,6 @@ def task_export_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # opportunity export (the flagship: J4-J9, fan-out J8, Q2 duplicate
 # column, P5 flags, LAST_WIN custom fields, try_cast join keys)
-
-_ODD = "lpad(CAST(o_orderkey % 28 + 1 AS VARCHAR), 2, '0')"
 
 _OPP_EXPORT_SQL = f"""
 WITH o AS (
@@ -590,16 +502,16 @@ SELECT DISTINCT
     coalesce(site.site_name, '') AS "Site Name",
     CASE WHEN o.opp_id % 13 = 0 THEN ''
          ELSE coalesce(chan.c_name, '') END AS "Channel Partner",
-    '2024-01-' || {_ODD.replace('o_orderkey', 'o.opp_id')} || ' 08:00:00' AS "Date Created",
-    '2024-02-' || {_ODD.replace('o_orderkey', 'o.opp_id')} || ' 08:00:00' AS "Date Closed (Forecast)",
-    '2024-03-' || {_ODD.replace('o_orderkey', 'o.opp_id')} || ' 08:00:00' AS "Date Closed (Actual)",
+    '2024-01-' || {_DD.replace('o_orderkey', 'o.opp_id')} || ' 08:00:00' AS "Date Created",
+    '2024-02-' || {_DD.replace('o_orderkey', 'o.opp_id')} || ' 08:00:00' AS "Date Closed (Forecast)",
+    '2024-03-' || {_DD.replace('o_orderkey', 'o.opp_id')} || ' 08:00:00' AS "Date Closed (Actual)",
     o.value AS "Opportunity Value",
     CASE WHEN o.opp_id % 2 = 0 THEN 'USD' ELSE 'EUR' END AS "Bid Currency",
     o.state AS "Opportunity State",
     coalesce('stage-' || stg.n_name, '') AS "Current Pipeline Stage",
     o.value AS "Expected Revenue",
-    '2024-04-' || {_ODD.replace('o_orderkey', 'o.opp_id')} || ' 08:00:00' AS "Date of Last Activity",
-    '2024-05-' || {_ODD.replace('o_orderkey', 'o.opp_id')} || ' 08:00:00' AS "Date of Next Activity",
+    '2024-04-' || {_DD.replace('o_orderkey', 'o.opp_id')} || ' 08:00:00' AS "Date of Last Activity",
+    '2024-05-' || {_DD.replace('o_orderkey', 'o.opp_id')} || ' 08:00:00' AS "Date of Next Activity",
     o.probability AS "Probability",
     coalesce('reason-' || rsn.r_name, '') AS "State Reason",
     CASE WHEN o.state = 'WON' THEN 'TRUE' ELSE 'FALSE' END AS "Won",
@@ -664,118 +576,72 @@ def opportunity_export_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     region = read_table(spark, sf_dir, "region")
     part = read_table(spark, sf_dir, "part")
 
-    k = F.col("o_orderkey")
-    dd = F.lpad(((k % 28) + 1).cast("string"), 2, "0")
-    iso = lambda mm: F.concat(F.lit(f"2024-{mm}-"), dd, F.lit(" 08:00:00"))  # noqa: E731
-
-    def e(name, value):
-        return _entry(name, value)
-
-    null_str = F.lit(None).cast("string")
-    base_cf = F.array(
-        e("Quantity__c", "X"),  # duplicate key: LAST_WIN must drop this
-        e("Entity_Owning_Equipment__c", ((F.col("o_custkey") % 1500) + 1).cast("string")),
-        e(
-            "Channel_Owner__c",
-            F.when(k % 13 == 0, F.lit("nan")).otherwise(
-                ((F.col("o_custkey") % 700) + 1).cast("string")
-            ),
-        ),
-        e("Quantity__c", (k % 9).cast("string")),
-        e("Product_Type__c", F.concat(F.lit("type-"), (k % 3).cast("string"))),
-        e("Channel_Type__c", F.when(k % 2 == 0, "direct").otherwise("partner")),
-        e("GAP_Strategy__c", F.concat(F.lit("gap-"), (k % 5).cast("string"))),
-        e("Current_State__c", F.concat(F.lit("state-"), (k % 7).cast("string"))),
-        e("Invoice_Number__c", F.concat(F.lit("INV-"), k.cast("string"))),
-        e(
-            "Purchase_Order__c",
-            F.when(k % 9 == 0, null_str).otherwise(
-                F.concat(F.lit("PO-"), F.col("o_custkey").cast("string"))
-            ),
-        ),
+    iso = lambda mm: f"concat('2024-{mm}-', {_DAY}, ' 08:00:00')"  # noqa: E731
+    base_cf = _fields(
+        _field("Quantity__c", "'X'"),  # duplicate key: LAST_WIN must drop this
+        _field("Entity_Owning_Equipment__c", "CAST(o_custkey % 1500 + 1 AS STRING)"),
+        _field("Channel_Owner__c", "CASE WHEN o_orderkey % 13 = 0 THEN 'nan' "
+                                   "ELSE CAST(o_custkey % 700 + 1 AS STRING) END"),
+        _field("Quantity__c", "CAST(o_orderkey % 9 AS STRING)"),
+        _field("Product_Type__c", "concat('type-', CAST(o_orderkey % 3 AS STRING))"),
+        _field("Channel_Type__c", "CASE WHEN o_orderkey % 2 = 0 THEN 'direct' ELSE 'partner' END"),
+        _field("GAP_Strategy__c", "concat('gap-', CAST(o_orderkey % 5 AS STRING))"),
+        _field("Current_State__c", "concat('state-', CAST(o_orderkey % 7 AS STRING))"),
+        _field("Invoice_Number__c", "concat('INV-', CAST(o_orderkey AS STRING))"),
+        _field("Purchase_Order__c", f"CASE WHEN o_orderkey % 9 = 0 THEN {_NULL_STR} "
+                                    "ELSE concat('PO-', CAST(o_custkey AS STRING)) END"),
     )
-    cf = F.when(k % 4 == 0, base_cf).otherwise(
-        F.concat(
-            base_cf,
-            F.array(
-                e(
-                    "Trial__c",
-                    F.when(k % 4 == 1, null_str)
-                    .when(k % 4 == 2, F.lit("yes"))
-                    .otherwise(F.lit("no")),
-                )
-            ),
-        )
-    )
-    opportunities = orders.select(
-        k.alias("OPPORTUNITY_ID"),
+    trial = _field("Trial__c", f"CASE WHEN o_orderkey % 4 = 1 THEN {_NULL_STR} "
+                               "WHEN o_orderkey % 4 = 2 THEN 'yes' ELSE 'no' END")
+    opportunities = orders.selectExpr(
+        "o_orderkey AS OPPORTUNITY_ID",
         # newline inside the name exercises F1 clean_text
-        F.concat(F.lit("Opp"), F.lit("\n"), k.cast("string")).alias(
-            "OPPORTUNITY_NAME"
-        ),
-        F.when(k % 11 == 0, F.lit(None).cast("long"))
-        .otherwise(F.col("o_custkey"))
-        .alias("ORGANISATION_ID"),
-        ((F.col("o_custkey") % 100) + 1).alias("OWNER_USER_ID"),
-        (k % 6).alias("STAGE_ID"),
-        (k % 4).alias("STATE_REASON_ID"),
-        (k % 3).alias("PRICEBOOK_ID"),
-        iso("01").alias("DATE_CREATED_UTC"),
-        iso("02").alias("FORECAST_CLOSE_DATE"),
-        iso("03").alias("ACTUAL_CLOSE_DATE"),
-        F.col("o_totalprice").alias("OPPORTUNITY_VALUE"),
-        F.when(k % 2 == 0, "USD").otherwise("EUR").alias("BID_CURRENCY"),
-        F.when(k % 3 == 0, "WON")
-        .when(k % 3 == 1, "OPEN")
-        .otherwise("LOST")
-        .alias("OPPORTUNITY_STATE"),
-        iso("04").alias("LAST_ACTIVITY_DATE_UTC"),
-        iso("05").alias("NEXT_ACTIVITY_DATE_UTC"),
-        (k % 100).cast("double").alias("PROBABILITY"),
-        cf.alias("CUSTOMFIELDS"),
+        r"concat('Opp', '\n', CAST(o_orderkey AS STRING)) AS OPPORTUNITY_NAME",
+        "CASE WHEN o_orderkey % 11 = 0 THEN CAST(NULL AS BIGINT) ELSE o_custkey END "
+        "AS ORGANISATION_ID",
+        "o_custkey % 100 + 1 AS OWNER_USER_ID",
+        "o_orderkey % 6 AS STAGE_ID",
+        "o_orderkey % 4 AS STATE_REASON_ID",
+        "o_orderkey % 3 AS PRICEBOOK_ID",
+        f"{iso('01')} AS DATE_CREATED_UTC",
+        f"{iso('02')} AS FORECAST_CLOSE_DATE",
+        f"{iso('03')} AS ACTUAL_CLOSE_DATE",
+        "o_totalprice AS OPPORTUNITY_VALUE",
+        "CASE WHEN o_orderkey % 2 = 0 THEN 'USD' ELSE 'EUR' END AS BID_CURRENCY",
+        "CASE WHEN o_orderkey % 3 = 0 THEN 'WON' WHEN o_orderkey % 3 = 1 THEN 'OPEN' "
+        "ELSE 'LOST' END AS OPPORTUNITY_STATE",
+        f"{iso('04')} AS LAST_ACTIVITY_DATE_UTC",
+        f"{iso('05')} AS NEXT_ACTIVITY_DATE_UTC",
+        "CAST(o_orderkey % 100 AS DOUBLE) AS PROBABILITY",
+        f"CASE WHEN o_orderkey % 4 = 0 THEN {base_cf} "
+        f"ELSE concat({base_cf}, {_fields(trial)}) END AS CUSTOMFIELDS",
     )
-    opportunity_links = lineitem.filter(F.col("l_suppkey") % 2 == 0).select(
-        F.lit("Opportunity").alias("OBJECT_NAME"),
-        F.col("l_orderkey").alias("OBJECT_ID"),
-        F.lit("Organisation").alias("LINK_OBJECT_NAME"),
-        ((F.col("l_suppkey") % 1500) + 1).alias("LINK_OBJECT_ID"),
+    opportunity_links = lineitem.filter("l_suppkey % 2 = 0").selectExpr(
+        "'Opportunity' AS OBJECT_NAME",
+        "l_orderkey AS OBJECT_ID",
+        "'Organisation' AS LINK_OBJECT_NAME",
+        "l_suppkey % 1500 + 1 AS LINK_OBJECT_ID",
     )
     return X.opportunity_export(
         opportunities=opportunities,
-        organisations=customer.select(
-            F.col("c_custkey").alias("ORGANISATION_ID"),
-            F.col("c_name").alias("ORGANISATION_NAME"),
+        organisations=customer.selectExpr(*_CUSTOMER_ORGS),
+        users=supplier.selectExpr(*_SUPPLIER_USERS),
+        pricebooks=region.filter("r_regionkey < 3").selectExpr(
+            "r_regionkey AS PRICEBOOK_ID", "concat('pb-', r_name) AS NAME"
         ),
-        users=supplier.select(
-            F.col("s_suppkey").alias("USER_ID"),
-            F.col("s_name").alias("FIRST_NAME"),
-            F.col("s_nationkey").cast("string").alias("LAST_NAME"),
+        products=part.selectExpr(
+            "p_partkey AS PRODUCT_ID",
+            "concat('fam-', CAST(p_partkey % 7 AS STRING)) AS PRODUCT_FAMILY",
         ),
-        pricebooks=region.filter(F.col("r_regionkey") < 3).select(
-            F.col("r_regionkey").alias("PRICEBOOK_ID"),
-            F.concat(F.lit("pb-"), F.col("r_name")).alias("NAME"),
+        state_reasons=region.filter("r_regionkey < 4").selectExpr(
+            "r_regionkey AS STATE_REASON_ID", "concat('reason-', r_name) AS STATE_REASON"
         ),
-        products=part.select(
-            F.col("p_partkey").alias("PRODUCT_ID"),
-            F.concat(F.lit("fam-"), (F.col("p_partkey") % 7).cast("string")).alias(
-                "PRODUCT_FAMILY"
-            ),
+        stages=nation.filter("n_nationkey < 6").selectExpr(
+            "n_nationkey AS STAGE_ID", "concat('stage-', n_name) AS STAGE_NAME"
         ),
-        state_reasons=region.filter(F.col("r_regionkey") < 4).select(
-            F.col("r_regionkey").alias("STATE_REASON_ID"),
-            F.concat(F.lit("reason-"), F.col("r_name")).alias("STATE_REASON"),
-        ),
-        stages=nation.filter(F.col("n_nationkey") < 6).select(
-            F.col("n_nationkey").alias("STAGE_ID"),
-            F.concat(F.lit("stage-"), F.col("n_name")).alias("STAGE_NAME"),
-        ),
-        pricebook_entries=part.select(
-            F.col("p_partkey").alias("PRICEBOOK_ENTRY_ID"),
-            F.col("p_partkey").alias("PRODUCT_ID"),
-        ),
-        line_items=lineitem.select(
-            F.col("l_orderkey").alias("OPPORTUNITY_ID"),
-            F.col("l_partkey").alias("PRICEBOOK_ENTRY_ID"),
+        pricebook_entries=part.selectExpr("p_partkey AS PRICEBOOK_ENTRY_ID", "p_partkey AS PRODUCT_ID"),
+        line_items=lineitem.selectExpr(
+            "l_orderkey AS OPPORTUNITY_ID", "l_partkey AS PRICEBOOK_ENTRY_ID"
         ),
         opportunity_links=opportunity_links,
         broadcast_dims=False,
@@ -785,8 +651,6 @@ def opportunity_export_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # invoice export (J13 struct-payload org dim x3 roles, Q1 effective site
 # key, Q4 owner passthrough, F4 date-or-passthrough)
-
-_INV_DD = "lpad(CAST(o_orderkey % 28 + 1 AS VARCHAR), 2, '0')"
 
 _INV_EXPORT_SQL = f"""
 WITH org AS (
@@ -804,7 +668,7 @@ SELECT DISTINCT
     o.o_orderkey AS "Record ID",
     coalesce(usr.owner, '') AS "Owner",
     CASE WHEN o.o_orderkey % 7 = 0 THEN 'soon'
-         ELSE {_INV_DD} || '/01/2024' END AS "Invoice Date",
+         ELSE {_DD} || '/01/2024' END AS "Invoice Date",
     'item-' || CAST(o.o_orderkey % 50 AS VARCHAR) AS "Item ID",
     CAST(CAST(round(o.o_totalprice * 100) AS BIGINT) AS VARCHAR)
         AS "Invoiced Amount",
@@ -855,69 +719,42 @@ def invoice_export_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer = read_table(spark, sf_dir, "customer")
     supplier = read_table(spark, sf_dir, "supplier")
 
-    k = F.col("o_orderkey")
-    dd = F.lpad(((k % 28) + 1).cast("string"), 2, "0")
-    cf = F.array(
-        _entry("Invoiced_Organization__c", F.col("o_custkey").cast("string")),
+    cf = _fields(
+        _field("Invoiced_Organization__c", "CAST(o_custkey AS STRING)"),
         # Q1 decoy: present in the data, must never reach the output
-        _entry("Site_Organization__c", ((F.col("o_custkey") % 1500) + 1).cast("string")),
-        _entry("Site_Name_Invoice__c", (((F.col("o_custkey") + 7) % 1500) + 1).cast("string")),
-        _entry(
-            "Channel_Partner_Invoiced__c",
-            F.when(k % 13 == 0, F.lit("x")).otherwise(
-                ((F.col("o_custkey") % 700) + 1).cast("string")
-            ),
-        ),
-        _entry(
-            "Invoice_Date__c",
-            F.when(k % 7 == 0, F.lit("soon")).otherwise(
-                F.concat(F.lit("2024-01-"), dd, F.lit(" 00:00:00"))
-            ),
-        ),
-        _entry("Invoiced_Item__c", F.concat(F.lit("item-"), (k % 50).cast("string"))),
-        _entry(
-            "Invoiced_Amount__c",
-            F.round(F.col("o_totalprice") * 100, 0).cast("long").cast("string"),
-        ),
-        _entry(
-            "Invoice_Currency__c",
-            F.when(k % 3 == 0, "USD").when(k % 3 == 1, "EUR").otherwise("CAD"),
-        ),
-        _entry("PO_Number__c", F.concat(F.lit("PO-"), F.col("o_custkey").cast("string"))),
-        _entry("Item_Quantity__c", (k % 12).cast("string")),
-        _entry("Invoiced_Product_Type__c", F.concat(F.lit("pt-"), (k % 4).cast("string"))),
-        _entry(
-            "Invoiced_Product_for_Equipment_Type__c",
-            F.concat(F.lit("eq-"), (k % 5).cast("string")),
-        ),
-        _entry("Invoice_Num__c", k.cast("string")),
-        _entry("Invoiced_Amount_in_CAD__c", (k % 1000).cast("string")),
+        _field("Site_Organization__c", "CAST(o_custkey % 1500 + 1 AS STRING)"),
+        _field("Site_Name_Invoice__c", "CAST((o_custkey + 7) % 1500 + 1 AS STRING)"),
+        _field("Channel_Partner_Invoiced__c", "CASE WHEN o_orderkey % 13 = 0 THEN 'x' "
+                                              "ELSE CAST(o_custkey % 700 + 1 AS STRING) END"),
+        _field("Invoice_Date__c", "CASE WHEN o_orderkey % 7 = 0 THEN 'soon' "
+                                  f"ELSE concat('2024-01-', {_DAY}, ' 00:00:00') END"),
+        _field("Invoiced_Item__c", "concat('item-', CAST(o_orderkey % 50 AS STRING))"),
+        _field("Invoiced_Amount__c",
+               "CAST(CAST(round(o_totalprice * 100, 0) AS BIGINT) AS STRING)"),
+        _field("Invoice_Currency__c", "CASE WHEN o_orderkey % 3 = 0 THEN 'USD' "
+                                      "WHEN o_orderkey % 3 = 1 THEN 'EUR' ELSE 'CAD' END"),
+        _field("PO_Number__c", "concat('PO-', CAST(o_custkey AS STRING))"),
+        _field("Item_Quantity__c", "CAST(o_orderkey % 12 AS STRING)"),
+        _field("Invoiced_Product_Type__c", "concat('pt-', CAST(o_orderkey % 4 AS STRING))"),
+        _field("Invoiced_Product_for_Equipment_Type__c",
+               "concat('eq-', CAST(o_orderkey % 5 AS STRING))"),
+        _field("Invoice_Num__c", "CAST(o_orderkey AS STRING)"),
+        _field("Invoiced_Amount_in_CAD__c", "CAST(o_orderkey % 1000 AS STRING)"),
     )
-    invoices = orders.select(
-        F.concat(F.lit("Inv-"), k.cast("string")).alias("RECORD_NAME"),
-        k.alias("RECORD_ID"),
-        ((F.col("o_custkey") % 100) + 1).alias("OWNER_USER_ID"),
-        cf.alias("CUSTOMFIELDS"),
+    invoices = orders.selectExpr(
+        "concat('Inv-', CAST(o_orderkey AS STRING)) AS RECORD_NAME",
+        "o_orderkey AS RECORD_ID",
+        "o_custkey % 100 + 1 AS OWNER_USER_ID",
+        f"{cf} AS CUSTOMFIELDS",
     )
-    org_cf = F.array(
-        _entry(
-            "Organization_Type__c",
-            F.when(F.col("c_acctbal") < 0, "debtor").otherwise("credit"),
-        ),
-        _entry("Region__c", F.col("c_mktsegment")),
+    org_cf = _fields(
+        _field("Organization_Type__c", "CASE WHEN c_acctbal < 0 THEN 'debtor' ELSE 'credit' END"),
+        _field("Region__c", "c_mktsegment"),
     )
     return X.invoice_export(
         invoices=invoices,
-        users=supplier.select(
-            F.col("s_suppkey").alias("USER_ID"),
-            F.col("s_name").alias("FIRST_NAME"),
-            F.col("s_nationkey").cast("string").alias("LAST_NAME"),
-        ),
-        organisations=customer.select(
-            F.col("c_custkey").alias("ORGANISATION_ID"),
-            F.col("c_name").alias("ORGANISATION_NAME"),
-            org_cf.alias("CUSTOMFIELDS"),
-        ),
+        users=supplier.selectExpr(*_SUPPLIER_USERS),
+        organisations=customer.selectExpr(*_CUSTOMER_ORGS, f"{org_cf} AS CUSTOMFIELDS"),
         broadcast_dims=False,
     )
 
@@ -987,60 +824,32 @@ def equipment_export_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer = read_table(spark, sf_dir, "customer")
     supplier = read_table(spark, sf_dir, "supplier")
 
-    k = F.col("o_orderkey")
-    dd = F.lpad(((k % 28) + 1).cast("string"), 2, "0")
-    null_str = F.lit(None).cast("string")
-    cf = F.concat(
-        F.when(
-            k % 4 == 0, F.array().cast("array<struct<FIELD_NAME:string,FIELD_VALUE:string>>")
-        ).otherwise(
-            F.array(
-                _entry(
-                    "Entity_Owning_Equipment_Equipment__c",
-                    F.when(k % 4 == 1, null_str).otherwise(
-                        F.col("o_custkey").cast("string")
-                    ),
-                )
-            )
-        ),
-        F.array(
-            _entry(
-                "Site_Name_Equipment__c",
-                F.when(k % 3 == 0, null_str).otherwise(
-                    ((F.col("o_custkey") % 1500) + 1).cast("string")
-                ),
-            ),
-            _entry("Equipment_Type_Equipment__c", F.concat(F.lit("et-"), (k % 4).cast("string"))),
-            _entry("Equipment_Make_Equipment__c", F.concat(F.lit("mk-"), (k % 6).cast("string"))),
-            _entry("Equipment_Model_Equipment__c", F.concat(F.lit("md-"), (k % 9).cast("string"))),
-            _entry("Equipment_Quantity_Equipment__c", (k % 7).cast("string")),
-            _entry("Serial_Number_Notes__c", F.concat(F.lit("sn-"), (k % 100).cast("string"))),
-            _entry(
-                "Last_Date_of_Equipment_Details_Confirmed__c",
-                F.concat(F.lit("2024-06-"), dd),
-            ),
-        ),
+    entity = _field("Entity_Owning_Equipment_Equipment__c",
+                    f"CASE WHEN o_orderkey % 4 = 1 THEN {_NULL_STR} "
+                    "ELSE CAST(o_custkey AS STRING) END")
+    others = _fields(
+        _field("Site_Name_Equipment__c", f"CASE WHEN o_orderkey % 3 = 0 THEN {_NULL_STR} "
+                                         "ELSE CAST(o_custkey % 1500 + 1 AS STRING) END"),
+        _field("Equipment_Type_Equipment__c", "concat('et-', CAST(o_orderkey % 4 AS STRING))"),
+        _field("Equipment_Make_Equipment__c", "concat('mk-', CAST(o_orderkey % 6 AS STRING))"),
+        _field("Equipment_Model_Equipment__c", "concat('md-', CAST(o_orderkey % 9 AS STRING))"),
+        _field("Equipment_Quantity_Equipment__c", "CAST(o_orderkey % 7 AS STRING)"),
+        _field("Serial_Number_Notes__c", "concat('sn-', CAST(o_orderkey % 100 AS STRING))"),
+        _field("Last_Date_of_Equipment_Details_Confirmed__c", f"concat('2024-06-', {_DAY})"),
     )
-    equipment = orders.select(
-        k.alias("RECORD_ID"),
-        F.concat(F.lit("Equip-"), k.cast("string")).alias("RECORD_NAME"),
-        F.when(k % 17 == 0, F.lit(9999999))
-        .otherwise((F.col("o_custkey") % 100) + 1)
-        .alias("OWNER_USER_ID"),
-        F.concat(F.lit("2024-01-"), dd, F.lit(" 07:00:00")).alias("DATE_CREATED_UTC"),
-        F.concat(F.lit("2024-02-"), dd, F.lit(" 07:00:00")).alias("DATE_UPDATED_UTC"),
-        cf.alias("CUSTOMFIELDS"),
+    cf = (f"concat(CASE WHEN o_orderkey % 4 = 0 THEN {_NO_FIELDS} "
+          f"ELSE {_fields(entity)} END, {others})")
+    equipment = orders.selectExpr(
+        "o_orderkey AS RECORD_ID",
+        "concat('Equip-', CAST(o_orderkey AS STRING)) AS RECORD_NAME",
+        "CASE WHEN o_orderkey % 17 = 0 THEN 9999999 ELSE o_custkey % 100 + 1 END AS OWNER_USER_ID",
+        f"concat('2024-01-', {_DAY}, ' 07:00:00') AS DATE_CREATED_UTC",
+        f"concat('2024-02-', {_DAY}, ' 07:00:00') AS DATE_UPDATED_UTC",
+        f"{cf} AS CUSTOMFIELDS",
     )
     return X.equipment_export(
         equipment=equipment,
-        users=supplier.select(
-            F.col("s_suppkey").alias("USER_ID"),
-            F.col("s_name").alias("FIRST_NAME"),
-            F.col("s_nationkey").cast("string").alias("LAST_NAME"),
-        ),
-        organisations=customer.select(
-            F.col("c_custkey").alias("ORGANISATION_ID"),
-            F.col("c_name").alias("ORGANISATION_NAME"),
-        ),
+        users=supplier.selectExpr(*_SUPPLIER_USERS),
+        organisations=customer.selectExpr(*_CUSTOMER_ORGS),
         broadcast_dims=False,
     )

@@ -176,9 +176,9 @@ def custom_fields_last_wins(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return cf.select(
         "order_id",
-        S.cf_get(F.col("m"), "f_R").alias("flag_r_val"),
-        S.cf_get(F.col("m"), "f_A").alias("flag_a_val"),
-        S.cf_get(F.col("m"), "f_N").alias("flag_n_val"),
+        F.expr(S.cf_get("m", "f_R")).alias("flag_r_val"),
+        F.expr(S.cf_get("m", "f_A")).alias("flag_a_val"),
+        F.expr(S.cf_get("m", "f_N")).alias("flag_n_val"),
     )
 
 

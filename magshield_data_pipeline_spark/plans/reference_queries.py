@@ -89,9 +89,9 @@ def quote_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("o_orderkey").alias("quote_id"),
             F.col("o_orderstatus").alias("status"),
-            S.coalesce_str("c_name").alias("customer_name"),
-            S.coalesce_str("n_name").alias("nation"),
-            S.coalesce_str("r_name").alias("region"),
+            F.expr(S.coalesce_str("c_name")).alias("customer_name"),
+            F.expr(S.coalesce_str("n_name")).alias("nation"),
+            F.expr(S.coalesce_str("r_name")).alias("region"),
             S.composite_key("c_custkey", "c_name").alias("customer_key"),
             F.date_format("o_orderdate", "dd-MMM-yy h:mm a").alias("created_fmt"),
             F.round("o_totalprice", 2).alias("total"),
@@ -408,12 +408,12 @@ def date_format_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return src.select(
         F.col("o_orderkey").alias("order_id"),
-        S.format_date_quote("iso").alias("quote_fmt"),
-        S.format_date_only("iso").alias("date_only_fmt"),
-        S.format_date_ui("iso").alias("ui_fmt"),
+        F.expr(S.format_date_quote("iso")).alias("quote_fmt"),
+        F.expr(S.format_date_only("iso")).alias("date_only_fmt"),
+        F.expr(S.format_date_ui("iso")).alias("ui_fmt"),
         # a non-date string goes through unchanged — the reference's
         # except-branch behavior
-        S.format_date_quote("o_orderpriority").alias("fallback_passthrough"),
+        F.expr(S.format_date_quote("o_orderpriority")).alias("fallback_passthrough"),
     )
 
 
@@ -449,7 +449,6 @@ def date_format_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 def string_function_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     supplier = read_table(spark, sf_dir, "supplier")
     nation = read_table(spark, sf_dir, "nation")
-    supp_key = S.composite_key("s_suppkey", "s_name")
     # a synthetic report-mail anchor per supplier exercises F11/F12 on an
     # oracle-checkable surface (the real pipeline runs them in
     # sources/reports.py)
@@ -460,12 +459,13 @@ def string_function_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         supplier.join(F.broadcast(nation), supplier.s_nationkey == nation.n_nationkey, "left")
+        .withColumn("supp_key", S.composite_key("s_suppkey", "s_name"))
         .select(
             F.col("s_suppkey").alias("supplier_id"),
-            S.clean_text("s_name").alias("clean_name"),
+            F.expr(S.clean_text("s_name")).alias("clean_name"),
             S.full_name("s_name", "n_name").alias("full_label"),
-            supp_key.alias("supp_key"),
-            S.split_part(supp_key, ";", 1).alias("name_back"),
+            "supp_key",
+            F.expr(S.split_part("supp_key", ";", 1)).alias("name_back"),
             S.org_owner_site_key("s_name", "s_suppkey", "n_name").alias("owner_site_key"),
             S.share_token("s_name").alias("share_token"),
             S.basename(F.concat(F.lit("/tmp/exports/"), F.col("s_name"), F.lit(".xlsx"))).alias(

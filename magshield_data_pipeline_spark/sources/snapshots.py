@@ -3565,7 +3565,8 @@ def optimize(spark, table_path: str, small_file_rows: int,
     content = _scan_manifest(spark, table_path, manifest, small)
     return _commit(table_path, {
         "op": "compact", "tags": {"mode": "bin-pack"},
-        "add": _write_data_files(content, table_path, n_out),
+        "add": _write_data_files(content, table_path, n_out,
+                                 partition_by=_active_spec(manifest)),
         "drop": {e["path"] for e in small},
     }, who="optimize", base=base)
 
@@ -3599,7 +3600,8 @@ def purge_deletes(spark, table_path: str, n_files: int = 1) -> int | None:
         # reconciled (sequence-number semantics preserved), rewrite
         # them clean
         survivors = _scan_manifest(spark, table_path, manifest, affected)
-        entries = _write_data_files(survivors, table_path, n_files)
+        entries = _write_data_files(survivors, table_path, n_files,
+                                    partition_by=_active_spec(manifest))
     # published as a compact variant (like optimize's bin-pack): visible
     # content is IDENTICAL before and after, so every CDC consumer's
     # "compact = zero changes" contract applies verbatim; the delete

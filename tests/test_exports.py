@@ -3,10 +3,17 @@ the reference quirks Q1–Q5, Q7 and the join roles J4/J8/J10/J13."""
 
 from __future__ import annotations
 
+import gc
+import threading
+from unittest import mock
+
 import pytest
+from py4j.clientserver import ClientServerConnection
 
 from magshield_data_pipeline_spark import exports as E
 from magshield_data_pipeline_spark import schemas as SCH
+from magshield_data_pipeline_spark.plans.registry import QUERY_REGISTRY
+from tests.conftest import SF_SMALL
 
 
 def _df(spark, rows, schema):
@@ -363,3 +370,44 @@ def test_users_export_projection_dedup(spark, users):
     out = E.users_export(doubled)
     assert out.count() == 2  # Q7/A4 dedup
     assert out.columns[:3] == ["USER_ID", "CONTACT_ID", "FIRST_NAME"]
+
+
+# ---------------------------------------------------------------------------
+# plan build cost: py4j round trips per export build
+
+# Round trips the builds made when every projection was composed as
+# Column objects, one JVM call per node (sf0.001, reads warm, GC off).
+_COLUMN_BUILD_ROUND_TRIPS = {
+    "organisation_export_pipeline": 1366,
+    "quote_export_pipeline": 2524,
+    "task_export_pipeline": 5086,
+    "opportunity_export_pipeline": 5148,
+    "invoice_export_pipeline": 3393,
+    "equipment_export_pipeline": 2434,
+}
+
+
+@pytest.mark.parametrize("name", sorted(_COLUMN_BUILD_ROUND_TRIPS))
+def test_export_build_round_trips(spark, name):
+    """Projections written as SQL text are parsed by the JVM in one call
+    each: a build makes at most half the Column-composed round trips.
+    Counted on the building thread only (py4j's finalizer thread sends
+    its object releases asynchronously)."""
+    build = QUERY_REGISTRY[name].fn
+    build(spark, SF_SMALL)  # warm the session's read memo
+    gc.collect()
+    me, calls = threading.get_ident(), 0
+    send = ClientServerConnection.send_command
+
+    def counting(conn, command):
+        nonlocal calls
+        calls += threading.get_ident() == me
+        return send(conn, command)
+
+    gc.disable()
+    try:
+        with mock.patch.object(ClientServerConnection, "send_command", counting):
+            build(spark, SF_SMALL)
+    finally:
+        gc.enable()
+    assert 0 < calls <= _COLUMN_BUILD_ROUND_TRIPS[name] // 2, calls

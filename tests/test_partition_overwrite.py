@@ -97,6 +97,30 @@ def test_constraints_validate_replacement(spark, table):
         S.overwrite_partitions(bad, table)
 
 
+@pytest.mark.parametrize("maintain", ["purge_deletes", "optimize"])
+def test_maintenance_rewrites_keep_the_partition_spec(spark, table, maintain):
+    # a partitioned merge, then a maintenance rewrite: the rewritten
+    # files must carry their partition value under the active spec, or
+    # a later overwrite_partitions refuses the whole table
+    S.merge(_df(spark).filter("k < 8").select(
+        "k", "p", (F.col("v") + 1).alias("v")), table, key="k")
+    if maintain == "purge_deletes":
+        S.update_where(spark, table, "k = 6", {"v": "0"})
+        v = S.purge_deletes(spark, table)
+    else:
+        v = S.optimize(spark, table, small_file_rows=1000)
+    assert v is not None
+    S.overwrite_partitions(_df(spark).filter("p = 1").select(
+        "k", "p", F.lit(-1).cast("long").alias("v")), table, n_files=1)
+    got = {r.k: r.v for r in S.read(spark, table).collect()}
+    assert len(got) == 400
+    for k in range(400):
+        want = k * 10 + (1 if k < 8 else 0)
+        if k == 6 and maintain == "purge_deletes":
+            want = 0
+        assert got[k] == (-1 if k % 4 == 1 else want)
+
+
 def test_hidden_transform_partitions(spark, tmp_path):
     # bucket transform: the replaced set is computed over the DERIVED
     # value, never collected per-row

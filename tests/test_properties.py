@@ -43,8 +43,9 @@ def _col_apply(spark, values, expr_fn):
 @settings(**_SETTINGS)
 @given(vals=texts)
 def test_clean_text_idempotent(spark, vals):
-    once = _col_apply(spark, vals, S.clean_text)
-    twice = _col_apply(spark, once, S.clean_text)
+    clean = lambda c: F.expr(S.clean_text(c))  # noqa: E731
+    once = _col_apply(spark, vals, clean)
+    twice = _col_apply(spark, once, clean)
     assert once == twice
     assert all("\n" not in (o or "") and "\r" not in (o or "") for o in once)
 
@@ -57,7 +58,7 @@ def test_date_format_passthrough_for_unparseable(spark, vals):
         v for v in vals
         if not _re.match(r"^\d{4}-\d{2}-\d{2} \d{2}:\d{2}:\d{2}", v or "")
     ]
-    out = _col_apply(spark, unparseable, S.format_date_quote)
+    out = _col_apply(spark, unparseable, lambda c: F.expr(S.format_date_quote(c)))
     assert out == unparseable
 
 

@@ -19,24 +19,24 @@ def _one(spark, col, value=None, schema="v string"):
 
 
 def test_clean_text(spark):
-    assert _one(spark, S.clean_text("v"), "  a\rb\nc  ") == "a b c"
-    assert _one(spark, S.clean_text("v"), None) is None
+    assert _one(spark, F.expr(S.clean_text("v")), "  a\rb\nc  ") == "a b c"
+    assert _one(spark, F.expr(S.clean_text("v")), None) is None
 
 
 def test_format_date_quote_happy_and_fallback(spark):
-    assert _one(spark, S.format_date_quote("v"), "2025-08-25 20:41:00") == "25-Aug-25 8:41 PM"
-    assert _one(spark, S.format_date_quote("v"), "2025-08-25 00:05:00") == "25-Aug-25 12:05 AM"
+    assert _one(spark, F.expr(S.format_date_quote("v")), "2025-08-25 20:41:00") == "25-Aug-25 8:41 PM"
+    assert _one(spark, F.expr(S.format_date_quote("v")), "2025-08-25 00:05:00") == "25-Aug-25 12:05 AM"
     # parse failure → input unchanged (quote.py:175-182 except branch)
-    assert _one(spark, S.format_date_quote("v"), "not a date") == "not a date"
-    assert _one(spark, S.format_date_quote("v"), "") == ""
+    assert _one(spark, F.expr(S.format_date_quote("v")), "not a date") == "not a date"
+    assert _one(spark, F.expr(S.format_date_quote("v")), "") == ""
 
 
 def test_format_date_only_and_ui(spark):
-    assert _one(spark, S.format_date_only("v"), "2025-01-31 08:00:00") == "01/31/2025"
-    assert _one(spark, S.format_date_ui("v"), "2025-01-31 08:00:00") == "31/01/2025"
+    assert _one(spark, F.expr(S.format_date_only("v")), "2025-01-31 08:00:00") == "01/31/2025"
+    assert _one(spark, F.expr(S.format_date_ui("v")), "2025-01-31 08:00:00") == "31/01/2025"
     # ui takes the part before ' ' — garbage after the date still parses
-    assert _one(spark, S.format_date_ui("v"), "2025-01-31 zz:zz") == "31/01/2025"
-    assert _one(spark, S.format_date_ui("v"), "31st Jan") == "31st Jan"
+    assert _one(spark, F.expr(S.format_date_ui("v")), "2025-01-31 zz:zz") == "31/01/2025"
+    assert _one(spark, F.expr(S.format_date_ui("v")), "31st Jan") == "31st Jan"
 
 
 def test_full_name_and_composite_key(spark):
@@ -54,7 +54,7 @@ def test_full_name_and_composite_key(spark):
 
 
 def test_split_part_and_owner_key(spark):
-    assert _one(spark, S.split_part("v", ";", 1), "42;Jane Doe") == "Jane Doe"
+    assert _one(spark, F.expr(S.split_part("v", ";", 1)), "42;Jane Doe") == "Jane Doe"
     df = spark.createDataFrame([("Org", 7, "User")], "a string, b long, c string")
     row = df.select(S.org_owner_site_key("a", "b", "c").alias("k")).first()
     assert row["k"] == "Org||7||User"
@@ -76,9 +76,9 @@ def test_custom_fields_map_last_wins_and_default(spark):
     )
     m = S.custom_fields_map("CUSTOMFIELDS")
     rows = df.select(
-        S.cf_get(m, "A__c").alias("a"),
-        S.cf_get(m, "B__c", "dflt").alias("b"),
-        S.cf_get(m, "Missing__c").alias("miss"),
+        F.expr(S.cf_get(m, "A__c")).alias("a"),
+        F.expr(S.cf_get(m, "B__c", "dflt")).alias("b"),
+        F.expr(S.cf_get(m, "Missing__c")).alias("miss"),
     ).collect()
     # duplicate key keeps the LAST value, like a Python dict build
     assert rows[0]["a"] == "2"
@@ -99,7 +99,7 @@ def test_conditional_link_count_null_safe(spark):
         ],
         schema,
     )
-    rows = df.select(S.conditional_link_count("LINKS", "Contact").alias("n")).collect()
+    rows = df.select(F.expr(S.conditional_link_count("LINKS", "Contact")).alias("n")).collect()
     assert [r["n"] for r in rows] == [2, 0, 0]
 
 
@@ -131,7 +131,7 @@ def test_basename(spark):
 
 def test_coalesce_str(spark):
     df = spark.createDataFrame([(None, None), (None, "b"), ("a", "b")], "x string, y string")
-    rows = df.select(S.coalesce_str("x", "y").alias("o")).collect()
+    rows = df.select(F.expr(S.coalesce_str("x", "y")).alias("o")).collect()
     assert [r["o"] for r in rows] == ["", "b", "a"]
 
 
@@ -139,20 +139,18 @@ def test_split_part_literal_delimiters(spark):
     # '||' and '.' are regex metacharacters — split_part must treat them
     # literally (Python str.split semantics)
     key = "Ann Lee||1||User"
-    assert _one(spark, S.split_part("v", "||", 0), key) == "Ann Lee"
-    assert _one(spark, S.split_part("v", "||", 1), key) == "1"
-    assert _one(spark, S.split_part("v", ".", 1), "a.b.c") == "b"
+    assert _one(spark, F.expr(S.split_part("v", "||", 0)), key) == "Ann Lee"
+    assert _one(spark, F.expr(S.split_part("v", "||", 1)), key) == "1"
+    assert _one(spark, F.expr(S.split_part("v", ".", 1)), "a.b.c") == "b"
 
 
 def test_encode_bool_flag_and_truthy_str(spark):
     df = spark.createDataFrame(
         [("WON",), ("LOST",), (None,), ("",), ("False",)], "state string"
     )
-    from pyspark.sql import functions as F
-
     rows = df.select(
-        S.encode_bool_flag(F.col("state") == "WON").alias("won"),
-        S.truthy_str("state").alias("truthy"),
+        F.expr(S.encode_bool_flag("state = 'WON'")).alias("won"),
+        F.expr(S.truthy_str("state")).alias("truthy"),
     ).collect()
     assert [r["won"] for r in rows] == ["TRUE", "FALSE", "FALSE", "FALSE", "FALSE"]
     # Python truthiness: any non-empty string is True, even 'False'
