@@ -11,9 +11,11 @@ capabilities the reference hand-rolls over its REST API with
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from magshield_data_pipeline_spark.session import path_stamp, session_memo
 
@@ -32,7 +34,8 @@ STAR_TABLES = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# Runtime confs every plan depends on. Set on each read_table call so
+# Runtime confs every plan depends on, set once per session by
+# ensure_runtime_confs (read_table, the exports, the stream readers) so
 # plans are correct under ANY caller's SparkSession (the grading driver
 # builds a plain one, without our session factory):
 #  - UTC session timezone: date_format/to_timestamp semantics must not
@@ -42,8 +45,8 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 #    (/root/reference/modules/quote.py:202);
 #  - nanosAsLong: events.parquet carries TIMESTAMP(NANOS), which Spark's
 #    reader rejects by default (PARQUET_TYPE_ILLEGAL).
-# These are runtime-settable SQL confs; setting them is idempotent but
-# session-wide — documented engine behavior, not a hidden side effect.
+# These are runtime-settable SQL confs; setting them is session-wide —
+# documented engine behavior, not a hidden side effect.
 _RUNTIME_CONFS = {
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.mapKeyDedupPolicy": "LAST_WIN",
@@ -60,9 +63,73 @@ _RUNTIME_CONFS = {
 
 
 def ensure_runtime_confs(spark: SparkSession) -> None:
+    """Set :data:`_RUNTIME_CONFS` once per session object.
+
+    The flag lives on the session object, as ``session_memo``'s dict
+    does, so later calls cost no py4j round trip and a new session
+    (``spark.newSession()``) gets the confs on its first call.  A caller
+    who changes one of these confs afterwards owns the result: it is
+    not set back."""
+    if getattr(spark, "_magshield_runtime_confs", False):
+        return
     for k, v in _RUNTIME_CONFS.items():
-        if spark.conf.get(k, None) != v:
-            spark.conf.set(k, v)
+        spark.conf.set(k, v)
+    spark._magshield_runtime_confs = True
+
+
+def _hidden(name: str) -> bool:
+    """Spark's file-index filter (``HadoopFSUtils.shouldFilterOutPathName``):
+    ``_``/``.`` names and in-flight copies, except the parquet summary
+    files and ``k=v`` partition directories."""
+    skip = ((name.startswith("_") and "=" not in name)
+            or name.startswith(".") or name.endswith("._COPYING_"))
+    return skip and not name.startswith(("_common_metadata", "_metadata"))
+
+
+def _schema_file(path: str) -> str:
+    """The file whose footer ``ParquetUtils.inferSchema`` reads when
+    schemas are not merged: ``_common_metadata``, then ``_metadata``,
+    then the first data file by path string.  A file path is itself."""
+    if not os.path.isdir(path):
+        return path
+    leaves = []
+    for d, dirs, files in os.walk(path):
+        dirs[:] = [x for x in dirs if not _hidden(x)]
+        leaves += [os.path.join(d, f) for f in files if not _hidden(f)]
+    leaves.sort()
+    summaries = ("_common_metadata", "_metadata")
+    for want in summaries:
+        for p in leaves:
+            if os.path.basename(p) == want:
+                return p
+    for p in leaves:
+        if os.path.basename(p) not in summaries:
+            return p
+    raise FileNotFoundError(f"no parquet data file under {path}")
+
+
+def footer_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema ``spark.read.parquet(path)`` infers, read on the driver.
+
+    Spark's own inference runs a single-task job to read one footer.
+    This reads the same footer (:func:`_schema_file`) and converts it
+    with Spark's own ``ParquetFileFormat.readSchema`` through py4j, so
+    the session's conversion confs (nanosAsLong, TimestampNTZ
+    inference, binary as string) and the Spark schema that Spark
+    writes into its own files' metadata apply exactly as in inference.
+    No job runs.  A missing or corrupt file raises here, as inference
+    does.  ``mergeSchema`` readers (:func:`read_evolved`) still infer."""
+    jvm = spark._jvm
+    jss = spark._jsparkSession
+    conf = jss.sessionState().newHadoopConf()
+    file = jvm.org.apache.hadoop.fs.Path(_schema_file(path))
+    status = file.getFileSystem(conf).getFileStatus(file)
+    fmt = getattr(getattr(jvm.org.apache.spark.sql.execution.datasources
+                          .parquet, "ParquetFileFormat$"), "MODULE$")
+    footers = fmt.readParquetFootersInParallel(
+        conf, jvm.PythonUtils.toSeq([status]), False)
+    schema = fmt.readSchema(footers, jss).get()
+    return StructType.fromJson(json.loads(schema.json()))
 
 
 def normalize_event_ts(df: DataFrame) -> DataFrame:
@@ -90,16 +157,18 @@ def normalize_event_ts(df: DataFrame) -> DataFrame:
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one star-schema table from ``{sf_dir}/{name}.parquet``.
 
-    The read plan is memoized per session: ``spark.read.parquet``
-    pays a py4j round trip plus file listing and footer schema
-    inference on every call (~0.1 s per table), the work a table
-    catalog's metadata cache saves in production.  The key carries the
-    table path's stamp, so a table rewritten in place is read afresh."""
+    The schema comes from the table's parquet footer, converted by
+    Spark's own code on the driver (:func:`footer_schema`), so a fresh
+    read runs no Spark job.  The read plan is memoized per session:
+    ``spark.read`` still pays py4j round trips and a file listing per
+    call, the work a table catalog's metadata cache saves in
+    production.  The key carries the table path's stamp, so a table
+    rewritten in place is read afresh."""
     ensure_runtime_confs(spark)
     path = f"{sf_dir}/{name}.parquet"
 
     def build() -> DataFrame:
-        df = spark.read.parquet(path)
+        df = spark.read.schema(footer_schema(spark, path)).parquet(path)
         return normalize_event_ts(df) if name == "events" else df
 
     return session_memo(spark, ("parquet", path, path_stamp(path)), build)

@@ -84,6 +84,7 @@ from magshield_data_pipeline_spark.sources.ledger_meta import (
     read_manifest,
     versions,
 )
+from magshield_data_pipeline_spark.sources.parquet import footer_schema
 
 #: manifests with at most this many file entries inline their whole
 #: list in ``vN.json`` (the pre-r12 shape, byte-compatible); above it
@@ -1506,7 +1507,8 @@ def adopt_parquet(spark, table_path: str, source, n_files_hint=None) -> int:
         files = sorted(os.path.abspath(p) for p in source)
     if not files:
         raise ValueError(f"adopt_parquet: no parquet files in {source!r}")
-    schema_json = spark.read.parquet(*files).schema.jsonValue()
+    # Spark's inference over these files reads the first one's footer
+    schema_json = footer_schema(spark, files[0]).jsonValue()
     want_stats = {
         f["name"] for f in schema_json["fields"]
         if isinstance(f["type"], str) and f["type"] in _NUMERIC_TYPES

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from magshield_data_pipeline_spark.sources.parquet import (
     ensure_runtime_confs,
+    footer_schema,
     normalize_event_ts,
 )
 
@@ -343,12 +344,13 @@ def stream_stream_interval_join_outer(
 def read_table_stream(spark, sf_dir: str, name: str) -> DataFrame:
     """``readStream`` over any fixture table — the ONE definition of
     the stream-source pattern (read_events_stream delegates here, per
-    the ADVICE-r7 no-duplicate-rule precedent): schema from the static
-    footer read (streaming file sources require an explicit schema), a
+    the ADVICE-r7 no-duplicate-rule precedent): schema from the table's
+    footer, read on the driver (streaming file sources require an
+    explicit schema; ``footer_schema`` runs no job), a
     glob filter selecting the one file against the directory basePath;
     events additionally get the ts normalization."""
     ensure_runtime_confs(spark)
-    schema = spark.read.parquet(f"{sf_dir}/{name}.parquet").schema
+    schema = footer_schema(spark, f"{sf_dir}/{name}.parquet")
     raw = (
         spark.readStream.schema(schema)
         .option("pathGlobFilter", f"{name}.parquet")
