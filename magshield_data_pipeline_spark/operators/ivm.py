@@ -211,7 +211,7 @@ def apply_changes(
                 txn=(f"{app}:d", to_version),
             ) is None:
                 n_dead = 0
-        SN._advance_txn(view_path, f"{app}:d", to_version)
+        SN._advance_marker(SN._txn_path(view_path, f"{app}:d"), to_version)
         return {"applied": bool(n_dead), "groups_upserted": 0,
                 "groups_deleted": n_dead}
     sign = F.when(
@@ -282,7 +282,8 @@ def apply_changes(
             # zeros (SN.delete only advances the marker on a commit):
             # a replay of a fully-completed refresh is then detected
             # from the two txn markers alone — zero Spark jobs
-            SN._advance_txn(view_path, f"{app}:d", to_version)
+            SN._advance_marker(SN._txn_path(view_path, f"{app}:d"),
+                               to_version)
             return {
                 "applied": bool(n_up or n_dead),
                 "groups_upserted": n_up,

@@ -2095,25 +2095,26 @@ SELECT 'after_discard', CAST(count(*) AS BIGINT),
 @register(
     "snapshot_wap_audit",
     sql=_SNAP_WAP_SQL,
-    description="WRITE-AUDIT-PUBLISH on the ledger (r11 — the Iceberg "
-    "wap.id staged-commit pattern, sources/snapshots.py): corrections "
-    "are STAGED outside the version chain, audited via read_staged "
-    "(the would-be snapshot), and published atomically — the "
-    "'published' rollup pins the graduated commit; then EVERY RUN "
-    "stages a fresh 5-row batch LIVE, proves isolation (the main "
-    "table's rollup is unchanged while the stage exists), audits the "
-    "would-be snapshot (exactly published+5 rows), and DISCARDS it — "
-    "the staged list returns to empty and the after_discard rollup "
-    "proves zero trace (a leaked stage or a discard that failed to "
-    "reclaim shifts the hashes); publish re-resolves against the "
-    "current latest, so append-append composes with commits that land "
-    "mid-audit (pinned in tests) ([EXT] lakehouse tier: how a 100 TB "
-    "pipeline gates data it cannot express as row constraints — "
-    "distribution checks, cross-table joins, model gates — before "
-    "production readers see it)",
+    description="WRITE-AUDIT-PUBLISH on the ledger as a one-commit "
+    "BRANCH (the Iceberg wap.id pattern, sources/snapshots.py): "
+    "corrections land as a branch append outside the version chain, "
+    "audited via read_branch (exactly the snapshot publish makes), and "
+    "published with publish_branch — the 'published' rollup pins the "
+    "graduated commit; then EVERY RUN branches a fresh 5-row batch "
+    "LIVE, proves isolation (the main table's rollup is unchanged while "
+    "the branch exists), audits the would-be snapshot (exactly "
+    "published+5 rows), and DISCARDS it — the branch list returns to "
+    "empty and the after_discard rollup proves zero trace (a leaked "
+    "branch or a discard that failed to reclaim shifts the hashes); an "
+    "append-only branch publishes on the current latest, so "
+    "append-append composes with commits that land mid-audit (pinned "
+    "in tests) ([EXT] lakehouse tier: how a 100 TB pipeline gates data "
+    "it cannot express as row constraints — distribution checks, "
+    "cross-table joins, model gates — before production readers see "
+    "it)",
 )
 def snapshot_wap_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Scale: staging costs the staged files only; audit reads are the
+    # Scale: a branch append costs its files only; audit reads are the
     # ordinary manifest-scoped scan; publish is a metadata commit.
     import uuid as _uuid
 
@@ -2125,7 +2126,8 @@ def snapshot_wap_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     base = scratch_path(
         "snap_wap_orders", sf_dir,
-        "v1 overwrite; stage corrections(%17=0,+500,+10M keys); publish",
+        "v1 overwrite; branch corrections(%17=0,+500,+10M keys); "
+        "publish_branch",
     )
 
     def _build(tmp: str) -> None:
@@ -2137,8 +2139,9 @@ def snapshot_wap_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("o_orderkey") + 10000000).alias("o_orderkey"),
             (F.col("o_totalprice") + 500).alias("o_totalprice"),
         )
-        SN.stage_append(corr, tmp, "corrections", n_files=1)
-        SN.publish_staged(tmp, "corrections")
+        SN.create_branch(tmp, "corrections")
+        SN.branch_append(corr, tmp, "corrections", n_files=1)
+        SN.publish_branch(tmp, "corrections")
 
     ensure_scratch(base, _build)
 
@@ -2155,20 +2158,21 @@ def snapshot_wap_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         [(-i, float(i)) for i in range(1, 6)],
         "o_orderkey long, o_totalprice double",
     )
-    SN.stage_append(live, base, name, n_files=1)
+    SN.create_branch(base, name)
     try:
-        # materialize the audit rows BEFORE discard frees the staged
+        SN.branch_append(live, base, name, n_files=1)
+        # materialize the audit rows BEFORE discard frees the branch
         # files — bounded: three single-row aggregates
         audited = (
             rollup("published", SN.read(spark, base))
             .unionByName(rollup("live_stage_isolated",
                                 SN.read(spark, base)))
             .unionByName(rollup("live_audit_view",
-                                SN.read_staged(spark, base, name)))
+                                SN.read_branch(spark, base, name)))
             .collect()
         )
     finally:
-        SN.discard_staged(base, name)
+        SN.discard_branch(base, name)
     audited_df = spark.createDataFrame(
         audited, "stage string, n_orders long, revenue double"
     )
@@ -2176,7 +2180,8 @@ def snapshot_wap_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         audited_df.unionByName(
             spark.range(1).select(
                 F.lit("discarded").alias("stage"),
-                F.lit(len(SN.staged(base))).cast("long").alias("n_orders"),
+                F.lit(len(SN.branches(base))).cast("long")
+                .alias("n_orders"),
                 F.lit(None).cast("double").alias("revenue"),
             )
         ).unionByName(rollup("after_discard", SN.read(spark, base)))
@@ -3029,8 +3034,8 @@ SELECT 'history', CAST(3 AS BIGINT), CAST(4 AS BIGINT),
     "snapshot_branch_publish",
     sql=_SNAP_BRANCH_SQL,
     description="NAMED BRANCHES with fast-forward publish (r12 — "
-    "VERDICT r11 item 5, generalizing WAP's single staged commit to "
-    "the Iceberg branch model, sources/snapshots.py): an audit branch "
+    "VERDICT r11 item 5, the Iceberg branch model; write-audit-publish "
+    "is a one-commit branch, sources/snapshots.py): an audit branch "
     "anchored at the corpus base takes TWO branch commits while a "
     "main append lands mid-branch; the hash pins that main was "
     "UNCHANGED while the branch was open (main_during_branch, "

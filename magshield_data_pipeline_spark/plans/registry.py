@@ -191,11 +191,12 @@ _WINDOW_PINS: list[tuple[str, int]] = [
     # partition restore), read_row_changes gained delete-aware images
     # for key-less/overwrite commits and rollback manifests stopped
     # carrying key/mode, ivm.apply_changes moved to the atomic
-    # zero-merge + committed-state retract, and publish_staged gained
-    # the constraint-drift refusal.  The ivm view/stream queries pin
-    # the new commit accounting; row_cdc/cdc_apply pin the batch feed
-    # after its image rework; wap_audit pins the publish path;
-    # table_mgmt pins rollback's slimmed manifests.
+    # zero-merge + committed-state retract, and the write-audit-publish
+    # publish gained the constraint-drift refusal.  The ivm view/stream
+    # queries pin the new commit accounting; row_cdc/cdc_apply pin the
+    # batch feed after its image rework; table_mgmt pins rollback's
+    # slimmed manifests (wap_audit and branch_rewrite re-pinned at 14
+    # below).
     # session-3 r12 additions: _publish_manifest gained the carried
     # active-partition-spec key and append/overwrite the CURRENT_SPEC
     # resolution — pin the transform-prune neighbor (the new
@@ -208,7 +209,6 @@ _WINDOW_PINS: list[tuple[str, int]] = [
     # enter via tier 3)
     ("snapshot_time_travel", 12),
     ("snapshot_schema_evolution", 12),
-    ("snapshot_branch_rewrite", 12),
     ("snapshot_stream_append", 12),
     # session-3: merge/delete/optimize manifests now carry table
     # metadata via _carry_table_meta (spec evolution) — pin one query
@@ -227,7 +227,6 @@ _WINDOW_PINS: list[tuple[str, int]] = [
     ("snapshot_ivm_stream", 12),
     ("snapshot_row_cdc", 12),
     ("snapshot_cdc_apply", 12),
-    ("snapshot_wap_audit", 12),
     ("snapshot_table_mgmt", 12),
     # session-4 r12 additions (r11 artifact still the latest → pin 12):
     # _scan gained widen-era types + (file,pos) coordinates,
@@ -246,6 +245,18 @@ _WINDOW_PINS: list[tuple[str, int]] = [
     ("snapshot_drop_column", 12),
     ("snapshot_column_rename", 12),
     ("snapshot_bloom_prune", 12),
+    # Round-14 pins (changes made with the r13 artifact on disk →
+    # pinned 14): the staged-commit path was deleted and write-audit-
+    # publish is now a one-commit branch — snapshot_wap_audit runs over
+    # the branch API; read_branch of an append-only chain builds on the
+    # current latest, and publish_branch became one loop of _commit
+    # calls re-checking constraint drift on every attempt — pin every
+    # query that publishes a branch (txn_group through
+    # publish_commit_group's recovery).
+    ("snapshot_wap_audit", 14),
+    ("snapshot_branch_publish", 14),
+    ("snapshot_branch_rewrite", 14),
+    ("snapshot_txn_group", 14),
 ]
 
 

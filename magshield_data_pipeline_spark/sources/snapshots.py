@@ -46,8 +46,8 @@ contract, stdlib only):
 - every read of a snapshot's rows goes through ONE scan,
   ``_scan_manifest``: the manifest it is given supplies the schema,
   the rename / default / widen histories and the pending delete files
-  (a would-be snapshot — ``read_staged``, ``read_branch`` — is built
-  with ``_build_manifest`` and scanned the same way).  Row-level
+  (a would-be snapshot — ``read_branch`` — is built with
+  ``_build_manifest`` and scanned the same way).  Row-level
   rewrites share one core per key form: ``_cow_rewrite`` (copy-on-write
   by key: merge, delete and their branch twins),
   ``_equality_delete_commit`` (merge-on-read by key) and
@@ -380,6 +380,24 @@ def _try_link(table_path: str, v: int, manifest: dict) -> bool:
     return True
 
 
+def _link_json(path: str, payload: dict) -> bool:
+    """Exclusive-create *path* holding *payload* as JSON — stage a
+    temp file beside it, then ``os.link`` (of two writers of one path
+    exactly ONE wins): True iff this writer created it.  The temp name
+    (``<path>.tmp-<hex>``) is one no lister of tags, branches or group
+    journals reads, and it is removed either way."""
+    tmp = f"{path}.tmp-{uuid.uuid4().hex}"
+    with open(tmp, "w") as f:
+        json.dump(payload, f, sort_keys=True)
+    try:
+        os.link(tmp, path)
+    except FileExistsError:
+        return False
+    finally:
+        os.unlink(tmp)
+    return True
+
+
 def _latest(table_path: str) -> tuple[int, dict | None]:
     vs = versions(table_path)
     return (vs[-1], read_manifest(table_path, vs[-1])) if vs else (0, None)
@@ -413,10 +431,11 @@ def _commit(table_path: str, c: dict, *, who: str | None = None,
       without reading data, so the parent is simply the CURRENT latest
       on every attempt — a concurrent commit that wins the version
       race is carried, never lost-updated away (append, stream-append,
-      adopt, overwrite, the schema / constraint / spec commits,
-      publish_staged, rollback).  *check(parent_version, parent)* runs
-      before each attempt: it may raise (a CHECK constraint landed and
-      the data fails it) or return True to stop without committing
+      adopt, overwrite, the schema / constraint / spec commits, an
+      append-only branch publish, rollback).
+      *check(parent_version, parent)* runs before each attempt: it may
+      raise (a CHECK constraint landed and the data fails it, or the
+      constraint set drifted) or return True to stop without committing
       (an epoch or rollback already in place) — the written files are
       then reclaimed and None is returned.  *latest* is the
       ``(version, manifest)`` the caller already resolved (and
@@ -459,9 +478,10 @@ def _commit(table_path: str, c: dict, *, who: str | None = None,
                      _build_manifest(parent, v, c, rebased_from)):
             tags = c.get("tags") or {}
             if tags.get("txn"):
-                _advance_txn(table_path, *tags["txn"])
+                app, txn_v = tags["txn"]
+                _advance_marker(_txn_path(table_path, app), txn_v)
             if tags.get("batch_id") is not None:
-                _advance_high_water(table_path, tags["batch_id"])
+                _advance_marker(_hw_path(table_path), tags["batch_id"])
             return v
         pv, parent = _latest(table_path)
         if base is None:
@@ -1907,8 +1927,8 @@ def _scan_manifest(spark, table_path: str, manifest: dict,
     manifest it is given: the schema, the rename / default / widen
     histories, and the pending delete files (``_scan_with_deletes``
     when there are any, else a plain ``_scan``).  A would-be snapshot
-    (``read_staged``, ``read_branch``) is scanned the same way, so its
-    new entries must carry the sequence numbers publish will stamp.
+    (``read_branch``) is scanned the same way, so its new entries
+    must carry the sequence numbers publish will stamp.
     ``with_pos=True`` keeps each row's ``_file_rel`` / ``_pos``
     coordinate."""
     if entries is None:
@@ -2424,69 +2444,44 @@ def _hw_path(table_path: str) -> str:
     return os.path.join(_manifest_dir(table_path), "_last_batch_id")
 
 
-def _read_high_water(table_path: str) -> int | None:
-    """Highest stream batch_id ever committed, persisted OUTSIDE the
-    vacuumable manifests — the durable half of the exactly-once check
-    (a replay of an epoch whose manifest vacuum already dropped must
-    still be detected; manifests alone cannot prove that)."""
-    try:
-        with open(_hw_path(table_path)) as f:
-            return int(f.read().strip())
-    except FileNotFoundError:
-        return None
-
-
-def _advance_high_water(table_path: str, batch_id: int) -> None:
-    """Monotonic max-merge via staged-write + atomic replace.  Epochs
-    commit in order on a stream, so concurrent writers of this file are
-    replays of the SAME epoch (identical value) or a vacuum carrying
-    forward an OLDER one — a racing os.replace can only ever land a
-    value <= the true max transiently, and the very next commit
-    restores it; the check in append_stream_batch additionally scans
-    retained manifests, so no replay window opens."""
-    cur = _read_high_water(table_path)
-    if cur is not None and cur >= batch_id:
-        return
-    d = _manifest_dir(table_path)
-    os.makedirs(d, exist_ok=True)
-    staged = os.path.join(d, f".hw-{uuid.uuid4().hex}")
-    with open(staged, "w") as f:
-        f.write(str(batch_id))
-    os.replace(staged, _hw_path(table_path))
-
-
 def _txn_path(table_path: str, app: str) -> str:
     safe = re.sub(r"[^A-Za-z0-9_.-]", "_", app)
     return os.path.join(_manifest_dir(table_path), f"_txn-{safe}")
 
 
-def _read_txn(table_path: str, app: str) -> int | None:
-    """Highest txn version durably committed for *app* — the
-    application-transaction twin of the stream high-water file (the
-    Delta ``txnAppId``/``txnVersion`` contract), persisted OUTSIDE the
-    vacuumable manifests so a replay of a transaction whose manifest
-    vacuum already dropped is still detected."""
+def _read_marker(path: str) -> int | None:
+    """The value of durable marker *path* (None before its first
+    advance).  Markers persist OUTSIDE the vacuumable manifests — the
+    durable half of the exactly-once checks, so a replay whose manifest
+    vacuum already dropped is still detected (manifests alone cannot
+    prove that): ``_last_batch_id`` holds the highest stream batch_id
+    committed, ``_txn-<app>`` the highest txn version of an app (the
+    Delta ``txnAppId``/``txnVersion`` contract)."""
     try:
-        with open(_txn_path(table_path, app)) as f:
+        with open(path) as f:
             return int(f.read().strip())
     except FileNotFoundError:
         return None
 
 
-def _advance_txn(table_path: str, app: str, version: int) -> None:
-    """Monotonic max-merge, same staged-write + atomic-replace story as
-    _advance_high_water: an app's txn versions commit in order, so
-    racing writers carry either the same value or an older one, and the
-    manifest scan in _txn_committed closes any transient window."""
-    cur = _read_txn(table_path, app)
-    if cur is not None and cur >= version:
+def _advance_marker(path: str, value: int) -> None:
+    """Monotonic max-merge via staged-write + atomic replace.  Epochs
+    and an app's txn versions commit in order, so concurrent writers of
+    one marker are replays of the SAME value or a vacuum carrying
+    forward an OLDER one — a racing os.replace can only ever land a
+    value <= the true max transiently, and the very next commit
+    restores it; the replay checks (append_stream_batch,
+    _txn_committed) additionally scan retained manifests, so no replay
+    window opens."""
+    cur = _read_marker(path)
+    if cur is not None and cur >= value:
         return
-    d = _manifest_dir(table_path)
+    d = os.path.dirname(path)
     os.makedirs(d, exist_ok=True)
-    staged = os.path.join(d, f".txn-{uuid.uuid4().hex}")
+    staged = os.path.join(d, f".marker-{uuid.uuid4().hex}")
     with open(staged, "w") as f:
-        f.write(str(version))
-    os.replace(staged, _txn_path(table_path, app))
+        f.write(str(value))
+    os.replace(staged, path)
 
 
 def _txn_committed(table_path: str, app: str, version: int) -> bool:
@@ -2494,7 +2489,7 @@ def _txn_committed(table_path: str, app: str, version: int) -> bool:
     same app — already committed: consult the durable per-app file,
     then the retained manifests (newest-first with early stop, same
     O(1)-per-check argument as append_stream_batch's epoch scan)."""
-    hw = _read_txn(table_path, app)
+    hw = _read_marker(_txn_path(table_path, app))
     if hw is not None and version <= hw:
         return True
     for v in reversed(versions(table_path)):
@@ -2579,12 +2574,13 @@ def _reclaim_versions(table_path: str, vs: list[int],
     for v in drop:
         m = read_manifest(table_path, v)
         if m.get("batch_id") is not None:
-            _advance_high_water(table_path, m["batch_id"])
+            _advance_marker(_hw_path(table_path), m["batch_id"])
         if m.get("txn"):
             # carry app-transaction idempotence past manifest retention,
             # exactly as batch_id is carried — a replayed retraction must
             # stay a no-op even after its manifest is vacuumed
-            _advance_txn(table_path, m["txn"][0], m["txn"][1])
+            _advance_marker(_txn_path(table_path, m["txn"][0]),
+                            m["txn"][1])
         for e in m["files"] + m.get("delete_files", []):
             for p in _entry_paths(e):
                 if p not in live:
@@ -2637,13 +2633,8 @@ def remove_orphans(table_path: str, older_than_seconds: float = 86400.0
         for m in [read_manifest(table_path, v)]
         for e in m["files"] + m.get("delete_files", [])
     }
-    # a WAP stage's files are referenced by its STAGED manifest, not a
-    # version — a pending audit must survive any orphan sweep
-    for name in staged(table_path):
-        with open(_wap_path(table_path, name)) as f:
-            referenced.update(e["path"] for e in json.load(f)["entries"])
-    # likewise a BRANCH's files are referenced only by its branch
-    # manifests until publish — a pending branch must survive (r12)
+    # a BRANCH's files are referenced only by its branch manifests
+    # until publish — a pending branch must survive any orphan sweep
     for name in branches(table_path):
         for k in branch_versions(table_path, name):
             with open(_branch_commit_path(table_path, name, k)) as f:
@@ -2698,7 +2689,7 @@ def append_stream_batch(df, table_path: str, batch_id: int,
     manifest retention already dropped is still a no-op — exactly-once
     survives vacuum."""
     def _committed() -> bool:
-        hw = _read_high_water(table_path)
+        hw = _read_marker(_hw_path(table_path))
         if hw is not None and batch_id <= hw:
             return True  # this epoch (or a later one) durably committed
         # newest-first with early stop: epoch ids commit in order for a
@@ -3440,18 +3431,12 @@ def tag(table_path: str, name: str, version: int | None = None) -> int:
         raise ValueError(f"tag: version {v} not in {vs}")
     d = _refs_dir(table_path)
     os.makedirs(d, exist_ok=True)
-    staged = os.path.join(d, f".staged-{uuid.uuid4().hex}.json")
-    with open(staged, "w") as f:
-        json.dump({"version": v, "created_at": time.time()}, f)
-    try:
-        os.link(staged, os.path.join(d, f"{name}.json"))
-    except FileExistsError:
+    if not _link_json(os.path.join(d, f"{name}.json"),
+                      {"version": v, "created_at": time.time()}):
         raise ValueError(
             f"tag: {name!r} already exists at {table_path} — tags are "
             "immutable; delete_tag() first"
-        ) from None
-    finally:
-        os.unlink(staged)
+        )
     return v
 
 
@@ -3859,157 +3844,6 @@ def delete_files_table(spark, table_path: str,
     return spark.createDataFrame(rows, schema)
 
 
-# ---------------------------------------------------------------------------
-# Write-audit-publish: staged commits (r11)
-
-def _wap_path(table_path: str, name: str) -> str:
-    if not re.fullmatch(r"[A-Za-z0-9._-]+", name):
-        raise ValueError(f"wap: unsafe stage name {name!r}")
-    return os.path.join(_manifest_dir(table_path), f".wap-{name}.json")
-
-
-def stage_append(df, table_path: str, name: str, n_files: int = 2,
-                 bloom_for: dict[str, int] | None = None) -> None:
-    """WRITE-AUDIT-PUBLISH, the write step (the Iceberg ``wap.id``
-    staged-commit pattern): land *df*'s data files and a STAGED
-    manifest OUTSIDE the version chain — production readers of the
-    table see nothing, while auditors read the would-be snapshot via
-    :func:`read_staged` and run arbitrary quality checks against it.
-    :func:`publish_staged` then makes it the next version atomically
-    (re-validating against the CURRENT latest, so concurrent commits
-    compose instead of being lost-updated); :func:`discard_staged`
-    reclaims a failed audit's files.  CHECK constraints still validate
-    at write time — staging is for checks the engine can't express as
-    row predicates (distribution shifts, cross-table joins, model
-    gates).  Exactly one stage per *name* may exist (exclusive create,
-    same primitive as every commit)."""
-    base_version, base = _base(table_path, "stage_append")
-    _validate_constraints(df, table_path, base.get("constraints") or {})
-    p = _wap_path(table_path, name)
-    if os.path.exists(p):
-        raise ValueError(
-            f"stage_append: stage {name!r} already exists — publish or "
-            "discard it first"
-        )
-    entries = _write_data_files(df, table_path, n_files,
-                                bloom_for=bloom_for)
-    staged = {
-        "operation": "wap-append",
-        "base_version": base_version,
-        "staged_at": time.time(),
-        "entries": entries,  # THIS stage's new files only
-        "schema": _merge_schema(base.get("schema"), df.schema.jsonValue()),
-        # the constraint set these rows were validated against —
-        # publish refuses if the table's set has since changed (the
-        # staged data can no longer be revalidated cheaply; re-stage)
-        "constraints": base.get("constraints") or {},
-    }
-    tmp = p + f".tmp-{uuid.uuid4().hex}"
-    with open(tmp, "w") as f:
-        json.dump(staged, f, sort_keys=True)
-    try:
-        os.link(tmp, p)
-    except FileExistsError:
-        _discard_commit_dirs(table_path, entries)
-        raise ValueError(
-            f"stage_append: stage {name!r} already exists (lost the "
-            "race) — publish or discard it first"
-        ) from None
-    finally:
-        os.unlink(tmp)
-
-
-def staged(table_path: str) -> list[str]:
-    d = _manifest_dir(table_path)
-    if not os.path.isdir(d):
-        return []
-    return sorted(
-        fn[len(".wap-"):-len(".json")]
-        for fn in os.listdir(d)
-        if fn.startswith(".wap-") and fn.endswith(".json")
-        and ".tmp-" not in fn
-    )
-
-
-def read_staged(spark, table_path: str, name: str):
-    """The AUDIT surface: scan the would-be snapshot without publishing
-    anything — the manifest ``publish_staged`` would link on the
-    current latest, so pending deletes hide exactly the base rows they
-    will hide once published."""
-    p = _wap_path(table_path, name)
-    if not os.path.exists(p):
-        raise ValueError(f"read_staged: no stage {name!r} at {table_path}")
-    with open(p) as f:
-        st = json.load(f)
-    v, latest = _base(table_path, "read_staged")
-    return _scan_manifest(spark, table_path,
-                          _build_manifest(latest, v + 1, _stage_commit(st)))
-
-
-def _stage_commit(st: dict) -> dict:
-    """The commit description that publishes staged manifest *st*: an
-    append of its entries (``_build_manifest`` stamps them newer than
-    every pending delete) evolving the schema by add-column."""
-    return {"op": "append", "add": st["entries"],
-            "schema": st.get("schema"), "evolve": True}
-
-
-def publish_staged(table_path: str, name: str) -> int:
-    """The PUBLISH step: graduate the staged files into the version
-    chain as a normal append commit.  Because a staged append's files
-    are pure ADDITIONS, publish re-resolves against the CURRENT latest
-    (the base may have moved while the audit ran — append-append
-    composes by construction, the same rule as ``_publish_manifest``'s
-    carry retry); the staged manifest is consumed atomically so a
-    double publish fails loudly."""
-    p = _wap_path(table_path, name)
-    claimed = p + f".publishing-{uuid.uuid4().hex}"
-    try:
-        os.rename(p, claimed)  # atomic claim: exactly one publisher wins
-    except FileNotFoundError:
-        raise ValueError(
-            f"publish_staged: no stage {name!r} at {table_path} "
-            "(already published or discarded?)"
-        ) from None
-    try:
-        with open(claimed) as f:
-            st = json.load(f)
-
-        def _refuse_drift(_pv, parent) -> bool:
-            # TOCTOU close (ADVICE r11), checked on every attempt: a
-            # constraint added after the stage was validated would
-            # graduate unvalidated rows — fail loudly; the auditor
-            # re-validates and re-stages
-            if ((parent or {}).get("constraints") or {}) != (
-                    st["constraints"] or {}):
-                raise ValueError(
-                    f"publish_staged: table constraints changed since "
-                    f"stage {name!r} was validated — discard and "
-                    "re-stage under the current constraint set"
-                )
-            return False
-
-        v = _commit(table_path, _stage_commit(st),
-                    check=_refuse_drift if "constraints" in st else None)
-    except BaseException:
-        os.rename(claimed, p)  # publish failed: the stage survives
-        raise
-    os.unlink(claimed)
-    return v
-
-
-def discard_staged(table_path: str, name: str) -> None:
-    """Reject a failed audit: remove the staged manifest and reclaim
-    its data files (they were never referenced by any version)."""
-    p = _wap_path(table_path, name)
-    if not os.path.exists(p):
-        raise ValueError(f"discard_staged: no stage {name!r}")
-    with open(p) as f:
-        st = json.load(f)
-    os.remove(p)
-    _discard_commit_dirs(table_path, st["entries"])
-
-
 def table_rows(table_path: str, version: int | None = None) -> int:
     """Exact row count from manifest metadata — zero data I/O: data
     files are immutable so the per-entry counts recorded at write time
@@ -4103,8 +3937,7 @@ def drop_column(table_path: str, name: str) -> int:
     drop/re-add handshake).  Refusals: the last column; partition
     sources (active spec, any file's recorded spec/value); CHECK
     constraints referencing the name; a pending merge-on-read delete
-    keyed on it; open branches or staged commits (consistency with
-    rename)."""
+    keyed on it; open branches (consistency with rename)."""
     m = _base(table_path, "drop_column")[1]
     schema = m.get("schema")
     if schema is None:
@@ -4132,10 +3965,6 @@ def drop_column(table_path: str, name: str) -> int:
     if branches(table_path):
         raise ValueError(
             "drop_column: open branches — publish or discard first"
-        )
-    if staged(table_path):
-        raise ValueError(
-            "drop_column: staged commits — publish or discard first"
         )
     for cname, cexpr in (m.get("constraints") or {}).items():
         if re.search(rf"\b{re.escape(name)}\b", cexpr):
@@ -4229,9 +4058,9 @@ def rename_column(table_path: str, old: str, new: str) -> int:
     Refusals (all loud, table unchanged): unknown/duplicate names; a
     chain with no recorded schema; PENDING merge-on-read delete files
     (their key column name is frozen at delete time — compact()/
-    purge_deletes() first); open BRANCHES or STAGED commits (their
-    replay restamps sequence numbers, which would mis-date the files
-    against the rename — publish or discard first); renaming a column
+    purge_deletes() first); open BRANCHES (their replay restamps
+    sequence numbers, which would mis-date the files against the
+    rename — publish or discard first); renaming a column
     that is any file's partition source or the table's active
     partition-spec source (partition values/probes are keyed by
     source name)."""
@@ -4263,11 +4092,6 @@ def rename_column(table_path: str, old: str, new: str) -> int:
             "rename_column: open branches replay with fresh sequence "
             "numbers and would mis-date their files against the "
             "rename — publish or discard branches first"
-        )
-    if staged(table_path):
-        raise ValueError(
-            "rename_column: staged commits replay with fresh sequence "
-            "numbers — publish or discard stages first"
         )
     for cname, cexpr in (m.get("constraints") or {}).items():
         if re.search(rf"\b{re.escape(old)}\b", cexpr):
@@ -4429,19 +4253,22 @@ def table_column_stats(table_path: str, col: str,
 
 
 # ---------------------------------------------------------------------------
-# Named branches: commit CHAINS off main + fast-forward publish (r12 —
-# VERDICT r11 item 5, generalizing WAP's single staged commit to the
-# Iceberg branch model).  A branch is a sequence of append commits
-# anchored at a base main version, stored OUTSIDE the version chain
-# (dot-prefixed manifests `versions()` never sees): production readers
-# of main see nothing, branch readers see base-state + branch commits,
-# and `publish_branch` fast-forwards main by replaying the chain as
-# ordinary append commits — each graduated commit appears in history(),
-# and append-append composition means main commits that landed
-# mid-branch are carried, never lost-updated.  The base version is
-# pinned with a retention tag so vacuum cannot reclaim the snapshot the
-# branch builds on; branch data files are referenced by the branch
-# manifests for `remove_orphans`.
+# Named branches: commit CHAINS off main + fast-forward publish (r12) —
+# the ledger's write-audit-publish mechanism; a single staged commit is
+# a one-commit branch (the Iceberg ``wap.id`` pattern).  A branch is a
+# sequence of commits anchored at a base main version, stored OUTSIDE
+# the version chain (dot-prefixed manifests `versions()` never sees):
+# production readers of main see nothing, `read_branch` audits exactly
+# the snapshot `publish_branch` will make, publish graduates the chain
+# as ordinary main commits (each appears in history()), and
+# `discard_branch` reclaims a failed audit.  An append-only chain
+# builds on main's CURRENT latest, so main commits that land
+# mid-branch are carried, never lost-updated; a chain holding a
+# rewrite (merge/delete) builds on its base and fast-forwards only
+# while main still sits there.  The base version is pinned with a
+# retention tag so vacuum cannot reclaim the snapshot a rewrite chain
+# builds on; branch data files are referenced by the branch manifests
+# for `remove_orphans`.
 
 def _branch_base_path(table_path: str, name: str) -> str:
     if not re.fullmatch(r"[A-Za-z0-9._-]+", name):
@@ -4468,26 +4295,18 @@ def create_branch(table_path: str, name: str,
             "or discard it first"
         )
     tag(table_path, f"branch-base-{name}", base)
-    payload = {
+    if not _link_json(p, {
         "base_version": base,
         "created_at": time.time(),
-        # the constraint set branch appends validate against; publish
-        # refuses if main's set drifts (same TOCTOU close as WAP)
+        # the constraint set branch commits validate against; every
+        # publish attempt refuses if main's set differs from it
         "constraints": table_constraints(table_path),
-    }
-    tmp = p + f".tmp-{uuid.uuid4().hex}"
-    with open(tmp, "w") as f:
-        json.dump(payload, f, sort_keys=True)
-    try:
-        os.link(tmp, p)
-    except FileExistsError:
+    }):
         delete_tag(table_path, f"branch-base-{name}")
         raise ValueError(
             f"create_branch: branch {name!r} already exists (lost the "
             "race)"
-        ) from None
-    finally:
-        os.unlink(tmp)
+        )
     return base
 
 
@@ -4518,11 +4337,13 @@ def branch_versions(table_path: str, name: str) -> list[int]:
 
 
 def _branch_state(table_path: str, name: str) -> tuple[dict, list[dict]]:
-    """(base payload, ordered branch commit payloads)."""
+    """(base payload, ordered branch commit payloads); a missing
+    branch fails loudly (``branch_versions``)."""
+    ks = branch_versions(table_path, name)
     with open(_branch_base_path(table_path, name)) as f:
         base = json.load(f)
     commits = []
-    for k in branch_versions(table_path, name):
+    for k in ks:
         with open(_branch_commit_path(table_path, name, k)) as f:
             commits.append(json.load(f))
     return base, commits
@@ -4550,33 +4371,65 @@ def branch_append(df, table_path: str, name: str,
     })
 
 
-def _branch_desc(c: dict, parent: dict) -> dict:
+def _branch_desc(c: dict, parent: dict | None) -> dict:
     """The main-line commit description that publishes branch commit
-    *c* on manifest *parent*: an append adds its entries; a rewrite
-    (merge/delete) recorded its FULL post-state in ``files``, so it
-    also drops the parent files that state lacks."""
-    live = {e["path"] for e in c.get("files", parent["files"])}
-    return {
+    *c*: an append adds its entries and evolves the schema by
+    add-column (append semantics, so columns main added mid-branch
+    stay); a rewrite (merge/delete) recorded its FULL post-state in
+    ``files``, so it also drops the files of *parent* — the manifest
+    it is published on — that state lacks."""
+    desc = {
         "op": c["operation"][len("branch-"):],
         "tags": {"key": c["key"]} if "key" in c else {},
         "add": c["entries"],
-        "drop": {e["path"] for e in parent["files"]} - live,
         "schema": c.get("schema"),
     }
+    if "files" in c:
+        live = {e["path"] for e in c["files"]}
+        desc["drop"] = {e["path"] for e in parent["files"]} - live
+    else:
+        desc["evolve"] = True
+    return desc
 
 
 def _branch_tip(table_path: str, name: str) -> tuple[dict, dict]:
-    """(base payload, tip manifest): the snapshot publish would make
-    while main sits at the base — every branch commit built onto the
-    base manifest in order, so branch entries carry the sequence
-    numbers publish stamps (newer than the base's pending deletes and
-    its rename / default / widen events)."""
+    """(base payload, tip manifest): the snapshot publish will make —
+    every branch commit built in order onto the manifest publish builds
+    on, so branch entries carry the sequence numbers publish stamps
+    (newer than pending deletes and rename / default / widen events).
+    That manifest is main's current latest for an append-only chain
+    (an empty one included), and the base for a chain holding a
+    rewrite (the only snapshot publish accepts it on)."""
     base, commits = _branch_state(table_path, name)
-    v, m = _base(table_path, "branch", base["base_version"])
+    rewrites = any(c["operation"] != "branch-append" for c in commits)
+    v, m = _base(table_path, "branch",
+                 base["base_version"] if rewrites else None)
     for c in commits:
         v += 1
         m = _build_manifest(m, v, _branch_desc(c, m))
     return base, m
+
+
+def _rewrite_tip(table_path: str, name: str,
+                 who: str) -> tuple[dict, dict]:
+    """``_branch_tip`` for a rewrite commit, which records a FULL
+    post-state anchored at the base: refused once main has moved past
+    the base (publish refuses such a chain — the Iceberg fast-forward
+    rule) or while the tip carries pending merge-on-read deletes."""
+    base, tip = _branch_tip(table_path, name)
+    if versions(table_path)[-1] != base["base_version"]:
+        raise ValueError(
+            f"{who}: main advanced past the branch base "
+            f"v{base['base_version']} — a rewrite commit fast-forwards "
+            "only onto an unmoved base; publish or discard, then "
+            "re-branch"
+        )
+    if tip.get("delete_files"):
+        raise ValueError(
+            f"{who}: the branch base has pending merge-on-read delete "
+            "files — compact() main before branching rewrites"
+        )
+    return base, tip
 
 
 def read_branch(spark, table_path: str, name: str):
@@ -4588,22 +4441,13 @@ def read_branch(spark, table_path: str, name: str):
 def _branch_commit(table_path: str, name: str, payload: dict) -> int:
     """Exclusive-create the branch's next commit manifest (shared by
     append/merge/delete); retries on a lost number race."""
-    while True:
+    while True:  # a lost race retries at the next number
         ks = branch_versions(table_path, name)
         k = (ks[-1] if ks else 0) + 1
-        payload = {**payload, "branch": name, "branch_version": k,
-                   "committed_at": time.time()}
-        p = _branch_commit_path(table_path, name, k)
-        tmp = p + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump(payload, f, sort_keys=True)
-        try:
-            os.link(tmp, p)
-        except FileExistsError:
-            continue  # lost the race — retry at the next number
-        finally:
-            os.unlink(tmp)
-        return k
+        if _link_json(_branch_commit_path(table_path, name, k),
+                      {**payload, "branch": name, "branch_version": k,
+                       "committed_at": time.time()}):
+            return k
 
 
 def branch_merge(source_df, table_path: str, name: str, key,
@@ -4611,15 +4455,11 @@ def branch_merge(source_df, table_path: str, name: str, key,
     """MERGE INTO the branch tip by *key* — the copy-on-write rewrite
     of :func:`merge` (``_cow_rewrite``), landed as a branch commit
     recording the FULL post-state (so later reads and the publish
-    replay it exactly); main sees nothing until publish.  A branch
-    whose base carries pending merge-on-read deletes refuses (compact
-    main first, then branch).  Returns the branch commit number."""
-    base, tip = _branch_tip(table_path, name)
-    if tip.get("delete_files"):
-        raise ValueError(
-            "branch_merge: the branch base has pending merge-on-read "
-            "delete files — compact() main before branching rewrites"
-        )
+    replay it exactly); main sees nothing until publish.  Refused once
+    main has moved past the base, or while the base carries pending
+    merge-on-read deletes (``_rewrite_tip``).  Returns the branch
+    commit number."""
+    base, tip = _rewrite_tip(table_path, name, "branch_merge")
     schema_json = tip.get("schema")
     if schema_json is not None:
         # column guard BEFORE constraint validation: a constraint
@@ -4654,13 +4494,9 @@ def branch_delete_rows(keys_df, table_path: str, name: str, key,
                        n_files: int = 1) -> int:
     """Row-level DELETE on the branch tip by *key* (the copy-on-write
     rewrite of :func:`delete`, full post-state recorded) — main sees
-    nothing until publish.  Returns the branch commit number."""
-    _base_payload, tip = _branch_tip(table_path, name)
-    if tip.get("delete_files"):
-        raise ValueError(
-            "branch_delete_rows: the branch base has pending "
-            "merge-on-read delete files — compact() main first"
-        )
+    nothing until publish; refused as :func:`branch_merge` is.
+    Returns the branch commit number."""
+    tip = _rewrite_tip(table_path, name, "branch_delete_rows")[1]
     entries, drop, _kbounds = _cow_rewrite(
         keys_df.select(*_key_cols(key)).distinct(), table_path, tip,
         "branch_delete_rows: keys_df has no rows", n_files)
@@ -4678,20 +4514,21 @@ def branch_delete_rows(keys_df, table_path: str, name: str, key,
 
 def publish_branch(table_path: str, name: str) -> list[int]:
     """FAST-FORWARD main over the branch: each branch commit graduates
-    as a main commit IN ORDER (so history() shows the chain).  An
-    append-only chain composes with any main commits that landed
-    mid-branch (append-append carry); a chain holding REWRITE commits
-    (branch_merge / branch_delete_rows) recorded full post-states
-    anchored at the base, so it publishes only while main still sits
-    at the base — the Iceberg fast-forward rule — and refuses loudly
-    otherwise.  Atomic claim via base-file rename — one publisher
-    wins; a publish that fails before its first commit restores the
-    branch intact (a mid-chain serializable conflict leaves the
-    published prefix on main and the unpublished remainder on the
-    branch, now only discardable — the error says so).  Refuses if
-    main's constraint set drifted since the branch was created (the
-    staged rows cannot be revalidated cheaply — re-branch).  Returns
-    the main versions created, in branch order."""
+    as a main commit IN ORDER (so history() shows the chain), built on
+    the manifest ``read_branch`` builds on.  An append-only chain
+    re-resolves against the current latest, so it composes with any
+    main commits that landed mid-branch; a chain holding REWRITE
+    commits (branch_merge / branch_delete_rows) recorded full
+    post-states anchored at the base, so it publishes only while main
+    still sits at the base — the Iceberg fast-forward rule — and
+    refuses loudly otherwise.  Every commit attempt refuses if main's
+    constraint set differs from the one the branch validated against
+    (the branch rows cannot be revalidated cheaply — re-branch).
+    Atomic claim via base-file rename — one publisher wins; a publish
+    that fails before its first commit restores the branch intact (a
+    mid-chain failure leaves the published prefix on main and the
+    unpublished remainder on the branch, now only discardable).
+    Returns the main versions created, in branch order."""
     p = _branch_base_path(table_path, name)
     claimed = p + f".publishing-{uuid.uuid4().hex}"
     try:
@@ -4704,13 +4541,19 @@ def publish_branch(table_path: str, name: str) -> list[int]:
     try:
         with open(claimed) as f:
             base = json.load(f)
-        if table_constraints(table_path) != (base.get("constraints") or {}):
-            raise ValueError(
-                f"publish_branch: table constraints changed since "
-                f"branch {name!r} was created — discard and re-branch "
-                "under the current constraint set"
-            )
-        published = []
+        validated = base.get("constraints") or {}
+
+        def _refuse_drift(_pv, parent) -> bool:
+            # the TOCTOU close, checked on every attempt: a constraint
+            # landing mid-publish would graduate unvalidated rows
+            if ((parent or {}).get("constraints") or {}) != validated:
+                raise ValueError(
+                    f"publish_branch: table constraints changed since "
+                    f"branch {name!r} was created — discard and "
+                    "re-branch under the current constraint set"
+                )
+            return False
+
         d = _manifest_dir(table_path)
         pat = re.compile(rf"\.branchc-{re.escape(name)}-v(\d+)\.json")
         ks = sorted(int(m.group(1)) for fn in os.listdir(d)
@@ -4724,33 +4567,24 @@ def publish_branch(table_path: str, name: str) -> list[int]:
         )
         if not appends_only and versions(table_path)[-1] != \
                 base["base_version"]:
-            # a merge/delete branch commit recorded a FULL post-state
-            # anchored at the base — main moving underneath makes that
-            # state stale; appends compose, rewrites do not (the
-            # Iceberg fast-forward rule)
             raise ValueError(
                 f"publish_branch: main advanced past the branch base "
                 f"v{base['base_version']} and branch {name!r} holds "
                 "rewrite commits (merge/delete) — fast-forward "
                 "requires an unmoved base; discard and re-branch"
             )
+        published = []
         for k, c in commits:
-            if appends_only:
-                v = _publish_manifest(
-                    table_path, "append", c["entries"], carry=True,
-                    schema=c.get("schema"),
-                )
-            else:
-                # replay the chain on exactly the current main tip — any
-                # concurrent commit fails the exclusive link loudly and
-                # the except handler restores the branch (no torn
-                # publish: the first link is also the first side
-                # effect).  A rewrite commit recorded its full
-                # post-state: it drops the tip files that state lacks.
-                tip = _latest(table_path)
-                v = _commit(table_path, _branch_desc(c, tip[1]),
-                            who="publish_branch", base=tip, discard=False)
-            published.append(v)
+            # a rewrite chain replays on exactly the current main tip:
+            # a concurrent commit fails the exclusive link loudly and
+            # the except handler restores the branch (no torn publish:
+            # the first link is also the first side effect)
+            tip = None if appends_only else _latest(table_path)
+            published.append(_commit(
+                table_path, _branch_desc(c, tip[1] if tip else None),
+                who="publish_branch", base=tip, check=_refuse_drift,
+                discard=False,
+            ))
             os.unlink(_branch_commit_path(table_path, name, k))
     except BaseException:
         os.rename(claimed, p)  # publish failed: the branch survives
@@ -4814,22 +4648,14 @@ def publish_commit_group(group_root: str,
             )
     d = _txn_group_dir(group_root)
     os.makedirs(d, exist_ok=True)
-    p = os.path.join(d, f"group-{gid}.json")
-    tmp = p + f".tmp-{uuid.uuid4().hex}"
-    with open(tmp, "w") as f:
-        json.dump({
-            "group_id": gid,
-            "created_at": time.time(),
-            "members": [[t, b] for t, b in members],
-        }, f, sort_keys=True)
-    try:
-        os.link(tmp, p)
-    except FileExistsError:
+    if not _link_json(os.path.join(d, f"group-{gid}.json"), {
+        "group_id": gid,
+        "created_at": time.time(),
+        "members": [[t, b] for t, b in members],
+    }):
         raise ValueError(
             f"publish_commit_group: group {gid!r} already exists"
-        ) from None
-    finally:
-        os.unlink(tmp)
+        )
     return _complete_group(group_root, gid)
 
 

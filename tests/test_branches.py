@@ -1,13 +1,17 @@
 """Named branches + fast-forward publish (sources/snapshots.py:
 create_branch / branch_append / read_branch / publish_branch /
-discard_branch) — the Iceberg branch model generalizing WAP.
+discard_branch) — the Iceberg branch model, and the ledger's
+write-audit-publish: a single staged commit is a one-commit branch.
 
-Pins: branch commits are invisible to main, the branch read is
-base + chain, publish fast-forwards main IN ORDER (history shows the
-graduated commits) and composes with mid-branch main commits,
-discard reclaims files with zero trace, the base version is
-vacuum-pinned for the branch's life, orphan sweeps spare pending
-branch files, and constraint drift refuses publish.
+Pins: branch commits are invisible to main (no version allocated),
+the branch read is exactly the snapshot publish makes (an append-only
+chain on main's current latest, a rewrite chain on its base), publish
+fast-forwards main IN ORDER (history shows the graduated commits) and
+composes with mid-branch main commits, discard reclaims files with
+zero trace, the base version is vacuum-pinned for the branch's life,
+orphan sweeps spare pending branch files, CHECK constraints validate
+at branch-commit time, constraint drift refuses publish on every
+commit attempt, and rewrite commits refuse once main has moved.
 """
 
 from __future__ import annotations
@@ -35,6 +39,7 @@ def test_branch_commits_invisible_until_published(spark, tmp_path):
     S.branch_append(spark.range(13, 15).select(F.col("id").alias("k")),
                     t, "audit", n_files=1)
     assert S.read(spark, t).count() == 10  # main untouched
+    assert S.versions(t) == [1]  # no main version allocated
     assert S.read_branch(spark, t, "audit").count() == 15
     assert S.branch_versions(t, "audit") == [1, 2]
     published = S.publish_branch(t, "audit")
@@ -74,13 +79,17 @@ def test_discard_reclaims_files_and_base_pin(spark, tmp_path):
 def test_branch_base_survives_vacuum(spark, tmp_path):
     t = _t(spark, tmp_path)
     S.create_branch(t, "keep")  # pins v1
+    # a rewrite commit anchors the branch read at its base (an
+    # append-only branch reads main's latest instead)
+    S.branch_delete_rows(spark.createDataFrame([(0,)], "k long"), t,
+                         "keep", key="k", n_files=1)
     S.overwrite(spark.range(5).select(F.col("id").alias("k")), t,
                 n_files=1)
     S.overwrite(spark.range(3).select(F.col("id").alias("k")), t,
                 n_files=1)
     S.vacuum(t, keep_versions=1)
     # v1 (the branch base) must still be readable through the branch
-    assert S.read_branch(spark, t, "keep").count() == 10
+    assert S.read_branch(spark, t, "keep").count() == 9
     S.discard_branch(t, "keep")
 
 
@@ -106,6 +115,35 @@ def test_publish_refuses_constraint_drift(spark, tmp_path):
     S.discard_branch(t, "drift")
 
 
+def test_publish_refuses_constraint_landing_mid_publish(spark, tmp_path,
+                                                       monkeypatch):
+    # the drift check runs on every commit attempt, not once before
+    # the first: a constraint that lands between the check and the
+    # link (here from inside the first link attempt) must not let the
+    # branch rows graduate unvalidated
+    t = _t(spark, tmp_path)
+    S.create_branch(t, "race")
+    S.branch_append(spark.createDataFrame([(5000,), (5001,)], "k long"),
+                    t, "race", n_files=1)
+    real = S._try_link
+    landed = []
+
+    def _racing(table_path, v, manifest):
+        if not landed:
+            landed.append(v)
+            S.add_constraint(spark, t, "k_small", "k < 1000")
+        return real(table_path, v, manifest)
+
+    monkeypatch.setattr(S, "_try_link", _racing)
+    with pytest.raises(ValueError, match="constraints changed"):
+        S.publish_branch(t, "race")
+    assert S.branches(t) == ["race"]  # the branch survives
+    assert S.branch_versions(t, "race") == [1]
+    assert sorted(r.k for r in S.read(spark, t).collect()) == \
+        list(range(10))  # main gained the constraint, not the rows
+    S.discard_branch(t, "race")
+
+
 def test_branch_append_validates_base_constraints(spark, tmp_path):
     t = _t(spark, tmp_path)
     S.add_constraint(spark, t, "k_nonneg", "k >= 0")
@@ -117,6 +155,56 @@ def test_branch_append_validates_base_constraints(spark, tmp_path):
     S.discard_branch(t, "checked")
 
 
+def test_branch_schema_evolution_carries_to_publish(spark, tmp_path):
+    t = _t(spark, tmp_path)
+    S.create_branch(t, "evo")
+    S.branch_append(
+        spark.createDataFrame([(50, "x")], "k long, tag string"), t,
+        "evo", n_files=1)
+    # the audit already null-fills the old files
+    audit = S.read_branch(spark, t, "evo")
+    assert audit.filter("tag IS NULL").count() == 10
+    S.publish_branch(t, "evo")
+    got = S.read(spark, t)
+    assert got.schema.fieldNames() == ["k", "tag"]
+    assert got.filter("tag = 'x'").count() == 1
+
+
+def test_append_branch_reads_what_publish_makes_after_main_rewrites(
+        spark, tmp_path):
+    # an append-only branch audits the snapshot publish will make: main
+    # deleting keys 1 and 2 and appending 50 and 51 mid-branch shows in
+    # the branch read exactly as in the published table
+    t = _t(spark, tmp_path)
+    S.create_branch(t, "b")
+    S.branch_append(spark.range(100, 103).select(F.col("id").alias("k")),
+                    t, "b", n_files=1)
+    S.delete(spark.createDataFrame([(1,), (2,)], "k long"), t, key="k",
+             n_files=1)
+    S.append(spark.range(50, 52).select(F.col("id").alias("k")), t,
+             n_files=1)
+    branch = sorted(r.k for r in S.read_branch(spark, t, "b").collect())
+    S.publish_branch(t, "b")
+    published = sorted(r.k for r in S.read(spark, t).collect())
+    assert published == [0] + list(range(3, 10)) + [50, 51, 100, 101, 102]
+    assert branch == published
+
+
+def test_append_branch_reads_what_publish_makes_after_main_add_column(
+        spark, tmp_path):
+    t = _t(spark, tmp_path)
+    S.create_branch(t, "b")
+    S.branch_append(spark.range(100, 102).select(F.col("id").alias("k")),
+                    t, "b", n_files=1)
+    S.add_column(t, "c", "long", default=7)
+    audit = S.read_branch(spark, t, "b")
+    branch = sorted(tuple(r) for r in audit.collect())
+    S.publish_branch(t, "b")
+    got = S.read(spark, t)
+    assert audit.schema.fieldNames() == got.schema.fieldNames() == ["k", "c"]
+    assert branch == sorted(tuple(r) for r in got.collect())
+
+
 def test_double_publish_and_missing_branch_fail_loudly(spark, tmp_path):
     t = _t(spark, tmp_path)
     S.create_branch(t, "once")
@@ -125,6 +213,8 @@ def test_double_publish_and_missing_branch_fail_loudly(spark, tmp_path):
     S.publish_branch(t, "once")
     with pytest.raises(ValueError, match="already published or discarded"):
         S.publish_branch(t, "once")
+    with pytest.raises(ValueError, match="not found"):
+        S.discard_branch(t, "once")  # consumed: nothing left to discard
     S.create_branch(t, "x")
     with pytest.raises(ValueError, match="already exists"):
         S.create_branch(t, "x")
@@ -208,6 +298,22 @@ def test_rewrite_chain_refuses_when_main_advanced(spark, tmp_path):
     assert S.branches(t) == ["r"]  # branch survives for discard
     S.discard_branch(t, "r")
     assert S.read(spark, t).filter("k = 3").head().val == 30
+
+
+def test_branch_rewrite_refuses_once_main_moved(spark, tmp_path):
+    # a rewrite commit records a full post-state anchored at the base,
+    # which publish could never fast-forward once main has moved:
+    # refuse it at branch time, with nothing written
+    t = _t(spark, tmp_path)
+    S.create_branch(t, "r")
+    S.append(spark.range(50, 52).select(F.col("id").alias("k")), t,
+             n_files=1)  # main moves
+    with pytest.raises(ValueError, match="main advanced past the branch"):
+        S.branch_delete_rows(spark.createDataFrame([(3,)], "k long"), t,
+                             "r", key="k", n_files=1)
+    assert S.branch_versions(t, "r") == []
+    S.discard_branch(t, "r")
+    assert S.remove_orphans(t, older_than_seconds=0) == []
 
 
 def test_branch_merge_validates_and_prunes(spark, tmp_path):

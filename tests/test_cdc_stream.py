@@ -3,8 +3,8 @@ cdc_stream.py).
 
 The classifier is pinned AGAINST the batch feed (read_row_changes) —
 the batch feed and the stream reader must agree row for row across
-copy-on-write, merge-on-read, partition-overwrite, write-audit-publish
-and branch-publish commits — plus the stream-protocol contracts:
+copy-on-write, merge-on-read, partition-overwrite, and append-only
+and rewrite branch-publish commits — plus the stream-protocol contracts:
 deterministic replay between two offsets, no offset advance on an idle
 table, an AvailableNow drain delivering the whole backlog, schema
 inference from the manifest, metadata-only partition planning, and a
@@ -64,19 +64,20 @@ def _partition_chain(spark, tmp_path, name="parts"):
     return t
 
 
-def _wap_chain(spark, tmp_path, name="wap"):
-    """overwrite -> stage an append -> a main append lands -> publish
-    the stage (an append composed onto the moved base)."""
+def _append_branch_chain(spark, tmp_path, name="stage"):
+    """overwrite -> a one-append branch -> a main append lands ->
+    publish the branch (an append composed onto the moved main)."""
     t = os.path.join(str(tmp_path), name)
     S.overwrite(spark.range(1, 20).select(
         F.col("id").alias("k"), (F.col("id") * 10).alias("val")),
         t, n_files=1)
-    S.stage_append(spark.createDataFrame([(100, 1), (101, 2)],
-                                         "k long, val long"),
-                   t, "audit", n_files=2)
+    S.create_branch(t, "audit")
+    S.branch_append(spark.createDataFrame([(100, 1), (101, 2)],
+                                          "k long, val long"),
+                    t, "audit", n_files=2)
     S.append(spark.createDataFrame([(50, 5)], "k long, val long"), t,
              n_files=1)
-    S.publish_staged(t, "audit")
+    S.publish_branch(t, "audit")
     return t
 
 
@@ -99,8 +100,9 @@ def _branch_chain(spark, tmp_path, name="br"):
 
 
 @pytest.mark.parametrize(
-    "chain", [_chain, _partition_chain, _wap_chain, _branch_chain],
-    ids=["copy_on_write", "overwrite_partitions", "publish_staged",
+    "chain", [_chain, _partition_chain, _append_branch_chain,
+              _branch_chain],
+    ids=["copy_on_write", "overwrite_partitions", "publish_append_branch",
          "publish_branch"],
 )
 def test_stream_classifier_matches_batch_feed(spark, tmp_path, chain):

@@ -241,7 +241,7 @@ def test_vacuum_backfills_high_water_from_dropped_manifests(spark, tmp_path):
     os.remove(os.path.join(t, "_manifests", "_last_batch_id"))  # pre-hw table
     S.compact(spark, t, n_files=1)
     S.vacuum(t, keep_versions=1)
-    assert S._read_high_water(t) == 7
+    assert S._read_marker(S._hw_path(t)) == 7
 
 
 def test_remove_orphans_reclaims_unreferenced_files_only(spark, tmp_path):
