@@ -155,21 +155,6 @@ def test_branch_append_validates_base_constraints(spark, tmp_path):
     S.discard_branch(t, "checked")
 
 
-def test_branch_schema_evolution_carries_to_publish(spark, tmp_path):
-    t = _t(spark, tmp_path)
-    S.create_branch(t, "evo")
-    S.branch_append(
-        spark.createDataFrame([(50, "x")], "k long, tag string"), t,
-        "evo", n_files=1)
-    # the audit already null-fills the old files
-    audit = S.read_branch(spark, t, "evo")
-    assert audit.filter("tag IS NULL").count() == 10
-    S.publish_branch(t, "evo")
-    got = S.read(spark, t)
-    assert got.schema.fieldNames() == ["k", "tag"]
-    assert got.filter("tag = 'x'").count() == 1
-
-
 def test_append_branch_reads_what_publish_makes_after_main_rewrites(
         spark, tmp_path):
     # an append-only branch audits the snapshot publish will make: main
